@@ -176,29 +176,7 @@ DRIVER_WINDOW: tuple[str, ...] = (
 # recomputes fingerprints and fails unless every drifted certified
 # query is listed here AND present in DRIVER_WINDOW. Docstring-only
 # edits count as drift — conservatively re-certify.
-RECERTIFY: tuple[str, ...] = (
-    # r11 optimization-round drift: the two r10-verdict item-1 fixes
-    # (jaccard verify joins lose the corpus-fraction F.broadcast hints;
-    # conformal qhat moves from the data-sized TakeOrdered limit to the
-    # two-phase bucketed rank), the r11 plan-surgery edits (theta
-    # fk/uk/un persisted; hodges daily spine persisted; both pageranks
-    # stop re-running knn_edges per round), the r10-verdict item-7
-    # diagnostic re-pricing (AMP_SAMPLE_MOD 5 -> 10 — result set
-    # changes BY DESIGN, oracle restates the same constant), and the
-    # prefix-filter docstring sync (docstring-only, conservatively
-    # re-certified). The nine r10 RECERTIFY entries all came back
-    # green in CORRECTNESS_r10; the five of them untouched in r11 had
-    # their fingerprints re-snapshotted to the driver-certified code
-    # (standing round-close procedure).
-    "dedup_minhash_jaccard_estimate",
-    "ml_conformal_interval",
-    "dedup_prefix_filter_join",
-    "agg_theta_sketch_setops",
-    "dedup_lsh_amplification_curve",
-    "stats_hodges_lehmann",
-    "graph_pagerank_knn",
-    "graph_pagerank_oracle",
-)
+RECERTIFY: tuple[str, ...] = ()
 
 
 def all_queries() -> dict[str, EngineQuery]:
