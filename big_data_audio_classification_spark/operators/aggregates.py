@@ -20,6 +20,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from big_data_audio_classification_spark.functions.ranks import values_at_ranks
 from big_data_audio_classification_spark.registry import query
 from big_data_audio_classification_spark.sources.catalog import load_table
 
@@ -375,114 +376,37 @@ def agg_percentiles_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     every group's values in one aggregation buffer) when approximation
     (``agg_percentile_approx``) isn't acceptable.
 
-    Two phases, all shuffles keyed by (group, bucket) — no fat
-    single-reducer group, no global sort:
-      1. histogram: bucket each value into B=1024 equi-width bins from
-         per-group (min, max); running-count the bins (tiny window: ≤B
-         rows per group) to locate, for each needed rank r = the
-         floor/ceil of p·(n−1), the one bin whose cumulative range
-         covers r;
-      2. resolve: semi-join the fact down to candidate bins only
-         (~n/B rows each), rank within each bin by value
-         (``row_number`` over (group, bin) — bounded partitions), add
-         the bin's cumulative offset to get the global 0-based rank,
-         pick ranks exactly, linear-interpolate v_lo + frac·(v_hi−v_lo)
-         = QUANTILE_CONT semantics.
-
-    If n/B is still too large, phase 1 recurses within the candidate bin
-    (B-ary search); one extra level covers 10^12 rows/group.
+    The floor/ceil ranks of p·(n−1) per group are resolved by
+    ``functions.ranks.values_at_ranks`` (bucket ledger per group, then
+    ranking only inside the buckets that hold a wanted rank), and
+    v_lo + frac·(v_hi−v_lo) is QUANTILE_CONT's linear interpolation.
     """
-    from pyspark.sql import Window
-
-    B = 1024
     ps = [("p50_price", 0.5), ("p90_price", 0.9)]
     g = "l_linestatus"
-    li = load_table(spark, sf_dir, "lineitem").select(g, F.col("l_extendedprice").alias("v"))
-
-    stats = li.groupBy(g).agg(
-        F.count(F.lit(1)).alias("n"), F.min("v").alias("mn"), F.max("v").alias("mx")
+    # the rank module reads its input several times: checkpoint the
+    # two-column projection once instead of re-scanning the fact
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .select(g, "l_extendedprice")
+        .localCheckpoint(eager=False)
     )
-    width = (F.col("mx") - F.col("mn")) / F.lit(B)
-
-    # Needed global ranks per group: floor/ceil of p*(n-1) for each p.
-    targets = stats.select(
-        g, "n",
-        *[e for name, p in ps for e in (
-            F.floor(F.lit(p) * (F.col("n") - 1)).alias(f"lo_{name}"),
-            F.ceil(F.lit(p) * (F.col("n") - 1)).alias(f"hi_{name}"),
-            (F.lit(p) * (F.col("n") - 1) - F.floor(F.lit(p) * (F.col("n") - 1)))
-            .cast("double").alias(f"frac_{name}"),
-        )],
-    )
-    ranks = (
-        targets.select(
-            g,
-            F.explode(F.array(*[F.col(c) for name, _ in ps for c in (f"lo_{name}", f"hi_{name}")]))
-            .alias("r"),
-        ).distinct()
-    )
-
-    # Phase 1: per-(group, bin) histogram + running offset. binned
-    # feeds BOTH the histogram and the phase-2 resolve, and hist feeds
-    # BOTH the rank->bin location and the offset attach: materialize
-    # each once (r10) instead of re-running the scan+bin (resp. the
-    # fact-sized aggregate) per consumer.
-    binned = li.join(F.broadcast(stats), g).select(
-        g, "v",
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(F.least(F.floor((F.col("v") - F.col("mn")) / width), F.lit(B - 1)))
-        .cast("long").alias("b"),
-    ).localCheckpoint(eager=False)
-    hist = binned.groupBy(g, "b").agg(F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.partitionBy(g).orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    hist = hist.withColumn(
-        "cum_before", F.coalesce(F.sum("cnt").over(wcum), F.lit(0))
-    ).localCheckpoint(eager=False)
-    rank_bins = ranks.join(
-        F.broadcast(hist),
-        (ranks[g] == hist[g])
-        & (F.col("r") >= F.col("cum_before"))
-        & (F.col("r") < F.col("cum_before") + F.col("cnt")),
-    ).select(ranks[g].alias(g), "r", "b")
-
-    # Phase 2: pull only candidate bins, rank within, pick exact ranks.
-    cand = rank_bins.select(g, "b").distinct()
-    wbin = Window.partitionBy(g, "b").orderBy("v")
-    picked = (
-        binned.join(F.broadcast(cand), [g, "b"], "left_semi")
-        .join(F.broadcast(hist.select(g, "b", "cum_before")), [g, "b"])
-        .withColumn("r", F.row_number().over(wbin) - 1 + F.col("cum_before"))
-        .join(F.broadcast(rank_bins.select(g, "r")), [g, "r"], "left_semi")
-        .select(g, "r", "v")
-    )
-
-    # Assembly: ONE broadcast join + a conditional aggregation (r10 —
-    # was 2 broadcast joins PER percentile, i.e. 4 exchanges and 4
-    # codegen'd join stages for the same <=4 picked rows per group).
-    # max(when(r == lo/hi, v)) selects exactly the value the former
-    # inner joins attached; frac is constant per group.
-    pk = targets.join(F.broadcast(picked), g)
-    aggs = []
-    for name, _ in ps:
-        aggs.append(
-            F.max(F.when(F.col("r") == F.col(f"lo_{name}"), F.col("v")))
-            .alias(f"vlo_{name}")
-        )
-        aggs.append(
-            F.max(F.when(F.col("r") == F.col(f"hi_{name}"), F.col("v")))
-            .alias(f"vhi_{name}")
-        )
-        aggs.append(F.max(f"frac_{name}").alias(f"frac_{name}"))
-    out = pk.groupBy(g).agg(*aggs)
-    return out.select(
+    pos = {name: F.lit(p) * (F.col("n") - 1) for name, p in ps}
+    ranks = {
+        f"{side}_{name}": fn(e)
+        for name, e in pos.items()
+        for side, fn in (("lo", F.floor), ("hi", F.ceil))
+    }
+    vals = values_at_ranks(li, "l_extendedprice", ranks, by=[g])
+    return vals.select(
         g,
         *[
             F.round(
-                F.col(f"vlo_{name}")
-                + F.col(f"frac_{name}") * (F.col(f"vhi_{name}") - F.col(f"vlo_{name}")),
+                F.col(f"lo_{name}")
+                + (e - F.floor(e)).cast("double")
+                * (F.col(f"hi_{name}") - F.col(f"lo_{name}")),
                 4,
             ).alias(name)
-            for name, _ in ps
+            for name, e in pos.items()
         ],
     ).orderBy(g)
 

@@ -30,6 +30,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from big_data_audio_classification_spark.functions.ranks import prefix_sums
 from big_data_audio_classification_spark.operators.dedup import (
     _SQL_TOKENS,
     tokens_col,
@@ -662,10 +663,6 @@ def curation_weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-WMED_B = 256  # quality-score buckets; quality lives in [0,1] by
-#               construction, so the bucket map needs no bounds pass
-
-
 @query(
     "curation_token_weighted_median",
     oracle=f"""
@@ -704,16 +701,12 @@ def curation_token_weighted_median(spark: SparkSession, sf_dir: str) -> DataFram
     source's TOKEN MASS — the threshold a token-budget curation pass
     actually needs (a document-count median over-weights short docs).
 
-    Distributed two-phase form (the ``agg_percentiles_twophase`` /
-    ``stats_ks_two_sample`` idiom, generalized to WEIGHTED ranks):
-    quality lives in [0,1] by construction, so bucketing needs NO
-    bounds pass — one aggregation yields per-(source, bucket) token
-    weights; exclusive bucket prefixes come from a broadcast
-    triangular join (<= 256 rows per source, window-free); only the
-    single candidate bucket's distinct scores are re-aggregated and
-    cumulated (window PARTITIONED by source, frame = distinct scores
-    inside one bucket). The raw per-document table is scanned twice,
-    shuffled never-wider than (source, bucket) keys."""
+    Distributed form: ``functions.ranks.prefix_sums`` gives, per
+    (source, distinct score), the token weight of all documents scoring
+    lower — a broadcast bucket offset (triangular join over the
+    per-source bucket ledger, window-free) plus a running sum in a
+    window PARTITIONED by (source, bucket); the median is the smallest
+    score whose inclusive prefix reaches half the source's tokens."""
     d = load_table(spark, sf_dir, "documents")
     toks = tokens_col(F.col("text"))
     base = d.select("source", toks.alias("toks")).filter(F.size("toks") > 0)
@@ -731,59 +724,15 @@ def curation_token_weighted_median(spark: SparkSession, sf_dir: str) -> DataFram
         F.size("toks").cast("bigint").alias("w"),
         quality.alias("q"),
     )
-    stats = m.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("w").cast("bigint").alias("total_tokens"),
-    )
-    binned = m.select(
-        "source", "q", "w",
-        F.least(F.floor(F.col("q") * WMED_B), F.lit(WMED_B - 1))
-        .cast("int")
-        .alias("b"),
-    )
-    bw = binned.groupBy("source", "b").agg(F.sum("w").alias("wsum"))
-    x, y = bw.alias("x"), bw.alias("y")
-    off = (
-        x.join(
-            F.broadcast(y),
-            (F.col("y.source") == F.col("x.source"))
-            & (F.col("y.b") < F.col("x.b")),
-            "left",
-        )
-        .groupBy(F.col("x.source").alias("source"), F.col("x.b").alias("b"))
-        .agg(
-            F.coalesce(F.sum("y.wsum"), F.lit(0)).alias("cum_before"),
-            F.max(F.col("x.wsum")).alias("wsum"),
-        )
-    )
-    cand = (
-        off.join(F.broadcast(stats), "source")
-        .filter(
-            (F.col("cum_before") < F.col("total_tokens") / 2.0)
-            & (
-                F.col("cum_before") + F.col("wsum")
-                >= F.col("total_tokens") / 2.0
-            )
-        )
-        .select("source", "b", "cum_before")
-    )
-    wloc = (
-        Window.partitionBy("source")
-        .orderBy("q")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    picked = (
-        binned.join(F.broadcast(cand), ["source", "b"])
-        .groupBy("source", "b", "cum_before", "q")
-        .agg(F.sum("w").alias("dw"))
-        .withColumn("cw", F.col("cum_before") + F.sum("dw").over(wloc))
-        .join(F.broadcast(stats), "source")
-        .filter(F.col("cw") >= F.col("total_tokens") / 2.0)
+    c = prefix_sums(m, "q", {"w": F.col("w"), "docs": F.lit(1)}, by=["source"])
+    return (
+        c.where(F.col("w_before") + F.col("w") >= F.col("w_total") / 2.0)
         .groupBy("source")
-        .agg(F.min("q").alias("wmedian_quality"))
-    )
-    return stats.join(picked, "source").select(
-        "source", "n_docs", "total_tokens", "wmedian_quality"
+        .agg(
+            F.max("docs_total").alias("n_docs"),
+            F.max("w_total").alias("total_tokens"),
+            F.min("q").alias("wmedian_quality"),
+        )
     )
 
 

@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_audio_classification_spark.constants import Z95_TWO_SIDED
+from big_data_audio_classification_spark.functions.ranks import values_at_ranks
 from big_data_audio_classification_spark.registry import query
 from big_data_audio_classification_spark.sources.catalog import load_table
 
@@ -769,9 +770,6 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CI_B = 1024  # histogram bins for the two-phase order-statistic lookup
-
-
 @query(
     "stats_median_ci",
     oracle=f"""
@@ -807,83 +805,32 @@ def stats_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle states the textbook definition (a global ROW_NUMBER —
     exactly the single-partition sort that does NOT scale). The engine
-    side extracts the four needed order statistics with the two-phase
-    histogram idiom (``agg_percentiles_twophase``): one 1024-bin
-    histogram pass, a running count over the ≤1024-row bin LEDGER to
-    locate each rank's bin, then ranking only inside the ~n/1024-row
-    candidate bins. No global sort, no per-group buffering; ties share
-    a value so tie-order inside a bin cannot change the picked value."""
-    x = load_table(spark, sf_dir, "orders").select(
-        F.col("o_totalprice").alias("v")
-    )
-    st = x.agg(
-        F.count(F.lit(1)).alias("n"), F.min("v").alias("mn"), F.max("v").alias("mx")
-    )
+    side extracts the four needed order statistics with
+    ``functions.ranks.values_at_ranks``: a bucket ledger locates each
+    rank's bucket, and only those buckets are ranked. No global sort, no
+    per-group buffering; ties share a value so tie-order inside a bucket
+    cannot change the picked value."""
+    x = load_table(spark, sf_dir, "orders").select("o_totalprice")
     n = F.col("n")
     # 0-based ranks == the oracle's 1-based ranks − 1, algebraically:
     # GREATEST(1, f)−1 = GREATEST(0, f−1); LEAST(n, c+1)−1 = LEAST(n−1, c).
-    t = st.select(
-        "n", "mn", "mx",
-        F.greatest(
+    ranks = {
+        "klo": F.greatest(
             F.lit(0),
             F.floor((n - Z95_TWO_SIDED * F.sqrt(n)) / 2).cast("bigint") - 1,
-        ).alias("klo"),
-        F.least(
+        ),
+        "km1": F.floor((n + 1) / 2).cast("bigint") - 1,
+        "km2": F.floor(n / 2).cast("bigint"),
+        "khi": F.least(
             n - 1,
             F.ceil((n + Z95_TWO_SIDED * F.sqrt(n)) / 2).cast("bigint"),
-        ).alias("khi"),
-        (F.floor((n + 1) / 2).cast("bigint") - 1).alias("km1"),
-        F.floor(n / 2).cast("bigint").alias("km2"),
-    )
-    width = (F.col("mx") - F.col("mn")) / F.lit(CI_B)
-    binned = x.crossJoin(F.broadcast(st)).select(
-        "v",
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(F.floor((F.col("v") - F.col("mn")) / width), F.lit(CI_B - 1))
-        )
-        .cast("long")
-        .alias("b"),
-    )
-    hist = binned.groupBy("b").agg(F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    hist = hist.withColumn(
-        "cum_before", F.coalesce(F.sum("cnt").over(wcum), F.lit(0))
-    )
-    ranks = (
-        t.select(
-            F.explode(
-                F.array(F.col("klo"), F.col("km1"), F.col("km2"), F.col("khi"))
-            ).alias("r")
-        ).distinct()
-    )
-    rank_bins = ranks.join(
-        F.broadcast(hist),
-        (F.col("r") >= F.col("cum_before"))
-        & (F.col("r") < F.col("cum_before") + F.col("cnt")),
-    ).select("r", "b")
-    cand = rank_bins.select("b").distinct()
-    wbin = Window.partitionBy("b").orderBy("v")
-    picked = (
-        binned.join(F.broadcast(cand), "b", "left_semi")
-        .join(F.broadcast(hist.select("b", "cum_before")), "b")
-        .withColumn("r", F.row_number().over(wbin) - 1 + F.col("cum_before"))
-        .join(F.broadcast(rank_bins.select("r")), "r", "left_semi")
-        .select("r", "v")
-    )
-    out = t
-    for nm in ("klo", "km1", "km2", "khi"):
-        out = out.join(
-            F.broadcast(
-                picked.select(F.col("r").alias(nm), F.col("v").alias(f"v_{nm}"))
-            ),
-            nm,
-        )
-    return out.select(
+        ),
+    }
+    return values_at_ranks(x, "o_totalprice", ranks).select(
         "n",
-        F.col("v_klo").alias("ci_lo"),
-        F.round((F.col("v_km1") + F.col("v_km2")) / 2, 4).alias("median_exact"),
-        F.col("v_khi").alias("ci_hi"),
+        F.col("klo").alias("ci_lo"),
+        F.round((F.col("km1") + F.col("km2")) / 2, 4).alias("median_exact"),
+        F.col("khi").alias("ci_hi"),
     )
 
 

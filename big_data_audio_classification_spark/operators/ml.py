@@ -39,6 +39,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from big_data_audio_classification_spark.functions.ranks import (
+    prefix_sums,
+    values_at_ranks,
+)
 from big_data_audio_classification_spark.functions.vector import to_double
 from big_data_audio_classification_spark.registry import query
 from big_data_audio_classification_spark.sources.catalog import load_table
@@ -821,9 +825,6 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AUC_BUCKETS = 256  # score-range buckets; score is a probability in [0,1]
-
-
 @query(
     "ml_roc_auc",
     oracle=f"""
@@ -868,13 +869,10 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     score/label table as ``ml_calibration_bins``.
 
     Ranks are NOT a global sort: the ``stats_mann_whitney_u`` idiom
-    applies verbatim, and because the score is a probability the
-    bucket map needs no bounds pass — ties collapse in groupBy(score),
-    per-bucket local prefix sums run in a PARTITIONED window, bucket
-    offsets come from the broadcast triangular join. AUC at 100 TB is
-    thus two keyed aggregations and a 256-row broadcast."""
-    from pyspark.sql import Window
-
+    applies verbatim — ``functions.ranks.prefix_sums`` collapses ties
+    in groupBy(score), runs per-bucket prefix sums in a PARTITIONED
+    window, and takes bucket offsets from a broadcast triangular join
+    over the bucket ledger."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     scored = (
@@ -895,45 +893,12 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
         )
     )
-    d = scored.groupBy("score").agg(
-        F.sum("label").alias("d1"), F.count("*").alias("t")
-    )
-    b = d.withColumn(
-        "bucket",
-        F.least(
-            F.lit(AUC_BUCKETS - 1), F.floor(F.col("score") * AUC_BUCKETS)
-        ).cast("int"),
-    )
-    loc = Window.partitionBy("bucket").orderBy("score").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    b = b.select(
-        "bucket",
-        "d1",
-        "t",
-        (F.sum("t").over(loc) - F.col("t")).alias("local_before"),
-    )
-    bt = b.groupBy("bucket").agg(F.sum("t").alias("bt"))
-    x, y = bt.alias("x"), bt.alias("y")
-    off = (
-        x.join(F.broadcast(y), F.col("y.bucket") < F.col("x.bucket"), "left")
-        .groupBy(F.col("x.bucket").alias("bucket"))
-        .agg(F.coalesce(F.sum("y.bt"), F.lit(0)).alias("off"))
-    )
-    agg = (
-        b.join(F.broadcast(off), "bucket")
-        .select(
-            "d1",
-            "t",
-            (F.col("off") + F.col("local_before")).alias("cum_before"),
-        )
-        .agg(
-            F.sum(
-                F.col("d1") * (F.col("cum_before") + (F.col("t") + 1) / 2.0)
-            ).alias("r1"),
-            F.sum("d1").cast("double").alias("n1"),
-            F.sum(F.col("t") - F.col("d1")).cast("double").alias("n0"),
-        )
+    agg = prefix_sums(scored, "score", {"d1": F.col("label"), "t": F.lit(1)}).agg(
+        F.sum(
+            F.col("d1") * (F.col("t_before") + (F.col("t") + 1) / 2.0)
+        ).alias("r1"),
+        F.sum("d1").cast("double").alias("n1"),
+        F.sum(F.col("t") - F.col("d1")).cast("double").alias("n0"),
     )
     auc = (F.col("r1") - F.col("n1") * (F.col("n1") + 1) / 2.0) / (
         F.col("n1") * F.col("n0")
@@ -1641,7 +1606,6 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- round-5: split-conformal prediction intervals -------------------
 
 CONF_ALPHA = 0.1  # target miscoverage -> 90% intervals
-CONF_RANK_BINS = 1024  # two-phase order-statistic histogram bins
 
 
 @query(
@@ -1702,11 +1666,9 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     an EXACT order statistic over residuals ROUNDED to 6 before
     ranking (so a ~1e-12 cross-engine drift in the fitted coefficients
     cannot reorder ties), and coverage compares the same rounded
-    values. qhat is extracted with the house TWO-PHASE bucketed-rank
-    idiom (``stats_median_ci`` / ``agg_percentiles_twophase``): one
-    count/min/max pass, a 1024-bin histogram whose ≤1024-row ledger
-    locates rank k's bucket, then ranking ONLY inside that ~n/1024-row
-    bucket (r11 — replacing the r10 TakeOrdered form whose
+    values. qhat is extracted by ``functions.ranks.values_at_ranks``: a
+    bucket ledger locates rank k's bucket, and only that bucket is
+    ranked (r11 — replacing the r10 TakeOrdered form whose
     limit(n−k+1) ≈ α·n was DATA-sized: per-partition heaps of 10% of
     the calibration slice merging through one point). No refit, no
     iteration, nothing data-sized in one task.
@@ -1763,17 +1725,15 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid = F.round(
         F.abs(F.col("y") - (F.col("icept") + F.col("slope") * F.col("x"))), 6
     )
+    # calib feeds the driver-side count and the rank module's passes:
+    # persist it so the fit is not recomputed per consumer
     calib = (
         base.filter(F.col("b").isin(6, 7))
         .crossJoin(F.broadcast(fit))
         .select(resid.alias("r"))
+        .persist()
     )
-    st = calib.agg(
-        F.count(F.lit(1)).alias("nc"),
-        F.min("r").alias("mn"),
-        F.max("r").alias("mx"),
-    ).collect()[0]
-    n_calib, mn, mx = int(st["nc"]), st["mn"], st["mx"]
+    n_calib = calib.count()
     import math as _m
 
     k = int(_m.ceil((n_calib + 1) * (1.0 - CONF_ALPHA)))
@@ -1784,44 +1744,10 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             f"conformal rank k={k} outside calibration size n={n_calib}"
         )
-    # qhat = the k-th SMALLEST rounded residual via the two-phase
-    # bucketed rank (r11; replaces the r10 TakeOrdered whose
-    # limit(n-k+1) ~ alpha*n grew with the data): bucket residuals
-    # against the collected [mn, mx] span, cumulate the <=1024-row
-    # bucket LEDGER (the only unpartitioned window, ledger-sized),
-    # locate rank k's bucket, and rank ONLY that bucket's ~n/1024
-    # rows. Global rank = ledger prefix + in-bucket row_number, and
-    # value-at-rank is tie-invariant (equal residuals share a value),
-    # so the picked value is exactly the oracle's ROW_NUMBER k-th.
-    width = (mx - mn) / CONF_RANK_BINS if mx > mn else 1.0
-    binned = calib.select(
-        "r",
-        F.when(F.lit(mx) == F.lit(mn), F.lit(0))
-        .otherwise(
-            F.least(
-                F.floor((F.col("r") - F.lit(mn)) / F.lit(width)),
-                F.lit(CONF_RANK_BINS - 1),
-            )
-        )
-        .cast("long")
-        .alias("qb"),
-    ).persist()
-    hist = binned.groupBy("qb").agg(F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.orderBy("qb").rowsBetween(Window.unboundedPreceding, -1)
-    led = hist.withColumn(
-        "cum_before", F.coalesce(F.sum("cnt").over(wcum), F.lit(0))
-    )
-    tgt = led.where(
-        (F.lit(k - 1) >= F.col("cum_before"))
-        & (F.lit(k - 1) < F.col("cum_before") + F.col("cnt"))
-    ).select("qb", "cum_before")
-    wbin = Window.partitionBy("qb").orderBy("r")
-    qhat = (
-        binned.join(F.broadcast(tgt), "qb")
-        .withColumn("rk", F.row_number().over(wbin) - 1 + F.col("cum_before"))
-        .where(F.col("rk") == F.lit(k - 1))
-        .select(F.col("r").alias("q"))
-    )
+    # qhat = the k-th SMALLEST rounded residual; value-at-rank is
+    # tie-invariant (equal residuals share a value), so the picked
+    # value is exactly the oracle's ROW_NUMBER k-th.
+    qhat = values_at_ranks(calib, "r", {"q": F.lit(k - 1)}).select("q")
     test = (
         base.filter(F.col("b") >= 8)
         .crossJoin(F.broadcast(fit))

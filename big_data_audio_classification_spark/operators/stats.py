@@ -30,6 +30,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_audio_classification_spark.constants import Z95_TWO_SIDED
+from big_data_audio_classification_spark.functions.ranks import (
+    prefix_sums,
+    values_at_ranks,
+)
 from big_data_audio_classification_spark.registry import query
 from big_data_audio_classification_spark.sources.catalog import load_table
 
@@ -367,7 +371,7 @@ def agg_chi_squared_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 KS_GROUPS = ("click", "purchase")
-KS_BUCKETS = 256  # value-range buckets; parallelism knob, NOT accuracy
+KS_BUCKETS = 256  # stats_ks_binned_ecdf's value-range buckets
 
 
 @query(
@@ -404,25 +408,16 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ECDF step — the groupBy does that collapse explicitly here; the
     oracle's RANGE frame does it implicitly).
 
-    DISTRIBUTED EXACT FORM (the ``agg_percentiles_twophase`` idiom —
-    no global-ordering window anywhere in the plan):
-      1. collapse ties: groupBy(v) → per-value counts (map-side
-         combined, ONE keyed shuffle);
-      2. range-bucket v by a broadcast (min,max) bound — bucket id is
-         monotone in v, so every value in bucket b precedes every
-         value in bucket b+1;
-      3. local ECDF: cumulative sums over a window PARTITIONED BY
-         bucket (each bucket sorts independently, in parallel);
-      4. bucket offsets: per-bucket totals (≤ KS_BUCKETS rows) get
-         their exclusive prefix sums via a broadcast triangular
-         self-join — window-free, so the executed plan contains NO
-         'No Partition Defined' WindowExec;
-      5. C(v) = offset(bucket) + local_cum; D = max |C1/n1 - C2/n2|.
-    Exactness is unaffected by bucket boundaries — buckets only fix
-    WHERE the prefix is split, never what it sums to. Value skew
-    concentrates rows in few buckets; at 100 TB swap the uniform-width
-    bounds for approx-quantile cut points (same plan shape), or use
-    the binned-ECDF variant below when bucket-width error is fine."""
+    DISTRIBUTED EXACT FORM — no global-ordering window anywhere in the
+    plan: ``functions.ranks.prefix_sums`` collapses ties, and each
+    distinct value's count of earlier values per group is a bucket
+    offset (broadcast triangular join over the bucket ledger) plus a
+    running sum inside its bucket (window PARTITIONED BY bucket). Then
+    C(v) = before(v) + count(v) and D = max |C1/n1 - C2/n2|. Exactness
+    is unaffected by bucket boundaries — buckets only fix WHERE the
+    prefix is split, never what it sums to. Value skew concentrates
+    rows in few buckets; use the binned-ECDF variant below when
+    bucket-width error is fine."""
     e = load_table(spark, sf_dir, "events")
     g1, g2 = KS_GROUPS
     s = e.filter(F.col("event_type").isin(g1, g2)).select(
@@ -430,55 +425,17 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == g1, 1).otherwise(0).alias("g1"),
         F.when(F.col("event_type") == g2, 1).otherwise(0).alias("g2"),
     )
-    d = s.groupBy("v").agg(
-        F.sum("g1").alias("d1"), F.sum("g2").alias("d2")
-    )
-    bounds = s.agg(
-        F.min("v").alias("vmin"),
-        F.max("v").alias("vmax"),
-        F.sum("g1").alias("n1"),
-        F.sum("g2").alias("n2"),
-    )
-    span = F.greatest(F.col("vmax") - F.col("vmin"), F.lit(1e-300))
-    b = d.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket",
-        F.least(
-            F.lit(KS_BUCKETS - 1),
-            F.floor((F.col("v") - F.col("vmin")) * KS_BUCKETS / span),
-        ).cast("int"),
-    )
-    loc = Window.partitionBy("bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    b = b.select(
-        "bucket",
-        "n1",
-        "n2",
-        F.sum("d1").over(loc).alias("l1"),
-        F.sum("d2").over(loc).alias("l2"),
-    )
-    bt = b.groupBy("bucket").agg(
-        F.max("l1").alias("t1"), F.max("l2").alias("t2")
-    )
-    x, y = bt.alias("x"), bt.alias("y")
-    off = (
-        x.join(F.broadcast(y), F.col("y.bucket") < F.col("x.bucket"), "left")
-        .groupBy(F.col("x.bucket").alias("bucket"))
-        .agg(
-            F.coalesce(F.sum("y.t1"), F.lit(0)).alias("off1"),
-            F.coalesce(F.sum("y.t2"), F.lit(0)).alias("off2"),
-        )
-    )
-    c = b.join(F.broadcast(off), "bucket")
+    c = prefix_sums(s, "v", {"d1": F.col("g1"), "d2": F.col("g2")})
     return c.agg(
-        F.max("n1").cast("bigint").alias("n1"),
-        F.max("n2").cast("bigint").alias("n2"),
+        F.max("d1_total").cast("bigint").alias("n1"),
+        F.max("d2_total").cast("bigint").alias("n2"),
         F.round(
             F.max(
                 F.abs(
-                    (F.col("off1") + F.col("l1")).cast("double") / F.col("n1")
-                    - (F.col("off2") + F.col("l2")).cast("double")
-                    / F.col("n2")
+                    (F.col("d1_before") + F.col("d1")).cast("double")
+                    / F.col("d1_total")
+                    - (F.col("d2_before") + F.col("d2")).cast("double")
+                    / F.col("d2_total")
                 )
             ),
             6,
@@ -723,7 +680,6 @@ def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QBIN_N = 10
-QBIN_HIST_B = 1024  # two-phase order-statistic histogram bins
 
 
 @query(
@@ -755,95 +711,54 @@ def ml_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r11 — the former single-partition NTILE window moved every order
     into one task): NTILE bucket sizes are a closed form of n alone
     (the first n mod 10 buckets get ⌈n/10⌉ rows, the rest ⌊n/10⌋), so
-    each bin's count and its [start, end] GLOBAL RANKS come from one
-    count/min/max aggregate; and because the ordering is primarily by
+    each bin's count and its [start, end] GLOBAL RANKS are closed
+    forms of n; and because the ordering is primarily by
     value, bin lo/hi are exactly the values AT those 20 ranks —
-    extracted with the house two-phase bucketed-rank idiom
-    (``stats_median_ci``): 1024-bin histogram pass, ≤1024-row ledger
-    cumulation (the only unpartitioned window), then ranking only
-    inside the ≤20 candidate buckets (~n/1024 rows each).
+    extracted by ``functions.ranks.values_at_ranks``, which ranks only
+    inside the ≤20 buckets that hold a wanted rank.
     Value-at-rank is tie-invariant, so ties rearranged inside a bucket
     cannot change any picked value."""
-    o = load_table(spark, sf_dir, "orders")
-    x = o.select(F.col("o_totalprice").alias("v"))
-    # st and binned each feed two consumers (bucket spans + the binning
-    # projection; histogram + candidate-bucket ranking) — persisted so
-    # the orders scan runs twice, not once per consumer subtree
-    st = x.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("v").alias("mn"),
-        F.max("v").alias("mx"),
-    ).persist()
-    i = F.col("i")
-    q_ = F.floor(F.col("n") / QBIN_N)
-    rem = F.col("n") % QBIN_N
+    # the rank module reads its input several times: persist the
+    # one-column projection so the orders scan runs once
+    x = load_table(spark, sf_dir, "orders").select("o_totalprice").persist()
+    n = F.col("n")
+    q_ = F.floor(n / QBIN_N)
+    rem = n % QBIN_N
     # 1-based rank span [s, e] of NTILE bucket i, straight from the
-    # NTILE definition; e >= s guards the degenerate n < QBIN_N case
+    # NTILE definition; an empty span (n < QBIN_N) is dropped below
     # (NTILE emits no row for an empty bucket).
-    bins = (
-        spark.range(1, QBIN_N + 1)
-        .select(F.col("id").alias("i"))
-        .crossJoin(F.broadcast(st))
-        .select(
-            "i",
-            ((i - 1) * q_ + F.least(i - 1, rem) + 1).alias("s"),
-            (i * q_ + F.least(i, rem)).alias("e"),
-        )
-        .where(F.col("e") >= F.col("s"))
-    )
-    ranks = bins.select(
-        F.explode(F.array(F.col("s") - 1, F.col("e") - 1)).alias("r")
-    ).distinct()
-    width = (F.col("mx") - F.col("mn")) / F.lit(QBIN_HIST_B)
-    binned = x.crossJoin(F.broadcast(st)).select(
-        "v",
-        F.when(F.col("mx") == F.col("mn"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.floor((F.col("v") - F.col("mn")) / width),
-                F.lit(QBIN_HIST_B - 1),
+    spans = [
+        (i, (i - 1) * q_ + F.least(F.lit(i - 1), rem) + 1, i * q_ + F.least(F.lit(i), rem))
+        for i in range(1, QBIN_N + 1)
+    ]
+    ranks = {
+        f"{side}{i}": r - 1
+        for i, s, e in spans
+        for side, r in (("lo", s), ("hi", e))
+    }
+    vals = values_at_ranks(x, "o_totalprice", ranks)
+    bins = vals.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("bin"),
+                        (e - s + 1).alias("n"),
+                        F.col(f"lo{i}").alias("lo"),
+                        F.col(f"hi{i}").alias("hi"),
+                    )
+                    for i, s, e in spans
+                ]
             )
         )
-        .cast("long")
-        .alias("b"),
-    ).persist()
-    hist = binned.groupBy("b").agg(F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    hist = hist.withColumn(
-        "cum_before", F.coalesce(F.sum("cnt").over(wcum), F.lit(0))
-    ).persist()
-    rank_bins = ranks.join(
-        F.broadcast(hist),
-        (F.col("r") >= F.col("cum_before"))
-        & (F.col("r") < F.col("cum_before") + F.col("cnt")),
-    ).select("r", "b")
-    cand = rank_bins.select("b").distinct()
-    wbin = Window.partitionBy("b").orderBy("v")
-    picked = (
-        binned.join(F.broadcast(cand), "b", "left_semi")
-        .join(F.broadcast(hist.select("b", "cum_before")), "b")
-        .withColumn("r", F.row_number().over(wbin) - 1 + F.col("cum_before"))
-        .join(F.broadcast(rank_bins.select("r")), "r", "left_semi")
-        .select("r", "v")
     )
     return (
-        bins.join(
-            F.broadcast(
-                picked.select(F.col("r").alias("rlo"), F.col("v").alias("lo_v"))
-            ),
-            F.col("s") - 1 == F.col("rlo"),
-        )
-        .join(
-            F.broadcast(
-                picked.select(F.col("r").alias("rhi"), F.col("v").alias("hi_v"))
-            ),
-            F.col("e") - 1 == F.col("rhi"),
-        )
+        bins.where(F.col("n") > 0)
         .select(
-            i.cast("int").alias("bin"),
-            (F.col("e") - F.col("s") + 1).cast("bigint").alias("n"),
-            F.round("lo_v", 2).alias("lo"),
-            F.round("hi_v", 2).alias("hi"),
+            "bin",
+            F.col("n").cast("bigint").alias("n"),
+            F.round("lo", 2).alias("lo"),
+            F.round("hi", 2).alias("hi"),
         )
         .orderBy("bin")
     )
@@ -1132,57 +1047,23 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-parametric complement to ``stats_welch_ttest`` when values
     are skewed.
 
-    Rank computation is the DISTRIBUTED ``stats_ks_two_sample`` idiom:
-    ties collapse in a groupBy(v); values range-bucket by a broadcast
-    (min,max); cumulative counts run in a window PARTITIONED BY bucket;
-    bucket offsets come from the broadcast triangular self-join — no
-    unpartitioned WindowExec anywhere. The midrank of a tie group of
-    size t starting after C predecessors is C + (t+1)/2; everything
-    downstream of the per-value table is algebraic."""
+    Rank computation is ``functions.ranks.prefix_sums``, as in
+    ``stats_ks_two_sample``: ties collapse, and each distinct value's
+    count of smaller values is a broadcast bucket offset plus a running
+    count in a window PARTITIONED BY bucket — no unpartitioned
+    WindowExec anywhere. The midrank of a tie group of size t starting
+    after C predecessors is C + (t+1)/2; everything downstream of the
+    per-value table is algebraic."""
     e = load_table(spark, sf_dir, "events")
     g1, g2 = KS_GROUPS
     s = e.filter(F.col("event_type").isin(g1, g2)).select(
         F.col("value").alias("v"),
         F.when(F.col("event_type") == g1, 1).otherwise(0).alias("g1"),
-        F.when(F.col("event_type") == g2, 1).otherwise(0).alias("g2"),
     )
-    d = s.groupBy("v").agg(
-        F.sum("g1").alias("d1"),
-        F.count("*").alias("t"),
-    )
-    bounds = s.agg(F.min("v").alias("vmin"), F.max("v").alias("vmax"))
-    span = F.greatest(F.col("vmax") - F.col("vmin"), F.lit(1e-300))
-    b = d.crossJoin(F.broadcast(bounds)).withColumn(
-        "bucket",
-        F.least(
-            F.lit(KS_BUCKETS - 1),
-            F.floor((F.col("v") - F.col("vmin")) * KS_BUCKETS / span),
-        ).cast("int"),
-    )
-    loc = Window.partitionBy("bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    b = b.select(
-        "bucket",
-        "d1",
-        "t",
-        (F.sum("t").over(loc) - F.col("t")).alias("local_before"),
-    )
-    bt = b.groupBy("bucket").agg((F.sum("t")).alias("bt"))
-    x, y = bt.alias("x"), bt.alias("y")
-    off = (
-        x.join(F.broadcast(y), F.col("y.bucket") < F.col("x.bucket"), "left")
-        .groupBy(F.col("x.bucket").alias("bucket"))
-        .agg(F.coalesce(F.sum("y.bt"), F.lit(0)).alias("off"))
-    )
-    c = b.join(F.broadcast(off), "bucket").select(
-        "d1",
-        "t",
-        (F.col("off") + F.col("local_before")).alias("cum_before"),
-    )
+    c = prefix_sums(s, "v", {"d1": F.col("g1"), "t": F.lit(1)})
     agg = c.agg(
         F.sum(
-            F.col("d1") * (F.col("cum_before") + (F.col("t") + 1) / 2.0)
+            F.col("d1") * (F.col("t_before") + (F.col("t") + 1) / 2.0)
         ).alias("r1"),
         F.sum(
             F.col("t").cast("double") * F.col("t") * F.col("t") - F.col("t")
@@ -1349,45 +1230,14 @@ def stats_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bucketed_avg_ranks(df, valcol: str, out: str, buckets: int = 512):
-    """(value -> average rank) for ``valcol`` without a global sort:
-    ties collapse in a groupBy, values range-bucket by broadcast
-    (min,max), local cumulative counts run in a bucket-PARTITIONED
-    window, and bucket offsets come from a broadcast triangular join —
-    the ``stats_mann_whitney_u`` rank idiom, factored for reuse.
-    Average rank of a tie block = cum_before + (t+1)/2, exactly the
-    mean of its 1-based row numbers."""
-    d = df.groupBy(F.col(valcol).alias("v")).agg(F.count("*").alias("t"))
-    lim = d.agg(F.min("v").alias("vmin"), F.max("v").alias("vmax"))
-    span = F.col("vmax") - F.col("vmin")
-    b = d.crossJoin(F.broadcast(lim)).withColumn(
-        "bucket",
-        F.when(span == 0, F.lit(0)).otherwise(
-            F.least(
-                F.lit(buckets - 1),
-                F.floor((F.col("v") - F.col("vmin")) * buckets / span),
-            )
-        ).cast("int"),
-    )
-    loc = Window.partitionBy("bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    b = b.select(
-        "bucket", "v", "t",
-        (F.sum("t").over(loc) - F.col("t")).alias("local_before"),
-    )
-    bt = b.groupBy("bucket").agg(F.sum("t").alias("bt"))
-    x, y = bt.alias("x"), bt.alias("y")
-    off = (
-        x.join(F.broadcast(y), F.col("y.bucket") < F.col("x.bucket"), "left")
-        .groupBy(F.col("x.bucket").alias("bucket"))
-        .agg(F.coalesce(F.sum("y.bt"), F.lit(0)).alias("off"))
-    )
-    return b.join(F.broadcast(off), "bucket").select(
-        F.col("v").alias(valcol),
-        (
-            F.col("off") + F.col("local_before") + (F.col("t") + 1) / 2.0
-        ).alias(out),
+def _bucketed_avg_ranks(df: DataFrame, valcol: str, out: str) -> DataFrame:
+    """(value -> average rank) for ``valcol`` without a global sort
+    (``functions.ranks.prefix_sums``). Average rank of a tie block =
+    count before it + (t+1)/2, exactly the mean of its 1-based row
+    numbers."""
+    r = prefix_sums(df, valcol, {"t": F.lit(1)})
+    return r.select(
+        valcol, (F.col("t_before") + (F.col("t") + 1) / 2.0).alias(out)
     )
 
 
@@ -1428,10 +1278,10 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle states the textbook global ROW_NUMBER ranking — the
     single-partition sort that does NOT scale. The engine side computes
-    both columns' average ranks with the bucketed two-phase idiom
-    (``_bucketed_avg_ranks``): no global sort, every window partitioned
-    by bucket, offsets from a broadcast triangular join; ranks attach
-    back by value-keyed equi-joins. Average ranks are exact integers
+    both columns' average ranks with ``_bucketed_avg_ranks``: no
+    global sort, every window partitioned by bucket, offsets from a
+    broadcast triangular join; ranks attach back by value-keyed
+    equi-joins. Average ranks are exact integers
     plus halves (< 2^53), so both engines feed IDENTICAL rank vectors
     into their stable one-pass correlation — round 6 absorbs the
     accumulation-order ulps."""
@@ -1503,12 +1353,10 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     at a 7-year span, INDEPENDENT of fact size; the fact table itself
     collapses to the spine in one aggregation).
 
-    Rank extraction is the TWO-PHASE BUCKETED form (r05 VERDICT's
-    named replacement, shipped r06): phase 1 histograms the pair
-    multiset into 1024 integer buckets (map-side combined), phase 2
-    sorts ONLY the 1-2 buckets that contain the middle ranks (a
-    window PARTITIONED by bucket over ~N/1024 rows) and offsets by
-    the broadcast cumulative counts — value-at-rank is tie-order
+    Rank extraction is ``functions.ranks.values_at_ranks``: it ranks
+    ONLY the 1-2 buckets of the pair multiset that contain the middle
+    ranks (a window PARTITIONED by bucket) and offsets them by the
+    bucket ledger's prefix counts — value-at-rank is tie-order
     invariant, so the answer is identical to the global sort the
     oracle uses, without any unpartitioned N-row window.
     """
@@ -1528,51 +1376,13 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     walsh = a.join(b, F.col("da") <= F.col("db")).select(
         (F.col("ca") + F.col("cb")).alias("w2")
     ).persist()
-    hl_nb = 1024
-    # ONE pass over the persisted pair frame collects count + bounds
-    stats1 = walsh.agg(
-        F.count("*").cast("bigint").alias("np"),
-        F.min("w2").alias("lo"),
-        F.max("w2").alias("hi"),
-    ).persist()
-    n = stats1.select("np")
-    bounds = stats1.select("lo", "hi")
-    # integer bucket id: (w2-lo)*nb DIV span — exact bigint math, the
-    # products stay far below 2^63 at cent scale
-    wb = walsh.join(F.broadcast(bounds)).select(
-        "w2",
-        F.expr(
-            f"CAST((w2 - lo) * {hl_nb} DIV (hi - lo + 1) AS INT)"
-        ).alias("bkt"),
-    )
-    counts = wb.groupBy("bkt").agg(F.count(F.lit(1)).alias("cnt"))
-    # cumulative offset over the <=nb-row histogram (tiny-frame window)
-    w_off = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.select(
-        "bkt", "cnt",
-        F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("before"),
-    )
-    k1 = F.expr("(np + 1) DIV 2")
-    k2 = F.expr("(np + 2) DIV 2")
-    targets = (
-        offs.crossJoin(F.broadcast(n))
-        .where(
-            ((k1 > F.col("before")) & (k1 <= F.col("before") + F.col("cnt")))
-            | ((k2 > F.col("before")) & (k2 <= F.col("before") + F.col("cnt")))
-        )
-        .select("bkt", "before")
-    )
-    ranked = wb.join(F.broadcast(targets), "bkt").select(
-        "w2",
+    # the middle 0-based ranks: (np+1) DIV 2 - 1 and (np+2) DIV 2 - 1
+    mid = {"k1": F.expr("(n + 1) DIV 2") - 1, "k2": F.expr("(n + 2) DIV 2") - 1}
+    hl = values_at_ranks(walsh, "w2", mid).select(
+        "n",
         (
-            F.row_number().over(Window.partitionBy("bkt").orderBy("w2"))
-            + F.col("before")
-        ).alias("rk"),
-    )
-    hl = (
-        ranked.crossJoin(F.broadcast(n))
-        .where((F.col("rk") == k1) | (F.col("rk") == k2))
-        .agg((F.avg(F.col("w2").cast("double")) / 2).alias("hl_cents"))
+            (F.col("k1").cast("double") + F.col("k2").cast("double")) / 2 / 2
+        ).alias("hl_cents"),
     )
     plain = daily.agg(
         F.count("*").cast("bigint").alias("n_days"),
@@ -1581,10 +1391,9 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         hl.crossJoin(F.broadcast(plain))
-        .crossJoin(F.broadcast(n))
         .select(
             "n_days",
-            F.col("np").alias("n_pairs"),
+            F.col("n").alias("n_pairs"),
             F.round(F.col("hl_cents") / 100, 4).alias("hl_estimate"),
             F.round(F.col("mean_rev"), 4).alias("mean_rev"),
             F.round(F.col("median_rev"), 4).alias("median_rev"),

@@ -37,6 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_audio_classification_spark.constants import Z95_TWO_SIDED
+from big_data_audio_classification_spark.functions.ranks import prefix_sums
 from big_data_audio_classification_spark.registry import query
 from big_data_audio_classification_spark.sources.catalog import load_table
 
@@ -400,7 +401,6 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MIGRATION_SPLIT = "1998-07-01"
-MIGR_HIST_B = 1024  # two-phase order-statistic histogram bins
 
 
 @query(
@@ -447,8 +447,9 @@ def analytics_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the event-type Markov matrix) — P(move to segment j | was in
     segment i) for customers active in both halves.
 
-    Two per-customer collapses (one scan each half), one equi-join on
-    custkey, and the normalization window runs over the 25-row matrix.
+    One per-(half, customer) collapse, one regroup by custkey that
+    pairs each customer's two halves, and the normalization window runs
+    over the 25-row matrix.
     Spend is rounded to cents before ranking so float sum order can't
     flip a quintile boundary; (spend, custkey) ordering makes NTILE
     deterministic under ties.
@@ -457,68 +458,37 @@ def analytics_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITHOUT ranking the customer frame in one task (r11 — the former
     form ran two single-partition NTILE windows over customer-grain
     frames): each row's exact GLOBAL rank in the total (spend, custkey)
-    order is bucket-prefix + in-bucket row_number (1024-bin histogram
-    pass, ≤1024-row ledger cumulation — the only unpartitioned window —
-    then a window PARTITIONED by bucket, ~n/1024 rows per task), and
+    order comes from ``functions.ranks.prefix_sums`` (bucket-ledger
+    offset + a running count in a window PARTITIONED by bucket), and
     NTILE(5) of a rank is a closed form of n alone: 1 + #{i in 1..4 :
     rank > i·⌊n/5⌋ + min(i, n mod 5)} — four integer comparisons, no
     global sort anywhere."""
     o = load_table(spark, sf_dir, "orders")
-    split = F.lit(MIGRATION_SPLIT).cast("date")
-
-    def half(cond, seg_alias: str) -> DataFrame:
-        h = (
-            o.where(cond)
-            .groupBy("o_custkey")
-            .agg(F.round(F.sum("o_totalprice"), 2).alias("spend"))
-        )
-        st = h.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("spend").alias("mn"),
-            F.max("spend").alias("mx"),
-        )
-        width = (F.col("mx") - F.col("mn")) / F.lit(MIGR_HIST_B)
-        binned = (
-            h.crossJoin(F.broadcast(st))
-            .select(
-                "o_custkey",
-                "spend",
-                "n",
-                F.when(F.col("mx") == F.col("mn"), F.lit(0))
-                .otherwise(
-                    F.least(
-                        F.floor((F.col("spend") - F.col("mn")) / width),
-                        F.lit(MIGR_HIST_B - 1),
-                    )
-                )
-                .cast("long")
-                .alias("b"),
-            )
-            .persist()
-        )
-        hist = binned.groupBy("b").agg(F.count(F.lit(1)).alias("cnt"))
-        wcum = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-        led = hist.withColumn(
-            "cum_before", F.coalesce(F.sum("cnt").over(wcum), F.lit(0))
-        ).select("b", "cum_before")
-        wbin = Window.partitionBy("b").orderBy("spend", "o_custkey")
-        q_ = F.floor(F.col("n") / 5)
-        rem = F.col("n") % 5
-        seg = F.lit(1)
-        for i in range(1, 5):
-            seg = seg + F.when(
-                F.col("rk") > i * q_ + F.least(F.lit(i), rem), 1
-            ).otherwise(0)
-        return (
-            binned.join(F.broadcast(led), "b")
-            .withColumn("rk", F.row_number().over(wbin) + F.col("cum_before"))
-            .select("o_custkey", seg.cast("int").alias(seg_alias))
-        )
-
-    q1 = half(F.col("o_orderdate").cast("date") < split, "seg_before")
-    q2 = half(F.col("o_orderdate").cast("date") >= split, "seg_after")
+    d, split = F.col("o_orderdate").cast("date"), F.lit(MIGRATION_SPLIT).cast("date")
+    # both halves rank in one pass, grouped by half; the customer frame
+    # is persisted because the rank module reads it several times
+    half = F.when(d < split, 0).when(d >= split, 1)
+    h = (
+        o.select(half.alias("half"), "o_custkey", "o_totalprice")
+        .where(F.col("half").isNotNull())
+        .groupBy("half", "o_custkey")
+        .agg(F.round(F.sum("o_totalprice"), 2).alias("spend"))
+        .persist()
+    )
+    r = prefix_sums(h, "spend", {"one": F.lit(1)}, by=["half"], ties=["o_custkey"])
+    rk = F.col("one_before") + 1
+    q_ = F.floor(F.col("one_total") / 5)
+    rem = F.col("one_total") % 5
+    seg = F.lit(1)
+    for i in range(1, 5):
+        seg = seg + F.when(rk > i * q_ + F.least(F.lit(i), rem), 1).otherwise(0)
     mat = (
-        q1.join(q2, "o_custkey")
+        r.groupBy("o_custkey")
+        .agg(
+            F.max(F.when(F.col("half") == 0, seg)).alias("seg_before"),
+            F.max(F.when(F.col("half") == 1, seg)).alias("seg_after"),
+        )
+        .dropna()
         .groupBy("seg_before", "seg_after")
         .agg(F.count("*").alias("n_customers"))
     )

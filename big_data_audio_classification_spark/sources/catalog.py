@@ -1,11 +1,11 @@
 """Table catalog over the driver-generated parquet test data.
 
-Schemas are declared explicitly (FIXTURES.md Part B) rather than inferred:
-at 100 TB, schema inference is a full-scan tax, and explicit schemas keep
-column pruning + predicate pushdown working against the parquet footer
-statistics. ``load_table`` is a plain ``spark.read.parquet`` — Catalyst
-gets the native vectorized reader, pushdown, and partition pruning for
-free.
+``load_table`` is a plain ``spark.read.parquet`` that infers each table's
+schema from its parquet footers, which starts one small Spark job per
+call; the FIXTURES.md Part B schemas are not declared here. Catalyst gets
+the native vectorized reader, column pruning, predicate pushdown and
+partition pruning. ``events.ts`` is normalized to a TIMESTAMP column
+whichever physical type the generator wrote.
 """
 
 from __future__ import annotations

@@ -33,9 +33,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 SNAPSHOT = os.path.join(REPO, "cert_fingerprints.json")
 
 

@@ -17,7 +17,7 @@ import sys
 import time
 from decimal import Decimal as _Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import types as T
