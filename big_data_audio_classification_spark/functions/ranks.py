@@ -81,7 +81,7 @@ def _bucket_prefix(
 
 
 def values_at_ranks(
-    df: DataFrame, value: str, ranks: Mapping[str, Column], by: Sequence[str] = ()
+    df: DataFrame, value: str, ranks: Mapping[str, Column], *, by: Sequence[str]
 ) -> DataFrame:
     """The values of ``value`` at given 0-based ranks of its ascending
     order, per group of ``by``.
@@ -129,8 +129,9 @@ def prefix_sums(
     df: DataFrame,
     value: str,
     weights: Mapping[str, Column],
-    by: Sequence[str] = (),
-    ties: Sequence[str] = (),
+    *,
+    by: Sequence[str],
+    ties: Sequence[str],
 ) -> DataFrame:
     """Sums of per-row weights over each distinct key and over all rows
     whose key orders before it.

@@ -724,7 +724,8 @@ def curation_token_weighted_median(spark: SparkSession, sf_dir: str) -> DataFram
         F.size("toks").cast("bigint").alias("w"),
         quality.alias("q"),
     )
-    c = prefix_sums(m, "q", {"w": F.col("w"), "docs": F.lit(1)}, by=["source"])
+    weights = {"w": F.col("w"), "docs": F.lit(1)}
+    c = prefix_sums(m, "q", weights, by=["source"], ties=())
     return (
         c.where(F.col("w_before") + F.col("w") >= F.col("w_total") / 2.0)
         .groupBy("source")

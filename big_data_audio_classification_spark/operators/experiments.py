@@ -826,7 +826,7 @@ def stats_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.ceil((n + Z95_TWO_SIDED * F.sqrt(n)) / 2).cast("bigint"),
         ),
     }
-    return values_at_ranks(x, "o_totalprice", ranks).select(
+    return values_at_ranks(x, "o_totalprice", ranks, by=()).select(
         "n",
         F.col("klo").alias("ci_lo"),
         F.round((F.col("km1") + F.col("km2")) / 2, 4).alias("median_exact"),

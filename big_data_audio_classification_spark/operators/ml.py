@@ -893,7 +893,8 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
         )
     )
-    agg = prefix_sums(scored, "score", {"d1": F.col("label"), "t": F.lit(1)}).agg(
+    weights = {"d1": F.col("label"), "t": F.lit(1)}
+    agg = prefix_sums(scored, "score", weights, by=(), ties=()).agg(
         F.sum(
             F.col("d1") * (F.col("t_before") + (F.col("t") + 1) / 2.0)
         ).alias("r1"),
@@ -1726,12 +1727,12 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("y") - (F.col("icept") + F.col("slope") * F.col("x"))), 6
     )
     # calib feeds the driver-side count and the rank module's passes:
-    # persist it so the fit is not recomputed per consumer
+    # checkpoint it so the fit is not recomputed per consumer
     calib = (
         base.filter(F.col("b").isin(6, 7))
         .crossJoin(F.broadcast(fit))
         .select(resid.alias("r"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     n_calib = calib.count()
     import math as _m
@@ -1747,7 +1748,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # qhat = the k-th SMALLEST rounded residual; value-at-rank is
     # tie-invariant (equal residuals share a value), so the picked
     # value is exactly the oracle's ROW_NUMBER k-th.
-    qhat = values_at_ranks(calib, "r", {"q": F.lit(k - 1)}).select("q")
+    qhat = values_at_ranks(calib, "r", {"q": F.lit(k - 1)}, by=()).select("q")
     test = (
         base.filter(F.col("b") >= 8)
         .crossJoin(F.broadcast(fit))

@@ -425,7 +425,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == g1, 1).otherwise(0).alias("g1"),
         F.when(F.col("event_type") == g2, 1).otherwise(0).alias("g2"),
     )
-    c = prefix_sums(s, "v", {"d1": F.col("g1"), "d2": F.col("g2")})
+    c = prefix_sums(s, "v", {"d1": F.col("g1"), "d2": F.col("g2")}, by=(), ties=())
     return c.agg(
         F.max("d1_total").cast("bigint").alias("n1"),
         F.max("d2_total").cast("bigint").alias("n2"),
@@ -718,9 +718,13 @@ def ml_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the ≤20 buckets that hold a wanted rank.
     Value-at-rank is tie-invariant, so ties rearranged inside a bucket
     cannot change any picked value."""
-    # the rank module reads its input several times: persist the
+    # the rank module reads its input several times: checkpoint the
     # one-column projection so the orders scan runs once
-    x = load_table(spark, sf_dir, "orders").select("o_totalprice").persist()
+    x = (
+        load_table(spark, sf_dir, "orders")
+        .select("o_totalprice")
+        .localCheckpoint(eager=False)
+    )
     n = F.col("n")
     q_ = F.floor(n / QBIN_N)
     rem = n % QBIN_N
@@ -736,7 +740,7 @@ def ml_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, s, e in spans
         for side, r in (("lo", s), ("hi", e))
     }
-    vals = values_at_ranks(x, "o_totalprice", ranks)
+    vals = values_at_ranks(x, "o_totalprice", ranks, by=())
     bins = vals.select(
         F.inline(
             F.array(
@@ -1060,7 +1064,7 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("v"),
         F.when(F.col("event_type") == g1, 1).otherwise(0).alias("g1"),
     )
-    c = prefix_sums(s, "v", {"d1": F.col("g1"), "t": F.lit(1)})
+    c = prefix_sums(s, "v", {"d1": F.col("g1"), "t": F.lit(1)}, by=(), ties=())
     agg = c.agg(
         F.sum(
             F.col("d1") * (F.col("t_before") + (F.col("t") + 1) / 2.0)
@@ -1235,7 +1239,7 @@ def _bucketed_avg_ranks(df: DataFrame, valcol: str, out: str) -> DataFrame:
     (``functions.ranks.prefix_sums``). Average rank of a tie block =
     count before it + (t+1)/2, exactly the mean of its 1-based row
     numbers."""
-    r = prefix_sums(df, valcol, {"t": F.lit(1)})
+    r = prefix_sums(df, valcol, {"t": F.lit(1)}, by=(), ties=())
     return r.select(
         valcol, (F.col("t_before") + (F.col("t") + 1) / 2.0).alias(out)
     )
@@ -1373,12 +1377,13 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     a = daily.select(F.col("d").alias("da"), F.col("c").alias("ca"))
     b = daily.select(F.col("d").alias("db"), F.col("c").alias("cb"))
+    # the rank module reads the pair frame several times: checkpoint it
     walsh = a.join(b, F.col("da") <= F.col("db")).select(
         (F.col("ca") + F.col("cb")).alias("w2")
-    ).persist()
+    ).localCheckpoint(eager=False)
     # the middle 0-based ranks: (np+1) DIV 2 - 1 and (np+2) DIV 2 - 1
     mid = {"k1": F.expr("(n + 1) DIV 2") - 1, "k2": F.expr("(n + 2) DIV 2") - 1}
-    hl = values_at_ranks(walsh, "w2", mid).select(
+    hl = values_at_ranks(walsh, "w2", mid, by=()).select(
         "n",
         (
             (F.col("k1").cast("double") + F.col("k2").cast("double")) / 2 / 2

@@ -466,14 +466,14 @@ def analytics_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     d, split = F.col("o_orderdate").cast("date"), F.lit(MIGRATION_SPLIT).cast("date")
     # both halves rank in one pass, grouped by half; the customer frame
-    # is persisted because the rank module reads it several times
+    # is checkpointed because the rank module reads it several times
     half = F.when(d < split, 0).when(d >= split, 1)
     h = (
         o.select(half.alias("half"), "o_custkey", "o_totalprice")
         .where(F.col("half").isNotNull())
         .groupBy("half", "o_custkey")
         .agg(F.round(F.sum("o_totalprice"), 2).alias("spend"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     r = prefix_sums(h, "spend", {"one": F.lit(1)}, by=["half"], ties=["o_custkey"])
     rk = F.col("one_before") + 1

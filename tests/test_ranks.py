@@ -76,7 +76,7 @@ def _avg_ranks(xs: list[float]) -> dict[float, float]:
 
 def _check_prefix_sums(spark, groups: dict[int, list[float]]):
     df = _frame(spark, groups)
-    avg = prefix_sums(df, "v", {"t": F.lit(1), "w": F.col("id")}, by=["g"])
+    avg = prefix_sums(df, "v", {"t": F.lit(1), "w": F.col("id")}, by=["g"], ties=())
     got = {
         (r["g"], r["v"]): r
         for r in avg.select(
