@@ -11,6 +11,13 @@ scales on a real cluster:
 * ``spark.sql.shuffle.partitions`` defaults to the local core count; AQE
   coalesces down when partitions are small, so on a cluster you set it
   high (2–3× total cores) and let AQE shrink it.
+* Python workers import the installed pyspark, the copy the driver runs,
+  not ``pyspark.zip`` and the jars Spark puts first on their path. On
+  CPython 3.11 pyspark's per-task ``importlib.invalidate_caches()``
+  re-reads each zip archive on the path, 100–250 ms before a task sees
+  its first row. ``WORKER_CONF`` starts the worker daemon through
+  ``worker_path/spark_graft_daemon.py``, which drops those entries when
+  pyspark and py4j import without them.
 """
 
 from __future__ import annotations
@@ -20,6 +27,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Sessions built elsewhere (scripts/) apply these too.
+WORKER_CONF = {
+    "spark.python.daemon.module": "spark_graft_daemon",
+    "spark.executorEnv.PYTHONPATH": os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "worker_path"),
+}
 
 
 def _local_cores() -> int:
@@ -50,6 +64,7 @@ def get_spark(app_name: str = "big-data-audio-classification-spark",
         # events.parquet stores TIMESTAMP(NANOS); Spark's vectorized reader
         # has no nanos type — read as long and convert in the catalog.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=WORKER_CONF)
     )
     # Scale-dependent I/O + shuffle knobs, parameterized (r10, guide
     # §6/§9): local defaults stay Spark's (the driver's bench remains

@@ -35,6 +35,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from big_data_audio_classification_spark.session import WORKER_CONF
+
 SF = os.environ.get("ROBUST_SF", "/root/testdata/sf0.01")
 
 
@@ -69,6 +71,7 @@ def run_all(names: list[str], shuffle_parts: int, parallelism: int) -> dict:
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
+        .config(map=WORKER_CONF)
         .appName(f"robust-{shuffle_parts}")
         .getOrCreate()
     )

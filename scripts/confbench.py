@@ -12,11 +12,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
-from big_data_audio_classification_spark.session import _local_cores
+from big_data_audio_classification_spark.session import WORKER_CONF, _local_cores
 
 
 def main() -> None:
@@ -36,6 +36,7 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=WORKER_CONF)
     )
     if overrides:
         for kv in overrides.split(","):
