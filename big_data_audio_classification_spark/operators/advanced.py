@@ -1110,3 +1110,886 @@ def sink_csv_quote_all_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.length("text")).cast("bigint").alias("total_len"),
         F.max("doc_id").cast("bigint").alias("max_doc_id"),
     )
+
+
+# ---------------------------------------------------------------------------
+# udtf: leading word-bigram emitter
+# ---------------------------------------------------------------------------
+
+BIGRAM_PREFIX = 6     # bigrams emitted per document
+BIGRAM_DOC_CAP = 150  # documents scanned (bounded-output exemplar)
+
+
+@query(
+    "udtf_word_bigrams",
+    oracle=f"""
+        WITH w AS (
+            SELECT doc_id,
+                   CAST(generate_subscripts(l, 1) AS BIGINT) AS pos,
+                   UNNEST(l) AS tok
+            FROM (SELECT doc_id,
+                         list_filter(string_split(text, ' '),
+                                     t -> t <> '') AS l
+                  FROM documents WHERE doc_id < {BIGRAM_DOC_CAP})
+        )
+        SELECT doc_id, CAST(pos AS BIGINT) AS pos,
+               tok || ' ' || nxt AS bigram
+        FROM (SELECT doc_id, pos, tok,
+                     LEAD(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
+              FROM w)
+        WHERE pos <= {BIGRAM_PREFIX} AND nxt IS NOT NULL
+    """,
+    tags=("udtf", "text", "documents"),
+)
+def udtf_word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WORD-BIGRAM UDTF: a Python table function walks each document
+    once and yields its leading 6 bigrams with positions — the
+    shingling kernel as per-row iteration, where the oracle needs an
+    explode + two windows (ROW_NUMBER for position, LEAD for the
+    successor) to state the same thing — two independent professional
+    formulations (the full n-gram families live in
+    ``dedup_ngram_jaccard`` / ``text_pmi_collocations``; UDTF
+    siblings: ``udtf_run_length_tokens`` r06, ``udtf_char_topfreq``
+    stock). Positions come from ``generate_subscripts`` over the
+    token list — guaranteed list order, not scan order (a bare
+    PARTITION BY window would depend on DuckDB's parallel delivery
+    order). Arrow-batched, text never shuffles, ≤ 6 rows per
+    document."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="pos long, bigram string")
+    class WordBigrams:
+        def eval(self, text: str):
+            if not text:
+                return
+            toks = [t for t in text.split(" ") if t]
+            for i in range(min(BIGRAM_PREFIX, len(toks) - 1)):
+                yield i + 1, toks[i] + " " + toks[i + 1]
+
+    spark.udtf.register("word_bigrams", WordBigrams)
+    load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < BIGRAM_DOC_CAP
+    ).createOrReplaceTempView("udtf_bigram_docs_in")
+    return spark.sql(
+        """
+        SELECT d.doc_id, b.pos, b.bigram
+        FROM udtf_bigram_docs_in d, LATERAL word_bigrams(d.text) b
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# csv: TSV dialect (tab separator, custom null token) roundtrip
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "sink_csv_tsv_dialect_roundtrip",
+    oracle="""
+        SELECT source,
+               CAST(COUNT(*) AS BIGINT)                       AS n,
+               CAST(SUM(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) AS BIGINT)
+                                                              AS n_nonen_null,
+               CAST(SUM(n_chars) AS BIGINT)                   AS total_chars,
+               CAST(MIN(doc_id) AS BIGINT)                    AS min_doc_id
+        FROM documents
+        GROUP BY source
+    """,
+    tags=("sink", "csv", "documents"),
+)
+def sink_csv_tsv_dialect_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TSV DIALECT roundtrip: tab separator + a custom NULL token
+    (``\\N``, the classic MySQL-dump convention) written and read
+    back with the SAME dialect options — non-English lang values are
+    nulled on write, survive the wire as ``\\N``, and come back as
+    SQL NULLs the aggregate can count (dialect family:
+    ``sink_csv_options_roundtrip`` r03, gzip r06-stock, quote-all
+    stock, hive-partitioned r06). The oracle restates the aggregates
+    from the parquet truth — the roundtrip is the thing under test.
+    Text is space-tokenized (never contains tabs), making TSV the
+    natural quoting-free dialect here."""
+    path = os.path.join(_SCRATCH, "sink_csv_tsv_dialect_roundtrip")
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "source",
+        F.when(F.col("lang") == "en", F.col("lang")).alias("lang_en_only"),
+        "n_chars",
+    )
+    (
+        d.write.mode("overwrite")
+        .option("header", True)
+        .option("sep", "\t")
+        .option("nullValue", "\\N")
+        .csv(path)
+    )
+    back = spark.read.csv(
+        path,
+        header=True,
+        sep="\t",
+        nullValue="\\N",
+        schema="doc_id long, source string, lang_en_only string, n_chars long",
+    )
+    return back.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.when(F.col("lang_en_only").isNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_nonen_null"),
+        F.sum("n_chars").cast("bigint").alias("total_chars"),
+        F.min("doc_id").cast("bigint").alias("min_doc_id"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# udtf: running-prefix statistics over a vector
+# ---------------------------------------------------------------------------
+
+PREFIX_STATS_N = 6
+
+
+@query(
+    "udtf_prefix_running_stats",
+    oracle=f"""
+        WITH x AS (
+            SELECT vec_id,
+                   CAST(generate_subscripts(embedding, 1) AS BIGINT) AS pos,
+                   CAST(UNNEST(embedding) AS DOUBLE) AS v
+            FROM embeddings
+        )
+        SELECT vec_id, pos,
+               ROUND(SUM(v) OVER w, 6)  AS run_sum,
+               ROUND(MIN(v) OVER w, 6)  AS run_min,
+               ROUND(MAX(v) OVER w, 6)  AS run_max
+        FROM x
+        WHERE pos <= {PREFIX_STATS_N}
+        WINDOW w AS (PARTITION BY vec_id ORDER BY pos
+                     ROWS UNBOUNDED PRECEDING)
+    """,
+    tags=("udtf", "embeddings"),
+)
+def udtf_prefix_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RUNNING-PREFIX stats UDTF: a Python table function walks each
+    vector once, maintaining sum/min/max state, and emits the first
+    6 prefix rows — per-row sequential state vs the oracle's
+    window-function formulation (two independent statements of the
+    running-aggregate semantics; delta sibling: ``udtf_array_deltas``).
+    The Python running sum adds elements in index order — the same
+    sequential order the oracle's ROWS UNBOUNDED PRECEDING frame
+    accumulates in, so the floats match bitwise (float32→double
+    widening is exact). Arrow-batched; ≤ 6 rows out per
+    vector."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="pos long, run_sum double, run_min double, run_max double")
+    class PrefixStats:
+        def eval(self, emb):
+            if not emb:
+                return
+            s = 0.0
+            mn = mx = float(emb[0])
+            for i in range(min(PREFIX_STATS_N, len(emb))):
+                v = float(emb[i])
+                s += v
+                mn = min(mn, v)
+                mx = max(mx, v)
+                yield i + 1, round(s, 6), round(mn, 6), round(mx, 6)
+
+    spark.udtf.register("prefix_stats", PrefixStats)
+    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
+        "udtf_prefix_stats_in"
+    )
+    return spark.sql(
+        """
+        SELECT e.vec_id, p.pos, p.run_sum, p.run_min, p.run_max
+        FROM udtf_prefix_stats_in e, LATERAL prefix_stats(e.embedding) p
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# csv: fields containing the delimiter and quote characters
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "sink_csv_quoted_fields_roundtrip",
+    oracle="""
+        WITH d AS (
+            SELECT doc_id,
+                   source || ', "' || lang || '"' AS tricky,
+                   n_chars
+            FROM documents
+        )
+        SELECT CAST(COUNT(*) AS BIGINT)               AS n,
+               CAST(SUM(n_chars) AS BIGINT)           AS total_chars,
+               CAST(SUM(length(tricky)) AS BIGINT)    AS tricky_len,
+               CAST(SUM(CASE WHEN tricky LIKE '%, "%' THEN 1 ELSE 0 END)
+                    AS BIGINT)                        AS n_with_delim
+        FROM d
+    """,
+    tags=("sink", "csv", "documents"),
+)
+def sink_csv_quoted_fields_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CSV QUOTING under fire: a synthetic field containing BOTH the
+    delimiter (", ") and the quote character is written and read back
+    with default RFC-4180 quoting/escaping — the round-trip that
+    breaks naive writers; counts and character masses must survive
+    the wire exactly (dialect family: options r03, gzip/quote-all/
+    partitioned stock, TSV tranche 1). The oracle recomputes from the
+    parquet truth; the roundtrip is the thing under test."""
+    import os as _os
+
+    from big_data_audio_classification_spark.scratch import (
+        SCRATCH_DIR as _SCR,
+    )
+
+    path = _os.path.join(_SCR, "sink_csv_quoted_fields_roundtrip")
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat(F.col("source"), F.lit(', "'), F.col("lang"), F.lit('"')).alias(
+            "tricky"
+        ),
+        "n_chars",
+    )
+    d.write.mode("overwrite").option("header", True).csv(path)
+    back = spark.read.csv(
+        path, header=True, schema="doc_id long, tricky string, n_chars long"
+    )
+    return back.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("n_chars").cast("bigint").alias("total_chars"),
+        F.sum(F.length("tricky")).cast("bigint").alias("tricky_len"),
+        F.sum(F.when(F.col("tricky").like('%, "%'), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_with_delim"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# udtf: run-length encoding of per-user event-type sequences
+# ---------------------------------------------------------------------------
+
+RLE_USER_CAP = 40  # users encoded (bounded-output exemplar)
+
+
+@query(
+    "udtf_run_length_encode",
+    oracle=f"""
+        WITH x AS (
+            SELECT user_id, event_type,
+                   ROW_NUMBER() OVER (PARTITION BY user_id
+                                      ORDER BY ts, event_id) AS pos
+            FROM events WHERE user_id < {RLE_USER_CAP}
+        ),
+        flagged AS (
+            SELECT user_id, event_type, pos,
+                   CASE WHEN LAG(event_type) OVER (PARTITION BY user_id
+                                                   ORDER BY pos)
+                             IS DISTINCT FROM event_type
+                        THEN 1 ELSE 0 END AS is_start
+            FROM x
+        ),
+        runs AS (
+            SELECT user_id, event_type, pos,
+                   SUM(is_start) OVER (PARTITION BY user_id ORDER BY pos
+                                       ROWS UNBOUNDED PRECEDING) AS run_id
+            FROM flagged
+        )
+        SELECT user_id,
+               CAST(run_id AS BIGINT)    AS run_id,
+               event_type,
+               CAST(MIN(pos) AS BIGINT)  AS start_pos,
+               CAST(COUNT(*) AS BIGINT)  AS run_len
+        FROM runs GROUP BY user_id, run_id, event_type
+    """,
+    tags=("udtf", "events", "session"),
+)
+def udtf_run_length_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RUN-LENGTH ENCODING of each user's event-type sequence via a
+    Python UDTF: one pass over the ordered sequence yields (run_id,
+    type, start, length) — the compression/behavior-motif kernel,
+    stated as per-row iteration where the oracle needs the full
+    gaps-and-islands double window (LAG flag → running SUM → GROUP
+    BY). Two genuinely different formulations of sequence encoding.
+    The sequence reaches the UDTF as an in-row array (``collect_list``
+    of (ts, event_id, type) structs, sort_array for deterministic
+    order — never scan order); Arrow-batched; output rows = number of
+    runs ≤ sequence length. User cap bounds the exemplar; the
+    production form is the same plan without the filter."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="run_id long, event_type string, start_pos long, run_len long")
+    class RunLengthEncode:
+        def eval(self, types):
+            if not types:
+                return
+            run_id, start, cur = 1, 1, types[0]
+            n = 1
+            for i, t in enumerate(types[1:], start=2):
+                if t == cur:
+                    n += 1
+                else:
+                    yield run_id, cur, start, n
+                    run_id, start, cur, n = run_id + 1, i, t, 1
+            yield run_id, cur, start, n
+
+    spark.udtf.register("run_length_encode", RunLengthEncode)
+    e = load_table(spark, sf_dir, "events").filter(
+        F.col("user_id") < RLE_USER_CAP
+    )
+    seqs = e.groupBy("user_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type"))),
+            lambda s: s["event_type"],
+        ).alias("types")
+    )
+    seqs.createOrReplaceTempView("udtf_rle_in")
+    return spark.sql(
+        """
+        SELECT s.user_id, r.run_id, r.event_type, r.start_pos, r.run_len
+        FROM udtf_rle_in s, LATERAL run_length_encode(s.types) r
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# sink/csv: custom escape-character dialect roundtrip
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "sink_csv_escape_roundtrip",
+    oracle="""
+        WITH x AS (
+            SELECT doc_id,
+                   'v"' || CAST(doc_id AS VARCHAR) || '",' || source AS tricky
+            FROM documents
+        )
+        SELECT CAST(COUNT(*) AS BIGINT)                       AS n,
+               CAST(SUM(length(tricky)) AS BIGINT)            AS total_len,
+               CAST(SUM(CASE WHEN tricky LIKE '%"%' THEN 1 ELSE 0 END)
+                    AS BIGINT)                                AS n_with_quote
+        FROM x
+    """,
+    tags=("sink", "csv", "documents"),
+)
+def sink_csv_escape_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BACKSLASH-ESCAPE CSV dialect roundtrip: fields that embed BOTH
+    the quote character and the delimiter (built deterministically
+    from doc_id + source), written with ``escape='\\\\'`` (the
+    MySQL-ish dialect, vs RFC4180's doubled quotes) and read back with
+    the SAME options — the dialect mismatch that silently corrupts
+    fields when writer and reader disagree. The contract aggregates
+    the RECONSTRUCTED values (count, total length, quote-carrying
+    rows) against parquet truth computed by the oracle directly —
+    if escaping dropped or doubled a character anywhere, total_len
+    moves. Completes the dialect battery (quote-all / TSV / gzip /
+    partitioned siblings). Per-task write, vectorized read."""
+    import os as _os
+
+    from big_data_audio_classification_spark.scratch import SCRATCH_DIR
+
+    path = _os.path.join(SCRATCH_DIR, "sink_csv_escape_roundtrip")
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat(
+            F.lit('v"'),
+            F.col("doc_id").cast("string"),
+            F.lit('",'),
+            F.col("source"),
+        ).alias("tricky"),
+    )
+    (
+        d.write.mode("overwrite")
+        .option("header", True)
+        .option("escape", "\\")
+        .option("quote", '"')
+        .csv(path)
+    )
+    back = spark.read.csv(
+        path,
+        header=True,
+        escape="\\",
+        quote='"',
+        schema="doc_id long, tricky string",
+    )
+    return back.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.length("tricky")).cast("bigint").alias("total_len"),
+        F.sum(F.when(F.col("tricky").contains('"'), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_with_quote"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# udtf: character trigrams with positions
+# ---------------------------------------------------------------------------
+
+TRIGRAM_DOC_MOD = 20  # bounded sample: doc_id % 20 == 0
+TRIGRAM_PREFIX = 12  # leading trigrams per document
+
+
+@query(
+    "udtf_char_trigrams",
+    oracle=f"""
+        SELECT doc_id, CAST(i AS BIGINT) AS pos,
+               substr(text, CAST(i AS INT), 3) AS trigram
+        FROM documents,
+             UNNEST(range(1, LEAST(length(text) - 1, {TRIGRAM_PREFIX} + 1)))
+                 AS t(i)
+        WHERE doc_id % {TRIGRAM_DOC_MOD} = 0 AND length(text) >= 3
+    """,
+    tags=("udtf", "text", "documents"),
+)
+def udtf_char_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CHARACTER-TRIGRAM UDTF: a Python table function walks each
+    sampled document once and yields its leading 12 character
+    trigrams with 1-based positions — the char-shingling kernel
+    (language-ID and fuzzy-matching both start here) as per-row
+    iteration, where the oracle states the same thing positionally
+    (substr over a bounded range). UDTF siblings:
+    ``udtf_word_bigrams`` r08, ``udtf_run_length_encode`` r09
+    window. Arrow-batched; the text never shuffles; ≤ 12 rows per
+    sampled document, sample bounded by the doc_id modulus."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="pos long, trigram string")
+    class CharTrigrams:
+        def eval(self, text: str):
+            if not text or len(text) < 3:
+                return
+            for i in range(min(len(text) - 2, TRIGRAM_PREFIX)):
+                yield i + 1, text[i : i + 3]
+
+    spark.udtf.register("char_trigrams", CharTrigrams)
+    load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % TRIGRAM_DOC_MOD == 0
+    ).createOrReplaceTempView("udtf_trigram_docs_in")
+    return spark.sql(
+        """
+        SELECT d.doc_id, g.pos, g.trigram
+        FROM udtf_trigram_docs_in d, LATERAL char_trigrams(d.text) g
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# csv: embedded-newline (multiLine) quoted-field roundtrip
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "sink_csv_multiline_quoted_roundtrip",
+    oracle="""
+        WITH x AS (
+            SELECT doc_id,
+                   source || chr(10) || substr(text, 1, 40) AS tricky
+            FROM documents
+        )
+        SELECT CAST(COUNT(*) AS BIGINT)            AS n,
+               CAST(SUM(length(tricky)) AS BIGINT) AS total_len,
+               CAST(SUM(CASE WHEN contains(tricky, chr(10))
+                             THEN 1 ELSE 0 END) AS BIGINT)
+                                                   AS n_with_newline,
+               CAST(MIN(doc_id) AS BIGINT)         AS min_doc_id
+        FROM x
+    """,
+    tags=("sink", "csv", "documents"),
+)
+def sink_csv_multiline_quoted_roundtrip(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """EMBEDDED-NEWLINE CSV roundtrip: fields carrying a literal
+    newline (built deterministically: source + LF + a text prefix)
+    written RFC4180-quoted and read back with ``multiLine=true`` —
+    the dialect wrinkle that silently SPLITS records when the reader
+    treats every physical line as a row (the default fast path;
+    multiLine forces whole-file parsing, trading split-ability for
+    correctness — exactly the trade a 100 TB ingest must make
+    knowingly, so this carrier pins the semantics). The contract
+    aggregates the reconstructed values (count, total length
+    INCLUDING the newline, newline-carrying rows, key min) against
+    parquet truth computed by the oracle directly — a record split
+    anywhere moves every aggregate. Completes the dialect battery
+    (quote-all / TSV / escape / gzip / partitioned siblings)."""
+    import os as _os
+
+    from big_data_audio_classification_spark.scratch import SCRATCH_DIR
+
+    path = _os.path.join(SCRATCH_DIR, "sink_csv_multiline_roundtrip")
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat(
+            F.col("source"), F.lit("\n"), F.substring("text", 1, 40)
+        ).alias("tricky"),
+    )
+    # The writer TRIMS field whitespace by default
+    # (ignoreLeading/TrailingWhiteSpace=true on WRITE — unlike read) —
+    # a 40-char text prefix ending in a space silently shrinks and the
+    # oracle's total_len catches it (measured: 75 chars over 500 docs,
+    # r09). Dialect pinned trim-free on both sides.
+    d.write.mode("overwrite").options(
+        header=True,
+        quoteAll=True,
+        ignoreLeadingWhiteSpace=False,
+        ignoreTrailingWhiteSpace=False,
+    ).csv(path)
+    back = spark.read.options(
+        header=True, multiLine=True, inferSchema=False
+    ).csv(path)
+    return back.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.length("tricky")).cast("bigint").alias("total_len"),
+        F.sum(F.when(F.col("tricky").contains("\n"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_with_newline"),
+        F.min(F.col("doc_id").cast("bigint")).alias("min_doc_id"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# udtf + session: sessionized event-type path triples
+# ---------------------------------------------------------------------------
+
+PATHS_GAP_S = 1800  # 30-min session gap, matches the sessionization family
+
+
+@query(
+    "udtf_session_paths",
+    oracle=f"""
+        WITH x AS (
+            SELECT user_id, event_type, ts, event_id,
+                   CASE WHEN epoch_us(ts) - epoch_us(
+                            LAG(ts) OVER (PARTITION BY user_id
+                                          ORDER BY ts, event_id))
+                            > {PATHS_GAP_S * 1_000_000}
+                         OR LAG(ts) OVER (PARTITION BY user_id
+                                          ORDER BY ts, event_id) IS NULL
+                        THEN 1 ELSE 0 END AS new_sess
+            FROM events
+        ),
+        s AS (
+            SELECT user_id, event_type, ts, event_id,
+                   SUM(new_sess) OVER (PARTITION BY user_id
+                                       ORDER BY ts, event_id) AS sess_id
+            FROM x
+        ),
+        tri AS (
+            SELECT user_id,
+                   event_type || '>' ||
+                   LEAD(event_type, 1) OVER w || '>' ||
+                   LEAD(event_type, 2) OVER w AS path3,
+                   LEAD(sess_id, 2) OVER w = sess_id AS same_sess
+            FROM s
+            WINDOW w AS (PARTITION BY user_id, sess_id ORDER BY ts, event_id)
+        )
+        SELECT path3,
+               CAST(COUNT(*) AS BIGINT) AS n_occurrences,
+               CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+        FROM tri WHERE path3 IS NOT NULL AND same_sess
+        GROUP BY path3
+    """,
+    tags=("udtf", "session", "events"),
+)
+def udtf_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SESSIONIZED PATH TRIPLES via a Python UDTF: one stateful pass
+    per user (TABLE(...) PARTITION BY user_id ORDER BY ts, event_id —
+    the tiebreak matters here, unlike the count-only sessionizer:
+    path CONTENT is tie-order sensitive) emits every within-session
+    3-gram of event types at a 30-min gap, then a census ranks the
+    triples — the behavioral-motif table funnels and Markov models
+    read. The UDTF carries O(1) state (last two types + last epoch);
+    gaps compare exact integer microseconds computed JVM-side
+    (unix_micros on the UTC-pinned ts — bijective, so the (e,
+    event_id) order equals (ts, event_id); the Python body stays
+    integer-only, r10). The oracle restates it as
+    gap-islands + double LEAD inside (user, session) windows — an
+    independent formulation of both the session boundary AND the
+    triple windowing (a triple must not straddle sessions; the UDTF
+    resets its buffer, the oracle checks LEAD(sess_id,2)). 100 TB:
+    one user-keyed shuffle+sort, census on <= |types|³ rows."""
+    from pyspark.sql.functions import udtf
+
+    GAP_US = PATHS_GAP_S * 1_000_000
+
+    @udtf(returnType="user_id bigint, path3 string")
+    class PathTriples:
+        def __init__(self):
+            self.user = None
+            self.last_epoch = None
+            self.buf = []
+
+        def eval(self, row):
+            # Epoch micros arrive PRECOMPUTED from the JVM (r10): the
+            # former per-row datetime subtraction in Python was pure
+            # boundary tax (guide §4 — ship only what the function
+            # needs, keep the Python body integer-only). Gap compare
+            # and ordering are identical: unix_micros is bijective on
+            # the UTC-pinned ts, so ORDER BY (e, event_id) is the same
+            # total order as (ts, event_id).
+            e = row["e"]
+            if (
+                self.last_epoch is not None
+                and e - self.last_epoch > GAP_US
+            ):
+                self.buf = []  # session break: triples never straddle
+            self.last_epoch = e
+            self.user = row["user_id"]
+            self.buf.append(row["event_type"])
+            if len(self.buf) > 3:
+                self.buf.pop(0)
+            if len(self.buf) == 3:
+                yield self.user, ">".join(self.buf)
+
+    spark.udtf.register("session_paths_udtf", PathTriples)
+    e = load_table(spark, sf_dir, "events")
+    e.createOrReplaceTempView("events_for_paths_udtf")
+    tri = spark.sql(
+        """
+        SELECT * FROM session_paths_udtf(
+            TABLE(SELECT user_id, unix_micros(ts) AS e, event_type, event_id
+                  FROM events_for_paths_udtf)
+            PARTITION BY user_id ORDER BY (e, event_id)
+        )
+        """
+    )
+    return tri.groupBy("path3").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),
+        F.countDistinct("user_id").cast("bigint").alias("n_users"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# sink/csv: nullValue vs emptyValue dialect roundtrip
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "sink_csv_null_empty_roundtrip",
+    oracle="""
+        WITH x AS (
+            SELECT doc_id,
+                   CASE WHEN doc_id % 3 = 0 THEN NULL
+                        WHEN doc_id % 3 = 1 THEN ''
+                        ELSE lang END AS lang_mod
+            FROM documents
+        )
+        SELECT CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(CASE WHEN lang_mod IS NULL THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_null,
+               CAST(SUM(CASE WHEN lang_mod = '' THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_empty,
+               CAST(SUM(CASE WHEN lang_mod <> '' THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_regular,
+               CAST(SUM(length(lang_mod)) AS BIGINT) AS total_len
+        FROM x
+    """,
+    tags=("sink", "csv", "documents"),
+)
+def sink_csv_null_empty_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NULL-vs-EMPTY CSV dialect roundtrip — the distinction CSV
+    cannot natively spell (both serialize to nothing) and the one
+    every warehouse loader gets wrong first: a three-way column
+    (NULL / '' / value, derived from doc_id mod 3) written with the
+    one LOSSLESS dialect Spark's writer+reader pair actually supports:
+    explicit ``nullValue='\\\\N'`` plus the DEFAULT empty handling,
+    which quotes empties RFC4180-style (``""``) — so ``\\\\N`` → NULL
+    and ``""`` → '' on the way back. (Probed r10: the default dialect
+    collapses '' into NULL on read, and an explicit ``emptyValue``
+    sentinel is writer-only — the reader hands back the literal
+    sentinel — both silently corrupting; this operator pins the
+    config that doesn't.) The census (null/empty/regular counts +
+    total length) is computed from the RECONSTRUCTED column and must
+    equal the oracle's parquet truth. Completes the dialect battery
+    (quote-all / TSV / escape / multiLine / gzip siblings). Per-task
+    write, vectorized read."""
+    import os as _os
+
+    from big_data_audio_classification_spark.scratch import SCRATCH_DIR
+
+    path = _os.path.join(SCRATCH_DIR, "sink_csv_null_empty_roundtrip")
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.when(F.col("doc_id") % 3 == 0, F.lit(None).cast("string"))
+        .when(F.col("doc_id") % 3 == 1, F.lit(""))
+        .otherwise(F.col("lang"))
+        .alias("lang_mod"),
+    )
+    (
+        d.write.mode("overwrite")
+        .option("header", True)
+        .option("nullValue", "\\N")
+        .csv(path)
+    )
+    back = spark.read.csv(
+        path,
+        header=True,
+        nullValue="\\N",
+        schema="doc_id long, lang_mod string",
+    )
+    return back.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.when(F.col("lang_mod").isNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_null"),
+        F.sum(F.when(F.col("lang_mod") == "", 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_empty"),
+        F.sum(F.when(F.col("lang_mod") != "", 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_regular"),
+        F.sum(F.length("lang_mod")).cast("bigint").alias("total_len"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# udtf: per-position digit census of order totals (Benford face)
+# ---------------------------------------------------------------------------
+
+DIGIT_MAX_POS = 8
+DIGIT_SAMPLE_MOD = 11  # systematic 1-in-11 sample: o_orderkey % 11 = 5
+
+
+@query(
+    "udtf_value_digits",
+    oracle=f"""
+        WITH c AS (
+            SELECT CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT) AS VARCHAR)
+                   AS s
+            FROM orders WHERE o_orderkey % {DIGIT_SAMPLE_MOD} = 5
+        ),
+        d AS (
+            SELECT CAST(generate_subscripts(string_split_regex(s, ''), 1)
+                        AS BIGINT) AS pos,
+                   CAST(ascii(UNNEST(string_split_regex(s, ''))) - 48
+                        AS BIGINT) AS digit
+            FROM c
+        )
+        SELECT pos, digit, CAST(COUNT(*) AS BIGINT) AS n
+        FROM d WHERE pos <= {DIGIT_MAX_POS}
+        GROUP BY pos, digit
+    """,
+    tags=("udtf", "scalar", "math", "orders"),
+)
+def udtf_value_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PER-POSITION DIGIT CENSUS of order totals via a Python UDTF —
+    the Benford's-law audit face (position 1 should be log-skewed
+    toward small digits on organic monetary data; a uniform leading
+    digit is the classic fabricated-data tell): a table function
+    walks the decimal-cents string of each total and yields (pos,
+    digit) rows, aggregated to a ≤ 8×10-row census over a SYSTEMATIC
+    1-in-11 sample (o_orderkey%11=5 — deterministic,
+    scale-proportional, and key-stride-free for sequential orderkeys;
+    the cap exists because the Python UDTF's per-row emission is the
+    scan cost, measured 4.6× wall at 10× rows unsampled, and the
+    Arrow UDTF variant benched 6× SLOWER still — batch overhead
+    dwarfs these 2-tuple yields). The oracle restates the emission
+    with generate_subscripts over a character split — two independent
+    formulations of positional digit extraction. Cents are exact;
+    counts exact. UDTF siblings: ``udtf_char_trigrams``,
+    ``udtf_array_deltas``, ``udtf_session_paths``. 100 TB: the sample
+    predicate pushes to the scan; the census map-side combines."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="pos long, digit long")
+    class ValueDigits:
+        def eval(self, cents: int):
+            if cents is None:
+                return
+            for i, ch in enumerate(str(cents)[:DIGIT_MAX_POS]):
+                yield i + 1, ord(ch) - 48
+
+    spark.udtf.register("value_digits", ValueDigits)
+    load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderkey") % DIGIT_SAMPLE_MOD == 5
+    ).select(
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents")
+    ).createOrReplaceTempView("udtf_digit_orders_in")
+    return spark.sql(
+        """
+        SELECT d.pos, d.digit, CAST(COUNT(*) AS BIGINT) AS n
+        FROM udtf_digit_orders_in o, LATERAL value_digits(o.cents) d
+        GROUP BY d.pos, d.digit
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# csv: pipe-delimited single-quote dialect roundtrip
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "sink_csv_pipe_quotechar_roundtrip",
+    oracle="""
+        WITH x AS (
+            SELECT doc_id,
+                   'a|' || chr(39) || CAST(doc_id AS VARCHAR) || chr(39)
+                   || '|' || source AS tricky
+            FROM documents
+        )
+        SELECT CAST(COUNT(*) AS BIGINT)                        AS n,
+               CAST(SUM(length(tricky)) AS BIGINT)             AS total_len,
+               CAST(SUM(CASE WHEN tricky LIKE '%|%' THEN 1 ELSE 0 END)
+                    AS BIGINT)                                 AS n_with_pipe,
+               CAST(SUM(CASE WHEN contains(tricky, chr(39)) THEN 1 ELSE 0 END)
+                    AS BIGINT)                                 AS n_with_quote
+        FROM x
+    """,
+    tags=("sink", "csv", "documents"),
+)
+def sink_csv_pipe_quotechar_roundtrip(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PIPE-DELIMITED, SINGLE-QUOTE-QUOTED CSV dialect roundtrip:
+    fields that embed BOTH the pipe delimiter and the single-quote
+    quote character, written with ``sep='|', quote="'"`` and read
+    back with the SAME options — the non-default-dialect case where
+    writer/reader asymmetry corrupts silently (RFC-double-quote
+    sibling: ``sink_csv_escape_roundtrip``; the dialect battery also
+    covers TSV / gzip / quote-all / multiLine / null-sentinel). The
+    contract aggregates the RECONSTRUCTED values (count, total
+    length, delimiter-carrying and quote-carrying rows) against
+    parquet truth computed directly by the oracle — any dropped or
+    doubled character moves total_len. Per-task write, vectorized
+    read."""
+    import os as _os
+
+    from big_data_audio_classification_spark.scratch import SCRATCH_DIR
+
+    path = _os.path.join(SCRATCH_DIR, "sink_csv_pipe_quotechar_roundtrip")
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat(
+            F.lit("a|'"),
+            F.col("doc_id").cast("string"),
+            F.lit("'|"),
+            F.col("source"),
+        ).alias("tricky"),
+    )
+    (
+        d.write.mode("overwrite")
+        .option("header", True)
+        .option("sep", "|")
+        .option("quote", "'")
+        .option("escape", "\\")
+        .csv(path)
+    )
+    back = spark.read.csv(
+        path,
+        header=True,
+        sep="|",
+        quote="'",
+        escape="\\",
+        schema="doc_id long, tricky string",
+    )
+    return back.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.length("tricky")).cast("bigint").alias("total_len"),
+        F.sum(F.when(F.col("tricky").contains("|"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_with_pipe"),
+        F.sum(F.when(F.col("tricky").contains("'"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_with_quote"),
+    )

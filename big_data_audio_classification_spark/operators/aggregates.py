@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_audio_classification_spark.functions.ranks import values_at_ranks
 from big_data_audio_classification_spark.registry import query
@@ -1153,4 +1153,960 @@ def agg_pandas_udaf_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.groupBy(F.col("o_orderpriority").alias("priority")).agg(
         n_rows("o_totalprice").alias("n"),
         F.round(iqr("o_totalprice"), 4).alias("iqr"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# sketch: KMV (k minimum values) distinct-count estimator
+# ---------------------------------------------------------------------------
+
+KMV_DISTINCT_K = 32
+KMV_SPACE = 4294967296  # 2^32: the portable md5-derived hash domain
+
+
+@query(
+    "agg_kmv_distinct_sketch",
+    oracle=f"""
+        WITH h AS (
+            SELECT DISTINCT o_orderpriority AS priority,
+                   CAST(('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 8))
+                        AS BIGINT) AS hv
+            FROM orders
+        ),
+        r AS (
+            SELECT priority, hv,
+                   ROW_NUMBER() OVER (PARTITION BY priority ORDER BY hv) AS rk,
+                   COUNT(*) OVER (PARTITION BY priority) AS n_exact
+            FROM h
+        )
+        SELECT priority,
+               CAST(MAX(n_exact) AS BIGINT) AS n_distinct_exact,
+               CAST(CASE WHEN MAX(n_exact) < {KMV_DISTINCT_K} THEN MAX(n_exact)
+                    ELSE CAST(FLOOR(({KMV_DISTINCT_K} - 1.0) * {KMV_SPACE}
+                              / MAX(CASE WHEN rk = {KMV_DISTINCT_K} THEN hv END))
+                         AS BIGINT) END AS BIGINT) AS kmv_estimate
+        FROM r WHERE rk <= {KMV_DISTINCT_K}
+        GROUP BY priority
+    """,
+    tags=("aggregate", "sketch", "orders"),
+)
+def agg_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KMV (k-minimum-values) DISTINCT-COUNT sketch, k=32: keep the k
+    smallest portable hashes per group; the k-th minimum's position in
+    the hash space estimates the distinct count as (k−1)/x̂ — the
+    classic Bar-Yossef bottom-k estimator HLL superseded but every
+    engine still ships (DataSketches' theta sketch IS this). Hashes
+    are md5-derived 32-bit (engine-portable, the house scheme), the
+    estimate is one exact integer division, and groups smaller than k
+    fall back to the exact count — so every output cell is an exact
+    integer, bit-stable by construction. At 100 TB the bottom-k per
+    group is a rank window over the DISTINCT hash set — mergeable,
+    fixed memory, and the exact side (for the error column) drops
+    away leaving a k-row-per-group sketch."""
+    from big_data_audio_classification_spark.operators.dedup import token_hash
+
+    o = load_table(spark, sf_dir, "orders")
+    h = o.select(
+        F.col("o_orderpriority").alias("priority"),
+        token_hash(F.col("o_custkey").cast("string")).alias("hv"),
+    ).distinct()
+    wr = Window.partitionBy("priority").orderBy("hv")
+    wn = Window.partitionBy("priority")
+    r = h.select(
+        "priority",
+        "hv",
+        F.row_number().over(wr).alias("rk"),
+        F.count(F.lit(1)).over(wn).alias("n_exact"),
+    ).filter(F.col("rk") <= KMV_DISTINCT_K)
+    kth = F.max(F.when(F.col("rk") == KMV_DISTINCT_K, F.col("hv")))
+    return r.groupBy("priority").agg(
+        F.max("n_exact").cast("bigint").alias("n_distinct_exact"),
+        F.when(F.max("n_exact") < KMV_DISTINCT_K, F.max("n_exact"))
+        .otherwise(
+            F.floor((KMV_DISTINCT_K - 1.0) * KMV_SPACE / kth).cast("bigint")
+        )
+        .cast("bigint")
+        .alias("kmv_estimate"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# grouping: ROLLUP subtotal levels selected via GROUPING_ID
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "agg_grouping_id_subtotals",
+    oracle="""
+        SELECT COALESCE(o_orderstatus, '<all>')   AS status,
+               COALESCE(o_orderpriority, '<all>') AS priority,
+               CAST(GROUPING(o_orderstatus) * 2
+                    + GROUPING(o_orderpriority) AS BIGINT) AS gid,
+               CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+                    AS BIGINT) AS cents
+        FROM orders
+        GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
+        HAVING GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) > 0
+    """,
+    tags=("aggregate", "grouping", "orders"),
+)
+def agg_grouping_id_subtotals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROLLUP with the SUBTOTAL LEVELS ONLY — ``grouping_id`` used as a
+    post-aggregation filter (HAVING gid > 0), keeping the
+    status-subtotal and grand-total rows and dropping the leaf level —
+    the materialized-subtotal feed a reporting layer actually stores
+    (full hierarchy: ``agg_rollup_time_hierarchy``; CUBE:
+    ``agg_cube_share_of_total``). Money stays exact integer cents
+    under DECIMAL(38). ROLLUP is one shuffle with partial aggregation
+    at every level — the gid filter prunes output, not work, which is
+    the honest statement of what HAVING does here."""
+    o = load_table(spark, sf_dir, "orders")
+    gid = F.grouping_id("o_orderstatus", "o_orderpriority")
+    return (
+        o.rollup("o_orderstatus", "o_orderpriority")
+        .agg(
+            gid.cast("bigint").alias("gid"),
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            .cast("bigint")
+            .alias("cents"),
+        )
+        .filter(F.col("gid") > 0)
+        .select(
+            F.coalesce("o_orderstatus", F.lit("<all>")).alias("status"),
+            F.coalesce("o_orderpriority", F.lit("<all>")).alias("priority"),
+            "gid",
+            "n",
+            "cents",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# udaf/pandas: robust tail-weight ratio via interpolated deciles
+# ---------------------------------------------------------------------------
+
+
+def _decile_px100(k: int) -> str:
+    """Exact linear-interpolated percentile ×100 in integer cent units:
+    with 1-based sorted list ``xs`` of exact cents and ``n`` rows,
+    rank h = (n-1)·k/100 splits into lo = ((n-1)k)//100 and
+    rem = ((n-1)k)%100, and 100·p = 100·xs[lo+1] + rem·(xs[lo+2]−xs[lo+1])
+    — pure BIGINT arithmetic, the one formula BOTH engines evaluate."""
+    lo = f"(((n - 1) * {k}) // 100)"
+    a = f"xs[{lo} + 1]"
+    b = f"COALESCE(xs[{lo} + 2], {a})"
+    return f"({a} * 100 + (((n - 1) * {k}) % 100) * ({b} - {a}))"
+
+
+@query(
+    "agg_pandas_udaf_decile_ratio",
+    oracle=f"""
+        WITH c AS (
+            SELECT l_linestatus AS status,
+                   CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS cents
+            FROM lineitem
+        ),
+        g AS (
+            SELECT status, CAST(COUNT(*) AS BIGINT) AS n,
+                   list(cents ORDER BY cents) AS xs
+            FROM c GROUP BY status
+        )
+        SELECT status, n,
+               ROUND(CAST({_decile_px100(90)} - {_decile_px100(10)} AS DOUBLE)
+                     / CAST({_decile_px100(75)} - {_decile_px100(25)} AS DOUBLE),
+                     4) AS decile_iqr_ratio
+        FROM g
+    """,
+    tags=("aggregate", "udaf", "pandas", "robust", "lineitem"),
+)
+def agg_pandas_udaf_decile_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TAIL-WEIGHT ratio (P90−P10)/(P75−P25) per line status as a
+    grouped-agg pandas UDF — a robust kurtosis proxy (≈ 1.9 for the
+    uniform, ≈ 2.44 for the normal, larger for heavy tails) joining
+    the Arrow-UDAF family (trimmed mean r05, weighted gmean r06, MAD /
+    IQR stocked r06). Percentiles are computed over EXACT integer
+    cents with the rank split into integer lo/rem parts, so every
+    interpolated percentile is itself an exact BIGINT (×100) and the
+    only float op is the final ratio division — the same expression
+    the oracle evaluates, closing the np.percentile-vs-quantile_cont
+    interpolation-ULP hazard (r07 advice; the class that produced both
+    r06 red rows). At 100 TB swap the per-group buffer for the
+    two-phase exact-percentile plan (``agg_percentiles_twophase``) —
+    same answer, bounded memory."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def decile_iqr_ratio(v: pd.Series) -> float:
+        xs = np.sort(
+            np.rint(v.to_numpy(dtype=np.float64) * 100).astype(np.int64)
+        )
+        n = len(xs)
+
+        def px100(k: int) -> int:
+            lo, rem = divmod((n - 1) * k, 100)
+            a = int(xs[lo])
+            b = int(xs[lo + 1]) if lo + 1 < n else a
+            return a * 100 + rem * (b - a)
+
+        return float(px100(90) - px100(10)) / float(px100(75) - px100(25))
+
+    # Spark disallows mixing a grouped-agg pandas UDF with JVM
+    # aggregates in one agg() (INVALID_PANDAS_UDF_PLACEMENT), so the
+    # row count must also ride through Arrow — the same constraint
+    # behind agg_pandas_udaf_mad/iqr's n_rows kernels.
+    @pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
+        return len(v)
+
+    li = load_table(spark, sf_dir, "lineitem")
+    return li.groupBy(F.col("l_linestatus").alias("status")).agg(
+        n_rows("l_extendedprice").alias("n"),
+        F.round(decile_iqr_ratio("l_extendedprice"), 4).alias(
+            "decile_iqr_ratio"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# sketch: bottom-k (theta-style) set-operation estimates
+# ---------------------------------------------------------------------------
+
+THETA_K = 64
+THETA_SPACE = 4294967296  # 2^32 portable-hash domain
+
+
+def _theta_sql() -> str:
+    return f"""
+        WITH fk AS (
+            SELECT DISTINCT CAST(('0x' || substr(md5(CAST(o_custkey AS VARCHAR)),
+                                  1, 8)) AS BIGINT) AS hv
+            FROM orders WHERE o_orderstatus = 'F'
+        ),
+        uk AS (
+            SELECT DISTINCT CAST(('0x' || substr(md5(CAST(o_custkey AS VARCHAR)),
+                                  1, 8)) AS BIGINT) AS hv
+            FROM orders WHERE o_orderpriority = '1-URGENT'
+        ),
+        un AS (SELECT hv FROM fk UNION SELECT hv FROM uk),
+        bk AS (SELECT hv, ROW_NUMBER() OVER (ORDER BY hv) AS rk FROM un),
+        theta AS (
+            SELECT CASE WHEN (SELECT COUNT(*) FROM bk) <= {THETA_K}
+                        THEN CAST({THETA_SPACE} AS DOUBLE)
+                        ELSE CAST((SELECT hv FROM bk WHERE rk = {THETA_K})
+                                  AS DOUBLE) END AS th,
+                   (SELECT COUNT(*) FROM bk) <= {THETA_K} AS exact_mode
+        )
+        SELECT CAST((SELECT COUNT(*) FROM un) AS BIGINT) AS n_union_exact,
+               CAST(CASE WHEN t.exact_mode
+                    THEN (SELECT COUNT(*) FROM un)
+                    ELSE CAST(FLOOR(({THETA_K} - 1.0) * {THETA_SPACE} / t.th)
+                              AS BIGINT) END AS BIGINT)   AS union_estimate,
+               CAST((SELECT COUNT(*) FROM bk b
+                     WHERE b.rk < {THETA_K}
+                       AND EXISTS (SELECT 1 FROM fk WHERE fk.hv = b.hv)
+                       AND EXISTS (SELECT 1 FROM uk WHERE uk.hv = b.hv))
+                    AS BIGINT)                            AS k_inter_hits,
+               t.exact_mode
+        FROM theta t
+    """
+
+
+@query(
+    "agg_theta_sketch_setops",
+    oracle=_theta_sql(),
+    tags=("aggregate", "sketch", "setop", "orders"),
+)
+def agg_theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """THETA-SKETCH set algebra (DataSketches semantics) from bottom-k
+    samples: the union's bottom-64 portable hashes fix a threshold θ
+    (= the k-th minimum), the union size is estimated as (k−1)·S/θ,
+    and the INTERSECTION is estimated by counting sub-θ hashes present
+    in both streams — the mergeable sketch identity that lets a 100 TB
+    pipeline AND/OR/NOT distinct-count sketches without re-scanning
+    (single-stream KMV: ``agg_kmv_distinct_sketch``). Every output is
+    exact integer arithmetic (counts and one floored division), and
+    small unions fall back to exact mode — bit-stable by construction.
+    One distinct-hash pass per stream + one rank over the union's
+    k-head. fk/uk/un each feed two consumers (the union AND the k-head
+    semi-joins; the count AND both rank reads), so all three persist
+    (r11 — the lazy forms re-ran every distinct pass: 8 executed
+    parquet-scan operators in the final plan, now 2); the global
+    row_number is planned as
+    TakeOrderedAndProject(64) + a ≤64-row window by Spark's
+    rank-filter rewrite, never a data-sized sort."""
+    from big_data_audio_classification_spark.operators.dedup import token_hash
+
+    o = load_table(spark, sf_dir, "orders")
+    fk = (
+        o.filter(F.col("o_orderstatus") == "F")
+        .select(token_hash(F.col("o_custkey").cast("string")).alias("hv"))
+        .distinct()
+        .persist()
+    )
+    uk = (
+        o.filter(F.col("o_orderpriority") == "1-URGENT")
+        .select(token_hash(F.col("o_custkey").cast("string")).alias("hv"))
+        .distinct()
+        .persist()
+    )
+    un = fk.union(uk).distinct().persist()
+    bk = un.select(
+        "hv", F.row_number().over(Window.orderBy("hv")).alias("rk")
+    )
+    n_union = un.agg(F.count(F.lit(1)).cast("bigint").alias("n_union_exact"))
+    kth = bk.filter(F.col("rk") == THETA_K).select(
+        F.col("hv").cast("double").alias("kth")
+    )
+    inter_hits = (
+        bk.filter(F.col("rk") < THETA_K)
+        .join(fk.withColumnRenamed("hv", "hv_f"),
+              F.col("hv") == F.col("hv_f"), "left_semi")
+        .join(uk.withColumnRenamed("hv", "hv_u"),
+              F.col("hv") == F.col("hv_u"), "left_semi")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("k_inter_hits"))
+    )
+    out = (
+        n_union.crossJoin(F.broadcast(kth.limit(1)))
+        .crossJoin(F.broadcast(inter_hits))
+        .select(
+            "n_union_exact",
+            F.when(
+                F.col("n_union_exact") <= THETA_K, F.col("n_union_exact")
+            )
+            .otherwise(
+                F.floor(
+                    (THETA_K - 1.0) * THETA_SPACE / F.col("kth")
+                ).cast("bigint")
+            )
+            .cast("bigint")
+            .alias("union_estimate"),
+            "k_inter_hits",
+            (F.col("n_union_exact") <= THETA_K).alias("exact_mode"),
+        )
+    )
+    return out
+
+
+# ---------------------------------------------------------------------------
+# grouping: CUBE stated as explicit GROUPING SETS (equivalence)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "agg_cube_as_grouping_sets",
+    oracle="""
+        SELECT COALESCE(o_orderstatus, '<all>')   AS status,
+               COALESCE(CAST(EXTRACT(year FROM o_orderdate) AS VARCHAR),
+                        '<all>')                  AS yr,
+               CAST(GROUPING(o_orderstatus) * 2
+                    + GROUPING(EXTRACT(year FROM o_orderdate))
+                    AS BIGINT)                    AS gid,
+               CAST(COUNT(*) AS BIGINT)           AS n
+        FROM orders
+        GROUP BY GROUPING SETS (
+            (o_orderstatus, EXTRACT(year FROM o_orderdate)),
+            (o_orderstatus), (EXTRACT(year FROM o_orderdate)), ()
+        )
+    """,
+    tags=("aggregate", "grouping", "orders"),
+)
+def agg_cube_as_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUBE ≡ GROUPING SETS equivalence, checked: Spark states the
+    4-level lattice with ``cube()``; the oracle enumerates the same
+    lattice as explicit GROUPING SETS — the rewrite every planner
+    performs internally, here verified value-for-value including the
+    grouping_id bitmask (ROLLUP slice: ``agg_grouping_id_subtotals``;
+    mixed sets: ``agg_groupingsets_mixed``). One expand + one shuffle
+    regardless of lattice size."""
+    o = load_table(spark, sf_dir, "orders")
+    yr = F.year("o_orderdate")
+    return (
+        o.cube(F.col("o_orderstatus"), yr.alias("y"))
+        .agg(
+            F.grouping_id().cast("bigint").alias("gid"),
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+        )
+        .select(
+            F.coalesce("o_orderstatus", F.lit("<all>")).alias("status"),
+            F.coalesce(F.col("y").cast("string"), F.lit("<all>")).alias("yr"),
+            "gid",
+            "n",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# udaf/pandas: midhinge (quantile-interpolation-compatible kernel)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "agg_pandas_udaf_midhinge",
+    oracle="""
+        SELECT o_orderstatus AS status,
+               CAST(COUNT(*) AS BIGINT) AS n,
+               ROUND((quantile_cont(o_totalprice, 0.25)
+                      + quantile_cont(o_totalprice, 0.75)) / 2.0, 4)
+                   AS midhinge
+        FROM orders
+        GROUP BY o_orderstatus
+    """,
+    tags=("aggregate", "udaf", "pandas", "robust", "orders"),
+)
+def agg_pandas_udaf_midhinge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MIDHINGE (mean of the hinges, (Q1+Q3)/2) per order status as a
+    grouped-agg pandas UDF — the robust LOCATION estimator that
+    ignores both tails entirely (Tukey's five-number vocabulary;
+    spread siblings: IQR r07-stock, decile ratio tranche 1, MAD r07
+    window). numpy's linear-interpolated percentile matches DuckDB's
+    ``quantile_cont`` rule exactly, and the final expression is one
+    fixed-order add-and-halve. At 100 TB swap the per-group buffer
+    for ``agg_percentiles_twophase``. Row count rides through Arrow
+    (Spark can't mix pandas and JVM aggregates in one agg)."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def midhinge(v: pd.Series) -> float:
+        arr = v.to_numpy(dtype=np.float64)
+        q25, q75 = np.percentile(arr, [25, 75], method="linear")
+        return float((q25 + q75) / 2.0)
+
+    @pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
+        return len(v)
+
+    o = load_table(spark, sf_dir, "orders")
+    return o.groupBy(F.col("o_orderstatus").alias("status")).agg(
+        n_rows("o_totalprice").alias("n"),
+        F.round(midhinge("o_totalprice"), 4).alias("midhinge"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# udaf/pandas: winsorized mean over exact-rank clamping bounds
+# ---------------------------------------------------------------------------
+
+WINS_LO = 10  # clamp below the lower decile ...
+WINS_HI = 90  # ... and above the upper decile
+
+
+@query(
+    "agg_pandas_udaf_winsorized_mean",
+    oracle=f"""
+        WITH c AS (
+            SELECT o_orderpriority AS priority,
+                   CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+            FROM orders
+        ),
+        g AS (
+            SELECT priority, CAST(COUNT(*) AS BIGINT) AS n,
+                   list_sort(list(cents)) AS xs
+            FROM c GROUP BY priority
+        ),
+        b AS (
+            SELECT priority, n, xs,
+                   xs[({WINS_LO} * n + 99) // 100] AS lo,
+                   xs[({WINS_HI} * n + 99) // 100] AS hi
+            FROM g
+        )
+        SELECT priority, n,
+               CAST(lo AS BIGINT) AS lo_cents,
+               CAST(hi AS BIGINT) AS hi_cents,
+               ROUND(CAST(list_sum(list_transform(xs,
+                         v -> LEAST(GREATEST(v, lo), hi))) AS DOUBLE)
+                     / n / 100.0, 6) AS winsorized_mean
+        FROM b
+    """,
+    tags=("aggregate", "udaf", "pandas", "robust", "orders"),
+)
+def agg_pandas_udaf_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WINSORIZED MEAN per priority as a grouped-agg pandas UDF:
+    clamp every value into [P10, P90] and average — the outlier
+    treatment that KEEPS the tail rows (at their clamped value) where
+    the trimmed mean drops them (``window_rolling_trimmed_mean``,
+    ``agg_pandas_udaf_decile_ratio`` are the drop/ratio siblings).
+    Bit-stable the shared-formula way: the clamping bounds are
+    EXACT-RANK order statistics (ceil(q·n), 1-based — selected
+    integers, never interpolated), the clamped sum is an exact integer,
+    and the single float division happens in the same order in both
+    dialects. Arrow-batched per group; at 100 TB swap the per-group
+    buffer for the two-phase exact-percentile plan."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def winsorized_mean(v: pd.Series) -> float:
+        xs = np.sort(np.rint(v.to_numpy(dtype=np.float64)).astype(np.int64))
+        n = len(xs)
+        lo = int(xs[(WINS_LO * n + 99) // 100 - 1])
+        hi = int(xs[(WINS_HI * n + 99) // 100 - 1])
+        clamped = np.clip(xs, lo, hi)
+        return float(int(clamped.sum())) / n / 100.0
+
+    @pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
+        return len(v)
+
+    @pandas_udf("long")
+    def lo_bound(v: pd.Series) -> int:
+        xs = np.sort(np.rint(v.to_numpy(dtype=np.float64)).astype(np.int64))
+        return int(xs[(WINS_LO * len(xs) + 99) // 100 - 1])
+
+    @pandas_udf("long")
+    def hi_bound(v: pd.Series) -> int:
+        xs = np.sort(np.rint(v.to_numpy(dtype=np.float64)).astype(np.int64))
+        return int(xs[(WINS_HI * len(xs) + 99) // 100 - 1])
+
+    o = load_table(spark, sf_dir, "orders")
+    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    x = o.select(
+        F.col("o_orderpriority").alias("priority"), cents.alias("cents")
+    )
+    return x.groupBy("priority").agg(
+        n_rows("cents").alias("n"),
+        lo_bound("cents").alias("lo_cents"),
+        hi_bound("cents").alias("hi_cents"),
+        F.round(winsorized_mean("cents"), 6).alias("winsorized_mean"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# grouping + window-time: GROUPING SETS over calendar keys
+# ---------------------------------------------------------------------------
+
+
+def _gsets_sql(tbl: str, dow_expr: str) -> str:
+    return f"""
+        WITH k AS (
+            SELECT {dow_expr} AS dow, hour(ts) AS hr,
+                   CAST(ROUND(value * 100) AS BIGINT) AS cents
+            FROM {tbl}
+        )
+        SELECT COALESCE(dow, -1) AS dow, COALESCE(hr, -1) AS hr,
+               CAST(GROUPING(dow) * 2 + GROUPING(hr) AS BIGINT) AS gid,
+               CAST(COUNT(*) AS BIGINT)  AS n,
+               CAST(SUM(cents) AS BIGINT) AS cents
+        FROM k
+        GROUP BY GROUPING SETS ((dow), (hr), (dow, hr), ())
+    """
+
+
+@query(
+    "agg_grouping_sets_dow_hour",
+    oracle=_gsets_sql("events", "dayofweek(ts)"),
+    tags=("aggregate", "grouping", "window-time", "events"),
+)
+def agg_grouping_sets_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GROUPING SETS over CALENDAR keys — the day-of-week × hour-of-day
+    traffic matrix plus both marginals and the grand total in ONE
+    aggregation pass ((dow), (hr), (dow,hr), ()), each row stamped with
+    its grouping_id. The calendar-key wrinkle the plain rollup carriers
+    don't exercise: Spark ``dayofweek`` is 1-based Sunday=1 while
+    DuckDB's is 0-based Sunday=0, so the Spark side ships
+    ``dayofweek(ts) - 1`` to meet the oracle's convention — the
+    engine-quirk class that has produced red rows before (SURVEY §5).
+    Rolled-up keys surface as -1 (never NULL) so the driver's hash is
+    NULL-free. Exact integer cents; one shuffle, partial aggregation
+    map-side for all four sets."""
+    e = load_table(spark, sf_dir, "events")
+    view = "v_gsets_events_r9"
+    e.createOrReplaceTempView(view)
+    return spark.sql(_gsets_sql(view, "dayofweek(ts) - 1"))
+
+
+# ---------------------------------------------------------------------------
+# udaf: Bowley (quartile) skewness as a grouped-agg pandas UDF
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "agg_pandas_udaf_quartile_skew",
+    oracle="""
+        SELECT o_orderstatus AS status,
+               CAST(COUNT(*) AS BIGINT) AS n,
+               CASE WHEN quantile_cont(o_totalprice, 0.75)
+                         > quantile_cont(o_totalprice, 0.25)
+                    THEN ROUND((quantile_cont(o_totalprice, 0.25)
+                                + quantile_cont(o_totalprice, 0.75)
+                                - 2 * quantile_cont(o_totalprice, 0.5))
+                               / (quantile_cont(o_totalprice, 0.75)
+                                  - quantile_cont(o_totalprice, 0.25)), 6)
+                         + 0
+               END AS bowley_skew
+        FROM orders
+        GROUP BY o_orderstatus
+    """,
+    tags=("aggregate", "udaf", "pandas", "robust", "orders"),
+)
+def agg_pandas_udaf_quartile_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BOWLEY (quartile) SKEWNESS per order status as a grouped-agg
+    pandas UDF — (Q1 + Q3 − 2·Q2)/(Q3 − Q1), the robust shape
+    statistic that ignores tails entirely (location sibling:
+    ``agg_pandas_udaf_midhinge``; spread: IQR; the moment-based
+    skewness lives in ``window_rolling_skew_kurt`` with DECIMAL
+    headroom). numpy's linear-interpolated percentile matches
+    DuckDB's ``quantile_cont`` rule exactly, and the final expression
+    is written in ONE shared operation order on both sides; it is
+    SIGNED (a symmetric group rounds to zero), so the oracle carries
+    the ``+ 0`` -0.0 guard. Row count rides through Arrow (pandas and
+    JVM aggregates cannot mix in one agg). At 100 TB swap the
+    per-group buffer for ``agg_percentiles_twophase``."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def bowley(v: pd.Series) -> float:
+        arr = v.to_numpy(dtype=np.float64)
+        q1, q2, q3 = np.percentile(arr, [25, 50, 75], method="linear")
+        if q3 <= q1:  # degenerate spread: NULL, matching the oracle's
+            return None  # CASE (numpy would emit NaN/inf, DuckDB NULL)
+        return float((q1 + q3 - 2 * q2) / (q3 - q1))
+
+    @pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
+        return len(v)
+
+    o = load_table(spark, sf_dir, "orders")
+    return o.groupBy(F.col("o_orderstatus").alias("status")).agg(
+        n_rows("o_totalprice").alias("n"),
+        F.round(bowley("o_totalprice"), 6).alias("bowley_skew"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# udaf/pandas: Shannon entropy of the cents last-digit distribution
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "agg_pandas_udaf_entropy",
+    oracle="""
+        WITH x AS (
+            SELECT event_type,
+                   ABS(CAST(ROUND(value * 100) AS BIGINT)) % 10 AS digit
+            FROM events
+        ),
+        counts AS (
+            SELECT event_type, digit, CAST(COUNT(*) AS BIGINT) AS c
+            FROM x GROUP BY event_type, digit
+        )
+        SELECT event_type,
+               CAST(SUM(c) AS BIGINT)   AS n,
+               CAST(COUNT(*) AS BIGINT) AS n_digits,
+               ROUND(LOG2(CAST(SUM(c) AS DOUBLE))
+                     - list_sum(list(c * LOG2(c) ORDER BY digit))
+                       / SUM(c), 6) + 0 AS digit_entropy_bits
+        FROM counts GROUP BY event_type
+    """,
+    tags=("aggregate", "udaf", "pandas", "events"),
+)
+def agg_pandas_udaf_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GROUPED PANDAS-UDAF ENTROPY: Shannon entropy of the cents
+    LAST-DIGIT distribution per event type — the Benford-style
+    fabricated-data probe (a synthetic uniform generator scores ~log2
+    10 ≈ 3.32 bits; human-priced values cluster on 0/5/9 digits). The
+    kernel is a grouped-agg pandas UDF (Arrow batch per group):
+    np.bincount over digits 0..9 then the SEQUENTIAL ascending-digit
+    c·log2(c) fold, H = log2(n) − s/n — the identical formula sequence
+    the oracle folds with ``list_sum(list(... ORDER BY digit))``.
+    Row counts ride through Arrow too (grouped-agg pandas UDFs cannot
+    mix with JVM aggregates in one agg — the r05 n_rows kernel
+    pattern). Digits via abs(cents) % 10 on BOTH engines (DuckDB %
+    follows the dividend sign; abs pins the convention). ``+ 0``:
+    a single-digit group lands exactly on zero. 100 TB: partial
+    aggregation doesn't apply to UDAFs — the shuffle is keyed on
+    event_type (5 groups), so the entropy kernel sees one Arrow
+    stream per type; the oracle's relational form is the map-side
+    combinable production path."""
+    import math
+
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
+        return int(len(v))
+
+    @pandas_udf("long")
+    def n_digits(v: pd.Series) -> int:
+        cents = np.rint(v.to_numpy(dtype=np.float64) * 100).astype(np.int64)
+        return int(np.unique(np.abs(cents) % 10).size)
+
+    @pandas_udf("double")
+    def digit_entropy(v: pd.Series) -> float:
+        cents = np.rint(v.to_numpy(dtype=np.float64) * 100).astype(np.int64)
+        digits = np.abs(cents) % 10
+        counts = np.bincount(digits, minlength=10)
+        n = int(digits.size)
+        s = 0.0
+        for c in counts:  # ascending digit order == oracle's ORDER BY
+            if c > 0:
+                c = float(int(c))
+                s += c * math.log2(c)
+        # full precision out of the kernel; ROUND runs JVM-side below
+        # (Python round() is half-even, engine ROUND half-away)
+        return math.log2(n) - s / n
+
+    e = load_table(spark, sf_dir, "events")
+    agg = e.groupBy("event_type").agg(
+        n_rows("value").alias("n"),
+        n_digits("value").alias("n_digits"),
+        digit_entropy("value").alias("h_raw"),
+    )
+    return agg.select(
+        "event_type",
+        "n",
+        "n_digits",
+        F.round("h_raw", 6).alias("digit_entropy_bits"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# grouping: CUBE cells scored as a share of their PARENT margin
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "agg_cube_share_of_parent",
+    oracle="""
+        WITH c AS (
+            SELECT grouping(o_orderpriority, o_orderstatus) AS gid,
+                   o_orderpriority AS priority, o_orderstatus AS status,
+                   CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+                        AS BIGINT) AS cents,
+                   CAST(COUNT(*) AS BIGINT) AS n
+            FROM orders GROUP BY CUBE(o_orderpriority, o_orderstatus)
+        ),
+        keyed AS (
+            SELECT *,
+                   CASE gid WHEN 0 THEN 'P:' || priority
+                            WHEN 1 THEN 'ALL' WHEN 2 THEN 'ALL'
+                            ELSE NULL END AS parent_key,
+                   CASE gid WHEN 1 THEN 'P:' || priority
+                            WHEN 3 THEN 'ALL'
+                            ELSE NULL END AS self_key
+            FROM c
+        )
+        SELECT CAST(ch.gid AS BIGINT)          AS gid,
+               COALESCE(ch.priority, 'ALL')    AS priority,
+               COALESCE(ch.status, 'ALL')      AS status,
+               ch.n, ch.cents,
+               CASE WHEN pa.cents IS NOT NULL
+                    THEN ROUND(CAST(ch.cents AS DOUBLE) / pa.cents, 6) + 0
+                    ELSE NULL END AS share_of_parent
+        FROM keyed ch LEFT JOIN keyed pa ON ch.parent_key = pa.self_key
+    """,
+    tags=("aggregate", "grouping", "orders"),
+)
+def agg_cube_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUBE cells scored as a SHARE OF THEIR PARENT margin — the drill-
+    down ratio an OLAP frontend renders next to every cell ((p,s) over
+    (p,ALL); (p,ALL) and (ALL,s) over the grand total; the grand total
+    itself has no parent → NULL): one CUBE aggregate self-joined on a
+    derived parent key built from the GROUPING bitmask (Spark
+    grouping_id == DuckDB grouping(a,b) — same standard bit order,
+    verified r10). Distinct from ``agg_cube_share_of_total`` (every
+    cell over ONE denominator — no hierarchy walk). Cents exact;
+    share is one float division, ``+ 0``-guarded. 100 TB: the cube is
+    |priorities|×|statuses| + margins (~30 rows) after one map-side-
+    combinable aggregate; the parent join is a broadcast of those same
+    rows — no second scan."""
+    o = load_table(spark, sf_dir, "orders")
+    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    c = (
+        o.select(
+            F.col("o_orderpriority").alias("priority"),
+            F.col("o_orderstatus").alias("status"),
+            cents.alias("cents"),
+        )
+        .cube("priority", "status")
+        .agg(
+            F.grouping_id().alias("gid"),
+            F.sum("cents").cast("bigint").alias("cents"),
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+        )
+    )
+    keyed = c.select(
+        "*",
+        F.when(F.col("gid") == 0, F.concat(F.lit("P:"), F.col("priority")))
+        .when(F.col("gid").isin(1, 2), F.lit("ALL"))
+        .alias("parent_key"),
+        F.when(F.col("gid") == 1, F.concat(F.lit("P:"), F.col("priority")))
+        .when(F.col("gid") == 3, F.lit("ALL"))
+        .alias("self_key"),
+    )
+    pa = keyed.select(
+        F.col("self_key").alias("pa_key"), F.col("cents").alias("pa_cents")
+    ).filter(F.col("pa_key").isNotNull())
+    return (
+        keyed.join(
+            F.broadcast(pa), keyed["parent_key"] == pa["pa_key"], "left"
+        )
+        .select(
+            F.col("gid").cast("bigint").alias("gid"),
+            F.coalesce("priority", F.lit("ALL")).alias("priority"),
+            F.coalesce("status", F.lit("ALL")).alias("status"),
+            "n",
+            "cents",
+            F.when(
+                F.col("pa_cents").isNotNull(),
+                F.round(F.col("cents").cast("double") / F.col("pa_cents"), 6),
+            ).alias("share_of_parent"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# grouping: GROUPING SETS with weighted averages from exact sums
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "agg_groupingsets_weighted_avg",
+    oracle="""
+        SELECT grouping(l_returnflag, l_linestatus) AS gid,
+               COALESCE(l_returnflag, 'ALL') AS returnflag,
+               COALESCE(l_linestatus, 'ALL') AS linestatus,
+               CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty,
+               ROUND(CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
+                               * CAST(l_quantity AS BIGINT)) AS DOUBLE)
+                     / SUM(CAST(l_quantity AS BIGINT)) / 100.0, 6)
+                   AS qty_weighted_price
+        FROM lineitem
+        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+                                (l_returnflag), ())
+    """,
+    tags=("aggregate", "grouping", "lineitem"),
+)
+def agg_groupingsets_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GROUPING SETS with QUANTITY-WEIGHTED average price — the margin
+    report where the aggregate is a ratio of two sums, which is
+    exactly when naive margin math goes wrong (an average of
+    subgroup averages is NOT the margin average; computing the ratio
+    from re-aggregated EXACT sums at every grouping set is). Three
+    sets — (flag, status), (flag), grand total — in ONE pass;
+    weighted numerator Σ price_cents·qty stays int64 (≤ 5e7·50 per
+    row ≈ 2.5e9 — ~4e9 rows of headroom per cell; the DECIMAL
+    escalation point is documented, the r07 class); the ratio is one
+    float division per output row. grouping-bitmask column pins the
+    set identity cross-engine. 100 TB: one map-side-combinable
+    aggregate, |sets|·|groups| output rows."""
+    li = load_table(spark, sf_dir, "lineitem")
+    qty = F.col("l_quantity").cast("bigint")
+    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    base = li.select(
+        F.col("l_returnflag").alias("returnflag_raw"),
+        F.col("l_linestatus").alias("linestatus_raw"),
+        qty.alias("qty1"),
+        (cents * qty).alias("wnum"),
+    )
+    g = base.groupingSets(
+        [["returnflag_raw", "linestatus_raw"], ["returnflag_raw"], []],
+        "returnflag_raw",
+        "linestatus_raw",
+    ).agg(
+        F.grouping_id().alias("gid"),
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("qty1").cast("bigint").alias("qty"),
+        F.sum("wnum").cast("bigint").alias("wnum"),
+    )
+    return g.select(
+        F.col("gid"),
+        F.coalesce("returnflag_raw", F.lit("ALL")).alias("returnflag"),
+        F.coalesce("linestatus_raw", F.lit("ALL")).alias("linestatus"),
+        "n",
+        "qty",
+        F.round(
+            F.col("wnum").cast("double") / F.col("qty") / 100.0, 6
+        ).alias("qty_weighted_price"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# udaf: modal value and its share per group (pandas grouped-agg)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "agg_pandas_udaf_mode_share",
+    oracle="""
+        WITH c AS (
+            SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS cents
+            FROM events
+        ),
+        g AS (
+            SELECT event_type, cents, CAST(COUNT(*) AS BIGINT) AS cnt
+            FROM c GROUP BY event_type, cents
+        ),
+        r AS (
+            SELECT event_type, cents, cnt,
+                   ROW_NUMBER() OVER (PARTITION BY event_type
+                                      ORDER BY cnt DESC, cents ASC) AS rn
+            FROM g
+        ),
+        tot AS (
+            SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
+            FROM c GROUP BY event_type
+        )
+        SELECT tot.event_type, tot.n,
+               r.cents AS mode_cents,
+               r.cnt AS mode_n,
+               ROUND(CAST(r.cnt AS DOUBLE) / tot.n, 6) + 0 AS mode_share
+        FROM tot JOIN r ON tot.event_type = r.event_type AND r.rn = 1
+    """,
+    tags=("aggregate", "udaf", "pandas", "events"),
+)
+def agg_pandas_udaf_mode_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MODAL VALUE + MODAL SHARE per event_type as a grouped-agg
+    pandas UDAF — the discrete-location estimator the quantile
+    siblings (midhinge / decile-ratio / MAD) can't give, and the
+    degenerate-distribution tell (mode_share → 1 means the column is
+    effectively constant; price-point data like cents is exactly
+    where the mode is meaningful). Ties break toward the SMALLEST
+    value — pinned in the kernel by np.unique's ascending sort (first
+    argmax wins) and in the oracle by ORDER BY cnt DESC, cents ASC.
+    All exact integers through Arrow; the share is one float division
+    off two exact counts (JVM-side — never Python round, the r10
+    kernel rule). Row count rides through Arrow too (the n_rows
+    pattern — pandas and JVM aggregates can't mix). At 100 TB the
+    per-group buffer swaps for the g/r CTE shape the oracle itself
+    uses (count-then-rank, map-side combinable)."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def mode_cents(v: pd.Series) -> int:
+        vals, counts = np.unique(v.to_numpy(dtype=np.int64), return_counts=True)
+        return int(vals[int(np.argmax(counts))])
+
+    @pandas_udf("long")
+    def mode_n(v: pd.Series) -> int:
+        _, counts = np.unique(v.to_numpy(dtype=np.int64), return_counts=True)
+        return int(counts.max())
+
+    @pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
+        return len(v)
+
+    e = load_table(spark, sf_dir, "events").select(
+        "event_type", F.round(F.col("value") * 100).cast("bigint").alias("cents")
+    )
+    g = e.groupBy("event_type").agg(
+        n_rows("cents").alias("n"),
+        mode_cents("cents").alias("mode_cents"),
+        mode_n("cents").alias("mode_n"),
+    )
+    return g.select(
+        "event_type",
+        "n",
+        "mode_cents",
+        "mode_n",
+        F.round(F.col("mode_n").cast("double") / F.col("n"), 6).alias(
+            "mode_share"
+        ),
     )

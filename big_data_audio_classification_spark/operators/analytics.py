@@ -1646,3 +1646,500 @@ def analytics_jenks_breaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("*", F.lit(total_sse).alias("total_sse"))
     )
+
+
+# ---------------------------------------------------------------------------
+# session: gap-sessionized duration deciles via exact order statistics
+# ---------------------------------------------------------------------------
+
+SESSION_GAP_S = 1800  # 30 min, the house sessionization gap
+
+
+@query(
+    "events_session_duration_deciles",
+    oracle=f"""
+        WITH x AS (
+            SELECT user_id, event_id, epoch_us(ts) AS t,
+                   CASE WHEN epoch_us(ts)
+                             - LAG(epoch_us(ts)) OVER (PARTITION BY user_id
+                                                       ORDER BY ts, event_id)
+                             > {SESSION_GAP_S * 1000000}
+                        OR LAG(epoch_us(ts)) OVER (PARTITION BY user_id
+                                                   ORDER BY ts, event_id)
+                           IS NULL
+                        THEN 1 ELSE 0 END AS new_s
+            FROM events
+        ),
+        s AS (
+            SELECT user_id, t,
+                   SUM(new_s) OVER (PARTITION BY user_id
+                                    ORDER BY t, event_id
+                                    ROWS UNBOUNDED PRECEDING)
+                       AS session_no
+            FROM x
+        ),
+        durs AS (
+            SELECT user_id, session_no,
+                   (MAX(t) - MIN(t)) // 1000000 AS dur_s
+            FROM s GROUP BY user_id, session_no
+        ),
+        ranked AS (
+            SELECT dur_s,
+                   ROW_NUMBER() OVER (ORDER BY dur_s) AS rk,
+                   COUNT(*) OVER () AS n
+            FROM durs
+        )
+        SELECT CAST(d.dec AS BIGINT) AS decile,
+               CAST(MAX(CASE WHEN rk = CAST(CEIL(n * d.dec / 10.0) AS BIGINT)
+                             THEN dur_s END) AS BIGINT) AS dur_s
+        FROM ranked, (SELECT UNNEST(range(1, 10)) AS dec) d
+        GROUP BY d.dec
+    """,
+    tags=("events", "session", "window", "robust"),
+)
+def events_session_duration_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SESSION-DURATION DECILES under the house 30-min-gap
+    sessionization (``events_session_gap_stats``, certified r06
+    retry): gap flag → running-sum session ids → per-session duration
+    in whole seconds → the d1..d9 decile table read by EXACT order
+    statistic (value at rank ⌈n·q⌉ — type-1 quantile, integer in,
+    integer out, no interpolation, bit-stable by construction). The
+    oracle states the textbook global ROW_NUMBER; the engine reads
+    each rank off the DURATION-VALUE LEDGER instead (r11 — the former
+    rank window moved every session row into one task): durations are
+    whole seconds, so grouping by value gives a ledger bounded by the
+    CLOCK (max session length in seconds), not by data; one
+    ledger-sized cumulative window locates the unique value whose
+    [cum_before, cum_before+cnt) span contains each rank. Value at
+    rank is tie-invariant, so the ledger read equals the oracle's
+    ROW_NUMBER pick exactly. Output = 9 rows."""
+    e = load_table(spark, sf_dir, "events")
+    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    x = e.select(
+        "user_id",
+        "event_id",
+        F.unix_micros("ts").alias("t"),
+        F.when(
+            F.lag(F.unix_micros("ts")).over(wo).isNull()
+            | (
+                F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(wo)
+                > SESSION_GAP_S * 1_000_000
+            ),
+            1,
+        )
+        .otherwise(0)
+        .alias("new_s"),
+    )
+    ws = (
+        Window.partitionBy("user_id")
+        .orderBy("t", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    s = x.select("user_id", "t", F.sum("new_s").over(ws).alias("session_no"))
+    durs = s.groupBy("user_id", "session_no").agg(
+        ((F.max("t") - F.min("t")) / 1_000_000).cast("bigint").alias("dur_s")
+    )
+    led = durs.groupBy("dur_s").agg(F.count(F.lit(1)).alias("cnt"))
+    wcum = Window.orderBy("dur_s").rowsBetween(Window.unboundedPreceding, -1)
+    led = led.withColumn(
+        "cum_before", F.coalesce(F.sum("cnt").over(wcum), F.lit(0))
+    )
+    tot = led.agg(F.sum("cnt").alias("n"))
+    ranks = (
+        spark.range(1, 10)
+        .select(F.col("id").alias("dec"))
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "dec",
+            F.ceil(F.col("n") * F.col("dec") / 10.0).cast("bigint").alias("rk"),
+        )
+    )
+    return (
+        ranks.join(
+            F.broadcast(led),
+            (F.col("rk") > F.col("cum_before"))
+            & (F.col("rk") <= F.col("cum_before") + F.col("cnt")),
+        )
+        .groupBy(F.col("dec").cast("bigint").alias("decile"))
+        .agg(F.max("dur_s").cast("bigint").alias("dur_s"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# session: bounce rate by entry event type
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "events_session_bounce_rate",
+    oracle="""
+        WITH x AS (
+            SELECT user_id, event_id, event_type, epoch_us(ts) AS t,
+                   CASE WHEN epoch_us(ts)
+                             - LAG(epoch_us(ts)) OVER (PARTITION BY user_id
+                                                       ORDER BY ts, event_id)
+                             > 1800000000
+                        OR LAG(epoch_us(ts)) OVER (PARTITION BY user_id
+                                                   ORDER BY ts, event_id)
+                           IS NULL
+                        THEN 1 ELSE 0 END AS new_s
+            FROM events
+        ),
+        s AS (
+            SELECT user_id, event_id, event_type, t,
+                   SUM(new_s) OVER (PARTITION BY user_id
+                                    ORDER BY t, event_id
+                                    ROWS UNBOUNDED PRECEDING) AS session_no
+            FROM x
+        ),
+        r2 AS (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, session_no
+                                         ORDER BY t, event_id) AS rn2
+            FROM s
+        ),
+        sess AS (
+            SELECT user_id, session_no,
+                   CAST(COUNT(*) AS BIGINT) AS depth,
+                   MAX(CASE WHEN rn2 = 1 THEN event_type END) AS entry_type
+            FROM r2 GROUP BY user_id, session_no
+        )
+        SELECT entry_type,
+               CAST(COUNT(*) AS BIGINT)                    AS n_sessions,
+               CAST(SUM(CASE WHEN depth = 1 THEN 1 ELSE 0 END) AS BIGINT)
+                                                           AS n_bounces,
+               ROUND(CAST(SUM(CASE WHEN depth = 1 THEN 1 ELSE 0 END)
+                          AS DOUBLE) / COUNT(*), 6)        AS bounce_rate
+        FROM sess GROUP BY entry_type
+    """,
+    tags=("events", "session", "window"),
+)
+def events_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BOUNCE RATE by session ENTRY TYPE: gap-sessionize (the house
+    30-min rule), find each session's first event type (min over the
+    (t, event_id) order — deterministic), and report how often a
+    session of that entry type ends after ONE event — the
+    landing-quality metric (duration side:
+    ``events_session_duration_deciles``; funnel:
+    ``events_session_funnel`` stock). All counts exact integers, one
+    division per row; sessionization is the standard one-shuffle
+    window pass."""
+    e = load_table(spark, sf_dir, "events")
+    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    t = F.unix_micros("ts")
+    x = e.select(
+        "user_id", "event_id", "event_type", t.alias("t"),
+        F.when(
+            F.lag(t).over(wo).isNull() | (t - F.lag(t).over(wo) > 1_800_000_000),
+            1,
+        )
+        .otherwise(0)
+        .alias("new_s"),
+    )
+    ws = (
+        Window.partitionBy("user_id")
+        .orderBy("t", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    s = x.select(
+        "user_id", "event_id", "event_type", "t",
+        F.sum("new_s").over(ws).alias("session_no"),
+    )
+    sess = s.groupBy("user_id", "session_no").agg(
+        F.count(F.lit(1)).cast("bigint").alias("depth"),
+        F.min(F.struct("t", "event_id", "event_type"))
+        .getField("event_type")
+        .alias("entry_type"),
+    )
+    bounce = F.sum(F.when(F.col("depth") == 1, 1).otherwise(0))
+    return sess.groupBy("entry_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
+        bounce.cast("bigint").alias("n_bounces"),
+        F.round(bounce.cast("double") / F.count(F.lit(1)), 6).alias(
+            "bounce_rate"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# window-time: tumbling windows via the window() table function
+# ---------------------------------------------------------------------------
+
+TUMBLE_HOURS = 6
+
+
+@query(
+    "events_tumbling_window_fn",
+    oracle=f"""
+        WITH x AS (
+            -- integer micros, never epoch()'s fractional-second DOUBLE
+            SELECT to_timestamp((epoch_us(ts)
+                                 // {TUMBLE_HOURS * 3_600_000_000})
+                                * {TUMBLE_HOURS * 3600}) AS wstart,
+                   CAST(ROUND(value * 100) AS BIGINT) AS cents
+            FROM events
+        )
+        SELECT strftime(wstart, '%Y-%m-%d %H:%M:%S') AS window_start,
+               CAST(COUNT(*) AS BIGINT)              AS n_events,
+               CAST(SUM(cents) AS BIGINT)            AS sum_cents
+        FROM x GROUP BY wstart
+    """,
+    tags=("events", "window-time", "aggregate"),
+)
+def events_tumbling_window_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TUMBLING event-time windows via Spark's native ``window()``
+    table function (epoch-aligned 6-hour buckets — the same operator
+    Structured Streaming uses for watermarked aggregation, here on a
+    batch frame), while the oracle restates the bucketing as integer
+    epoch floor-division — two formulations of the window boundary
+    contract, which is exactly what goes wrong first in event-time
+    pipelines (off-by-one at bucket edges). Exact integer cents; one
+    shuffle keyed by window. At 100 TB this is the pre-aggregation
+    every event table gets before rollup (calendar-anchored sibling:
+    ``window_rolling_time_stats`` r08; streaming form:
+    ``streaming/events.py``)."""
+    e = load_table(spark, sf_dir, "events")
+    w = F.window("ts", f"{TUMBLE_HOURS} hours")
+    return (
+        e.select(w.alias("w"), F.round(F.col("value") * 100).cast("bigint").alias("cents"))
+        .groupBy(F.col("w.start").alias("wstart"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.sum("cents").cast("bigint").alias("sum_cents"),
+        )
+        .select(
+            F.date_format("wstart", "yyyy-MM-dd HH:mm:ss").alias(
+                "window_start"
+            ),
+            "n_events",
+            "sum_cents",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# session: first-touch attribution
+# ---------------------------------------------------------------------------
+
+FT_GAP_S = 21_600  # 6 h inactivity closes a session (house convention)
+
+
+@query(
+    "events_session_first_touch",
+    oracle=f"""
+        WITH x AS (
+            SELECT user_id, event_id, ts, event_type,
+                   CAST(ROUND(value * 100) AS BIGINT) AS cents,
+                   CASE WHEN epoch_us(ts)
+                             - LAG(epoch_us(ts)) OVER (
+                                   PARTITION BY user_id
+                                   ORDER BY ts, event_id)
+                             > {FT_GAP_S * 1_000_000}
+                         OR LAG(ts) OVER (PARTITION BY user_id
+                                          ORDER BY ts, event_id) IS NULL
+                        THEN 1 ELSE 0 END AS new_s
+            FROM events
+        ),
+        s AS (
+            SELECT *, CAST(SUM(new_s) OVER (PARTITION BY user_id
+                                            ORDER BY ts, event_id)
+                           AS BIGINT) AS sid
+            FROM x
+        ),
+        firsts AS (
+            SELECT user_id, sid, event_type AS first_type
+            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, sid
+                                ORDER BY ts, event_id) AS rn FROM s)
+            WHERE rn = 1
+        ),
+        sums AS (
+            SELECT user_id, sid,
+                   CAST(SUM(CASE WHEN event_type = 'purchase'
+                                 THEN cents ELSE 0 END) AS BIGINT)
+                       AS purchase_cents
+            FROM s GROUP BY user_id, sid
+        ),
+        per_session AS (
+            SELECT f.user_id, f.sid, f.first_type, m.purchase_cents
+            FROM firsts f JOIN sums m USING (user_id, sid)
+        )
+        SELECT first_type,
+               CAST(COUNT(*) AS BIGINT)          AS n_sessions,
+               CAST(SUM(purchase_cents) AS BIGINT) AS attributed_cents,
+               CAST(SUM(CASE WHEN purchase_cents > 0 THEN 1 ELSE 0 END)
+                    AS BIGINT)                   AS n_converting
+        FROM per_session GROUP BY first_type
+    """,
+    tags=("events", "session", "window"),
+)
+def events_session_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FIRST-TOUCH ATTRIBUTION: sessionize by the 6 h inactivity gap
+    (the house gap-islands idiom — LAG mark, running-sum session id,
+    both windows carrying the (ts, event_id) unique tiebreak), then
+    credit each session's purchase value to the event type that OPENED
+    the session — the simplest of the marketing attribution models
+    (the funnel and transition-matrix siblings slice the same
+    sessions differently). The session opener is a ranked-first
+    selection over (ts, event_id) on the oracle side vs a ``min_by``
+    struct aggregate on the Spark side — independent spellings of one
+    deterministic selection. Exact integer cents end-to-end. One shuffle keyed by
+    user, one by session, one |event-types|-row rollup."""
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros("ts")
+    x = e.select(
+        "user_id",
+        "event_id",
+        "ts",
+        "event_type",
+        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        F.when(
+            F.lag("ts").over(w).isNull()
+            | ((us - F.lag(us).over(w)) > FT_GAP_S * 1_000_000),
+            1,
+        )
+        .otherwise(0)
+        .alias("new_s"),
+    )
+    wc = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    s = x.select("*", F.sum("new_s").over(wc).cast("bigint").alias("sid"))
+    per_session = s.groupBy("user_id", "sid").agg(
+        F.min_by(
+            "event_type", F.struct("ts", "event_id")
+        ).alias("first_type"),
+        F.sum(
+            F.when(F.col("event_type") == "purchase", F.col("cents")).otherwise(
+                0
+            )
+        )
+        .cast("bigint")
+        .alias("purchase_cents"),
+    )
+    return per_session.groupBy("first_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
+        F.sum("purchase_cents").cast("bigint").alias("attributed_cents"),
+        F.sum(F.when(F.col("purchase_cents") > 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_converting"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# session: inter-event gap coefficient of variation per session
+# ---------------------------------------------------------------------------
+
+SESSION_GAP_US = 30 * 60 * 1_000_000
+
+
+@query(
+    "events_session_gap_cv",
+    oracle=f"""
+        WITH seq AS (
+            SELECT user_id, event_id, ts,
+                   epoch_us(ts) AS us,
+                   LAG(epoch_us(ts)) OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
+            FROM events
+        ),
+        flagged AS (
+            SELECT user_id, event_id, us,
+                   CASE WHEN prev_us IS NULL
+                             OR us - prev_us > {SESSION_GAP_US}
+                        THEN 1 ELSE 0 END AS new_s
+            FROM seq
+        ),
+        sess AS (
+            SELECT user_id, event_id, us,
+                   CAST(SUM(new_s) OVER (
+                       PARTITION BY user_id ORDER BY us, event_id
+                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_idx
+            FROM flagged
+        ),
+        gaps AS (
+            SELECT user_id, sess_idx,
+                   us - LAG(us) OVER (
+                       PARTITION BY user_id, sess_idx
+                       ORDER BY us, event_id) AS g
+            FROM sess
+        ),
+        m AS (
+            SELECT user_id, sess_idx,
+                   CAST(COUNT(g) AS BIGINT) AS n_gaps,
+                   CAST(SUM(g) AS BIGINT) AS sg,
+                   SUM(CAST(g AS HUGEINT) * g) AS sgg
+            FROM gaps GROUP BY user_id, sess_idx
+        )
+        SELECT user_id, sess_idx, n_gaps, sg AS total_gap_us,
+               CASE WHEN sg > 0
+                    THEN ROUND(SQRT(GREATEST(
+                              CAST(n_gaps AS DOUBLE) * CAST(sgg AS DOUBLE)
+                              - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE), 0.0))
+                          / CAST(sg AS DOUBLE), 6) + 0
+                    ELSE NULL END AS gap_cv
+        FROM m WHERE n_gaps >= 2
+    """,
+    tags=("events", "session", "window-time", "window"),
+)
+def events_session_gap_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INTER-EVENT GAP burstiness per session: the coefficient of
+    variation √(n·Σg² − (Σg)²)/Σg of the within-session gaps (the
+    population CV off exact integer moments in one radical — CV≈0 is
+    metronomic bot cadence, CV≫1 is bursty human reading; the
+    level sibling is ``events_session_gap_stats``). Sessions are the
+    house 30-minute-gap rule with the (ts, event_id) tiebreak on BOTH
+    engines; Σg stays int64 (gaps ≤ 30 min), but Σg² does NOT
+    (one 30-min gap squared is 3.2e18 — a third of int64 range), so
+    the square accumulates in DECIMAL(38,0)/HUGEINT — the r09-advice
+    wrap class caught at design time. GREATEST(…, 0) absorbs the
+    equal-gaps catastrophic cancellation (a tiny negative under
+    float rounding must not feed SQRT); an all-zero-gap session
+    (every event at one timestamp) degrades to NULL via the sg > 0
+    CASE on BOTH engines — never an engine-specific 0/0 (the r09
+    log-zero advice class, guarded at design time). Only ≥3-event
+    sessions emit.
+    100 TB: one shuffle on user_id reused by every window; the
+    moment aggregate map-side combines."""
+    e = load_table(spark, sf_dir, "events")
+    us = F.unix_micros("ts")
+    wseq = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = e.select("user_id", "event_id", "ts", us.alias("us")).withColumn(
+        "prev_us", F.lag("us").over(wseq)
+    )
+    flagged = seq.withColumn(
+        "new_s",
+        F.when(
+            F.col("prev_us").isNull()
+            | ((F.col("us") - F.col("prev_us")) > SESSION_GAP_US),
+            1,
+        ).otherwise(0),
+    )
+    wcum = (
+        Window.partitionBy("user_id")
+        .orderBy("us", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    sess = flagged.withColumn(
+        "sess_idx", F.sum("new_s").over(wcum).cast("bigint")
+    )
+    wg = Window.partitionBy("user_id", "sess_idx").orderBy("us", "event_id")
+    gaps = sess.withColumn("g", F.col("us") - F.lag("us").over(wg))
+    m = gaps.groupBy("user_id", "sess_idx").agg(
+        F.count("g").cast("bigint").alias("n_gaps"),
+        F.sum("g").cast("bigint").alias("sg"),
+        F.sum(F.col("g").cast("decimal(38,0)") * F.col("g")).alias("sgg"),
+    )
+    cv = F.sqrt(
+        F.greatest(
+            F.col("n_gaps").cast("double") * F.col("sgg").cast("double")
+            - F.col("sg").cast("double") * F.col("sg").cast("double"),
+            F.lit(0.0),
+        )
+    ) / F.col("sg").cast("double")
+    return m.filter(F.col("n_gaps") >= 2).select(
+        "user_id",
+        "sess_idx",
+        "n_gaps",
+        F.col("sg").alias("total_gap_us"),
+        F.when(F.col("sg") > 0, F.round(cv, 6)).alias("gap_cv"),
+    )

@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_audio_classification_spark.registry import query
+from big_data_audio_classification_spark.sources.catalog import load_table
 
 SR = 22050          # reference: librosa.load default, voice_classifier.py:80
 N_FFT = 2048        # librosa melspectrogram default
@@ -855,4 +856,339 @@ def audio_zero_crossing_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.sum("crossed") * 1.0 / F.nullif(F.sum("has_prev"), F.lit(0)), 6
         ).alias("zcr"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# audio-math: crest factor per frame, rolled up per channel
+# ---------------------------------------------------------------------------
+
+CREST_FRAME = 64  # samples per frame, matches the RMS/ZCR framing
+
+
+@query(
+    "audio_crest_factor",
+    oracle=f"""
+        WITH x AS (
+            SELECT user_id, CAST(ROUND(value * 100) AS BIGINT) AS c,
+                   ROW_NUMBER() OVER (PARTITION BY user_id
+                                      ORDER BY ts, event_id) AS rn
+            FROM events
+        ),
+        frames AS (
+            SELECT user_id,
+                   CAST((rn - 1) // {CREST_FRAME} AS BIGINT) AS frame,
+                   (CAST(MAX(c) AS DOUBLE) / 100.0)
+                   / SQRT(CAST(SUM(c * c) AS DOUBLE)
+                          / (COUNT(*) * 10000.0)) AS crest
+            FROM x GROUP BY user_id, (rn - 1) // {CREST_FRAME}
+        ),
+        ch AS (
+            SELECT user_id,
+                   CAST(COUNT(*) AS BIGINT)   AS n_frames,
+                   list(crest ORDER BY frame) AS cs,
+                   MAX(crest)                 AS max_crest,
+                   MIN(crest)                 AS min_crest
+            FROM frames GROUP BY user_id
+        )
+        SELECT user_id, n_frames,
+               ROUND(list_sum(cs) / n_frames, 6) AS mean_crest,
+               ROUND(max_crest, 6)               AS max_crest,
+               ROUND(min_crest, 6)               AS min_crest
+        FROM ch
+    """,
+    tags=("audio", "audio-math", "events"),
+)
+def audio_crest_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CREST FACTOR per frame (peak ÷ RMS — the impulsiveness measure
+    that separates percussive from steady material; dB siblings:
+    ``audio_rms_db_frames`` r06, flatness: ``audio_energy_flatness``),
+    rolled up per channel. Same row_number÷N framing as the whole
+    framed-audio family; per-frame peak and energy are EXACT integer
+    cents (one division + one sqrt per frame), and the cross-frame
+    mean runs as a SEQUENTIAL frame-ordered in-row fold — the
+    deterministic-summation idiom the r07 bit-exact sweep forced onto
+    ``audio_energy_flatness`` (engine-side AVG over frames is
+    ULP-unstable under ROUND). max/min are order-free. Strictly
+    positive signal keeps RMS nonzero and the division total."""
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    c = F.round(F.col("value") * 100).cast("bigint")
+    x = e.select(
+        "user_id",
+        c.alias("c"),
+        ((F.row_number().over(w) - 1) / CREST_FRAME).cast("bigint").alias(
+            "frame"
+        ),
+    )
+    frames = x.groupBy("user_id", "frame").agg(
+        (
+            (F.max("c").cast("double") / 100.0)
+            / F.sqrt(
+                F.sum(F.col("c") * F.col("c")).cast("double")
+                / (F.count(F.lit(1)) * 10000.0)
+            )
+        ).alias("crest")
+    )
+    ch = frames.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_frames"),
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("frame", "crest"))),
+            lambda s: s.getField("crest"),
+        ).alias("cs"),
+        F.max("crest").alias("max_crest"),
+        F.min("crest").alias("min_crest"),
+    )
+    mean_crest = (
+        F.aggregate(F.col("cs"), F.lit(0.0), lambda acc, p: acc + p)
+        / F.col("n_frames")
+    )
+    return ch.select(
+        "user_id",
+        "n_frames",
+        F.round(mean_crest, 6).alias("mean_crest"),
+        F.round("max_crest", 6).alias("max_crest"),
+        F.round("min_crest", 6).alias("min_crest"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# audio-math: even/odd-phase band energy ratio per channel
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "audio_phase_energy_ratio",
+    oracle="""
+        WITH x AS (
+            SELECT user_id, CAST(ROUND(value * 100) AS BIGINT) AS c,
+                   ROW_NUMBER() OVER (PARTITION BY user_id
+                                      ORDER BY ts, event_id) AS rn
+            FROM events
+        )
+        SELECT user_id,
+               CAST(SUM(CASE WHEN rn % 2 = 1 THEN c * c ELSE 0 END) AS BIGINT)
+                   AS odd_energy,
+               CAST(SUM(CASE WHEN rn % 2 = 0 THEN c * c ELSE 0 END) AS BIGINT)
+                   AS even_energy,
+               ROUND(CAST(SUM(CASE WHEN rn % 2 = 1 THEN c * c ELSE 0 END)
+                          AS DOUBLE)
+                     / SUM(CASE WHEN rn % 2 = 0 THEN c * c ELSE 0 END), 6)
+                   AS phase_ratio
+        FROM x GROUP BY user_id
+    """,
+    tags=("audio", "audio-math", "events"),
+)
+def audio_phase_energy_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EVEN/ODD-PHASE ENERGY split per channel: total energy carried
+    by odd- vs even-indexed samples and their ratio — the aliasing
+    sanity check run before a 2:1 decimation (``mm_wav_resample_sink``
+    keeps even samples; a ratio far from 1 means the phases differ
+    and naive decimation folds energy). Energies are EXACT integer
+    cents² sums (map-side combined, no window needed beyond the
+    row_number), ratio is one division — bit-stable. One shuffle
+    keyed by channel."""
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    c = F.round(F.col("value") * 100).cast("bigint")
+    x = e.select(
+        "user_id", c.alias("c"), F.row_number().over(w).alias("rn")
+    )
+    cc = F.col("c") * F.col("c")
+    odd = F.sum(F.when(F.col("rn") % 2 == 1, cc).otherwise(0))
+    even = F.sum(F.when(F.col("rn") % 2 == 0, cc).otherwise(0))
+    return x.groupBy("user_id").agg(
+        odd.cast("bigint").alias("odd_energy"),
+        even.cast("bigint").alias("even_energy"),
+        F.round(odd.cast("double") / even, 6).alias("phase_ratio"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# audio-math: spectral-centroid analog over framed event amplitudes
+# ---------------------------------------------------------------------------
+
+SC_FRAME = 16  # samples per frame
+
+
+@query(
+    "audio_spectral_centroid",
+    oracle=f"""
+        WITH x AS (
+            SELECT user_id,
+                   CAST(ROUND(value * 100) AS BIGINT) AS c,
+                   ROW_NUMBER() OVER (PARTITION BY user_id
+                                      ORDER BY ts, event_id) AS rn
+            FROM events
+        ),
+        framed AS (
+            SELECT user_id, (rn - 1) // {SC_FRAME} AS frame_id,
+                   (rn - 1) % {SC_FRAME} AS bin,
+                   abs(c) AS mag
+            FROM x
+        ),
+        agg AS (
+            SELECT user_id, frame_id,
+                   CAST(COUNT(*) AS BIGINT)        AS n,
+                   CAST(SUM(bin * mag) AS BIGINT)  AS wsum,
+                   CAST(SUM(mag) AS BIGINT)        AS msum
+            FROM framed GROUP BY user_id, frame_id
+        )
+        SELECT user_id, CAST(frame_id AS BIGINT) AS frame_id, n,
+               CASE WHEN msum > 0
+                    THEN ROUND(CAST(wsum AS DOUBLE) / msum, 6) + 0
+               END AS centroid_bin
+        FROM agg WHERE n = {SC_FRAME}
+    """,
+    tags=("audio-math", "window", "events"),
+)
+def audio_spectral_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SPECTRAL-CENTROID analog: frame the per-user value stream into
+    16-sample frames (row_number DIV — the same framing discipline as
+    ``audio_rms_db_frames``) and compute each frame's magnitude-
+    weighted mean bin Σ i·|x_i| / Σ |x_i| — the brightness feature of
+    every audio/DSP pipeline, expressed over the events stand-in
+    stream the audio-math family uses (the real mel path lives in
+    ``operators/audio.py``). Numerator and denominator are EXACT
+    integer sums (bin ≤ 15, |cents| ≤ 1e5 — no overflow reachable);
+    one float division per frame with the oracle's ``+ 0`` -0.0
+    guard; ragged tail frames are filtered exactly. One shuffle keyed
+    by user."""
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    c = F.round(F.col("value") * 100).cast("bigint")
+    x = e.select(
+        "user_id", c.alias("c"), (F.row_number().over(w) - 1).alias("rn0")
+    )
+    framed = x.select(
+        "user_id",
+        F.expr(f"rn0 DIV {SC_FRAME}").alias("frame_id"),
+        (F.col("rn0") % SC_FRAME).alias("bin"),
+        F.abs(F.col("c")).alias("mag"),
+    )
+    agg = framed.groupBy("user_id", "frame_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.col("bin") * F.col("mag")).cast("bigint").alias("wsum"),
+        F.sum("mag").cast("bigint").alias("msum"),
+    )
+    return agg.filter(F.col("n") == SC_FRAME).select(
+        "user_id",
+        F.col("frame_id").cast("bigint").alias("frame_id"),
+        "n",
+        F.when(
+            F.col("msum") > 0,
+            F.round(F.col("wsum").cast("double") / F.col("msum"), 6),
+        ).alias("centroid_bin"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# audio-math: frame-level lag-1 autocorrelation
+# ---------------------------------------------------------------------------
+
+AC_FRAME = 64
+
+
+@query(
+    "audio_autocorr_lag1",
+    oracle=f"""
+        WITH x AS (
+            SELECT user_id, CAST(ROUND(value * 100) AS BIGINT) AS c,
+                   ROW_NUMBER() OVER (PARTITION BY user_id
+                                      ORDER BY ts, event_id) AS rn
+            FROM events
+        ),
+        lagged AS (
+            SELECT user_id, c, rn,
+                   CAST((rn - 1) // {AC_FRAME} AS BIGINT) AS frame,
+                   LAG(c) OVER (PARTITION BY user_id,
+                                             CAST((rn - 1) // {AC_FRAME}
+                                                  AS BIGINT)
+                                ORDER BY rn) AS prev
+            FROM x
+        ),
+        frames AS (
+            SELECT user_id, frame,
+                   CAST(SUM(CASE WHEN prev IS NOT NULL
+                                 THEN prev * c ELSE 0 END) AS BIGINT) AS num,
+                   CAST(SUM(c * c) AS BIGINT) AS den,
+                   CAST(COUNT(*) AS BIGINT)   AS flen
+            FROM lagged GROUP BY user_id, frame
+        ),
+        ch AS (
+            SELECT user_id,
+                   CAST(COUNT(*) AS BIGINT) AS n_frames,
+                   list_sum(list(CAST(num AS DOUBLE) / den ORDER BY frame))
+                       AS r1_sum,
+                   MAX(CAST(num AS DOUBLE) / den) AS max_r1,
+                   MIN(CAST(num AS DOUBLE) / den) AS min_r1
+            FROM frames WHERE den > 0 GROUP BY user_id
+        )
+        SELECT user_id, n_frames,
+               ROUND(r1_sum / n_frames, 6) AS mean_r1,
+               ROUND(max_r1, 6)            AS max_r1,
+               ROUND(min_r1, 6)            AS min_r1
+        FROM ch
+    """,
+    tags=("audio", "audio-math", "events"),
+)
+def audio_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FRAME-LEVEL LAG-1 AUTOCORRELATION (normalized, r₁ = Σxᵢxᵢ₊₁ /
+    Σxᵢ² per 64-sample frame) — the periodicity/smoothness proxy that
+    separates tonal from noisy frames (crest measures impulsiveness,
+    flatness measures spectral tilt; r₁ completes the time-domain
+    trio), rolled up per channel exactly like ``audio_crest_factor``
+    (same row_number÷N framing idiom, same per-channel reduce). The
+    numerator and denominator are EXACT integer sums (cents products
+    ≈ 6e9 per frame — int64 with 10⁹ headroom); each frame's r₁ is
+    one division, and the cross-frame mean reduces via the house
+    frame-ordered fold. Signals are non-negative cents so r₁ ≥ 0 —
+    no -0.0 surface. One shuffle keyed by (user, frame), one by
+    user."""
+    e = load_table(spark, sf_dir, "events")
+    wrn = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    x = e.select(
+        "user_id",
+        F.round(F.col("value") * 100).cast("bigint").alias("c"),
+        F.row_number().over(wrn).alias("rn"),
+    )
+    frame = F.expr(f"CAST((rn - 1) DIV {AC_FRAME} AS BIGINT)")
+    wlag = Window.partitionBy("user_id", "frame").orderBy("rn")
+    lagged = x.select(
+        "user_id", "c", "rn", frame.alias("frame")
+    ).select("*", F.lag("c").over(wlag).alias("prev"))
+    frames = lagged.groupBy("user_id", "frame").agg(
+        F.sum(
+            F.when(F.col("prev").isNotNull(), F.col("prev") * F.col("c"))
+            .otherwise(0)
+        )
+        .cast("bigint")
+        .alias("num"),
+        F.sum(F.expr("c * c")).cast("bigint").alias("den"),
+        F.count(F.lit(1)).cast("bigint").alias("flen"),
+    )
+    r1 = F.col("num").cast("double") / F.col("den")
+    ordered = F.transform(
+        F.array_sort(F.collect_list(F.struct("frame", "r1"))),
+        lambda s: s["r1"],
+    )
+    ch = (
+        frames.filter(F.col("den") > 0)
+        .select("user_id", "frame", r1.alias("r1"))
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_frames"),
+            F.aggregate(ordered, F.lit(0.0), lambda a, v: a + v).alias(
+                "r1_sum"
+            ),
+            F.max("r1").alias("max_r1"),
+            F.min("r1").alias("min_r1"),
+        )
+    )
+    return ch.select(
+        "user_id",
+        "n_frames",
+        F.round(F.col("r1_sum") / F.col("n_frames"), 6).alias("mean_r1"),
+        F.round("max_r1", 6).alias("max_r1"),
+        F.round("min_r1", 6).alias("min_r1"),
     )

@@ -2477,3 +2477,654 @@ def stats_rdd_local_means(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(mean_a, 6).alias("mean_above"),
         F.round(mean_a - mean_b, 6).alias("jump_estimate"),
     )
+
+
+# ---------------------------------------------------------------------------
+# causal: stratified (blocked) treatment-effect table
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "stats_stratified_ate",
+    oracle="""
+        WITH base AS (
+            SELECT c.c_mktsegment AS stratum,
+                   CAST(c.c_custkey % 2 AS BIGINT) AS treated,
+                   CAST(ROUND(t.o_totalprice * 100) AS BIGINT) AS cents
+            FROM orders t JOIN customer c ON t.o_custkey = c.c_custkey
+        ),
+        s AS (
+            SELECT stratum,
+                   CAST(SUM(treated) AS BIGINT)                    AS n1,
+                   CAST(SUM(1 - treated) AS BIGINT)                AS n0,
+                   CAST(SUM(treated * cents) AS BIGINT)            AS s1,
+                   CAST(SUM((1 - treated) * cents) AS BIGINT)      AS s0,
+                   SUM(treated * CAST(cents AS DECIMAL(38, 0))
+                       * CAST(cents AS DECIMAL(38, 0)))            AS ss1,
+                   SUM((1 - treated) * CAST(cents AS DECIMAL(38, 0))
+                       * CAST(cents AS DECIMAL(38, 0)))            AS ss0
+            FROM base GROUP BY stratum
+        )
+        SELECT stratum, n1, n0,
+               ROUND((CAST(s1 AS DOUBLE) / n1
+                      - CAST(s0 AS DOUBLE) / n0) / 100.0, 4) AS diff_dollars,
+               ROUND(SQRT(
+                   (CAST(ss1 AS DOUBLE) / n1
+                    - (CAST(s1 AS DOUBLE) / n1) * (CAST(s1 AS DOUBLE) / n1))
+                       / (n1 - 1)
+                   + (CAST(ss0 AS DOUBLE) / n0
+                      - (CAST(s0 AS DOUBLE) / n0) * (CAST(s0 AS DOUBLE) / n0))
+                       / (n0 - 1)) / 100.0, 4)               AS se_dollars
+        FROM s
+    """,
+    tags=("stats", "causal", "inference", "orders"),
+)
+def stats_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STRATIFIED (blocked) treatment-effect table: within each
+    customer segment, the treated-minus-control mean outcome and its
+    Neyman standard error — the blocked-experiment estimator that
+    removes between-stratum variance from the comparison (IPW
+    weighting: ``stats_ipw_ate``, certified r06; diff-in-diff /
+    regression-discontinuity: ``stats_did_estimator`` /
+    ``stats_rdd_local_means`` in the r07 window and stock). The
+    treatment flag is the deterministic custkey parity; all six
+    sufficient statistics per stratum are EXACT integers (squared
+    cents in DECIMAL(38) — cents² × group size overflows int64 past
+    sf0.1), and the effect and SE are fixed-order float expressions
+    over them — the ``stats_ipw_ate`` bit-stability idiom. One
+    broadcast join + one aggregate; output = |strata| rows."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    base = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
+        F.col("c_mktsegment").alias("stratum"),
+        (F.col("c_custkey") % 2).cast("bigint").alias("treated"),
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+    )
+    t = F.col("treated")
+    cents = F.col("cents")
+    cd = cents.cast("decimal(38,0)")
+    s = base.groupBy("stratum").agg(
+        F.sum(t).cast("bigint").alias("n1"),
+        F.sum(1 - t).cast("bigint").alias("n0"),
+        F.sum(t * cents).cast("bigint").alias("s1"),
+        F.sum((1 - t) * cents).cast("bigint").alias("s0"),
+        F.sum(t * cd * cd).alias("ss1"),
+        F.sum((1 - t) * cd * cd).alias("ss0"),
+    )
+    n1, n0 = F.col("n1"), F.col("n0")
+    m1 = F.col("s1").cast("double") / n1
+    m0 = F.col("s0").cast("double") / n0
+    v1 = (F.col("ss1").cast("double") / n1 - m1 * m1) / (n1 - 1)
+    v0 = (F.col("ss0").cast("double") / n0 - m0 * m0) / (n0 - 1)
+    return s.select(
+        "stratum",
+        "n1",
+        "n0",
+        F.round((m1 - m0) / 100.0, 4).alias("diff_dollars"),
+        F.round(F.sqrt(v1 + v0) / 100.0, 4).alias("se_dollars"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# causal: instrumental-variable Wald estimator
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "stats_iv_wald_estimator",
+    oracle="""
+        WITH base AS (
+            SELECT CAST(CASE WHEN c.c_custkey % 3 = 0 THEN 1 ELSE 0 END
+                        AS BIGINT)                                  AS z,
+                   CAST(CASE WHEN t.o_orderpriority IN ('1-URGENT', '2-HIGH')
+                             OR c.c_custkey % 3 = 0 THEN 1 ELSE 0 END
+                        AS BIGINT)                                  AS d,
+                   CAST(ROUND(t.o_totalprice * 100) AS BIGINT)      AS cents
+            FROM orders t JOIN customer c ON t.o_custkey = c.c_custkey
+        ),
+        s AS (
+            SELECT CAST(SUM(z) AS BIGINT)                  AS n1,
+                   CAST(SUM(1 - z) AS BIGINT)              AS n0,
+                   CAST(SUM(z * cents) AS BIGINT)          AS y1,
+                   CAST(SUM((1 - z) * cents) AS BIGINT)    AS y0,
+                   CAST(SUM(z * d) AS BIGINT)              AS d1,
+                   CAST(SUM((1 - z) * d) AS BIGINT)        AS d0
+            FROM base
+        )
+        SELECT n1, n0,
+               ROUND((CAST(y1 AS DOUBLE) / n1 - CAST(y0 AS DOUBLE) / n0)
+                     / 100.0, 4)                               AS itt_dollars,
+               ROUND(CAST(d1 AS DOUBLE) / n1
+                     - CAST(d0 AS DOUBLE) / n0, 6)             AS first_stage,
+               ROUND((CAST(y1 AS DOUBLE) / n1 - CAST(y0 AS DOUBLE) / n0)
+                     / (CAST(d1 AS DOUBLE) / n1 - CAST(d0 AS DOUBLE) / n0)
+                     / 100.0, 4)                               AS late_dollars
+        FROM s
+    """,
+    tags=("stats", "causal", "inference", "orders"),
+)
+def stats_iv_wald_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INSTRUMENTAL-VARIABLE Wald estimator: instrument z (custkey
+    divisibility — deterministic), endogenous treatment d (priority
+    flag OR'd with the instrument so the first stage is strong by
+    construction), outcome in cents. Reports the intent-to-treat
+    effect, the first-stage compliance difference, and their ratio —
+    the LATE (Wald) estimator completing the causal family
+    (stratified ATE tranche 1, IPW r06, DiD/RDD window+stock). Six
+    exact-integer sufficient statistics in ONE aggregate pass; every
+    reported value is a fixed-order float expression over them."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    z = F.when(F.col("c_custkey") % 3 == 0, 1).otherwise(0).cast("bigint")
+    dflag = (
+        F.when(
+            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+            | (F.col("c_custkey") % 3 == 0),
+            1,
+        )
+        .otherwise(0)
+        .cast("bigint")
+    )
+    base = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
+        z.alias("z"),
+        dflag.alias("d"),
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+    )
+    s = base.agg(
+        F.sum("z").cast("bigint").alias("n1"),
+        F.sum(1 - F.col("z")).cast("bigint").alias("n0"),
+        F.sum(F.col("z") * F.col("cents")).cast("bigint").alias("y1"),
+        F.sum((1 - F.col("z")) * F.col("cents")).cast("bigint").alias("y0"),
+        F.sum(F.col("z") * F.col("d")).cast("bigint").alias("d1"),
+        F.sum((1 - F.col("z")) * F.col("d")).cast("bigint").alias("d0"),
+    )
+    itt = F.col("y1").cast("double") / F.col("n1") - F.col("y0").cast(
+        "double"
+    ) / F.col("n0")
+    fs = F.col("d1").cast("double") / F.col("n1") - F.col("d0").cast(
+        "double"
+    ) / F.col("n0")
+    return s.select(
+        "n1",
+        "n0",
+        F.round(itt / 100.0, 4).alias("itt_dollars"),
+        F.round(fs, 6).alias("first_stage"),
+        F.round(itt / fs / 100.0, 4).alias("late_dollars"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# causal: placebo difference-in-differences (the falsification test)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "stats_placebo_did",
+    oracle="""
+        WITH span AS (
+            -- integer-micros midpoint, matching Spark's unix_micros DIV 2
+            -- exactly (interval/2 arithmetic rounds differently)
+            SELECT make_timestamp(epoch_us(MIN(ts))
+                       + (epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 2)
+                       AS mid_real
+            FROM events
+        ),
+        pre AS (
+            SELECT e.user_id, e.ts,
+                   CAST(ROUND(e.value * 100) AS BIGINT) AS cents
+            FROM events e, span
+            WHERE e.ts < span.mid_real
+        ),
+        pspan AS (
+            SELECT make_timestamp(epoch_us(MIN(ts))
+                       + (epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 2)
+                       AS pmid
+            FROM pre
+        ),
+        cells AS (
+            SELECT CASE WHEN p.user_id % 2 = 0 THEN 1 ELSE 0 END AS treated,
+                   CASE WHEN p.ts >= s.pmid THEN 1 ELSE 0 END    AS fake_post,
+                   CAST(COUNT(*) AS BIGINT)    AS n,
+                   CAST(SUM(p.cents) AS BIGINT) AS cents
+            FROM pre p, pspan s
+            GROUP BY 1, 2
+        ),
+        m AS (
+            SELECT
+              MAX(CASE WHEN treated = 1 AND fake_post = 1
+                       THEN CAST(cents AS DOUBLE) / n END) AS t_post,
+              MAX(CASE WHEN treated = 1 AND fake_post = 0
+                       THEN CAST(cents AS DOUBLE) / n END) AS t_pre,
+              MAX(CASE WHEN treated = 0 AND fake_post = 1
+                       THEN CAST(cents AS DOUBLE) / n END) AS c_post,
+              MAX(CASE WHEN treated = 0 AND fake_post = 0
+                       THEN CAST(cents AS DOUBLE) / n END) AS c_pre,
+              CAST(SUM(n) AS BIGINT) AS n_rows
+            FROM cells
+        )
+        SELECT n_rows,
+               ROUND(((t_post - t_pre) - (c_post - c_pre)) / 100.0, 6) + 0
+                   AS placebo_did
+        FROM m
+    """,
+    tags=("stats", "causal", "inference", "events"),
+)
+def stats_placebo_did(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PLACEBO difference-in-differences — the falsification test every
+    DiD analysis owes its readers (``stats_did_estimator`` is the real
+    one, r08-window): restrict to the PRE period only, invent a fake
+    treatment date at its midpoint, and re-estimate. A well-behaved
+    design yields a placebo effect near zero; a large one means the
+    'parallel trends' assumption was already broken before treatment.
+    Same exact-cents discipline: the four cell means are single
+    divisions of exact integer sums, the DiD contrast is one
+    fixed-order float expression (+0 normalizing a possible -0.0
+    ROUND). Two scans (span + cells), both map-side combined; output =
+    1 row at any SF."""
+    e = load_table(spark, sf_dir, "events")
+    span = e.agg(
+        F.min("ts").alias("lo"),
+        F.timestamp_micros(
+            (
+                F.unix_micros(F.min("ts"))
+                + F.expr("(unix_micros(MAX(ts)) - unix_micros(MIN(ts))) DIV 2")
+            )
+        ).alias("mid_real"),
+    )
+    pre = (
+        e.crossJoin(F.broadcast(span))
+        .filter(F.col("ts") < F.col("mid_real"))
+        .select(
+            "user_id",
+            "ts",
+            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        )
+    )
+    pspan = pre.agg(
+        F.timestamp_micros(
+            (
+                F.unix_micros(F.min("ts"))
+                + F.expr("(unix_micros(MAX(ts)) - unix_micros(MIN(ts))) DIV 2")
+            )
+        ).alias("pmid")
+    )
+    cells = (
+        pre.crossJoin(F.broadcast(pspan))
+        .groupBy(
+            F.when(F.col("user_id") % 2 == 0, 1).otherwise(0).alias("treated"),
+            F.when(F.col("ts") >= F.col("pmid"), 1).otherwise(0).alias(
+                "fake_post"
+            ),
+        )
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("cents").cast("bigint").alias("cents"),
+        )
+    )
+    mean = F.col("cents").cast("double") / F.col("n")
+    m = cells.agg(
+        F.max(F.when((F.col("treated") == 1) & (F.col("fake_post") == 1), mean)).alias("t_post"),
+        F.max(F.when((F.col("treated") == 1) & (F.col("fake_post") == 0), mean)).alias("t_pre"),
+        F.max(F.when((F.col("treated") == 0) & (F.col("fake_post") == 1), mean)).alias("c_post"),
+        F.max(F.when((F.col("treated") == 0) & (F.col("fake_post") == 0), mean)).alias("c_pre"),
+        F.sum("n").cast("bigint").alias("n_rows"),
+    )
+    did = (F.col("t_post") - F.col("t_pre")) - (
+        F.col("c_post") - F.col("c_pre")
+    )
+    return m.select(
+        "n_rows", F.round(did / 100.0, 6).alias("placebo_did")
+    )
+
+
+# ---------------------------------------------------------------------------
+# causal: Cochran-Armitage trend test over an ordered exposure
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "stats_cochran_armitage_trend",
+    oracle="""
+        WITH x AS (
+            SELECT CAST(hour(ts) // 6 AS BIGINT) AS k,
+                   CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y
+            FROM events
+        ),
+        per_k AS (
+            SELECT k, CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(y) AS BIGINT) AS r
+            FROM x GROUP BY k
+        ),
+        m AS (
+            SELECT CAST(SUM(n) AS BIGINT) AS nt, CAST(SUM(r) AS BIGINT) AS rt,
+                   CAST(SUM(r * k) AS BIGINT)     AS sxr,
+                   CAST(SUM(n * k) AS BIGINT)     AS sxn,
+                   CAST(SUM(n * k * k) AS BIGINT) AS sxxn
+            FROM per_k
+        )
+        SELECT nt AS n_total, rt AS n_events,
+               CAST((SELECT COUNT(*) FROM per_k) AS BIGINT) AS n_buckets,
+               ROUND((sxr - CAST(rt AS DOUBLE) * sxn / nt)
+                     / SQRT((CAST(rt AS DOUBLE) / nt)
+                            * (1.0 - CAST(rt AS DOUBLE) / nt)
+                            * (sxxn - CAST(sxn AS DOUBLE) * sxn / nt)), 4)
+                   + 0 AS z_trend
+        FROM m
+    """,
+    tags=("stats", "causal", "inference", "events"),
+)
+def stats_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """COCHRAN-ARMITAGE trend test: is the error rate MONOTONE in an
+    ordered exposure (the 4 six-hour day segments)? T = Σ x_k(r_k −
+    n_k·p̄) against Var = p̄(1−p̄)(Σn_k x_k² − (Σn_k x_k)²/N) — the
+    dose-response screen that a plain chi-square cannot see (it
+    ignores bucket ORDER), and the standard first causal probe on an
+    ordered treatment intensity (siblings: ``stats_iv_wald_estimator``,
+    ``stats_placebo_did``). Every moment is an exact integer (scores
+    are tiny ints, counts are counts); z is ONE fixed-order float
+    expression, SIGNED → oracle ``+ 0`` guard. One 4-group aggregate,
+    one 1-row reduce; constant output at any SF."""
+    e = load_table(spark, sf_dir, "events")
+    x = e.select(
+        (F.floor(F.hour("ts") / 6)).cast("bigint").alias("k"),
+        F.when(F.col("event_type") == "error", 1).otherwise(0).alias("y"),
+    )
+    per_k = x.groupBy("k").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("y").cast("bigint").alias("r"),
+    )
+    m = per_k.agg(
+        F.sum("n").cast("bigint").alias("nt"),
+        F.sum("r").cast("bigint").alias("rt"),
+        F.sum(F.expr("r * k")).cast("bigint").alias("sxr"),
+        F.sum(F.expr("n * k")).cast("bigint").alias("sxn"),
+        F.sum(F.expr("n * k * k")).cast("bigint").alias("sxxn"),
+        F.count(F.lit(1)).cast("bigint").alias("n_buckets"),
+    )
+    p = F.col("rt").cast("double") / F.col("nt")
+    num = F.col("sxr") - F.col("rt").cast("double") * F.col("sxn") / F.col("nt")
+    var = (
+        p
+        * (1.0 - p)
+        * (
+            F.col("sxxn")
+            - F.col("sxn").cast("double") * F.col("sxn") / F.col("nt")
+        )
+    )
+    return m.select(
+        F.col("nt").alias("n_total"),
+        F.col("rt").alias("n_events"),
+        "n_buckets",
+        F.round(num / F.sqrt(var), 4).alias("z_trend"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# causal: doubly-robust ATE with stratified propensity + outcome models
+# ---------------------------------------------------------------------------
+
+DR_TREAT_CUTOFF = "2024-01-03"  # treated = error before day 3
+
+
+@query(
+    "stats_dr_ate",
+    oracle=f"""
+        WITH u AS (
+            SELECT user_id,
+                   user_id % 4 AS stratum,
+                   MAX(CASE WHEN event_type = 'error'
+                             AND ts < TIMESTAMP '{DR_TREAT_CUTOFF}'
+                            THEN 1 ELSE 0 END) AS t,
+                   CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase'
+                        THEN CAST(ROUND(value * 100) AS BIGINT) END), 0)
+                        AS BIGINT) AS y
+            FROM events GROUP BY user_id
+        ),
+        s AS (
+            SELECT stratum,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(t) AS BIGINT)   AS n_t,
+                   CAST(SUM(t * y) AS BIGINT)       AS sy_t,
+                   CAST(SUM((1 - t) * y) AS BIGINT) AS sy_c
+            FROM u GROUP BY stratum
+        ),
+        m AS (
+            SELECT stratum, n, n_t,
+                   CAST(n_t AS DOUBLE) / n AS e_hat,
+                   CASE WHEN n_t > 0
+                        THEN CAST(sy_t AS DOUBLE) / n_t END AS m1,
+                   CASE WHEN n - n_t > 0
+                        THEN CAST(sy_c AS DOUBLE) / (n - n_t) END AS m0
+            FROM s
+        ),
+        terms AS (
+            SELECT u.user_id, u.stratum,
+                   CASE WHEN m.n_t > 0 AND m.n - m.n_t > 0
+                        THEN m.m1 - m.m0
+                             + u.t * (u.y - m.m1) / m.e_hat
+                             - (1 - u.t) * (u.y - m.m0) / (1.0 - m.e_hat)
+                        ELSE NULL END AS dr
+            FROM u JOIN m ON u.stratum = m.stratum
+        )
+        SELECT CAST(t.stratum AS BIGINT) AS stratum,
+               m.n, m.n_t,
+               ROUND(m.e_hat, 6)         AS e_hat,
+               ROUND(m.m1, 6)            AS m1_cents,
+               ROUND(m.m0, 6)            AS m0_cents,
+               CASE WHEN COUNT(t.dr) > 0
+                    THEN ROUND(list_sum(list(t.dr ORDER BY t.user_id))
+                               / COUNT(t.dr), 6) + 0
+                    ELSE NULL END AS dr_ate_cents
+        FROM terms t JOIN m ON t.stratum = m.stratum
+        GROUP BY t.stratum, m.n, m.n_t, m.e_hat, m.m1, m.m0
+    """,
+    tags=("stats", "causal", "inference", "events"),
+)
+def stats_dr_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DOUBLY-ROBUST ATE (AIPW) per stratum — the estimator that
+    completes the causal family (IPW: ``stats_ipw_ate``;
+    stratified outcome means: ``stats_stratified_ate``): term_i =
+    m1 − m0 + T(y−m1)/e − (1−T)(y−m0)/(1−e), consistent if EITHER
+    the propensity e(s) or the outcome model m_t(s) is right.
+    Treatment = an error in the first two observation days (real
+    variation at every SF, unlike the universal signup); outcome =
+    exact purchase cents; strata = user_id mod 4. All model inputs
+    are float divisions of exact integers; each user's term is one
+    fixed-order expression; the stratum mean folds user-ordered,
+    ``+ 0``-guarded. A one-sided stratum (all treated — sf0.001 hits
+    this) degrades to NULL on BOTH engines rather than a division
+    blow-up: the guard is the operator's honesty contract. 100 TB:
+    two user-keyed aggregates + a 4-row broadcast model join."""
+    e = load_table(spark, sf_dir, "events")
+    cents = F.round(F.col("value") * 100).cast("bigint")
+    u = e.groupBy("user_id").agg(
+        F.max(
+            F.when(
+                (F.col("event_type") == "error")
+                & (F.col("ts") < F.lit(DR_TREAT_CUTOFF).cast("timestamp")),
+                1,
+            ).otherwise(0)
+        ).alias("t"),
+        F.coalesce(
+            F.sum(F.when(F.col("event_type") == "purchase", cents)), F.lit(0)
+        )
+        .cast("bigint")
+        .alias("y"),
+    ).select("user_id", (F.col("user_id") % 4).alias("stratum"), "t", "y")
+    s = u.groupBy("stratum").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("t").cast("bigint").alias("n_t"),
+        F.sum(F.col("t") * F.col("y")).cast("bigint").alias("sy_t"),
+        F.sum((1 - F.col("t")) * F.col("y")).cast("bigint").alias("sy_c"),
+    )
+    m = s.select(
+        "stratum",
+        "n",
+        "n_t",
+        (F.col("n_t").cast("double") / F.col("n")).alias("e_hat"),
+        F.when(
+            F.col("n_t") > 0, F.col("sy_t").cast("double") / F.col("n_t")
+        ).alias("m1"),
+        F.when(
+            F.col("n") - F.col("n_t") > 0,
+            F.col("sy_c").cast("double") / (F.col("n") - F.col("n_t")),
+        ).alias("m0"),
+    )
+    terms = u.join(F.broadcast(m), "stratum").select(
+        "user_id",
+        "stratum",
+        F.when(
+            (F.col("n_t") > 0) & (F.col("n") - F.col("n_t") > 0),
+            F.col("m1")
+            - F.col("m0")
+            + F.col("t") * (F.col("y") - F.col("m1")) / F.col("e_hat")
+            - (1 - F.col("t"))
+            * (F.col("y") - F.col("m0"))
+            / (1.0 - F.col("e_hat")),
+        ).alias("dr"),
+    )
+    ordered = F.transform(
+        F.array_sort(F.collect_list(F.struct("user_id", "dr"))),
+        lambda x: x["dr"],
+    )
+    agg = terms.groupBy("stratum").agg(
+        F.count("dr").cast("bigint").alias("n_dr"),
+        F.aggregate(
+            F.filter(ordered, lambda v: v.isNotNull()),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        ).alias("dr_sum"),
+    )
+    return (
+        agg.join(F.broadcast(m), "stratum")
+        .select(
+            F.col("stratum").cast("bigint").alias("stratum"),
+            "n",
+            "n_t",
+            F.round("e_hat", 6).alias("e_hat"),
+            F.round("m1", 6).alias("m1_cents"),
+            F.round("m0", 6).alias("m0_cents"),
+            F.when(
+                F.col("n_dr") > 0,
+                F.round(F.col("dr_sum") / F.col("n_dr"), 6),
+            ).alias("dr_ate_cents"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# causal: Mantel-Haenszel pooled odds ratio across strata
+# ---------------------------------------------------------------------------
+
+MH_STRATA = 5
+
+
+@query(
+    "stats_mantel_haenszel_or",
+    oracle=f"""
+        WITH ut AS (
+            SELECT user_id,
+                   MAX(CASE WHEN event_type = 'error' AND day(ts) < 3
+                            THEN 1 ELSE 0 END) AS t,
+                   MAX(CASE WHEN event_type = 'purchase'
+                            THEN 1 ELSE 0 END) AS y
+            FROM events GROUP BY user_id
+        ),
+        cells AS (
+            SELECT user_id % {MH_STRATA} AS stratum,
+                   CAST(SUM(CASE WHEN t = 1 AND y = 1 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS a,
+                   CAST(SUM(CASE WHEN t = 1 AND y = 0 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS b,
+                   CAST(SUM(CASE WHEN t = 0 AND y = 1 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS c,
+                   CAST(SUM(CASE WHEN t = 0 AND y = 0 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS d,
+                   CAST(COUNT(*) AS BIGINT) AS n_i
+            FROM ut GROUP BY user_id % {MH_STRATA}
+        ),
+        folds AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
+                   CAST(SUM(n_i) AS BIGINT) AS n_users,
+                   CAST(SUM(a) AS BIGINT) AS a_total,
+                   list_sum(list(CAST(a * d AS DOUBLE) / n_i
+                                 ORDER BY stratum)) AS mh_num,
+                   list_sum(list(CAST(b * c AS DOUBLE) / n_i
+                                 ORDER BY stratum)) AS mh_den
+            FROM cells
+        )
+        SELECT n_strata, n_users, a_total,
+               CASE WHEN mh_den > 0
+                    THEN ROUND(mh_num / mh_den, 6) + 0
+                    ELSE NULL END AS mh_odds_ratio
+        FROM folds
+    """,
+    tags=("stats", "causal", "inference", "events"),
+)
+def stats_mantel_haenszel_or(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MANTEL-HAENSZEL POOLED ODDS RATIO: the stratified 2×2
+    association estimate Σ(aᵢdᵢ/nᵢ) / Σ(bᵢcᵢ/nᵢ) — the
+    confounder-adjusted effect the causal family's IV/DR siblings
+    assume away (stratifying on user_id%5 blocks any covariate that
+    correlates with the stratum; treatment = an early error event
+    (before day 3 — every user has a signup, so signup can't vary),
+    outcome = ever-purchased). Each stratum's term is ONE float
+    expression off exact integer cells; the two 5-term sums fold
+    STRATUM-ORDERED on both engines (Spark sorted-struct fold vs
+    DuckDB ordered list_sum — the house cross-row float rule even
+    for 5 terms). An all-treated stratum (sf0.001 stratum 1)
+    contributes 0 to both sums — the degenerate guard the docstring
+    pins; a zero pooled denominator degrades to NULL. 100 TB:
+    user-level flags map-side combine; strata are O(1) rows."""
+    e = load_table(spark, sf_dir, "events")
+    ut = e.groupBy("user_id").agg(
+        F.max(
+            F.when(
+                (F.col("event_type") == "error") & (F.dayofmonth("ts") < 3), 1
+            ).otherwise(0)
+        ).alias("t"),
+        F.max(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        ).alias("y"),
+    )
+    cells = ut.groupBy((F.col("user_id") % MH_STRATA).alias("stratum")).agg(
+        F.sum(F.when((F.col("t") == 1) & (F.col("y") == 1), 1).otherwise(0))
+        .cast("bigint")
+        .alias("a"),
+        F.sum(F.when((F.col("t") == 1) & (F.col("y") == 0), 1).otherwise(0))
+        .cast("bigint")
+        .alias("b"),
+        F.sum(F.when((F.col("t") == 0) & (F.col("y") == 1), 1).otherwise(0))
+        .cast("bigint")
+        .alias("c"),
+        F.sum(F.when((F.col("t") == 0) & (F.col("y") == 0), 1).otherwise(0))
+        .cast("bigint")
+        .alias("d"),
+        F.count(F.lit(1)).cast("bigint").alias("n_i"),
+    )
+    num_t = (F.col("a") * F.col("d")).cast("double") / F.col("n_i")
+    den_t = (F.col("b") * F.col("c")).cast("double") / F.col("n_i")
+    scored = cells.select("stratum", "n_i", "a", num_t.alias("nt"), den_t.alias("dt"))
+    ordered = lambda col: F.transform(  # noqa: E731
+        F.array_sort(F.collect_list(F.struct("stratum", col))),
+        lambda s: s[col],
+    )
+    folds = scored.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_strata"),
+        F.sum("n_i").cast("bigint").alias("n_users"),
+        F.sum("a").cast("bigint").alias("a_total"),
+        F.aggregate(ordered("nt"), F.lit(0.0), lambda acc, x: acc + x).alias(
+            "mh_num"
+        ),
+        F.aggregate(ordered("dt"), F.lit(0.0), lambda acc, x: acc + x).alias(
+            "mh_den"
+        ),
+    )
+    return folds.select(
+        "n_strata",
+        "n_users",
+        "a_total",
+        F.when(
+            F.col("mh_den") > 0, F.round(F.col("mh_num") / F.col("mh_den"), 6)
+        ).alias("mh_odds_ratio"),
+    )

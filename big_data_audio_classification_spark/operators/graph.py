@@ -842,3 +842,114 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
         .orderBy("node")
     )
+
+
+# ---------------------------------------------------------------------------
+# graph: synchronous min-label propagation over the k-NN graph
+# ---------------------------------------------------------------------------
+
+LP_ROUNDS = 4
+LP_NODE_CAP = 600  # same bounded exact-kNN slice as graph_pagerank_knn
+
+
+def _label_prop_sql() -> str:
+    from big_data_audio_classification_spark.operators.graph import KNN_K
+
+    sql_cos = """
+        list_sum(list_transform(list_zip(a.embedding, b.embedding),
+                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+        / (SQRT(list_sum(list_transform(a.embedding,
+                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+           * SQRT(list_sum(list_transform(b.embedding,
+                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
+    """
+    parts = [
+        f"""nset AS MATERIALIZED (
+            SELECT vec_id, embedding FROM embeddings
+            WHERE vec_id < {LP_NODE_CAP})""",
+        f"""dedges AS MATERIALIZED (
+            SELECT src, dst FROM (
+                SELECT a.vec_id AS src, b.vec_id AS dst,
+                       ROW_NUMBER() OVER (PARTITION BY a.vec_id
+                           ORDER BY ROUND({sql_cos}, 6) DESC, b.vec_id) AS rn
+                FROM nset a JOIN nset b ON a.vec_id <> b.vec_id)
+            WHERE rn <= {KNN_K})""",
+        """edges AS MATERIALIZED (
+            SELECT src, dst FROM dedges
+            UNION SELECT dst, src FROM dedges)""",
+        """labels0 AS MATERIALIZED (
+            SELECT vec_id, vec_id AS label FROM nset)""",
+    ]
+    for r in range(1, LP_ROUNDS + 1):
+        parts.append(f"""labels{r} AS MATERIALIZED (
+            SELECT l.vec_id,
+                   LEAST(l.label, COALESCE(MIN(nl.label), l.label)) AS label
+            FROM labels{r - 1} l
+            LEFT JOIN edges e ON e.dst = l.vec_id
+            LEFT JOIN labels{r - 1} nl ON nl.vec_id = e.src
+            GROUP BY l.vec_id, l.label)""")
+    sep = ",\n        "
+    return f"""
+        WITH {sep.join(parts)}
+        SELECT CAST(label AS BIGINT)    AS label,
+               CAST(COUNT(*) AS BIGINT) AS n_members
+        FROM labels{LP_ROUNDS} GROUP BY label
+    """
+
+
+@query(
+    "graph_label_propagation_sync",
+    oracle=_label_prop_sql(),
+    tags=("graph", "iterative", "similarity", "embeddings"),
+)
+def graph_label_propagation_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SYNCHRONOUS MIN-LABEL PROPAGATION (4 rounds) over the
+    symmetrized k-NN embedding graph — the community/component seeding
+    pass (HashMin: every node takes the minimum label in its closed
+    neighborhood each round; after r rounds labels have flowed r hops,
+    so cluster structure at radius 4 is visible without running CC to
+    convergence — full CC: ``dedup_connected_components``; spectral
+    cousin: ``graph_pagerank_knn``). Deterministic end-to-end: the
+    exact k-NN build uses the rounded-cosine/dst tiebreak shared with
+    pagerank, labels are integers, min is order-free. Spark unrolls
+    the rounds as join+groupBy over a checkpointed edge list (the
+    Pregel superstep shape — at 100 TB each round is ONE shuffle keyed
+    by dst); the oracle unrolls MATERIALIZED CTEs. Output is the
+    cluster-size census, O(#labels) rows."""
+    from big_data_audio_classification_spark.operators.graph import knn_edges
+
+    dedges = knn_edges(spark, sf_dir, node_cap=LP_NODE_CAP)
+    edges = (
+        dedges.select("src", "dst")
+        .union(dedges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    em = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") < LP_NODE_CAP
+    )
+    labels = em.select("vec_id", F.col("vec_id").alias("label"))
+    for _ in range(LP_ROUNDS):
+        incoming = (
+            edges.join(
+                labels.select(
+                    F.col("vec_id").alias("src"), F.col("label").alias("nl")
+                ),
+                "src",
+            )
+            .groupBy(F.col("dst").alias("vec_id"))
+            .agg(F.min("nl").alias("min_in"))
+        )
+        labels = (
+            labels.join(incoming, "vec_id", "left")
+            .select(
+                "vec_id",
+                F.least(
+                    F.col("label"), F.coalesce("min_in", F.col("label"))
+                ).alias("label"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    return labels.groupBy(F.col("label").cast("bigint").alias("label")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_members")
+    )

@@ -2377,3 +2377,1512 @@ def ml_variance_ratio_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("variance").desc(), "feature")
         .limit(VARSEL_TOP)
     )
+
+
+# ---------------------------------------------------------------------------
+# feature-selection: mRMR first-iteration ranking
+# ---------------------------------------------------------------------------
+
+MRMR_DIMS = 8  # score dims 0..7; dim 0 is the already-selected anchor
+MRMR_Q = 10000  # fixed-point scale: x -> round(x * 1e4) exact integer
+
+
+def _mrmr_sql() -> str:
+    # sufficient statistics for corr(x_d, label) and corr(x_d, x_0) —
+    # accumulated over EXACT fixed-point integers (scale {MRMR_Q}) so
+    # the cross-row sums are order-independent on both engines; the
+    # correlations are then fixed-order float expressions over the
+    # 1-row exact frame (cast-to-double of an int < 2^53 is exact).
+    stat_cols = []
+    for d in range(MRMR_DIMS):
+        stat_cols += [
+            f"CAST(SUM(x{d}) AS DOUBLE) AS s{d}",
+            f"CAST(SUM(x{d} * x{d}) AS DOUBLE) AS ss{d}",
+            f"CAST(SUM(x{d} * y) AS DOUBLE) AS sy{d}",
+            f"CAST(SUM(x{d} * x0) AS DOUBLE) AS sx0_{d}",
+        ]
+    xs = ", ".join(
+        f"CAST(ROUND(CAST(embedding[{d + 1}] AS DOUBLE) * {MRMR_Q}) AS BIGINT)"
+        f" AS x{d}"
+        for d in range(MRMR_DIMS)
+    )
+    legs = "\n        UNION ALL\n        ".join(
+        f"""SELECT {d} AS dim,
+                   (n * sy{d} - s{d} * sy) /
+                   (SQRT(n * ss{d} - s{d} * s{d}) * SQRT(n * ssy - sy * sy))
+                       AS relevance,
+                   (n * sx0_{d} - s{d} * s0) /
+                   (SQRT(n * ss{d} - s{d} * s{d}) * SQRT(n * ss0 - s0 * s0))
+                       AS redundancy
+            FROM stats"""
+        for d in range(1, MRMR_DIMS)
+    )
+    return f"""
+        WITH base AS (
+            SELECT CAST(label AS BIGINT) AS y, {xs}
+            FROM embeddings
+        ),
+        stats AS (
+            SELECT CAST(COUNT(*) AS DOUBLE) AS n,
+                   CAST(SUM(y) AS DOUBLE) AS sy,
+                   CAST(SUM(y * y) AS DOUBLE) AS ssy,
+                   {", ".join(stat_cols)}
+            FROM base
+        ),
+        scores AS (
+        {legs}
+        )
+        SELECT CAST(dim AS BIGINT) AS dim,
+               ROUND(relevance, 6)  AS relevance,
+               ROUND(redundancy, 6) AS redundancy,
+               ROUND(ABS(relevance) - ABS(redundancy), 6) AS mrmr_score,
+               CAST(ROW_NUMBER() OVER (
+                   ORDER BY ABS(relevance) - ABS(redundancy) DESC, dim)
+                   AS BIGINT) AS rank
+        FROM scores
+    """
+
+
+@query(
+    "ml_mrmr_feature_rank",
+    oracle=_mrmr_sql(),
+    tags=("ml", "feature-selection", "embeddings"),
+)
+def ml_mrmr_feature_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """mRMR (minimum-redundancy-maximum-relevance) FIRST ITERATION:
+    with dim 0 already selected, rank dims 1..7 by |corr(x, label)| −
+    |corr(x, x₀)| — the Peng et al. greedy step that picks features
+    informative about the target but NOT about what's already chosen
+    (pure-relevance siblings: ``ml_anova_f_selection`` r06,
+    ``ml_chi2_feature_selection`` stock). ONE pass computes every
+    sufficient statistic (n, Σx, Σx², Σxy, Σxx₀ per dim — 34 aggregates
+    map-side combined) over FIXED-POINT integers (x → round(x·10⁴), so
+    the cross-row sums are EXACT and order-independent — raw float
+    sums here would make the rank itself partition-order-dependent);
+    the correlations and the score are fixed-order float expressions
+    over that 1-row exact frame. At 100 TB this is one scan regardless
+    of how many candidate features enter the round."""
+    em = load_table(spark, sf_dir, "embeddings")
+    base = em.select(
+        F.col("label").cast("bigint").alias("y"),
+        *[
+            F.round(F.col("embedding").getItem(d).cast("double") * MRMR_Q)
+            .cast("bigint")
+            .alias(f"x{d}")
+            for d in range(MRMR_DIMS)
+        ],
+    )
+    aggs = [
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum("y").cast("double").alias("sy"),
+        F.sum(F.col("y") * F.col("y")).cast("double").alias("ssy"),
+    ]
+    for d in range(MRMR_DIMS):
+        x = F.col(f"x{d}")
+        # x² and x·x₀ reach 1e8/row: accumulate in DECIMAL(38,0) so the
+        # sums stay exact at any row count — Spark bigint SUM wraps
+        # silently (non-ANSI) while the DuckDB oracle promotes to
+        # HUGEINT (r07 advice); identical exact integers cast to
+        # identical doubles
+        aggs += [
+            F.sum(x).cast("double").alias(f"s{d}"),
+            F.sum(x.cast("decimal(38,0)") * x).cast("double").alias(f"ss{d}"),
+            F.sum(x * F.col("y")).cast("double").alias(f"sy{d}"),
+            F.sum(x.cast("decimal(38,0)") * F.col("x0"))
+            .cast("double")
+            .alias(f"sx0_{d}"),
+        ]
+    stats = base.agg(*aggs)
+    legs = []
+    for d in range(1, MRMR_DIMS):
+        n = F.col("n")
+        rel = (n * F.col(f"sy{d}") - F.col(f"s{d}") * F.col("sy")) / (
+            F.sqrt(n * F.col(f"ss{d}") - F.col(f"s{d}") * F.col(f"s{d}"))
+            * F.sqrt(n * F.col("ssy") - F.col("sy") * F.col("sy"))
+        )
+        red = (n * F.col(f"sx0_{d}") - F.col(f"s{d}") * F.col("s0")) / (
+            F.sqrt(n * F.col(f"ss{d}") - F.col(f"s{d}") * F.col(f"s{d}"))
+            * F.sqrt(n * F.col("ss0") - F.col("s0") * F.col("s0"))
+        )
+        legs.append(
+            stats.select(
+                F.lit(d).cast("bigint").alias("dim"),
+                rel.alias("relevance"),
+                red.alias("redundancy"),
+            )
+        )
+    scores = legs[0]
+    for leg in legs[1:]:
+        scores = scores.unionByName(leg)
+    w = Window.orderBy(
+        (F.abs(F.col("relevance")) - F.abs(F.col("redundancy"))).desc(), "dim"
+    )
+    return scores.select(
+        "dim",
+        F.round("relevance", 6).alias("relevance"),
+        F.round("redundancy", 6).alias("redundancy"),
+        F.round(F.abs(F.col("relevance")) - F.abs(F.col("redundancy")), 6).alias(
+            "mrmr_score"
+        ),
+        F.row_number().over(w).cast("bigint").alias("rank"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# encoding: smoothed count/target encoding, exact-integer core
+# ---------------------------------------------------------------------------
+
+ENC_SMOOTHING_M = 10  # pseudo-observations pulled toward the global prior
+
+
+@query(
+    "ml_count_encoding_smoothed",
+    oracle=f"""
+        WITH o AS (
+            SELECT c.c_mktsegment AS segment,
+                   CAST(ROUND(t.o_totalprice * 100) AS BIGINT) AS cents
+            FROM orders t JOIN customer c ON t.o_custkey = c.c_custkey
+        ),
+        g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
+                     CAST(SUM(cents) AS BIGINT) AS cents_total FROM o)
+        SELECT segment,
+               CAST(COUNT(*) AS BIGINT) AS n,
+               ROUND(CAST(COUNT(*) AS DOUBLE) / MAX(g.n_total), 6)
+                                        AS freq_encoding,
+               ROUND((CAST(SUM(cents) AS DOUBLE)
+                      + {ENC_SMOOTHING_M}.0
+                        * (CAST(MAX(g.cents_total) AS DOUBLE) / MAX(g.n_total)))
+                     / (COUNT(*) + {ENC_SMOOTHING_M}) / 100.0, 4)
+                                        AS target_encoding
+        FROM o, g
+        GROUP BY segment
+    """,
+    tags=("ml", "encoding", "orders"),
+)
+def ml_count_encoding_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CATEGORY ENCODINGS with Bayesian smoothing: frequency encoding
+    (share of rows) and m-estimate target encoding — the per-category
+    mean pulled toward the global prior by m=10 pseudo-observations,
+    the standard high-cardinality-category defense against small-n
+    overfitting (leave-one-out variant: ``ml_target_encoding_oof``,
+    r04; unsmoothed ordinal/freq: ``ml_ordinal_freq_encoding``,
+    stock). Sums stay EXACT integer cents; each output is a fixed
+    two-division float expression, bit-stable on both engines. One
+    join (customer side broadcastable) + one aggregate; the global
+    prior is a 1-row broadcast."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    base = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
+        F.col("c_mktsegment").alias("segment"),
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+    )
+    g = base.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_total"),
+        F.sum("cents").cast("bigint").alias("cents_total"),
+    )
+    return (
+        base.crossJoin(F.broadcast(g))
+        .groupBy("segment")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.round(
+                F.count(F.lit(1)).cast("double") / F.max("n_total"), 6
+            ).alias("freq_encoding"),
+            F.round(
+                (
+                    F.sum("cents").cast("double")
+                    + float(ENC_SMOOTHING_M)
+                    * (F.max("cents_total").cast("double") / F.max("n_total"))
+                )
+                / (F.count(F.lit(1)) + ENC_SMOOTHING_M)
+                / 100.0,
+                4,
+            ).alias("target_encoding"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# feature-selection: Fisher score over fixed-point class moments
+# ---------------------------------------------------------------------------
+
+FISHER_DIMS = 8
+FISHER_Q = 10000
+
+
+def _fisher_sql() -> str:
+    xs = ", ".join(
+        f"CAST(ROUND(CAST(embedding[{d + 1}] AS DOUBLE) * {FISHER_Q}) AS BIGINT)"
+        f" AS x{d}"
+        for d in range(FISHER_DIMS)
+    )
+    per_class = ", ".join(
+        f"CAST(SUM(x{d}) AS DOUBLE) AS s{d}, "
+        f"CAST(SUM(x{d} * x{d}) AS DOUBLE) AS ss{d}"
+        for d in range(FISHER_DIMS)
+    )
+    glob = ", ".join(
+        f"CAST(SUM(x{d}) AS DOUBLE) AS gs{d}" for d in range(FISHER_DIMS)
+    )
+    legs = "\n        UNION ALL\n        ".join(
+        f"""SELECT {d} AS dim,
+                   SUM(n * (s{d} / n - g.gs{d} / g.n_tot)
+                         * (s{d} / n - g.gs{d} / g.n_tot)) AS between_w,
+                   SUM(ss{d} - s{d} * s{d} / n)            AS within_w
+            FROM cls, g"""
+        for d in range(FISHER_DIMS)
+    )
+    return f"""
+        WITH base AS (
+            SELECT CAST(label AS BIGINT) AS y, {xs} FROM embeddings
+        ),
+        cls AS (
+            SELECT y, CAST(COUNT(*) AS DOUBLE) AS n, {per_class}
+            FROM base GROUP BY y
+        ),
+        g AS (
+            SELECT CAST(COUNT(*) AS DOUBLE) AS n_tot, {glob} FROM base
+        ),
+        scores AS (
+        {legs}
+        )
+        SELECT CAST(dim AS BIGINT) AS dim,
+               ROUND(between_w / within_w, 6) AS fisher_score,
+               CAST(ROW_NUMBER() OVER (
+                   ORDER BY between_w / within_w DESC, dim) AS BIGINT) AS rank
+        FROM scores
+    """
+
+
+@query(
+    "ml_fisher_score_selection",
+    oracle=_fisher_sql(),
+    tags=("ml", "feature-selection", "embeddings"),
+)
+def ml_fisher_score_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FISHER SCORE ranking: between-class over within-class scatter
+    per dimension — the LDA-flavored filter metric completing the
+    selection family (ANOVA-F r06, chi2 and variance-ratio stock, mRMR
+    tranche 1). Same bit-stability discipline as ``ml_mrmr_feature_
+    rank``: per-class sufficient statistics accumulate FIXED-POINT
+    integers (x → round(x·10⁴)), so the only floats are fixed-order
+    expressions over exact per-class sums; the 10-class scatter sums
+    iterate over the tiny class frame in deterministic per-dim legs.
+    One scan + one 10-row class aggregate at any SF."""
+    em = load_table(spark, sf_dir, "embeddings")
+    base = em.select(
+        F.col("label").cast("bigint").alias("y"),
+        *[
+            F.round(F.col("embedding").getItem(d).cast("double") * FISHER_Q)
+            .cast("bigint")
+            .alias(f"x{d}")
+            for d in range(FISHER_DIMS)
+        ],
+    )
+    cls_aggs = [F.count(F.lit(1)).cast("double").alias("n")]
+    for d in range(FISHER_DIMS):
+        x = F.col(f"x{d}")
+        cls_aggs += [
+            F.sum(x).cast("double").alias(f"s{d}"),
+            F.sum(x * x).cast("double").alias(f"ss{d}"),
+        ]
+    cls = base.groupBy("y").agg(*cls_aggs)
+    g = base.agg(
+        F.count(F.lit(1)).cast("double").alias("n_tot"),
+        *[
+            F.sum(f"x{d}").cast("double").alias(f"gs{d}")
+            for d in range(FISHER_DIMS)
+        ],
+    )
+    legs = []
+    for d in range(FISHER_DIMS):
+        n = F.col("n")
+        mu_d = F.col(f"s{d}") / n
+        gmu = F.col(f"gs{d}") / F.col("n_tot")
+        legs.append(
+            cls.crossJoin(F.broadcast(g)).agg(
+                F.lit(d).cast("bigint").alias("dim"),
+                F.sum(n * (mu_d - gmu) * (mu_d - gmu)).alias("between_w"),
+                F.sum(
+                    F.col(f"ss{d}") - F.col(f"s{d}") * F.col(f"s{d}") / n
+                ).alias("within_w"),
+            )
+        )
+    scores = legs[0]
+    for leg in legs[1:]:
+        scores = scores.unionByName(leg)
+    w = Window.orderBy((F.col("between_w") / F.col("within_w")).desc(), "dim")
+    return scores.select(
+        "dim",
+        F.round(F.col("between_w") / F.col("within_w"), 6).alias(
+            "fisher_score"
+        ),
+        F.row_number().over(w).cast("bigint").alias("rank"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# encoding: hashing-trick bucket encoding with collision census
+# ---------------------------------------------------------------------------
+
+HASH_ENC_BUCKETS = 16
+
+
+@query(
+    "ml_hashing_trick_encoding",
+    oracle=f"""
+        WITH keys AS (
+            SELECT DISTINCT o_orderpriority AS cat FROM orders
+        ),
+        hashed AS (
+            SELECT cat,
+                   CAST(('0x' || substr(md5(cat), 1, 8)) AS BIGINT)
+                       % {HASH_ENC_BUCKETS} AS bucket
+            FROM keys
+        ),
+        rows_b AS (
+            SELECT h.bucket, CAST(COUNT(*) AS BIGINT) AS n_rows
+            FROM orders o JOIN hashed h ON o.o_orderpriority = h.cat
+            GROUP BY h.bucket
+        )
+        SELECT h.bucket,
+               CAST(COUNT(*) AS BIGINT)        AS n_cats,
+               COUNT(*) > 1                    AS collided,
+               string_agg(h.cat, ',' ORDER BY h.cat) AS cats,
+               MAX(r.n_rows)                   AS n_rows
+        FROM hashed h JOIN rows_b r ON r.bucket = h.bucket
+        GROUP BY h.bucket
+    """,
+    tags=("ml", "encoding", "orders"),
+)
+def ml_hashing_trick_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HASHING-TRICK encoding with an honest COLLISION CENSUS: each
+    category maps to md5-hash mod 16 (the portable scheme — NOT
+    Spark's murmur, so the oracle reproduces it exactly), and the
+    report shows which buckets collide, what they absorbed, and the
+    row mass they carry — the dimensionality-vs-collision trade
+    ``ml_feature_hashing`` (r07 window) makes implicitly, made
+    visible. Distinct-key frame is tiny (broadcast); row counts ride
+    one keyed aggregate. All integers + sorted string_agg."""
+    from big_data_audio_classification_spark.operators.dedup import token_hash
+
+    o = load_table(spark, sf_dir, "orders")
+    keys = o.select(F.col("o_orderpriority").alias("cat")).distinct()
+    hashed = keys.select(
+        "cat", (token_hash(F.col("cat")) % HASH_ENC_BUCKETS).alias("bucket")
+    )
+    rows_b = (
+        o.join(F.broadcast(hashed), o.o_orderpriority == hashed.cat)
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
+    )
+    return (
+        hashed.join(rows_b, "bucket")
+        .groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_cats"),
+            (F.count(F.lit(1)) > 1).alias("collided"),
+            F.array_join(F.sort_array(F.collect_list("cat")), ",").alias(
+                "cats"
+            ),
+            F.max("n_rows").alias("n_rows"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml/feature-selection: CART Gini split scoring over a bounded domain
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "ml_gini_impurity_split",
+    oracle="""
+        WITH x AS (
+            SELECT CAST(l_quantity AS BIGINT) AS q,
+                   CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
+            FROM lineitem
+        ),
+        per_q AS (
+            SELECT q, CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(y) AS BIGINT) AS n_pos
+            FROM x GROUP BY q
+        ),
+        cum AS (
+            SELECT q,
+                   CAST(SUM(n) OVER (ORDER BY q) AS BIGINT)      AS nl,
+                   CAST(SUM(n_pos) OVER (ORDER BY q) AS BIGINT)  AS nl_pos,
+                   CAST(SUM(n) OVER () AS BIGINT)                AS nt,
+                   CAST(SUM(n_pos) OVER () AS BIGINT)            AS nt_pos
+            FROM per_q
+        ),
+        g AS (
+            SELECT q AS threshold, nl, nt - nl AS nr,
+                   ROUND(
+                     (nl - (CAST(nl_pos AS DOUBLE) * nl_pos
+                            + CAST(nl - nl_pos AS DOUBLE) * (nl - nl_pos))
+                           / nl
+                      + (nt - nl)
+                      - (CAST(nt_pos - nl_pos AS DOUBLE) * (nt_pos - nl_pos)
+                         + CAST((nt - nl) - (nt_pos - nl_pos) AS DOUBLE)
+                           * ((nt - nl) - (nt_pos - nl_pos)))
+                        / (nt - nl)) / nt, 6) AS weighted_gini
+            FROM cum WHERE nl < nt
+        )
+        SELECT threshold, nl, nr, weighted_gini,
+               CAST(ROW_NUMBER() OVER (ORDER BY weighted_gini, threshold)
+                    AS BIGINT) AS rank
+        FROM g
+    """,
+    tags=("ml", "feature-selection", "lineitem"),
+)
+def ml_gini_impurity_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CART SPLIT SCORING: weighted Gini impurity of every candidate
+    threshold "quantity ≤ t" against the binary return-flag label —
+    the decision-tree split search, done relationally: per-value
+    counts, ONE cumulative window over the bounded value domain (50
+    distinct quantities — never a per-row scan), and the impurity as a
+    single fixed-order float expression over exact integer counts
+    (n·Gini expands to n − Σc n_c²/n_side, so the only floats are two
+    divisions per side). rank=1 is the split a tree would take. One
+    count shuffle + one 50-row window; output = 49 rows at any SF
+    (statistical siblings: ``ml_chi2_feature_selection`` r07,
+    ``ml_anova_f_selection`` r06)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    x = li.select(
+        F.col("l_quantity").cast("bigint").alias("q"),
+        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
+    )
+    per_q = x.groupBy("q").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("y").cast("bigint").alias("n_pos"),
+    )
+    wo = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, 0)
+    wa = Window.partitionBy()
+    cum = per_q.select(
+        "q",
+        F.sum("n").over(wo).cast("bigint").alias("nl"),
+        F.sum("n_pos").over(wo).cast("bigint").alias("nl_pos"),
+        F.sum("n").over(wa).cast("bigint").alias("nt"),
+        F.sum("n_pos").over(wa).cast("bigint").alias("nt_pos"),
+    )
+    nl, nlp = F.col("nl"), F.col("nl_pos")
+    nt, ntp = F.col("nt"), F.col("nt_pos")
+    nr, nrp = nt - nl, ntp - nlp
+    gini = (
+        nl
+        - (nlp.cast("double") * nlp + (nl - nlp).cast("double") * (nl - nlp))
+        / nl
+        + nr
+        - (nrp.cast("double") * nrp + (nr - nrp).cast("double") * (nr - nrp))
+        / nr
+    ) / nt
+    g = cum.filter(nl < nt).select(
+        F.col("q").alias("threshold"),
+        nl.alias("nl"),
+        nr.alias("nr"),
+        F.round(gini, 6).alias("weighted_gini"),
+    )
+    w = Window.orderBy("weighted_gini", "threshold")
+    return g.select(
+        "*", F.row_number().over(w).cast("bigint").alias("rank")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml/encoding: leave-one-out target encoding
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "ml_leave_one_out_encoding",
+    oracle="""
+        WITH x AS (
+            SELECT o_orderkey, o_custkey,
+                   CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+            FROM orders
+        ),
+        g AS (
+            SELECT o_orderkey, o_custkey, cents,
+                   CAST(SUM(cents) OVER (PARTITION BY o_custkey) AS BIGINT)
+                       AS cust_sum,
+                   CAST(COUNT(*) OVER (PARTITION BY o_custkey) AS BIGINT)
+                       AS cust_n
+            FROM x
+        )
+        SELECT o_orderkey, o_custkey, cust_n,
+               CASE WHEN cust_n > 1
+                    THEN ROUND(CAST(cust_sum - cents AS DOUBLE)
+                               / (cust_n - 1) / 100.0, 6)
+               END AS loo_mean_price
+        FROM g
+    """,
+    tags=("ml", "encoding", "orders"),
+)
+def ml_leave_one_out_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEAVE-ONE-OUT target encoding: each order's customer-mean price
+    computed EXCLUDING the row itself — (Σ_cust − self)/(n−1) — the
+    target-leakage-safe encoding (a plain group mean lets every row
+    see its own label; LOO is the standard fix, smoothed sibling:
+    ``ml_count_encoding_smoothed``). Numerator stays an exact integer
+    cents difference; one float division (+ /100 to dollars) per row,
+    written in the same order in both dialects; singleton customers
+    emit an honest NULL instead of a degenerate self-mean. ONE
+    partitioned window (sum + count share the frame), no join — the
+    plan at 100 TB is one shuffle keyed by the encoded column."""
+    o = load_table(spark, sf_dir, "orders")
+    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    x = o.select("o_orderkey", "o_custkey", cents.alias("cents"))
+    w = Window.partitionBy("o_custkey")
+    g = x.select(
+        "o_orderkey",
+        "o_custkey",
+        "cents",
+        F.sum("cents").over(w).cast("bigint").alias("cust_sum"),
+        F.count(F.lit(1)).over(w).cast("bigint").alias("cust_n"),
+    )
+    loo = (
+        (F.col("cust_sum") - F.col("cents")).cast("double")
+        / (F.col("cust_n") - 1)
+        / 100.0
+    )
+    return g.select(
+        "o_orderkey",
+        "o_custkey",
+        "cust_n",
+        F.when(F.col("cust_n") > 1, F.round(loo, 6)).alias("loo_mean_price"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml/regression: weighted least squares, closed form over exact sums
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "ml_wls_closed_form",
+    oracle="""
+        WITH x AS (
+            SELECT CAST(l_quantity AS BIGINT) AS w,
+                   CAST(l_quantity AS BIGINT) AS xq,
+                   CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS y
+            FROM lineitem
+        ),
+        s AS (
+            SELECT CAST(COUNT(*) AS BIGINT)            AS n,
+                   CAST(SUM(w) AS DOUBLE)              AS sw,
+                   CAST(SUM(w * xq) AS DOUBLE)         AS swx,
+                   CAST(SUM(CAST(w AS HUGEINT) * xq * xq) AS DOUBLE) AS swxx,
+                   CAST(SUM(CAST(w AS HUGEINT) * y) AS DOUBLE)       AS swy,
+                   CAST(SUM(CAST(w AS HUGEINT) * xq * y) AS DOUBLE)  AS swxy
+            FROM x
+        )
+        SELECT n,
+               ROUND((sw * swxy - swx * swy)
+                     / (sw * swxx - swx * swx) / 100.0, 6)  AS wls_slope,
+               ROUND((swy / sw - (sw * swxy - swx * swy)
+                                 / (sw * swxx - swx * swx)
+                                 * (swx / sw)) / 100.0, 6)  AS wls_intercept
+        FROM s
+    """,
+    tags=("ml", "regression", "aggregate", "lineitem"),
+)
+def ml_wls_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WEIGHTED least squares (price-per-quantity line, weights =
+    quantity — the "bigger orders are measured more reliably"
+    heteroscedasticity model), closed form: slope = (SwSwxy −
+    SwxSwy)/(SwSwxx − Swx²), intercept = ȳ_w − β·x̄_w. Every weighted
+    sum accumulates EXACT integers — the w·x·y products reach ~1e17
+    per 6M rows, so the Spark side accumulates in DECIMAL(38,0) and
+    the oracle promotes to HUGEINT (the r07-advice overflow idiom) —
+    then the two coefficients are fixed-order float expressions over
+    the 1-row exact frame. One map-side-combined aggregate, no
+    shuffle beyond it, at any SF (OLS sibling:
+    ``ml_ols_normal_equations`` r08)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    x = li.select(
+        F.col("l_quantity").cast("bigint").alias("w"),
+        F.col("l_quantity").cast("bigint").alias("xq"),
+        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("y"),
+    )
+    wd = F.col("w").cast("decimal(38,0)")
+    s = x.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("w").cast("double").alias("sw"),
+        F.sum(F.col("w") * F.col("xq")).cast("double").alias("swx"),
+        F.sum(wd * F.col("xq") * F.col("xq")).cast("double").alias("swxx"),
+        F.sum(wd * F.col("y")).cast("double").alias("swy"),
+        F.sum(wd * F.col("xq") * F.col("y")).cast("double").alias("swxy"),
+    )
+    slope = (F.col("sw") * F.col("swxy") - F.col("swx") * F.col("swy")) / (
+        F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
+    )
+    intercept = F.col("swy") / F.col("sw") - slope * (
+        F.col("swx") / F.col("sw")
+    )
+    return s.select(
+        "n",
+        F.round(slope / 100.0, 6).alias("wls_slope"),
+        F.round(intercept / 100.0, 6).alias("wls_intercept"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ml: PCA covariance-moment contract (the r09 rows-only conversion)
+# ---------------------------------------------------------------------------
+
+PCA_GATE_TOL = 1e-9
+
+
+@query(
+    "ml_pca_variance_contract",
+    oracle="""
+        WITH x AS (
+            SELECT vec_id,
+                   CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
+                   CAST(UNNEST(embedding) AS DOUBLE) AS v
+            FROM embeddings
+        ),
+        m AS (
+            SELECT dim,
+                   CAST(COUNT(*) AS BIGINT) AS n_vecs,
+                   list_sum(list(v ORDER BY vec_id))     AS s1,
+                   list_sum(list(v * v ORDER BY vec_id)) AS s2
+            FROM x GROUP BY dim
+        )
+        SELECT dim, n_vecs,
+               ROUND((s2 - s1 * s1 / CAST(n_vecs AS DOUBLE))
+                     / CAST(n_vecs AS DOUBLE), 6) + 0 AS var_pop,
+               TRUE AS pca_gates_ok
+        FROM m
+    """,
+    tags=("ml", "pca", "mllib", "report", "embeddings"),
+)
+def ml_pca_variance_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PCA COVARIANCE-MOMENT CONTRACT — the SQL-oracled face of the
+    rows-only ``ml_pca_embeddings`` (reference R21), the same
+    conversion move as the r07/r08 metadata/loss/vocab contracts: the
+    per-dimension covariance moments are ORACLE-EXACT, and MLlib's
+    eigen-spectrum is gated by DENOMINATOR-FREE invariants that sign/
+    basis indeterminacy (why PCA is rows-only) cannot touch.
+
+    Value-compared: per-dimension population variance of the
+    embeddings — Σv and Σv² reduced via the SEQUENTIAL vec_id-ordered
+    fold (Spark ``aggregate(transform(array_sort(collect_list(...))))``
+    vs DuckDB ``list_sum(list(v ORDER BY vec_id))``, the house
+    deterministic-summation idiom; float32→double casts are exact),
+    then ONE fixed-order float expression, ``+ 0``-guarded.
+
+    Gated (pca_gates_ok must be TRUE; the oracle emits TRUE): with
+    p = explainedVariance of the centered PCA(k=4) fit, (a) p is
+    nonincreasing, (b) Σp ≤ 1, (c) p₁ ≥ max_j var_j / Σ_j var_j — the
+    largest eigenvalue of a covariance matrix dominates its largest
+    diagonal entry, and the RATIO form cancels the n vs n−1
+    denominator between MLlib's covariance and the oracle's population
+    moments. Any eigensolver/centering regression flips the gate on
+    all 64 rows → driver red row.
+
+    Scale: the moment pass is one shuffle keyed by dim (64 groups; at
+    100 TB the ordered fold becomes a two-level fold over fixed-size
+    chunks, same associativity-free discipline); the PCA fit is
+    MLlib's distributed Gramian (O(d²) driver solve, d=64)."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import PCA, StandardScaler
+    from pyspark.ml.functions import array_to_vector
+
+    em = load_table(spark, sf_dir, "embeddings")
+    ex = em.select(
+        "vec_id", F.posexplode("embedding").alias("pos", "raw")
+    ).select(
+        "vec_id",
+        (F.col("pos") + 1).cast("bigint").alias("dim"),
+        F.col("raw").cast("double").alias("v"),
+    )
+    ordered = F.transform(
+        F.array_sort(F.collect_list(F.struct("vec_id", "v"))),
+        lambda s: s["v"],
+    )
+    # localCheckpoint: the gate summary collect() below and the returned
+    # frame both read this 64-row aggregate — without it the heavy
+    # posexplode + per-dim ordered-fold pass would execute twice
+    # (round-9 close review). eager=True materializes now; unlike a bare
+    # persist() the checkpointed blocks are released by the context
+    # cleaner when the frame is GC'd, so a 600-query sweep doesn't
+    # accumulate them in executor storage (r09 ADVICE; house pattern
+    # analytics.py:1507).
+    moments = ex.groupBy("dim").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
+        F.aggregate(ordered, F.lit(0.0), lambda a, x: a + x).alias("s1"),
+        F.aggregate(ordered, F.lit(0.0), lambda a, x: a + x * x).alias("s2"),
+    ).localCheckpoint(eager=True)
+    nd = F.col("n_vecs").cast("double")
+    var_expr = (F.col("s2") - F.col("s1") * F.col("s1") / nd) / nd
+
+    # MLlib eigen-spectrum gate (driver-side: explainedVariance is a
+    # driver object by construction; the 1-row moment summary is the
+    # only collect and is dimension-bounded).
+    pipe = Pipeline(
+        stages=[
+            StandardScaler(
+                inputCol="raw_vec", outputCol="centered",
+                withMean=True, withStd=False,
+            ),
+            PCA(k=4, inputCol="centered", outputCol="pc"),
+        ]
+    )
+    to_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    fitted = pipe.fit(
+        em.select("vec_id", array_to_vector(to_double).alias("raw_vec"))
+    )
+    p = list(fitted.stages[-1].explainedVariance)
+    summary = moments.agg(
+        F.max(var_expr).alias("max_var"), F.sum(var_expr).alias("tot_var")
+    ).collect()[0]
+    gates_ok = (
+        all(p[i] + PCA_GATE_TOL >= p[i + 1] for i in range(len(p) - 1))
+        and sum(p) <= 1.0 + PCA_GATE_TOL
+        and p[0] + PCA_GATE_TOL >= summary["max_var"] / summary["tot_var"]
+    )
+    return moments.select(
+        "dim",
+        "n_vecs",
+        F.round(var_expr, 6).alias("var_pop"),
+        F.lit(bool(gates_ok)).alias("pca_gates_ok"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# regression: quadratic fit by closed-form normal equations (Cramer)
+# ---------------------------------------------------------------------------
+
+# Shared determinant polynomials — ONE text, evaluated by both engines
+# over identically-named exact-integer moment columns (n, s1..s4 in x;
+# t0..t2 in x^k*y_cents). DECIMAL(38,0)/HUGEINT headroom: the products
+# reach ~1e27 at sf0.1 and ~1e31 at the 100x blow-up — silent int64
+# wrap territory, the r07/r08 hazard class.
+_QUAD_D = "(n*(s2*s4 - s3*s3) - s1*(s1*s4 - s2*s3) + s2*(s1*s3 - s2*s2))"
+_QUAD_DA = "(t0*(s2*s4 - s3*s3) - s1*(t1*s4 - s3*t2) + s2*(t1*s3 - s2*t2))"
+_QUAD_DB = "(n*(t1*s4 - t2*s3) - t0*(s1*s4 - s2*s3) + s2*(s1*t2 - s2*t1))"
+_QUAD_DC = "(n*(s2*t2 - s3*t1) - s1*(s1*t2 - s2*t1) + t0*(s1*s3 - s2*s2))"
+
+
+@query(
+    "ml_quadratic_normal_equations",
+    oracle=f"""
+        WITH x AS (
+            SELECT o_orderpriority AS priority,
+                   CAST(day(o_orderdate) AS BIGINT) AS x,
+                   CAST(ROUND(o_totalprice * 100) AS BIGINT) AS y
+            FROM orders
+        ),
+        m AS (
+            SELECT priority,
+                   CAST(COUNT(*) AS HUGEINT)        AS n,
+                   CAST(SUM(x) AS HUGEINT)          AS s1,
+                   CAST(SUM(x*x) AS HUGEINT)        AS s2,
+                   CAST(SUM(x*x*x) AS HUGEINT)      AS s3,
+                   CAST(SUM(x*x*x*x) AS HUGEINT)    AS s4,
+                   CAST(SUM(y) AS HUGEINT)          AS t0,
+                   CAST(SUM(x*y) AS HUGEINT)        AS t1,
+                   CAST(SUM(x*x*y) AS HUGEINT)      AS t2
+            FROM x GROUP BY priority
+        )
+        SELECT priority, CAST(n AS BIGINT) AS n,
+               ROUND(CAST({_QUAD_DA} AS DOUBLE)
+                     / CAST({_QUAD_D} AS DOUBLE), 6) + 0 AS a_cents,
+               ROUND(CAST({_QUAD_DB} AS DOUBLE)
+                     / CAST({_QUAD_D} AS DOUBLE), 6) + 0 AS b_cents,
+               ROUND(CAST({_QUAD_DC} AS DOUBLE)
+                     / CAST({_QUAD_D} AS DOUBLE), 6) + 0 AS c_cents
+        FROM m
+    """,
+    tags=("ml", "regression", "orders"),
+)
+def ml_quadratic_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """QUADRATIC least squares y = a + b·x + c·x² in CLOSED FORM per
+    order priority (x = day-of-month, y = exact price cents): the 3x3
+    normal equations solved by Cramer's rule over EXACT INTEGER
+    moments — the degree-2 step past ``ml_ols_normal_equations``, and
+    the shape every distributed polynomial fit takes (one
+    map-side-combined moment aggregation; the solve is O(1) per
+    group). The determinant polynomials are ONE shared text evaluated
+    by both engines over DECIMAL(38,0)/HUGEINT moments — their
+    products reach ~1e27 at sf0.1 (silent int64-wrap territory, the
+    r07 DECIMAL-headroom class); each coefficient is a single float
+    division of two exact determinants, ``+ 0``-guarded (c can round
+    to a signed zero on a flat group). Day-of-month via ``day()`` on
+    both engines."""
+    o = load_table(spark, sf_dir, "orders")
+    x = F.dayofmonth("o_orderdate").cast("bigint")
+    y = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    base = o.select(
+        F.col("o_orderpriority").alias("priority"),
+        x.alias("x"),
+        y.alias("y"),
+    )
+    # Per-row terms cast to DECIMAL(38,0) BEFORE the sum (r09 ADVICE):
+    # t2 = Σx²·y averages ~5e9 per row, so an int64 accumulator wraps
+    # silently past ~1e9 rows per group while DuckDB's SUM(BIGINT)
+    # promotes to HUGEINT — the accumulator itself needs the headroom,
+    # not just the post-aggregation value (house idiom: stock_r7.py).
+    dsum = lambda e: F.sum(F.expr(f"CAST({e} AS DECIMAL(38,0))"))  # noqa: E731
+    m = base.groupBy("priority").agg(
+        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
+        dsum("x").alias("s1"),
+        dsum("x*x").alias("s2"),
+        dsum("x*x*x").alias("s3"),
+        dsum("x*x*x*x").alias("s4"),
+        dsum("y").alias("t0"),
+        dsum("x*y").alias("t1"),
+        dsum("x*x*y").alias("t2"),
+    )
+    return m.select(
+        "priority",
+        F.col("n").cast("bigint").alias("n"),
+        F.round(
+            F.expr(f"CAST({_QUAD_DA} AS DOUBLE) / CAST({_QUAD_D} AS DOUBLE)"),
+            6,
+        ).alias("a_cents"),
+        F.round(
+            F.expr(f"CAST({_QUAD_DB} AS DOUBLE) / CAST({_QUAD_D} AS DOUBLE)"),
+            6,
+        ).alias("b_cents"),
+        F.round(
+            F.expr(f"CAST({_QUAD_DC} AS DOUBLE) / CAST({_QUAD_D} AS DOUBLE)"),
+            6,
+        ).alias("c_cents"),
+    )
+
+# ---------------------------------------------------------------------------
+# feature-selection: point-biserial correlation per embedding dimension
+# ---------------------------------------------------------------------------
+
+PB_POS_LABEL = 0  # the binary split: label == 0 vs rest
+
+
+@query(
+    "ml_point_biserial_selection",
+    oracle=f"""
+        WITH x AS (
+            SELECT vec_id,
+                   CASE WHEN label = {PB_POS_LABEL} THEN 1 ELSE 0 END AS g,
+                   CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
+                   CAST(UNNEST(embedding) AS DOUBLE) AS v
+            FROM embeddings
+        ),
+        m AS (
+            SELECT dim,
+                   CAST(COUNT(*) AS BIGINT)              AS n,
+                   CAST(SUM(g) AS BIGINT)                AS n1,
+                   list_sum(list(v ORDER BY vec_id))     AS s1,
+                   list_sum(list(v * v ORDER BY vec_id)) AS s2,
+                   list_sum(list(v ORDER BY vec_id)
+                            FILTER (g = 1))              AS s1p
+            FROM x GROUP BY dim
+        )
+        SELECT dim, n1, n - n1 AS n0,
+               ROUND((s1p / n1 - (s1 - s1p) / (n - n1))
+                     / SQRT((s2 - s1 * s1 / CAST(n AS DOUBLE))
+                            / CAST(n AS DOUBLE))
+                     * SQRT((CAST(n1 AS DOUBLE) / n)
+                            * (CAST(n - n1 AS DOUBLE) / n)), 6) + 0
+                   AS r_pb
+        FROM m
+    """,
+    tags=("ml", "feature-selection", "embeddings"),
+)
+def ml_point_biserial_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """POINT-BISERIAL feature scoring: the correlation of each
+    embedding dimension with the binary split label==0 — r_pb =
+    (M₁−M₀)/σ_pop · √(p·q), the feature-selection screen for a binary
+    target that ANOVA-F/MI siblings complement. All moments reduce via
+    the SEQUENTIAL vec_id-ordered fold (the house deterministic-
+    summation idiom; the group-1 partial sum rides the SAME ordered
+    list under a FILTER, so group means come from one pass), then ONE
+    fixed-order float expression per dimension, ``+ 0``-guarded —
+    r_pb is signed and a near-independent dimension rounds to a
+    signed zero (the r06/r08 red-row class). One shuffle keyed by
+    dim; 64 output rows at any corpus size."""
+    em = load_table(spark, sf_dir, "embeddings")
+    ex = em.select(
+        "vec_id",
+        F.when(F.col("label") == PB_POS_LABEL, 1).otherwise(0).alias("g"),
+        F.posexplode("embedding").alias("pos", "raw"),
+    ).select(
+        "vec_id",
+        "g",
+        (F.col("pos") + 1).cast("bigint").alias("dim"),
+        F.col("raw").cast("double").alias("v"),
+    )
+    sorted_structs = F.array_sort(F.collect_list(F.struct("vec_id", "g", "v")))
+    fold = lambda arr: F.aggregate(  # noqa: E731
+        arr, F.lit(0.0), lambda a, x: a + x
+    )
+    m = ex.groupBy("dim").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("g").cast("bigint").alias("n1"),
+        fold(F.transform(sorted_structs, lambda s: s["v"])).alias("s1"),
+        fold(F.transform(sorted_structs, lambda s: s["v"] * s["v"])).alias(
+            "s2"
+        ),
+        fold(
+            F.transform(
+                F.filter(sorted_structs, lambda s: s["g"] == 1),
+                lambda s: s["v"],
+            )
+        ).alias("s1p"),
+    )
+    nd = F.col("n").cast("double")
+    n1 = F.col("n1")
+    n0 = F.col("n") - n1
+    r_pb = (
+        (F.col("s1p") / n1 - (F.col("s1") - F.col("s1p")) / n0)
+        / F.sqrt(
+            (F.col("s2") - F.col("s1") * F.col("s1") / nd) / nd
+        )
+        * F.sqrt(
+            (n1.cast("double") / F.col("n"))
+            * (n0.cast("double") / F.col("n"))
+        )
+    )
+    return m.select(
+        "dim", "n1", n0.alias("n0"), F.round(r_pb, 6).alias("r_pb")
+    )
+
+
+# ---------------------------------------------------------------------------
+# encoding: binary (bit-decomposed ordinal) category encoding
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "ml_binary_encoding",
+    oracle="""
+        WITH dim AS (
+            SELECT event_type,
+                   CAST(ROW_NUMBER() OVER (ORDER BY event_type) - 1
+                        AS BIGINT) AS ord
+            FROM (SELECT DISTINCT event_type FROM events)
+        )
+        SELECT e.event_id, e.event_type, d.ord,
+               d.ord & 1        AS b0,
+               (d.ord >> 1) & 1 AS b1,
+               (d.ord >> 2) & 1 AS b2
+        FROM events e JOIN dim d USING (event_type)
+    """,
+    tags=("ml", "encoding", "events"),
+)
+def ml_binary_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BINARY (bit-decomposed ordinal) category encoding: assign each
+    category its alphabetical ordinal, then emit the ordinal's BITS as
+    features — the cardinality-compressing middle ground between
+    one-hot (k columns) and ordinal (1 column, fake order): ceil(log2
+    k) columns, here 3 bits for the 5 event types. The ordinal is the
+    house alphabetAsc convention (deterministic, engine-neutral —
+    never a hash), assigned on a |categories|-row dim frame and
+    BROADCAST-joined back, exactly how a 100 TB encoder ships its
+    codebook; the bit split is pure integer shift/mask. Nothing
+    floats; scan-bound."""
+    e = load_table(spark, sf_dir, "events")
+    dim = (
+        e.select("event_type")
+        .distinct()
+        .select(
+            "event_type",
+            (
+                F.row_number().over(Window.orderBy("event_type")) - 1
+            ).cast("bigint").alias("ord"),
+        )
+    )
+    j = e.join(F.broadcast(dim), "event_type")
+    o = F.col("ord")
+    return j.select(
+        "event_id",
+        "event_type",
+        "ord",
+        o.bitwiseAND(F.lit(1)).alias("b0"),
+        F.shiftright(o, 1).bitwiseAND(F.lit(1)).alias("b1"),
+        F.shiftright(o, 2).bitwiseAND(F.lit(1)).alias("b2"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# encoding + regression: Helmert contrasts with per-level effects
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "ml_helmert_contrast_effects",
+    oracle="""
+        WITH lv AS (
+            SELECT o_orderpriority AS level,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+                        AS BIGINT) AS s
+            FROM orders GROUP BY o_orderpriority
+        ),
+        rk AS (
+            SELECT level, n, s,
+                   CAST(ROW_NUMBER() OVER (ORDER BY level) AS BIGINT) AS rk,
+                   CAST(s AS DOUBLE) / n AS mean_c
+            FROM lv
+        ),
+        prior AS (
+            SELECT j.level, j.rk, j.n, j.mean_c,
+                   list_sum(list(i.mean_c ORDER BY i.rk)) AS prior_sum
+            FROM rk j JOIN rk i ON i.rk < j.rk
+            GROUP BY j.level, j.rk, j.n, j.mean_c
+        )
+        SELECT r.level, r.rk, r.n,
+               ROUND(r.mean_c, 6) AS mean_cents,
+               CASE WHEN p.prior_sum IS NOT NULL
+                    THEN ROUND(r.mean_c - p.prior_sum / (r.rk - 1), 6) + 0
+                    ELSE NULL END AS helmert_effect
+        FROM rk r LEFT JOIN prior p ON r.level = p.level
+    """,
+    tags=("ml", "encoding", "regression", "closed-form", "orders"),
+)
+def ml_helmert_contrast_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HELMERT CONTRAST encoding with closed-form effects: level j
+    (alphabetical rank — the house alphabetAsc encoding convention,
+    reference R28) is scored against the MEAN OF ALL PRIOR LEVELS,
+    effect_j = mean_j − (Σ_{i<j} mean_i)/(j−1) — exactly the
+    coefficient an OLS on Helmert-coded dummies recovers, computed
+    here without a solver (the contrast matrix is triangular, so the
+    normal equations collapse). Per-level means are one float division
+    of exact cents/count each; the prior-mean sum is the house
+    SEQUENTIAL rank-ordered fold (Spark
+    aggregate(transform(array_sort(collect_list)))) vs DuckDB
+    ``list_sum(list(mean_c ORDER BY rk))`` — never an engine-order
+    float sum), and the effect is one fixed-order expression,
+    ``+ 0``-guarded (two equal adjacent means round to a signed
+    zero). Level 1 has no prior → NULL. 100 TB: one map-side-
+    combinable aggregate to |levels| rows; the contrast walk is a
+    |levels|² self-join on a 5-row frame."""
+    o = load_table(spark, sf_dir, "orders")
+    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    lv = o.groupBy(F.col("o_orderpriority").alias("level")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(cents).cast("bigint").alias("s"),
+    )
+    rk = lv.select(
+        "level",
+        "n",
+        F.row_number().over(Window.orderBy("level")).cast("bigint").alias("rk"),
+        (F.col("s").cast("double") / F.col("n")).alias("mean_c"),
+    )
+    j = rk.alias("j")
+    i = rk.alias("i")
+    pairs = j.join(i, F.col("i.rk") < F.col("j.rk")).select(
+        F.col("j.level").alias("level"),
+        F.col("i.rk").alias("irk"),
+        F.col("i.mean_c").alias("imean"),
+    )
+    prior = pairs.groupBy("level").agg(
+        F.aggregate(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("irk", "imean"))),
+                lambda s: s["imean"],
+            ),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        ).alias("prior_sum")
+    )
+    return (
+        rk.join(prior, "level", "left")
+        .select(
+            "level",
+            "rk",
+            "n",
+            F.round("mean_c", 6).alias("mean_cents"),
+            F.when(
+                F.col("prior_sum").isNotNull(),
+                F.round(
+                    F.col("mean_c") - F.col("prior_sum") / (F.col("rk") - 1), 6
+                ),
+            ).alias("helmert_effect"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# feature-selection: information-gain ratio of sign splits
+# ---------------------------------------------------------------------------
+
+GAIN_DIMS = 8
+
+
+@query(
+    "ml_gain_ratio_selection",
+    oracle=f"""
+        WITH x AS (
+            SELECT vec_id, label,
+                   UNNEST(embedding) AS v,
+                   generate_subscripts(embedding, 1) AS dim
+            FROM embeddings
+        ),
+        cells AS (
+            SELECT CAST(dim AS BIGINT) AS dim,
+                   CASE WHEN v > 0 THEN 1 ELSE 0 END AS branch,
+                   CAST(label AS BIGINT) AS label,
+                   CAST(COUNT(*) AS BIGINT) AS c
+            FROM x WHERE dim <= {GAIN_DIMS}
+            GROUP BY dim, branch, label
+        ),
+        lab AS (
+            SELECT dim, label, CAST(SUM(c) AS BIGINT) AS t
+            FROM cells GROUP BY dim, label
+        ),
+        br AS (
+            SELECT dim, branch, CAST(SUM(c) AS BIGINT) AS nb
+            FROM cells GROUP BY dim, branch
+        ),
+        f_cell AS (
+            SELECT dim, list_sum(list(c * LOG2(c)
+                                      ORDER BY branch, label)) AS s_cell,
+                   CAST(SUM(c) AS BIGINT) AS n
+            FROM cells GROUP BY dim
+        ),
+        f_lab AS (
+            SELECT dim, list_sum(list(t * LOG2(t) ORDER BY label)) AS s_lab
+            FROM lab GROUP BY dim
+        ),
+        f_br AS (
+            SELECT dim, list_sum(list(nb * LOG2(nb) ORDER BY branch)) AS s_br
+            FROM br GROUP BY dim
+        )
+        SELECT c.dim, c.n,
+               ROUND(LOG2(c.n) - l.s_lab / c.n, 6) + 0  AS h_label,
+               ROUND(LOG2(c.n) - l.s_lab / c.n
+                     - (b.s_br - c.s_cell) / c.n, 6) + 0 AS info_gain,
+               ROUND(LOG2(c.n) - b.s_br / c.n, 6) + 0   AS split_info,
+               CASE WHEN LOG2(c.n) - b.s_br / c.n > 0
+                    THEN ROUND((LOG2(c.n) - l.s_lab / c.n
+                                - (b.s_br - c.s_cell) / c.n)
+                               / (LOG2(c.n) - b.s_br / c.n), 6) + 0
+                    ELSE NULL END AS gain_ratio
+        FROM f_cell c JOIN f_lab l ON c.dim = l.dim
+                      JOIN f_br b ON c.dim = b.dim
+    """,
+    tags=("ml", "feature-selection", "embeddings"),
+)
+def ml_gain_ratio_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INFORMATION-GAIN RATIO (Quinlan's C4.5 criterion) of the sign
+    split v>0 for the first 8 embedding dimensions — the
+    split-bias-corrected sibling of the MI/chi2/ANOVA selection family
+    (reference R26): gain_ratio = (H(label) − H(label|split)) /
+    split_info, where plain gain would favor many-way splits (binary
+    here, so the ratio mostly rescales — the carrier pins the
+    FORMULA). All entropies decompose into Σ c·log2(c) over EXACT
+    integer counts, each reduced by the house ORDERED fold (cells by
+    (branch,label), label totals by label, branch totals by branch) so
+    H(label), info_gain and split_info are fixed-order float
+    expressions; every ROUND is ``+ 0``-guarded (one-class or
+    one-branch dims land exactly on zero) and a degenerate split
+    (split_info = 0) degrades to NULL on both engines. 100 TB: one
+    posexplode filtered to 8 dims + three keyed aggregates over <= 160
+    exact-count rows."""
+    em = load_table(spark, sf_dir, "embeddings")
+    x = em.select(
+        "vec_id",
+        "label",
+        F.posexplode("embedding").alias("pos", "v"),
+    ).filter(F.col("pos") < GAIN_DIMS)
+    cells = x.groupBy(
+        (F.col("pos") + 1).cast("bigint").alias("dim"),
+        F.when(F.col("v") > 0, 1).otherwise(0).alias("branch"),
+        F.col("label").cast("bigint").alias("label"),
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+
+    def _fold(df: DataFrame, keys: list, val: str, out: str) -> DataFrame:
+        ordered = F.transform(
+            F.array_sort(F.collect_list(F.struct(*keys, val))),
+            lambda s: s[val] * F.log2(s[val]),
+        )
+        return df.groupBy("dim").agg(
+            F.aggregate(ordered, F.lit(0.0), lambda a, t: a + t).alias(out),
+            F.sum(val).cast("bigint").alias(f"_n_{out}"),
+        )
+
+    f_cell = _fold(cells, ["branch", "label"], "c", "s_cell").withColumnRenamed(
+        "_n_s_cell", "n"
+    )
+    lab = cells.groupBy("dim", "label").agg(
+        F.sum("c").cast("bigint").alias("t")
+    )
+    f_lab = _fold(lab, ["label"], "t", "s_lab").drop("_n_s_lab")
+    br = cells.groupBy("dim", "branch").agg(
+        F.sum("c").cast("bigint").alias("nb")
+    )
+    f_br = _fold(br, ["branch"], "nb", "s_br").drop("_n_s_br")
+    j = f_cell.join(f_lab, "dim").join(f_br, "dim")
+    n = F.col("n")
+    h_label = F.log2(n) - F.col("s_lab") / n
+    info_gain = h_label - (F.col("s_br") - F.col("s_cell")) / n
+    split_info = F.log2(n) - F.col("s_br") / n
+    return j.select(
+        "dim",
+        "n",
+        F.round(h_label, 6).alias("h_label"),
+        F.round(info_gain, 6).alias("info_gain"),
+        F.round(split_info, 6).alias("split_info"),
+        F.when(split_info > 0, F.round(info_gain / split_info, 6)).alias(
+            "gain_ratio"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# regression: two-segment piecewise OLS at a fixed knot
+# ---------------------------------------------------------------------------
+
+PIECEWISE_KNOT_DAY = 15
+
+
+def _piecewise_sql() -> str:
+    return f"""
+        WITH base AS (
+            SELECT event_type,
+                   CASE WHEN day(ts) <= {PIECEWISE_KNOT_DAY}
+                        THEN 'early' ELSE 'late' END AS segment,
+                   CAST(day(ts) AS BIGINT) AS x,
+                   CAST(ROUND(value * 100) AS BIGINT) AS y
+            FROM events
+        ),
+        m AS (
+            SELECT event_type, segment,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(x) AS BIGINT) AS sx,
+                   CAST(SUM(x * x) AS BIGINT) AS sxx,
+                   SUM(CAST(y AS HUGEINT)) AS sy,
+                   SUM(CAST(x AS HUGEINT) * y) AS sxy
+            FROM base GROUP BY event_type, segment
+        )
+        SELECT event_type, segment, n, sx,
+               CAST(sy AS BIGINT) AS sy,
+               CASE WHEN CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx > 0
+                    THEN ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+                                - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                               / (CAST(n AS DOUBLE) * sxx
+                                  - CAST(sx AS DOUBLE) * sx)
+                               / 100.0, 6) + 0
+                    ELSE NULL END AS slope_per_day,
+               CASE WHEN CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx > 0
+                    THEN ROUND((CAST(sxx AS DOUBLE) * CAST(sy AS DOUBLE)
+                                - CAST(sx AS DOUBLE) * CAST(sxy AS DOUBLE))
+                               / (CAST(n AS DOUBLE) * sxx
+                                  - CAST(sx AS DOUBLE) * sx)
+                               / 100.0, 6) + 0
+                    ELSE NULL END AS intercept_value
+        FROM m
+    """
+
+
+@query(
+    "ml_piecewise_linear_knot",
+    oracle=_piecewise_sql(),
+    tags=("ml", "regression", "events"),
+)
+def ml_piecewise_linear_knot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TWO-SEGMENT PIECEWISE OLS at a fixed knot (day 15): value-cents
+    regressed on day-of-month independently for the early and late
+    halves per event_type — the broken-stick model a trend monitor
+    fits when a mid-month launch might have changed the slope (the
+    single-segment siblings live in the regression family;
+    segmentation by a FIXED knot keeps the design data-independent,
+    so the oracle is plain SQL, not a search). Slope and intercept
+    both come from the ALL-INTEGER closed forms (n·Σxy−Σx·Σy)/den and
+    (Σxx·Σy−Σx·Σxy)/den — no running float anywhere; y-moments
+    accumulate in DECIMAL(38,0)/HUGEINT (Σxy adds a ×31 on cents —
+    the r09-advice int64-wrap class), x-moments stay int64 (x ≤ 31).
+    The final division casts the exact moments to double PER-MOMENT
+    inside ONE expression written identically on both engines —
+    including den = n·Σx²−(Σx)², whose int64 product form would wrap
+    asymmetrically at ~3×10⁹ rows per group (Spark silent, DuckDB
+    raising); degenerate single-day segments degrade to NULL via the
+    den > 0 CASE.
+    100 TB: one map-side-combinable moment aggregate."""
+    e = load_table(spark, sf_dir, "events")
+    x = F.dayofmonth("ts").cast("bigint")
+    y = F.round(F.col("value") * 100).cast("bigint")
+    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    base = e.select(
+        "event_type",
+        F.when(x <= PIECEWISE_KNOT_DAY, "early").otherwise("late").alias(
+            "segment"
+        ),
+        x.alias("x"),
+        y.alias("y"),
+    )
+    m = base.groupBy("event_type", "segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("x").cast("bigint").alias("sx"),
+        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
+        F.sum(dec(F.col("y"))).alias("sy_dec"),
+        F.sum(dec(F.col("x") * F.col("y"))).alias("sxy_dec"),
+    )
+    den = (
+        F.col("n").cast("double") * F.col("sxx")
+        - F.col("sx").cast("double") * F.col("sx")
+    )
+    slope = (
+        F.col("n").cast("double") * F.col("sxy_dec").cast("double")
+        - F.col("sx").cast("double") * F.col("sy_dec").cast("double")
+    ) / den / 100.0
+    intercept = (
+        F.col("sxx").cast("double") * F.col("sy_dec").cast("double")
+        - F.col("sx").cast("double") * F.col("sxy_dec").cast("double")
+    ) / den / 100.0
+    return m.select(
+        "event_type",
+        "segment",
+        "n",
+        "sx",
+        F.col("sy_dec").cast("bigint").alias("sy"),
+        F.when(den > 0, F.round(slope, 6)).alias("slope_per_day"),
+        F.when(den > 0, F.round(intercept, 6)).alias("intercept_value"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# feature-selection: Haldane-corrected log odds ratio per dimension
+# ---------------------------------------------------------------------------
+
+OR_DIMS = 16
+
+
+@query(
+    "ml_odds_ratio_selection",
+    oracle=f"""
+        WITH x AS (
+            SELECT CAST(generate_subscripts(embedding[1:{OR_DIMS}], 1) - 1
+                        AS BIGINT) AS dim,
+                   UNNEST(embedding[1:{OR_DIMS}]) AS v,
+                   label % 2 = 0 AS pos
+            FROM embeddings
+        ),
+        t AS (
+            SELECT dim,
+                   CAST(SUM(CASE WHEN v > 0 AND pos THEN 1 ELSE 0 END)
+                        AS BIGINT) AS a,
+                   CAST(SUM(CASE WHEN v > 0 AND NOT pos THEN 1 ELSE 0 END)
+                        AS BIGINT) AS b,
+                   CAST(SUM(CASE WHEN v <= 0 AND pos THEN 1 ELSE 0 END)
+                        AS BIGINT) AS c,
+                   CAST(SUM(CASE WHEN v <= 0 AND NOT pos THEN 1 ELSE 0 END)
+                        AS BIGINT) AS d
+            FROM x GROUP BY dim
+        )
+        SELECT dim, a, b, c, d,
+               ROUND(LN(((a + 0.5) * (d + 0.5)) / ((b + 0.5) * (c + 0.5))), 6)
+                   + 0 AS log_odds
+        FROM t
+    """,
+    tags=("ml", "feature-selection", "embeddings"),
+)
+def ml_odds_ratio_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LOG ODDS-RATIO feature screen with HALDANE-ANSCOMBE correction:
+    per embedding dimension (first 16), the 2×2 association between
+    the sign of the coordinate and the even-label class, scored as
+    ln((a+½)(d+½) / ((b+½)(c+½))) — the epidemiology-grade effect
+    size the MI/chi2/Fisher siblings don't give (it is SIGNED, so a
+    ranking by |log-OR| also says WHICH class the feature votes for;
+    the +½ correction keeps a zero cell finite instead of ±∞ — no
+    CASE guard needed, by construction). The four cells are exact
+    integers from one aggregate over the dimension-exploded prefix;
+    the score is ONE fixed-order float expression. 100 TB: explode
+    multiplies rows ×16, then one map-side-combinable aggregate with
+    a 16-row result."""
+    em = load_table(spark, sf_dir, "embeddings")
+    x = em.select(
+        F.posexplode(F.slice("embedding", 1, OR_DIMS)).alias("dim0", "v"),
+        (F.col("label") % 2 == 0).alias("pos"),
+    ).select(F.col("dim0").cast("bigint").alias("dim"), "v", "pos")
+    t = x.groupBy("dim").agg(
+        F.sum(F.when((F.col("v") > 0) & F.col("pos"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("a"),
+        F.sum(F.when((F.col("v") > 0) & ~F.col("pos"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("b"),
+        F.sum(F.when((F.col("v") <= 0) & F.col("pos"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("c"),
+        F.sum(F.when((F.col("v") <= 0) & ~F.col("pos"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("d"),
+    )
+    log_odds = F.log(
+        ((F.col("a") + 0.5) * (F.col("d") + 0.5))
+        / ((F.col("b") + 0.5) * (F.col("c") + 0.5))
+    )
+    return t.select(
+        "dim", "a", "b", "c", "d", F.round(log_odds, 6).alias("log_odds")
+    )
+
+
+# ---------------------------------------------------------------------------
+# encoding: frequency-rank encoding applied back to the fact stream
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "ml_frequency_rank_encoding",
+    oracle="""
+        WITH cnt AS (
+            SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
+            FROM events GROUP BY event_type
+        ),
+        enc AS (
+            SELECT event_type, n,
+                   CAST(ROW_NUMBER() OVER (ORDER BY n DESC, event_type)
+                        AS BIGINT) AS rank_enc,
+                   ROUND(CAST(n AS DOUBLE)
+                         / (SELECT SUM(n) FROM cnt), 6) AS freq_enc
+            FROM cnt
+        )
+        SELECT e.rank_enc, e.event_type, e.n, e.freq_enc,
+               CAST(SUM(CAST(ROUND(ev.value * 100) AS BIGINT)) AS BIGINT)
+                   AS total_cents
+        FROM events ev JOIN enc e ON ev.event_type = e.event_type
+        GROUP BY e.rank_enc, e.event_type, e.n, e.freq_enc
+    """,
+    tags=("ml", "encoding", "events"),
+)
+def ml_frequency_rank_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FREQUENCY-RANK ENCODING fitted AND applied: the categorical
+    event_type maps to (rank-by-frequency, relative-frequency) codes —
+    the leakage-free unsupervised cousin of target encoding (house
+    siblings: one-hot, binary, hashing-trick, WOE, OOF-target) — and
+    the code table is then JOINED BACK to the fact stream, proving
+    the applied path, not just the dictionary (total value-cents per
+    encoded class rides through the join as an exact integer). Rank
+    ties break lexicographically; relative frequency is one float
+    division off exact counts. 100 TB: the code table is |categories|
+    rows → broadcast join; both aggregates map-side combine."""
+    e = load_table(spark, sf_dir, "events")
+    cnt = e.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    tot = cnt.agg(F.sum("n").alias("tot"))
+    enc = (
+        cnt.crossJoin(F.broadcast(tot))
+        .select(
+            "event_type",
+            "n",
+            F.row_number()
+            .over(Window.orderBy(F.col("n").desc(), "event_type"))
+            .cast("bigint")
+            .alias("rank_enc"),
+            F.round(F.col("n").cast("double") / F.col("tot"), 6).alias(
+                "freq_enc"
+            ),
+        )
+    )
+    cents = F.round(F.col("value") * 100).cast("bigint")
+    return (
+        e.select("event_type", cents.alias("cents"))
+        .join(F.broadcast(enc), "event_type")
+        .groupBy("rank_enc", "event_type", "n", "freq_enc")
+        .agg(F.sum("cents").cast("bigint").alias("total_cents"))
+    )

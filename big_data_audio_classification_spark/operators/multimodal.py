@@ -979,3 +979,904 @@ def mm_scene_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("media_id", "scene_id")
     )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: byte-level payload histogram (Arrow batch processing)
+# ---------------------------------------------------------------------------
+
+BYTE_BUCKETS = 16
+
+
+@query(
+    "mm_payload_byte_histogram",
+    oracle=f"""
+        WITH ch AS (
+            SELECT doc_id, UNNEST(string_split_regex(text, '')) AS c
+            FROM documents
+        )
+        SELECT CAST(ascii(c) // {BYTE_BUCKETS} AS BIGINT) AS bucket,
+               CAST(COUNT(*) AS BIGINT)                   AS n_bytes,
+               CAST(COUNT(DISTINCT doc_id) AS BIGINT)     AS n_docs
+        -- ascii(c) < 128 pins the bytes==codepoints contract the Spark
+        -- side asserts with payload.isascii(): a non-ASCII char would
+        -- otherwise count 2+ UTF-8 bytes here vs one codepoint (r07
+        -- advice) — with the guard, divergence becomes a loud Spark
+        -- error instead of a silent hash mismatch
+        FROM ch WHERE c <> '' AND ascii(c) < 128
+        GROUP BY ascii(c) // {BYTE_BUCKETS}
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PAYLOAD BYTE HISTOGRAM via ``mapInPandas``: each Arrow batch of
+    documents is scanned in Python as RAW BYTES (the opaque-payload
+    discipline every binary-column pipeline needs — here the payload
+    happens to be ASCII text so the oracle can restate it with
+    ``ascii()``), emitting per-batch PARTIAL (bucket, count, doc-set)
+    rows that one tiny groupBy folds — the map-side-combine shape that
+    keeps the Python boundary O(batches), not O(bytes). The per-doc
+    de-dup for n_docs rides the partials as distinct doc ids only for
+    buckets the doc actually hits. All integers; decoders for real
+    media formats are the stubbed step, the Spark-side plumbing here
+    is the real contract (family: ``mm_metadata_stats``,
+    ``mm_maparrow_bytelen``)."""
+    from collections import Counter
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                payload = text.encode("utf-8")
+                # bytes==codepoints only holds for ASCII; the oracle
+                # counts codepoints (ascii(c) < 128 guard), so fail
+                # LOUDLY if the generator ever emits non-ASCII text
+                # rather than silently diverging (r07 advice)
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                cnt = Counter(b // BYTE_BUCKETS for b in payload)
+                rows += [
+                    (int(doc_id), int(bucket), int(n))
+                    for bucket, n in cnt.items()
+                ]
+            if rows:
+                yield pd.DataFrame(
+                    rows, columns=["doc_id", "bucket", "partial"]
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    partials = d.mapInPandas(
+        batches, "doc_id long, bucket long, partial long"
+    )
+    return partials.groupBy("bucket").agg(
+        F.sum("partial").cast("bigint").alias("n_bytes"),
+        F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: Adler-32 payload checksum (binary integrity fingerprint)
+# ---------------------------------------------------------------------------
+
+ADLER_MOD = 65521  # largest prime below 2^16 (the zlib constant)
+
+
+@query(
+    "mm_payload_adler_checksum",
+    oracle=f"""
+        WITH ch AS (
+            SELECT doc_id,
+                   UNNEST(string_split_regex(text, '')) AS c,
+                   CAST(generate_subscripts(
+                        string_split_regex(text, ''), 1) AS BIGINT) AS i,
+                   CAST(length(text) AS BIGINT) AS n
+            FROM documents
+        ),
+        -- ascii(c) < 128 pins the bytes==codepoints contract the Spark
+        -- side asserts with payload.isascii() (same guard as
+        -- mm_payload_byte_histogram)
+        s AS (
+            SELECT doc_id, MAX(n) AS n,
+                   CAST((1 + SUM(ascii(c))) % {ADLER_MOD} AS BIGINT) AS s1,
+                   CAST((MAX(n) + SUM((n - i + 1) * ascii(c)))
+                        % {ADLER_MOD} AS BIGINT) AS s2
+            FROM ch WHERE c <> '' AND ascii(c) < 128
+            GROUP BY doc_id
+        )
+        -- LEFT JOIN from documents: an EMPTY payload must still emit a
+        -- row with adler32(b'') = 1 (s1=1, s2=0), exactly as zlib does
+        -- on the Spark side — the WHERE c <> '' filter would otherwise
+        -- drop the doc entirely and diverge silently (r08 review;
+        -- string_split_regex('','') yields [''])
+        SELECT d.doc_id,
+               COALESCE(s.n, 0)                      AS n_bytes,
+               CAST(COALESCE(s.s2, 0) * 65536
+                    + COALESCE(s.s1, 1) AS BIGINT)   AS adler32
+        FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_adler_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ADLER-32 payload checksum via ``mapInPandas``: each Arrow batch
+    of documents is fingerprinted in Python as RAW BYTES with
+    ``zlib.adler32`` — the integrity-checksum step every binary-column
+    ingest (image/audio/video payload) runs before and after transport
+    — while the oracle restates the checksum from its POSITIONAL
+    definition (s1 = 1 + Σb mod 65521; s2 = n + Σ(n−i+1)·b mod 65521;
+    adler = s2·2¹⁶ + s1), a genuinely independent formulation of the
+    same integer. The payload here is ASCII text, so bytes ==
+    codepoints — asserted loudly on the Spark side (the
+    ``mm_payload_byte_histogram`` contract). Pure integer arithmetic
+    end-to-end: nothing to ROUND, no float anywhere. Python boundary
+    emits ONE row per document (never per byte); at 100 TB the
+    checksum rides the same scan that decodes the payload."""
+    import zlib
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                payload = text.encode("utf-8")
+                rows.append(
+                    (
+                        int(doc_id),
+                        len(payload),
+                        int(zlib.adler32(payload)),
+                    )
+                )
+            if rows:
+                yield pd.DataFrame(
+                    rows, columns=["doc_id", "n_bytes", "adler32"]
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.mapInPandas(batches, "doc_id long, n_bytes long, adler32 long")
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: run-length structure of the payload bytes
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_payload_rle_runs",
+    oracle="""
+        WITH ch AS (
+            SELECT doc_id,
+                   UNNEST(string_split_regex(text, '')) AS c,
+                   CAST(generate_subscripts(
+                        string_split_regex(text, ''), 1) AS BIGINT) AS i
+            FROM documents
+        ),
+        -- string_split_regex('','') yields [''] — drop the phantom so
+        -- an empty payload contributes zero characters (same contract
+        -- as mm_payload_adler_checksum, r08 review)
+        marks AS (
+            SELECT doc_id, i,
+                   CASE WHEN LAG(c) OVER (PARTITION BY doc_id ORDER BY i)
+                             IS DISTINCT FROM c
+                        THEN 1 ELSE 0 END AS new_run
+            FROM ch WHERE c <> ''
+        ),
+        runs AS (
+            SELECT doc_id, i,
+                   CAST(SUM(new_run) OVER (PARTITION BY doc_id ORDER BY i)
+                        AS BIGINT) AS run_id
+            FROM marks
+        ),
+        rl AS (
+            SELECT doc_id, run_id, CAST(COUNT(*) AS BIGINT) AS rlen
+            FROM runs GROUP BY doc_id, run_id
+        ),
+        s AS (
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_runs,
+                   CAST(MAX(rlen) AS BIGINT)        AS max_run
+            FROM rl GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               CAST(length(d.text) AS BIGINT) AS n_bytes,
+               COALESCE(s.n_runs, 0)          AS n_runs,
+               COALESCE(s.max_run, 0)         AS max_run
+        FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_rle_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RUN-LENGTH structure of the payload bytes via ``mapInPandas``:
+    each Arrow batch is scanned in Python with ``itertools.groupby``
+    (the RLE primitive every binary-payload compressor/profiler runs
+    first — a payload whose max_run is large is blank-padded or
+    synthetic), while the oracle restates the runs RELATIONALLY: a LAG
+    change-mark, a running-sum run-id, and a per-run count — two
+    genuinely different formulations of the same partition of the byte
+    string. ASCII payloads keep bytes == codepoints (asserted loudly,
+    the mm_payload_byte_histogram contract); empty payloads emit
+    (0, 0, 0) via the documents LEFT JOIN on the oracle side and the
+    groupby-of-empty on the Spark side. Pure integers end-to-end; the
+    Python boundary emits ONE row per document. At 100 TB the kernel
+    rides the payload-decode scan — no shuffle at all."""
+    import itertools
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                payload = text.encode("utf-8")
+                run_lens = [
+                    len(list(g)) for _, g in itertools.groupby(payload)
+                ]
+                rows.append(
+                    (
+                        int(doc_id),
+                        len(payload),
+                        len(run_lens),
+                        max(run_lens, default=0),
+                    )
+                )
+            if rows:
+                yield pd.DataFrame(
+                    rows, columns=["doc_id", "n_bytes", "n_runs", "max_run"]
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.mapInPandas(
+        batches, "doc_id long, n_bytes long, n_runs long, max_run long"
+    )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: payload popcount / bit density
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_payload_bit_density",
+    oracle="""
+        WITH ch AS (
+            SELECT doc_id, ascii(UNNEST(string_split_regex(text, ''))) AS b
+            FROM documents
+        ),
+        s AS (
+            -- shift-and-mask popcount: ASCII < 128 pins bit 7 to zero,
+            -- so 7 masked shifts cover the byte (the Spark side
+            -- asserts the same contract with payload.isascii())
+            SELECT doc_id,
+                   CAST(SUM((b & 1) + ((b >> 1) & 1) + ((b >> 2) & 1)
+                          + ((b >> 3) & 1) + ((b >> 4) & 1)
+                          + ((b >> 5) & 1) + ((b >> 6) & 1))
+                        AS BIGINT) AS total_bits
+            FROM ch WHERE b IS NOT NULL AND b > 0 AND b < 128
+            GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               CAST(length(d.text) AS BIGINT) AS n_bytes,
+               COALESCE(s.total_bits, 0)      AS total_bits,
+               CASE WHEN length(d.text) > 0
+                    THEN ROUND(CAST(COALESCE(s.total_bits, 0) AS DOUBLE)
+                               / (8 * length(d.text)), 6) + 0
+               END AS ones_frac
+        FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_bit_density(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PAYLOAD POPCOUNT via ``mapInPandas``: each Arrow batch's bytes
+    are bit-unpacked VECTORIZED in numpy (``unpackbits`` over
+    ``frombuffer`` — the entropy-proxy fingerprint a multimodal ingest
+    computes to flag all-zero / saturated / encrypted payloads), while
+    the oracle restates the popcount as seven masked shifts summed
+    relationally — independent formulations of the same integer.
+    ASCII guard pins bytes == codepoints (and bit 7 == 0, which the
+    oracle's 7-shift form exploits; ascii('\\0') cannot occur in a
+    parquet string column and b > 0 merely documents that). The
+    ones_frac ratio is ONE float division of exact integers done
+    JVM-SIDE after the kernel (never in Python — round-half behavior
+    differs), oracle ``+ 0``-guarded. One row per document out of the
+    Python boundary; at 100 TB the kernel rides the decode scan."""
+    import numpy as np
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                payload = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+                rows.append(
+                    (
+                        int(doc_id),
+                        int(payload.size),
+                        int(np.unpackbits(payload).sum()) if payload.size else 0,
+                    )
+                )
+            if rows:
+                yield pd.DataFrame(
+                    rows, columns=["doc_id", "n_bytes", "total_bits"]
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    counted = d.mapInPandas(
+        batches, "doc_id long, n_bytes long, total_bits long"
+    )
+    return counted.select(
+        "doc_id",
+        "n_bytes",
+        "total_bits",
+        F.when(
+            F.col("n_bytes") > 0,
+            F.round(
+                F.col("total_bits").cast("double") / (8 * F.col("n_bytes")), 6
+            ),
+        ).alias("ones_frac"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: Fletcher-16 payload checksum
+# ---------------------------------------------------------------------------
+
+FLETCHER_MOD = 255
+
+
+@query(
+    "mm_payload_fletcher16",
+    oracle=f"""
+        WITH ch AS (
+            SELECT doc_id,
+                   ascii(UNNEST(string_split_regex(text, ''))) AS b,
+                   CAST(generate_subscripts(
+                        string_split_regex(text, ''), 1) AS BIGINT) AS i,
+                   CAST(length(text) AS BIGINT) AS n
+            FROM documents
+        ),
+        s AS (
+            SELECT doc_id,
+                   CAST(SUM(b) % {FLETCHER_MOD} AS BIGINT) AS s1,
+                   CAST(SUM((n - i + 1) * b) % {FLETCHER_MOD} AS BIGINT) AS s2
+            FROM ch WHERE b IS NOT NULL AND b > 0 AND b < 128
+            GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               CAST(length(d.text) AS BIGINT) AS n_bytes,
+               CAST(COALESCE(s.s2, 0) * 256
+                    + COALESCE(s.s1, 0) AS BIGINT) AS fletcher16
+        FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_fletcher16(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FLETCHER-16 payload checksum via ``mapInPandas``: the
+    position-weighted integrity check (RFC 1146 family; Adler-32's
+    little sibling with mod 255 and no +1 offsets) computed VECTORIZED
+    in numpy — s1 = Σb mod 255, s2 = Σ(cumsum b) mod 255, where
+    Σcumsum(b) ≡ Σ(n−i+1)·b is exactly the positional restatement the
+    oracle runs relationally: two genuinely independent formulations
+    of the same pair of integers (the numpy side never materializes a
+    position index at all). ASCII contract asserted per document;
+    empty payloads pin fletcher16(b'') = 0 via the documents LEFT
+    JOIN (the r08 Adler review class — a checksum oracle must never
+    silently DROP a row the kernel emits). Pure integers; one Arrow
+    row per document; at 100 TB the kernel rides the payload-decode
+    scan."""
+    import numpy as np
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+                if b.size:
+                    s1 = int(b.sum(dtype=np.int64)) % FLETCHER_MOD
+                    s2 = int(np.cumsum(b, dtype=np.int64).sum()) % FLETCHER_MOD
+                else:
+                    s1 = s2 = 0
+                rows.append((int(doc_id), int(b.size), s2 * 256 + s1))
+            if rows:
+                yield pd.DataFrame(
+                    rows, columns=["doc_id", "n_bytes", "fletcher16"]
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.mapInPandas(
+        batches, "doc_id long, n_bytes long, fletcher16 long"
+    )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: Shannon entropy of the payload byte distribution
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_payload_shannon_entropy",
+    oracle="""
+        WITH ch AS (
+            SELECT doc_id,
+                   ascii(UNNEST(string_split_regex(text, ''))) AS b
+            FROM documents
+        ),
+        counts AS (
+            SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS c
+            FROM ch WHERE b IS NOT NULL AND b > 0
+            GROUP BY doc_id, b
+        ),
+        folded AS (
+            SELECT doc_id,
+                   CAST(SUM(c) AS BIGINT) AS n_bytes,
+                   CAST(COUNT(*) AS BIGINT) AS n_distinct,
+                   list_sum(list(c * LOG2(c) ORDER BY b)) AS s
+            FROM counts GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               COALESCE(f.n_bytes, 0)    AS n_bytes,
+               COALESCE(f.n_distinct, 0) AS n_distinct,
+               CASE WHEN f.n_bytes > 0
+                    THEN ROUND(LOG2(f.n_bytes) - f.s / f.n_bytes, 6) + 0
+                    ELSE NULL END AS entropy_bits
+        FROM documents d LEFT JOIN folded f ON d.doc_id = f.doc_id
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_shannon_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SHANNON ENTROPY of the payload byte distribution via
+    ``mapInPandas`` — the compressibility/randomness probe every
+    binary-ingest pipeline runs before deciding codec treatment (text
+    ~4.5 bits; ciphertext ~8). The kernel bincounts bytes in numpy and
+    folds c·log2(c) SEQUENTIALLY in ascending byte order — exactly the
+    oracle's ``list_sum(list(c*LOG2(c) ORDER BY b))`` — then H =
+    log2(n) − s/n as ONE fixed-order float expression (the algebraic
+    restatement of −Σp·log2 p that keeps every intermediate exact-int
+    derived; a np.sum pairwise reduction would be ULP-divergent from
+    the SQL fold). The kernel emits FULL precision and the ROUND runs
+    JVM-side (Python round() is half-even, engine ROUND half-away —
+    the bit_density divergence class); the oracle's ``+ 0`` guards the
+    single-byte-value payload, where log2(n) − n·log2(n)/n can land a
+    half-ULP below zero. ASCII contract asserted per document (byte ==
+    codepoint); empty payloads survive as NULL via the LEFT JOIN. One
+    Arrow row per document; at 100 TB the kernel rides the decode
+    scan, nothing shuffles."""
+    import math
+
+    import numpy as np
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+                n = int(b.size)
+                if n:
+                    counts = np.bincount(b)
+                    present = counts[counts > 0]
+                    s = 0.0
+                    for c in present:  # ascending byte order: bincount
+                        c = float(int(c))
+                        s += c * math.log2(c)
+                    # full precision out of the kernel; ROUND happens
+                    # JVM-side below (Python round() is half-EVEN, the
+                    # engines round half-away — the bit_density class)
+                    h = math.log2(n) - s / n
+                    rows.append((int(doc_id), n, int(present.size), h))
+                else:
+                    rows.append((int(doc_id), 0, 0, None))
+            if rows:
+                yield pd.DataFrame(
+                    rows,
+                    columns=["doc_id", "n_bytes", "n_distinct", "entropy_bits"],
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    raw = d.mapInPandas(
+        batches,
+        "doc_id long, n_bytes long, n_distinct long, entropy_bits double",
+    )
+    return raw.select(
+        "doc_id",
+        "n_bytes",
+        "n_distinct",
+        F.round("entropy_bits", 6).alias("entropy_bits"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: XOR checksum + per-byte popcount parity census
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_payload_xor_parity",
+    oracle="""
+        WITH ch AS (
+            SELECT doc_id,
+                   CAST(ascii(UNNEST(string_split_regex(text, '')))
+                        AS BIGINT) AS b
+            FROM documents
+        ),
+        s AS (
+            SELECT doc_id,
+                   CAST(COUNT(*) AS BIGINT)            AS n_bytes,
+                   CAST(bit_xor(b) AS BIGINT)          AS xor_byte,
+                   CAST(SUM(bit_count(b)) AS BIGINT)   AS total_popcount,
+                   CAST(SUM(bit_count(b) % 2) AS BIGINT) AS n_odd_parity
+            FROM ch WHERE b IS NOT NULL AND b > 0
+            GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               COALESCE(s.n_bytes, 0)        AS n_bytes,
+               COALESCE(s.xor_byte, 0)       AS xor_byte,
+               COALESCE(s.total_popcount, 0) AS total_popcount,
+               COALESCE(s.n_odd_parity, 0)   AS n_odd_parity
+        FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_xor_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """XOR CHECKSUM + POPCOUNT PARITY census via ``mapInPandas`` — the
+    longitudinal-redundancy check (LRC) and per-byte parity bits that
+    serial-framing and RAID-style integrity layers compute, here as a
+    vectorized Arrow kernel: xor_byte = ⊕ all bytes
+    (np.bitwise_xor.reduce), total_popcount = Σ bit_count(b) via
+    np.unpackbits, n_odd_parity = bytes whose popcount is odd. The
+    oracle restates all three RELATIONALLY with DuckDB's bit_xor
+    aggregate and bit_count scalar — genuinely independent
+    formulations of the same pure integers (XOR is order-free, so no
+    fold discipline needed). Empty payloads pin 0 via the documents
+    LEFT JOIN (the Adler/Fletcher review class). One Arrow row per
+    document; at 100 TB the kernel rides the payload scan."""
+    import numpy as np
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+                if b.size:
+                    pops = np.unpackbits(b.reshape(-1, 1), axis=1).sum(axis=1)
+                    rows.append(
+                        (
+                            int(doc_id),
+                            int(b.size),
+                            int(np.bitwise_xor.reduce(b)),
+                            int(pops.sum(dtype=np.int64)),
+                            int((pops % 2).sum(dtype=np.int64)),
+                        )
+                    )
+                else:
+                    rows.append((int(doc_id), 0, 0, 0, 0))
+            if rows:
+                yield pd.DataFrame(
+                    rows,
+                    columns=[
+                        "doc_id",
+                        "n_bytes",
+                        "xor_byte",
+                        "total_popcount",
+                        "n_odd_parity",
+                    ],
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.mapInPandas(
+        batches,
+        "doc_id long, n_bytes long, xor_byte long, total_popcount long,"
+        " n_odd_parity long",
+    )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: first-difference (delta) profile of the payload bytes
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_payload_diff_profile",
+    oracle="""
+        WITH ch AS (
+            SELECT doc_id,
+                   CAST(ascii(UNNEST(string_split_regex(text, '')))
+                        AS BIGINT) AS b,
+                   CAST(generate_subscripts(
+                        string_split_regex(text, ''), 1) AS BIGINT) AS i
+            FROM documents
+        ),
+        d2 AS (
+            SELECT a.doc_id, b2.b - a.b AS d
+            FROM ch a JOIN ch b2
+              ON a.doc_id = b2.doc_id AND b2.i = a.i + 1
+        ),
+        s AS (
+            SELECT doc_id,
+                   CAST(COUNT(*) AS BIGINT)                     AS n_steps,
+                   CAST(SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT)
+                                                                AS n_up,
+                   CAST(SUM(CASE WHEN d < 0 THEN 1 ELSE 0 END) AS BIGINT)
+                                                                AS n_down,
+                   CAST(SUM(ABS(d)) AS BIGINT)                  AS sum_abs_delta,
+                   CAST(MAX(ABS(d)) AS BIGINT)                  AS max_abs_delta
+            FROM d2 GROUP BY doc_id
+        )
+        SELECT doc.doc_id,
+               COALESCE(s.n_steps, 0)       AS n_steps,
+               COALESCE(s.n_up, 0)          AS n_up,
+               COALESCE(s.n_down, 0)        AS n_down,
+               COALESCE(s.sum_abs_delta, 0) AS sum_abs_delta,
+               COALESCE(s.max_abs_delta, 0) AS max_abs_delta
+        FROM documents doc LEFT JOIN s ON doc.doc_id = s.doc_id
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_diff_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FIRST-DIFFERENCE (delta-encoding) profile of the payload bytes
+    via ``mapInPandas`` — the statistic a delta/varint codec consults
+    before choosing an encoding (small |Δ| = delta-friendly, monotone
+    runs = RLE-on-delta friendly): step direction census (n_up /
+    n_down), total and max |Δ|, all from np.diff on the byte array.
+    The oracle restates the diffs RELATIONALLY as a positional
+    self-join on i+1 (generate_subscripts — never bare ROW_NUMBER) —
+    an independent formulation of the same exact integers. Payloads
+    shorter than 2 bytes pin all-zeros via the documents LEFT JOIN.
+    One Arrow row per document; at 100 TB the kernel rides the
+    payload scan, the oracle's join stays inside one document (the
+    production form IS the kernel — the join restatement exists only
+    to cross-check it)."""
+    import numpy as np
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+                if b.size >= 2:
+                    dd = np.diff(b.astype(np.int64))
+                    ad = np.abs(dd)
+                    rows.append(
+                        (
+                            int(doc_id),
+                            int(dd.size),
+                            int((dd > 0).sum()),
+                            int((dd < 0).sum()),
+                            int(ad.sum(dtype=np.int64)),
+                            int(ad.max()),
+                        )
+                    )
+                else:
+                    rows.append((int(doc_id), 0, 0, 0, 0, 0))
+            if rows:
+                yield pd.DataFrame(
+                    rows,
+                    columns=[
+                        "doc_id",
+                        "n_steps",
+                        "n_up",
+                        "n_down",
+                        "sum_abs_delta",
+                        "max_abs_delta",
+                    ],
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.mapInPandas(
+        batches,
+        "doc_id long, n_steps long, n_up long, n_down long,"
+        " sum_abs_delta long, max_abs_delta long",
+    )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: hierarchical chunk-sum tree (Merkle-style integrity)
+# ---------------------------------------------------------------------------
+
+CHUNK_BYTES = 64
+
+
+@query(
+    "mm_payload_chunk_sum_tree",
+    oracle=f"""
+        WITH ch AS (
+            SELECT doc_id,
+                   CAST(ascii(UNNEST(string_split_regex(text, '')))
+                        AS BIGINT) AS b,
+                   CAST(generate_subscripts(
+                        string_split_regex(text, ''), 1) AS BIGINT) AS i
+            FROM documents
+        ),
+        leaf AS (
+            SELECT doc_id, (i - 1) // {CHUNK_BYTES} AS chunk,
+                   CAST(SUM(b) AS BIGINT) AS csum
+            FROM ch GROUP BY doc_id, (i - 1) // {CHUNK_BYTES}
+        ),
+        root AS (
+            SELECT doc_id,
+                   CAST(COUNT(*) AS BIGINT) AS n_chunks,
+                   CAST(SUM(csum) AS BIGINT) AS root_sum,
+                   CAST(SUM(csum * (chunk + 1)) AS BIGINT) AS weighted_sum,
+                   CAST(MAX(csum) AS BIGINT) AS max_chunk_sum
+            FROM leaf GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               COALESCE(r.n_chunks, 0)     AS n_chunks,
+               COALESCE(r.root_sum, 0)     AS root_sum,
+               COALESCE(r.weighted_sum, 0) AS weighted_sum,
+               COALESCE(r.max_chunk_sum, 0) AS max_chunk_sum
+        FROM documents d LEFT JOIN root r ON d.doc_id = r.doc_id
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_chunk_sum_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HIERARCHICAL CHUNK-SUM TREE via ``mapInPandas`` — the
+    Merkle-style two-level integrity layout every chunked blob store
+    keeps (per-chunk digests + a root combining them; here the digest
+    is the byte sum so the oracle can restate it relationally): the
+    kernel pads-and-reshapes the byte array into 64-byte chunks
+    (numpy reshape + row sums — one vectorized pass), emits the chunk
+    count, root sum, POSITION-WEIGHTED root (Σ csum·(chunk+1) — the
+    component that catches chunk REORDERING, which a plain root sum
+    cannot), and the max chunk sum (the hot-chunk pointer). The
+    oracle rebuilds the tree by integer-division bucketing over
+    generate_subscripts positions. All exact integers; the weighted
+    root grows ~max_csum·C²/2 with C chunks, so int64 holds to
+    C ≈ 3×10⁷ chunks ≈ a 2 GiB single payload (the per-doc bound —
+    documented; past it, escalate the weighted term to
+    DECIMAL(38,0)/HUGEINT per the house idiom). Empty payloads pin
+    zeros via the LEFT JOIN. One Arrow row per document."""
+    import numpy as np
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+                if b.size:
+                    pad = (-b.size) % CHUNK_BYTES
+                    m = np.pad(b, (0, pad)).astype(np.int64).reshape(
+                        -1, CHUNK_BYTES
+                    )
+                    csums = m.sum(axis=1)
+                    n = int(csums.size)
+                    rows.append(
+                        (
+                            int(doc_id),
+                            n,
+                            int(csums.sum()),
+                            int((csums * (np.arange(n) + 1)).sum()),
+                            int(csums.max()),
+                        )
+                    )
+                else:
+                    rows.append((int(doc_id), 0, 0, 0, 0))
+            if rows:
+                yield pd.DataFrame(
+                    rows,
+                    columns=[
+                        "doc_id",
+                        "n_chunks",
+                        "root_sum",
+                        "weighted_sum",
+                        "max_chunk_sum",
+                    ],
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.mapInPandas(
+        batches,
+        "doc_id long, n_chunks long, root_sum long, weighted_sum long,"
+        " max_chunk_sum long",
+    )
+
+
+# ---------------------------------------------------------------------------
+# mapInPandas: Luhn mod-10 checksum over the payload's digit characters
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_payload_luhn_mod10",
+    oracle="""
+        WITH ch AS (
+            SELECT doc_id,
+                   ascii(UNNEST(string_split_regex(text, ''))) - 48 AS dgt,
+                   CAST(generate_subscripts(
+                        string_split_regex(text, ''), 1) AS BIGINT) AS i
+            FROM documents
+        ),
+        digits AS (
+            SELECT doc_id, dgt,
+                   CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
+                        ORDER BY i DESC) AS BIGINT) AS rpos
+            FROM ch WHERE dgt BETWEEN 0 AND 9
+        ),
+        s AS (
+            SELECT doc_id,
+                   CAST(COUNT(*) AS BIGINT) AS n_digits,
+                   CAST(SUM(CASE WHEN rpos % 2 = 0
+                            THEN CASE WHEN dgt * 2 > 9
+                                      THEN dgt * 2 - 9 ELSE dgt * 2 END
+                            ELSE dgt END) AS BIGINT) AS luhn_sum
+            FROM digits GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               COALESCE(s.n_digits, 0) AS n_digits,
+               COALESCE(s.luhn_sum, 0) AS luhn_sum,
+               COALESCE(s.luhn_sum % 10 = 0, FALSE) AS luhn_valid
+        FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
+    """,
+    tags=("multimodal", "mapInPandas", "documents"),
+)
+def mm_payload_luhn_mod10(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LUHN MOD-10 checksum over the payload's DIGIT characters — the
+    checksum every PII-scrubbing pipeline computes while hunting
+    card-number-shaped substrings (a 16-digit run that Luhn-validates
+    is the redaction trigger): digits are doubled at every second
+    position FROM THE RIGHT (the from-the-right convention is the
+    whole trick — the kernel reverses the digit array, the oracle
+    ranks ROW_NUMBER ... ORDER BY i DESC; two independent
+    formulations of the same parity), doubled digits above 9 fold
+    back by −9. Pure integers; digit-less payloads pin (0, 0, FALSE)
+    via the LEFT JOIN — COALESCE on the BOOLEAN too, the easy one to
+    forget. One Arrow row per document; at 100 TB the kernel rides
+    the payload scan."""
+    import numpy as np
+
+    def batches(it):
+        for pdf in it:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                assert text.isascii(), (
+                    f"doc {doc_id}: non-ASCII text breaks the "
+                    "byte==codepoint oracle contract"
+                )
+                b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+                d = b[(b >= 48) & (b <= 57)].astype(np.int64) - 48
+                if d.size:
+                    r = d[::-1].copy()
+                    dbl = r * np.where(np.arange(r.size) % 2 == 1, 2, 1)
+                    dbl = np.where(dbl > 9, dbl - 9, dbl)
+                    total = int(dbl.sum())
+                    rows.append(
+                        (int(doc_id), int(d.size), total, total % 10 == 0)
+                    )
+                else:
+                    rows.append((int(doc_id), 0, 0, False))
+            if rows:
+                yield pd.DataFrame(
+                    rows,
+                    columns=["doc_id", "n_digits", "luhn_sum", "luhn_valid"],
+                )
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.mapInPandas(
+        batches,
+        "doc_id long, n_digits long, luhn_sum long, luhn_valid boolean",
+    )

@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_audio_classification_spark.registry import query
 from big_data_audio_classification_spark.sources.catalog import load_table
@@ -659,5 +659,379 @@ def skew_key_frequency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vs_uniform"
             ),
             F.col("rnk").cast("bigint").alias("rank"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# skew: salt-factor planning table from the key-frequency census
+# ---------------------------------------------------------------------------
+
+SALT_TARGET_PARTS = 32  # executor-slot count the salt plan levels for
+
+
+@query(
+    "skew_salt_factor_plan",
+    oracle=f"""
+        WITH f AS (
+            SELECT event_type, CAST(COUNT(*) AS BIGINT) AS freq
+            FROM events GROUP BY event_type
+        ),
+        g AS (SELECT CAST(SUM(freq) AS BIGINT) AS total FROM f),
+        plan AS (
+            SELECT event_type, freq,
+                   CAST(CEIL(CAST(g.total AS DOUBLE) / {SALT_TARGET_PARTS})
+                        AS BIGINT) AS target_rows,
+                   GREATEST(1, CAST(CEIL(CAST(freq AS DOUBLE) /
+                       CEIL(CAST(g.total AS DOUBLE) / {SALT_TARGET_PARTS}))
+                       AS BIGINT)) AS salt_k
+            FROM f, g
+        )
+        SELECT event_type, freq, target_rows, salt_k,
+               CAST(CEIL(CAST(freq AS DOUBLE) / salt_k) AS BIGINT)
+                   AS max_salted_load,
+               salt_k > 1 AS needs_salting
+        FROM plan
+    """,
+    tags=("scale", "skew", "events"),
+)
+def skew_salt_factor_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SALT-FACTOR PLANNING table: from the key-frequency census,
+    derive per key the salt fan-out k = ⌈freq ÷ target⌉ that levels
+    its rows across 32 partitions, and the resulting worst partition
+    load — the numbers you compute BEFORE keying a 100 TB shuffle
+    (the executed two-path form: ``skew_hot_key_two_path_join`` r06;
+    the frequency census alone: ``skew_key_frequency_profile``
+    stock). One aggregate + a 1-row broadcast; every output is exact
+    integer arithmetic (CEIL of an exact ratio), output = |keys|
+    rows."""
+    e = load_table(spark, sf_dir, "events")
+    f = e.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("freq")
+    )
+    g = f.agg(F.sum("freq").cast("bigint").alias("total"))
+    target = F.ceil(F.col("total").cast("double") / SALT_TARGET_PARTS).cast(
+        "bigint"
+    )
+    plan = f.crossJoin(F.broadcast(g)).select(
+        "event_type",
+        "freq",
+        target.alias("target_rows"),
+        F.greatest(
+            F.lit(1).cast("bigint"),
+            F.ceil(F.col("freq").cast("double") / target).cast("bigint"),
+        ).alias("salt_k"),
+    )
+    return plan.select(
+        "event_type",
+        "freq",
+        "target_rows",
+        "salt_k",
+        F.ceil(F.col("freq").cast("double") / F.col("salt_k"))
+        .cast("bigint")
+        .alias("max_salted_load"),
+        (F.col("salt_k") > 1).alias("needs_salting"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# skew: exact Gini imbalance of the key-frequency distribution
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "skew_key_gini_imbalance",
+    oracle="""
+        WITH f AS (
+            SELECT user_id, CAST(COUNT(*) AS BIGINT) AS freq
+            FROM events GROUP BY user_id
+        ),
+        r AS (
+            SELECT freq,
+                   ROW_NUMBER() OVER (ORDER BY freq, user_id) AS i,
+                   COUNT(*) OVER () AS n,
+                   SUM(freq) OVER () AS tot
+            FROM f
+        )
+        SELECT CAST(MAX(n) AS BIGINT)                       AS n_keys,
+               CAST(MAX(tot) AS BIGINT)                     AS n_rows,
+               CAST(MAX(tot) - MIN(freq) * MAX(n) AS BIGINT) AS excess_mass,
+               ROUND(CAST(SUM((2 * i - n - 1) * freq) AS DOUBLE)
+                     / (CAST(MAX(n) AS DOUBLE) * MAX(tot)), 6) AS gini
+        FROM r
+    """,
+    tags=("scale", "skew", "events"),
+)
+def skew_key_gini_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KEY-SKEW GINI: the Gini coefficient of the per-key row-count
+    distribution via the exact rank formula Σ(2i−n−1)·f_i / (n·Σf) —
+    0 = perfectly level shuffle, →1 = one hot key owns the stage (the
+    scalar summary behind the per-key plan:
+    ``skew_salt_factor_plan``; census: ``skew_key_frequency_profile``).
+    The numerator is EXACT integer arithmetic, one float division at
+    the end — bit-stable. The oracle states the textbook ranked-key
+    form; the engine reads the SAME sum off the FREQUENCY LEDGER
+    instead of ranking every key in one task (r11): keys tied at
+    frequency v occupy c consecutive ranks after p lower-frequency
+    keys, and the rank-sum over the tie group is invariant to the
+    user_id tiebreak — Σ over the group of 2i·f = f·c·(2p+c+1) — so
+    Σ(2i−n−1)·f = Σ f·c·(2p+c+1) − (n+1)·Σf, every term a per-ledger-
+    row integer. The only unpartitioned window is the cumulative count
+    over the ledger, whose size is bounded by DISTINCT frequency
+    values (≤ max events per key), not by the key count."""
+    e = load_table(spark, sf_dir, "events")
+    f = e.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("freq")
+    )
+    g = f.groupBy("freq").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    wcum = Window.orderBy("freq").rowsBetween(Window.unboundedPreceding, -1)
+    led = g.withColumn("p", F.coalesce(F.sum("c").over(wcum), F.lit(0)))
+    return led.agg(
+        F.sum("c").alias("_n"),
+        F.sum(F.col("freq") * F.col("c")).alias("_tot"),
+        F.sum(
+            F.col("freq") * F.col("c") * (2 * F.col("p") + F.col("c") + 1)
+        ).alias("_s2"),
+        F.min("freq").alias("_mn"),
+    ).select(
+        F.col("_n").cast("bigint").alias("n_keys"),
+        F.col("_tot").cast("bigint").alias("n_rows"),
+        (F.col("_tot") - F.col("_mn") * F.col("_n"))
+        .cast("bigint")
+        .alias("excess_mass"),
+        F.round(
+            (F.col("_s2") - (F.col("_n") + 1) * F.col("_tot")).cast("double")
+            / (F.col("_n").cast("double") * F.col("_tot")),
+            6,
+        ).alias("gini"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# skew: heavy-hitter census across log-spaced thresholds
+# ---------------------------------------------------------------------------
+
+SKEW_THRESH_BITS = 13  # thresholds 2^0 .. 2^12
+
+
+@query(
+    "skew_topk_threshold_sweep",
+    oracle=f"""
+        WITH per_key AS (
+            SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
+            FROM events GROUP BY user_id
+        ),
+        tot AS (SELECT CAST(SUM(n) AS BIGINT) AS n_total FROM per_key),
+        thresholds AS (
+            SELECT CAST(POWER(2, UNNEST(range(0, {SKEW_THRESH_BITS})))
+                        AS BIGINT) AS threshold
+        )
+        SELECT t.threshold,
+               CAST(COUNT(CASE WHEN p.n >= t.threshold THEN 1 END)
+                    AS BIGINT) AS n_hot_keys,
+               CAST(COALESCE(SUM(CASE WHEN p.n >= t.threshold
+                                      THEN p.n END), 0) AS BIGINT)
+                   AS events_covered,
+               ROUND(CAST(COALESCE(SUM(CASE WHEN p.n >= t.threshold
+                                             THEN p.n END), 0) AS DOUBLE)
+                     / MAX(tot.n_total), 6) AS coverage_share
+        FROM thresholds t CROSS JOIN per_key p CROSS JOIN tot
+        GROUP BY t.threshold
+    """,
+    tags=("events", "skew", "scale", "report"),
+)
+def skew_topk_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HEAVY-HITTER THRESHOLD SWEEP: for every log-spaced cutoff 2⁰…2¹²,
+    how many keys carry at least that many events and what share of
+    ALL events they hold — the one-scan census that picks the salting
+    cutoff (keys above the chosen threshold get salted; the coverage
+    share is exactly the traffic the salting protects). Per-key counts
+    reduce first (one shuffle, map-side combined); the 13-threshold
+    sweep then runs over the KEY-COUNT frame (users-sized, never
+    events-sized) as one small cross join. Exact integers + one final
+    division (Gini form of the same census:
+    ``skew_key_gini_imbalance``; the plan it feeds:
+    ``skew_salt_factor_plan``)."""
+    e = load_table(spark, sf_dir, "events")
+    per_key = e.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    tot = per_key.agg(F.sum("n").cast("bigint").alias("n_total"))
+    thresholds = spark.range(SKEW_THRESH_BITS).select(
+        F.pow(2.0, F.col("id")).cast("bigint").alias("threshold")
+    )
+    hot = F.when(F.col("n") >= F.col("threshold"), F.col("n"))
+    return (
+        thresholds.crossJoin(per_key)
+        .crossJoin(F.broadcast(tot))
+        .groupBy("threshold")
+        .agg(
+            F.count(hot).cast("bigint").alias("n_hot_keys"),
+            F.coalesce(F.sum(hot), F.lit(0)).cast("bigint").alias(
+                "events_covered"
+            ),
+            F.round(
+                F.coalesce(F.sum(hot), F.lit(0)).cast("double")
+                / F.max("n_total"),
+                6,
+            ).alias("coverage_share"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# skew: salt effectiveness on the hottest key
+# ---------------------------------------------------------------------------
+
+SALT_N = 8
+
+
+@query(
+    "skew_salt_effectiveness",
+    oracle=f"""
+        WITH counts AS (
+            SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
+            FROM events GROUP BY user_id
+        ),
+        hot AS (
+            SELECT user_id FROM counts
+            ORDER BY n DESC, user_id ASC LIMIT 1
+        ),
+        salted AS (
+            SELECT CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8))
+                        AS BIGINT) % {SALT_N} AS salt,
+                   CAST(COUNT(*) AS BIGINT) AS n
+            FROM events WHERE user_id = (SELECT user_id FROM hot)
+            GROUP BY salt
+        ),
+        spine AS (SELECT UNNEST(range({SALT_N})) AS salt),
+        j AS (
+            SELECT spine.salt, COALESCE(salted.n, 0) AS n
+            FROM spine LEFT JOIN salted ON salted.salt = spine.salt
+        ),
+        m AS (SELECT CAST(MAX(n) AS BIGINT) AS mx, CAST(MIN(n) AS BIGINT) AS mn,
+                     CAST(SUM(n) AS BIGINT) AS tot FROM j)
+        SELECT CAST(j.salt AS BIGINT) AS salt, j.n,
+               m.mx AS max_shard, m.mn AS min_shard,
+               ROUND(CAST(m.mx AS DOUBLE) * {SALT_N} / m.tot, 6)
+                   AS max_over_ideal
+        FROM j, m
+    """,
+    tags=("skew", "scale", "events"),
+)
+def skew_salt_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SALT EFFECTIVENESS report: take the HOTTEST key (max event
+    count, id tiebreak), shard it with the portable md5 salt
+    (mod SALT_N=8), and measure the result — per-shard counts on a
+    full salt spine (an empty shard must surface as 0, not vanish),
+    the max/min shard, and max-over-ideal (1.0 = perfectly even; the
+    number that says whether the salt actually flattened the hot
+    key). Complements ``skew_salt_factor_plan`` (chooses the factor)
+    and the salted join/agg exemplars (use it) with the post-hoc
+    effectiveness measurement. The hot-key selection is a
+    deterministic ORDER BY + LIMIT 1 on a keyed count — at 100 TB
+    this is the heavy-hitter output of the frequency profile, never a
+    sort of the raw table. Pure integers plus one final ratio."""
+    e = load_table(spark, sf_dir, "events")
+    counts = e.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    hot = counts.orderBy(F.col("n").desc(), F.col("user_id").asc()).limit(1)
+    from big_data_audio_classification_spark.operators.dedup import token_hash
+
+    salt = token_hash(F.col("event_id").cast("string")) % SALT_N
+    salted = (
+        e.join(F.broadcast(hot.select("user_id")), "user_id")
+        .select(salt.alias("salt"))
+        .groupBy("salt")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+    spine = spark.range(SALT_N).select(F.col("id").cast("bigint").alias("salt"))
+    j = spine.join(salted, "salt", "left").select(
+        "salt", F.coalesce("n", F.lit(0)).cast("bigint").alias("n")
+    )
+    m = j.agg(
+        F.max("n").cast("bigint").alias("max_shard"),
+        F.min("n").cast("bigint").alias("min_shard"),
+        F.sum("n").cast("bigint").alias("tot"),
+    )
+    return j.crossJoin(F.broadcast(m)).select(
+        "salt",
+        "n",
+        "max_shard",
+        "min_shard",
+        F.round(
+            F.col("max_shard").cast("double") * SALT_N / F.col("tot"), 6
+        ).alias("max_over_ideal"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# skew: top-key concentration profile
+# ---------------------------------------------------------------------------
+
+SKEW_TOPK = 10
+
+
+@query(
+    "skew_topk_key_share",
+    oracle=f"""
+        WITH cnt AS (
+            SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events
+            FROM events GROUP BY user_id
+        ),
+        tot AS (SELECT CAST(SUM(n_events) AS BIGINT) AS total FROM cnt),
+        rk AS (
+            SELECT user_id, n_events,
+                   CAST(ROW_NUMBER() OVER (ORDER BY n_events DESC, user_id)
+                        AS BIGINT) AS rk,
+                   CAST(SUM(n_events) OVER (ORDER BY n_events DESC, user_id
+                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+            FROM cnt
+        )
+        SELECT rk, user_id, n_events,
+               ROUND(CAST(n_events AS DOUBLE) / tot.total, 6) AS share,
+               ROUND(CAST(cum AS DOUBLE) / tot.total, 6) AS cum_share
+        FROM rk, tot WHERE rk <= {SKEW_TOPK}
+    """,
+    tags=("skew", "scale", "topk", "events"),
+)
+def skew_topk_key_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOP-KEY CONCENTRATION profile: the 10 heaviest user_ids with
+    per-key and CUMULATIVE share of all events — the skew diagnosis
+    that decides whether a shuffle needs salting (cum_share(10) ≈ 1
+    means ten keys own the stage; the distribution-level siblings:
+    ``skew_key_gini_imbalance`` for the Gini, ``skew_salt_
+    effectiveness`` for the fix's effect). Counts and the running
+    cumulative are exact integers (the int-window-sum is BIGINT-cast
+    on the oracle side — the r05 HUGEINT fetch class); shares are
+    one division each off the exact total. Full (count, user_id)
+    tiebreak. 100 TB: one map-side-combinable count + a 10-row
+    top-k — the profile itself never shuffles the fact table
+    twice."""
+    e = load_table(spark, sf_dir, "events")
+    cnt = e.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_events")
+    )
+    tot = cnt.agg(F.sum("n_events").cast("bigint").alias("total"))
+    w = Window.orderBy(F.col("n_events").desc(), "user_id")
+    wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    rk = cnt.select(
+        F.row_number().over(w).cast("bigint").alias("rk"),
+        "user_id",
+        "n_events",
+        F.sum("n_events").over(wc).cast("bigint").alias("cum"),
+    )
+    return (
+        rk.filter(F.col("rk") <= SKEW_TOPK)
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "rk",
+            "user_id",
+            "n_events",
+            F.round(F.col("n_events").cast("double") / F.col("total"), 6)
+            .alias("share"),
+            F.round(F.col("cum").cast("double") / F.col("total"), 6)
+            .alias("cum_share"),
         )
     )

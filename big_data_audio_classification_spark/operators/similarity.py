@@ -1962,3 +1962,634 @@ def sim_ivf_centroid_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sizes.join(moved, "cell_id").select(
         "cell_id", "n_members", F.round("movement", 6).alias("movement")
     )
+
+
+# ---------------------------------------------------------------------------
+# ivf: second-choice margin per cell (quantization confidence)
+# ---------------------------------------------------------------------------
+
+_IVF_CELLS = IVF_CELLS  # the name the margin query's source uses
+
+
+@query(
+    "sim_ivf_second_choice_margin",
+    oracle=f"""
+        WITH c AS (SELECT vec_id AS cell_id, embedding FROM embeddings
+                   WHERE vec_id < {_IVF_CELLS}),
+        d AS (
+            SELECT e.vec_id, c.cell_id,
+                   list_sum(list_transform(list_zip(c.embedding, e.embedding),
+                            p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
+                               * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))
+                       AS d2
+            FROM embeddings e CROSS JOIN c
+        ),
+        r AS (
+            SELECT vec_id, cell_id, SQRT(d2) AS dist,
+                   ROW_NUMBER() OVER (PARTITION BY vec_id
+                                      ORDER BY d2, cell_id) AS rn
+            FROM d
+        ),
+        m AS (
+            SELECT vec_id,
+                   MAX(CASE WHEN rn = 1 THEN cell_id END) AS cell_id,
+                   MAX(CASE WHEN rn = 2 THEN dist END)
+                       - MAX(CASE WHEN rn = 1 THEN dist END) AS margin
+            FROM r WHERE rn <= 2 GROUP BY vec_id
+        ),
+        cells AS (
+            SELECT cell_id,
+                   CAST(COUNT(*) AS BIGINT)       AS n_vectors,
+                   list(margin ORDER BY vec_id)   AS ms,
+                   MIN(margin)                    AS min_margin,
+                   CAST(SUM(CASE WHEN margin < 0.5 THEN 1 ELSE 0 END)
+                        AS BIGINT)                AS n_ambiguous
+            FROM m GROUP BY cell_id
+        )
+        SELECT cell_id, n_vectors,
+               ROUND(list_sum(ms) / n_vectors, 6) AS mean_margin,
+               ROUND(min_margin, 6)               AS min_margin,
+               n_ambiguous
+        FROM cells
+    """,
+    tags=("similarity", "ivf", "embeddings"),
+)
+def sim_ivf_second_choice_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF SECOND-CHOICE MARGIN per cell: the gap d₂−d₁ between each
+    vector's nearest and second-nearest coarse centroid — the
+    quantization-confidence statistic that directly predicts how much
+    recall nprobe=1 loses (vectors with small margins are the ones a
+    single-probe search misassigns; cell sizes alone —
+    ``sim_ivf_cell_balance`` — can't see this). Broadcast the
+    centroids, map-only distance scoring, one rank window per vector,
+    then an O(cells)-row aggregate; per-vector margins are
+    deterministic row-local floats and the per-cell MEAN runs as a
+    vec_id-ordered SEQUENTIAL in-row fold (an engine-side AVG across
+    rows is summation-order-dependent — the audio_energy_flatness
+    lesson applied before certification this time); min and the
+    threshold count are order-free. The margin threshold (0.5) counts
+    the ambiguous population per cell. At 100 TB cap the per-cell
+    margin array or histogram the margins instead."""
+    from big_data_audio_classification_spark.functions.vector import (
+        l2_dist_sq,
+        to_double,
+    )
+
+    em = load_table(spark, sf_dir, "embeddings")
+    cents = em.filter(F.col("vec_id") < _IVF_CELLS).select(
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("c_emb")
+    )
+    d2 = l2_dist_sq(to_double(F.col("c_emb")), to_double(F.col("embedding")))
+    scored = em.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "cell_id", d2.alias("d2s")
+    )
+    w = Window.partitionBy("vec_id").orderBy("d2s", "cell_id")
+    r = scored.select(
+        "vec_id", "cell_id", F.sqrt("d2s").alias("dist"),
+        F.row_number().over(w).alias("rn"),
+    ).filter(F.col("rn") <= 2)
+    m = r.groupBy("vec_id").agg(
+        F.max(F.when(F.col("rn") == 1, F.col("cell_id"))).alias("cell_id"),
+        (
+            F.max(F.when(F.col("rn") == 2, F.col("dist")))
+            - F.max(F.when(F.col("rn") == 1, F.col("dist")))
+        ).alias("margin"),
+    )
+    cells = m.groupBy("cell_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("vec_id", "margin"))),
+            lambda s: s.getField("margin"),
+        ).alias("ms"),
+        F.min("margin").alias("min_margin"),
+        F.sum(F.when(F.col("margin") < 0.5, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_ambiguous"),
+    )
+    mean_margin = (
+        F.aggregate(F.col("ms"), F.lit(0.0), lambda acc, p: acc + p)
+        / F.col("n_vectors")
+    )
+    return cells.select(
+        "cell_id",
+        "n_vectors",
+        F.round(mean_margin, 6).alias("mean_margin"),
+        F.round("min_margin", 6).alias("min_margin"),
+        "n_ambiguous",
+    )
+
+
+# ---------------------------------------------------------------------------
+# ivf: nprobe cost model from the probe schedule x cell sizes
+# ---------------------------------------------------------------------------
+
+IVF_COST_QUERY_MOD = 40
+
+
+def _ivf_cost_sql() -> str:
+    from big_data_audio_classification_spark.operators.similarity import IVF_CELLS
+
+    return f"""
+        WITH c AS (SELECT vec_id AS cell_id, embedding FROM embeddings
+                   WHERE vec_id < {IVF_CELLS}),
+        d AS (
+            SELECT e.vec_id, c.cell_id,
+                   list_sum(list_transform(list_zip(c.embedding, e.embedding),
+                            p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
+                               * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))
+                       AS d2
+            FROM embeddings e CROSS JOIN c
+        ),
+        assign AS (
+            SELECT vec_id, cell_id FROM (
+                SELECT vec_id, cell_id,
+                       ROW_NUMBER() OVER (PARTITION BY vec_id
+                                          ORDER BY d2, cell_id) AS rn
+                FROM d) WHERE rn = 1
+        ),
+        sizes AS (SELECT cell_id, CAST(COUNT(*) AS BIGINT) AS sz
+                  FROM assign GROUP BY cell_id),
+        sched AS (
+            SELECT vec_id, cell_id,
+                   ROW_NUMBER() OVER (PARTITION BY vec_id
+                                      ORDER BY d2, cell_id) AS probe_rank
+            FROM d WHERE vec_id % {IVF_COST_QUERY_MOD} = 0
+        )
+        SELECT CAST(p.nprobe AS BIGINT) AS nprobe,
+               CAST(COUNT(DISTINCT s.vec_id) AS BIGINT)  AS n_queries,
+               CAST(SUM(z.sz) AS BIGINT)                 AS total_scanned,
+               CAST(SUM(z.sz) // COUNT(DISTINCT s.vec_id) AS BIGINT)
+                                                         AS avg_scanned
+        FROM sched s
+        JOIN sizes z ON z.cell_id = s.cell_id,
+             (SELECT UNNEST(range(1, 5)) AS nprobe) p
+        WHERE s.probe_rank <= p.nprobe
+        GROUP BY p.nprobe
+    """
+
+
+@query(
+    "sim_ivf_nprobe_cost_model",
+    oracle=_ivf_cost_sql(),
+    tags=("similarity", "ivf", "embeddings"),
+)
+def sim_ivf_nprobe_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF nprobe COST MODEL: for nprobe = 1..4, the exact number of
+    vectors a probe-limited search scans (probe schedule × actual cell
+    populations) — the latency side of the recall/latency trade whose
+    recall side is ``sim_ivf_nprobe_sweep`` (r05) and whose schedule is
+    ``sim_ivf_probe_schedule`` (r07 window). Broadcast centroids,
+    map-only assignment, the ≤4-row-per-query schedule joined to the
+    8-row size table — all integer counts, output = 4 rows."""
+    from big_data_audio_classification_spark.functions.vector import (
+        l2_dist_sq,
+        to_double,
+    )
+    from big_data_audio_classification_spark.operators.similarity import IVF_CELLS
+
+    em = load_table(spark, sf_dir, "embeddings")
+    cents = em.filter(F.col("vec_id") < IVF_CELLS).select(
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("c_emb")
+    )
+    d2 = l2_dist_sq(to_double(F.col("c_emb")), to_double(F.col("embedding")))
+    scored = em.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "cell_id", d2.alias("d2s")
+    )
+    w = Window.partitionBy("vec_id").orderBy("d2s", "cell_id")
+    ranked = scored.select(
+        "vec_id", "cell_id", F.row_number().over(w).alias("rn")
+    )
+    assign = ranked.filter(F.col("rn") == 1)
+    sizes = assign.groupBy("cell_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("sz")
+    )
+    sched = ranked.filter(F.col("vec_id") % IVF_COST_QUERY_MOD == 0).select(
+        "vec_id", "cell_id", F.col("rn").alias("probe_rank")
+    )
+    nprobes = F.broadcast(
+        spark.range(1, 5).select(F.col("id").alias("nprobe"))
+    )
+    return (
+        sched.join(F.broadcast(sizes), "cell_id")
+        .crossJoin(nprobes)
+        .filter(F.col("probe_rank") <= F.col("nprobe"))
+        .groupBy(F.col("nprobe").cast("bigint").alias("nprobe"))
+        .agg(
+            F.countDistinct("vec_id").cast("bigint").alias("n_queries"),
+            F.sum("sz").cast("bigint").alias("total_scanned"),
+            # floor division on BOTH engines: a bare double->bigint cast
+            # truncates on Spark but rounds on DuckDB
+            F.floor(F.sum("sz") / F.countDistinct("vec_id"))
+            .cast("bigint")
+            .alias("avg_scanned"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# similarity/ivf: per-cell quantization residual energy
+# ---------------------------------------------------------------------------
+
+
+def _ivf_residual_sql() -> str:
+    from big_data_audio_classification_spark.operators.similarity import (
+        IVF_CELLS,
+    )
+
+    return f"""
+        WITH c AS (SELECT vec_id AS cell_id, embedding FROM embeddings
+                   WHERE vec_id < {IVF_CELLS}),
+        d AS (
+            SELECT b.vec_id, a.cell_id,
+                   list_sum(list_transform(list_zip(a.embedding, b.embedding),
+                            p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
+                               * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))
+                       AS d2
+            FROM c a CROSS JOIN embeddings b
+        ),
+        assign AS (
+            SELECT vec_id, cell_id, d2
+            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                            ORDER BY d2, cell_id) AS rn FROM d)
+            WHERE rn = 1
+        ),
+        agg AS (
+            SELECT cell_id,
+                   CAST(COUNT(*) AS BIGINT) AS n_vecs,
+                   list_sum(list(d2 ORDER BY vec_id)) AS sum_d2,
+                   list_sort(list(d2)) AS sorted_d2
+            FROM assign GROUP BY cell_id
+        )
+        SELECT cell_id, n_vecs,
+               ROUND(sum_d2 / n_vecs, 6)                         AS mean_sq_residual,
+               ROUND(sorted_d2[(95 * n_vecs + 99) // 100], 6)    AS p95_sq_residual
+        FROM agg
+    """
+
+
+@query(
+    "sim_ivf_residual_energy",
+    oracle=_ivf_residual_sql(),
+    tags=("similarity", "ivf", "report", "embeddings"),
+)
+def sim_ivf_residual_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF QUANTIZATION-RESIDUAL energy per cell: mean and p95 of the
+    squared distance to the assigned coarse centroid — the number that
+    prices how much recall an IVF(+PQ) index will lose to coarse
+    quantization BEFORE building it (population balance is the other
+    axis: ``sim_ivf_cell_balance`` r06). The per-vector d2 is the
+    in-row fixed-order fold both engines share; the per-cell MEAN is a
+    SEQUENTIAL vec_id-ordered fold (Spark ``aggregate(array_sort(
+    collect_list(...)))`` vs DuckDB ``list_sum(list(d2 ORDER BY
+    vec_id))`` — the deterministic-summation idiom, since a cross-row
+    float SUM is partition-order-dependent); p95 is an exact-rank
+    ELEMENT of the sorted list (selected, never averaged). Broadcast
+    centroids, one keyed aggregate; O(cells) output rows. At 100 TB
+    the collect_list bound is the cell population — swap for the
+    two-phase histogram quantile if cells exceed executor frames."""
+    from big_data_audio_classification_spark.operators.similarity import (
+        IVF_CELLS,
+        l2_dist_sq,
+        to_double,
+    )
+
+    em = load_table(spark, sf_dir, "embeddings")
+    cents = em.filter(F.col("vec_id") < IVF_CELLS).select(
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("c_emb")
+    )
+    d2 = l2_dist_sq(to_double(F.col("c_emb")), to_double(F.col("embedding")))
+    scored = em.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "cell_id", d2.alias("d2")
+    )
+    w = Window.partitionBy("vec_id").orderBy("d2", "cell_id")
+    assign = (
+        scored.select("*", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "cell_id", "d2")
+    )
+    agg = assign.groupBy("cell_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
+        F.aggregate(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("vec_id", "d2"))),
+                lambda s: s["d2"],
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("sum_d2"),
+        F.array_sort(F.collect_list("d2")).alias("sorted_d2"),
+    )
+    p95_idx = F.expr("(95 * n_vecs + 99) DIV 100").cast("int")
+    return agg.select(
+        "cell_id",
+        "n_vecs",
+        F.round(F.col("sum_d2") / F.col("n_vecs"), 6).alias(
+            "mean_sq_residual"
+        ),
+        F.round(F.element_at("sorted_d2", p95_idx), 6).alias(
+            "p95_sq_residual"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ivf: split/merge maintenance plan from cell occupancy
+# ---------------------------------------------------------------------------
+
+SPLIT_RATIO = 2.0  # occupancy > 2x mean -> split candidate
+MERGE_RATIO = 0.5  # occupancy < 0.5x mean -> merge candidate
+
+
+def _ivf_split_merge_sql() -> str:
+    from big_data_audio_classification_spark.operators.similarity import (
+        IVF_CELLS,
+    )
+
+    return f"""
+        WITH c AS (SELECT vec_id AS cell_id, embedding FROM embeddings
+                   WHERE vec_id < {IVF_CELLS}),
+        d AS (
+            SELECT b.vec_id, a.cell_id,
+                   list_sum(list_transform(list_zip(a.embedding, b.embedding),
+                            p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
+                               * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))
+                       AS d2
+            FROM c a CROSS JOIN embeddings b
+        ),
+        assign AS (
+            SELECT vec_id, cell_id
+            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                            ORDER BY d2, cell_id) AS rn FROM d)
+            WHERE rn = 1
+        ),
+        occ AS (
+            SELECT c.cell_id,
+                   CAST(COUNT(a.vec_id) AS BIGINT) AS n_vecs
+            FROM c LEFT JOIN assign a ON a.cell_id = c.cell_id
+            GROUP BY c.cell_id
+        ),
+        tot AS (SELECT CAST(SUM(n_vecs) AS BIGINT) AS n_total,
+                       CAST(COUNT(*) AS BIGINT)    AS n_cells
+                FROM occ)
+        SELECT cell_id, n_vecs,
+               ROUND(CAST(n_vecs AS DOUBLE) * n_cells / n_total, 6)
+                   AS occupancy_ratio,
+               CASE WHEN CAST(n_vecs AS DOUBLE) * n_cells
+                         > {SPLIT_RATIO} * n_total THEN 'split'
+                    WHEN CAST(n_vecs AS DOUBLE) * n_cells
+                         < {MERGE_RATIO} * n_total THEN 'merge'
+                    ELSE 'keep' END AS action
+        FROM occ, tot
+    """
+
+
+@query(
+    "sim_ivf_split_merge_plan",
+    oracle=_ivf_split_merge_sql(),
+    tags=("similarity", "ivf", "report", "embeddings"),
+)
+def sim_ivf_split_merge_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF INDEX-MAINTENANCE PLAN: assign every vector to its nearest
+    coarse cell, then flag each cell for SPLIT (occupancy > 2x the
+    mean), MERGE (< 0.5x), or KEEP — the rebalancing decision an IVF
+    index runs between builds (skewed cells destroy the nprobe/recall
+    trade the sweep carriers measure; ``sim_ivf_cell_balance`` reports
+    the skew, this op turns it into the action list). Assignment is
+    the house broadcast-centroid + bit-identical in-row d2 fold +
+    deterministic rank; occupancy is one keyed count over a cell
+    SPINE (an empty cell must surface as a 'merge' row, not vanish —
+    LEFT JOIN from the centroid set). The threshold comparisons are
+    INTEGER cross-products (n·cells vs ratio·total — no float
+    boundary hazard); occupancy_ratio is one float division of exact
+    counts. O(cells) output rows at any corpus size."""
+    from big_data_audio_classification_spark.functions.vector import (
+        l2_dist_sq,
+        to_double,
+    )
+    from big_data_audio_classification_spark.operators.similarity import (
+        IVF_CELLS,
+    )
+
+    em = load_table(spark, sf_dir, "embeddings")
+    cents = em.filter(F.col("vec_id") < IVF_CELLS).select(
+        F.col("vec_id").alias("cell_id"),
+        F.col("embedding").alias("c_emb"),
+    )
+    d2 = l2_dist_sq(to_double(F.col("c_emb")), to_double(F.col("embedding")))
+    scored = em.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "cell_id", d2.alias("d2")
+    )
+    w = Window.partitionBy("vec_id").orderBy("d2", "cell_id")
+    assign = (
+        scored.select("*", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "cell_id")
+    )
+    spine = cents.select("cell_id")
+    occ = (
+        spine.join(assign, "cell_id", "left")
+        .groupBy("cell_id")
+        .agg(F.count("vec_id").cast("bigint").alias("n_vecs"))
+    )
+    tot = occ.agg(
+        F.sum("n_vecs").cast("bigint").alias("n_total"),
+        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
+    )
+    nd = F.col("n_vecs").cast("double")
+    return occ.crossJoin(F.broadcast(tot)).select(
+        "cell_id",
+        "n_vecs",
+        F.round(nd * F.col("n_cells") / F.col("n_total"), 6).alias(
+            "occupancy_ratio"
+        ),
+        F.when(
+            nd * F.col("n_cells") > SPLIT_RATIO * F.col("n_total"), "split"
+        )
+        .when(nd * F.col("n_cells") < MERGE_RATIO * F.col("n_total"), "merge")
+        .otherwise("keep")
+        .alias("action"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ivf: per-cell radius profile (quantization-quality dashboard)
+# ---------------------------------------------------------------------------
+
+
+def _ivf_radius_sql() -> str:
+    from big_data_audio_classification_spark.operators.similarity import (
+        IVF_CELLS,
+    )
+
+    return f"""
+        WITH c AS (SELECT vec_id AS cell_id, embedding FROM embeddings
+                   WHERE vec_id < {IVF_CELLS}),
+        d AS (
+            SELECT b.vec_id, a.cell_id,
+                   list_sum(list_transform(list_zip(a.embedding, b.embedding),
+                            p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
+                               * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))
+                       AS d2
+            FROM c a CROSS JOIN embeddings b
+        ),
+        assigned AS (
+            SELECT vec_id, cell_id, d2
+            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                            ORDER BY d2, cell_id) AS rn FROM d)
+            WHERE rn = 1
+        )
+        SELECT CAST(cell_id AS BIGINT) AS cell_id,
+               CAST(COUNT(*) AS BIGINT) AS n_members,
+               ROUND(MAX(d2), 6) AS max_d2,
+               ROUND(list_sum(list(d2 ORDER BY vec_id)) / COUNT(*), 6)
+                   AS mean_d2
+        FROM assigned GROUP BY cell_id
+    """
+
+
+@query(
+    "sim_ivf_cell_radius_profile",
+    oracle=_ivf_radius_sql(),
+    tags=("similarity", "ivf", "report", "embeddings"),
+)
+def sim_ivf_cell_radius_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF CELL RADIUS profile — the quantization-quality dashboard
+    read before trusting an nprobe setting: per cell, member count,
+    max squared distance (the cell radius that bounds how far a
+    true neighbor can hide) and mean squared distance (the
+    quantization error a PQ refinement would shave). Complements
+    ``sim_ivf_cell_balance`` (counts only) and
+    ``sim_ivf_residual_energy`` (vector residual sums) with the
+    DISTANCE distribution. Assignment is the house broadcast-
+    centroid argmin (d2 + cell_id tiebreak); each d2 is the in-row
+    SEQUENTIAL zip fold (index order, both engines); the cross-member
+    mean folds vec_id-ordered — never an engine-order float sum.
+    ``+ 0`` unneeded: d2 >= 0 and a zero mean is exactly +0.0 on both
+    engines (no negative rounding path). 100 TB: map-only scoring
+    against |cells| broadcast centroids, one cell-keyed aggregate;
+    the ordered fold becomes a two-level chunk fold at extreme cell
+    sizes (cell_balance flags those first)."""
+    from big_data_audio_classification_spark.functions.vector import (
+        l2_dist_sq,
+        to_double,
+    )
+    from big_data_audio_classification_spark.operators.similarity import (
+        IVF_CELLS,
+    )
+
+    em = load_table(spark, sf_dir, "embeddings")
+    cents = em.filter(F.col("vec_id") < IVF_CELLS).select(
+        F.col("vec_id").alias("cell_id"), F.col("embedding").alias("c_emb")
+    )
+    d2 = l2_dist_sq(to_double(F.col("c_emb")), to_double(F.col("embedding")))
+    scored = em.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "cell_id", d2.alias("d2")
+    )
+    w = Window.partitionBy("vec_id").orderBy("d2", "cell_id")
+    assigned = (
+        scored.select("*", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "cell_id", "d2")
+    )
+    ordered = F.transform(
+        F.array_sort(F.collect_list(F.struct("vec_id", "d2"))),
+        lambda s: s["d2"],
+    )
+    agg = assigned.groupBy("cell_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_members"),
+        F.max("d2").alias("mx"),
+        F.aggregate(ordered, F.lit(0.0), lambda a, x: a + x).alias("s"),
+    )
+    return agg.select(
+        F.col("cell_id").cast("bigint").alias("cell_id"),
+        "n_members",
+        F.round("mx", 6).alias("max_d2"),
+        F.round(F.col("s") / F.col("n_members"), 6).alias("mean_d2"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ivf: coarse-centroid geometry report
+# ---------------------------------------------------------------------------
+
+
+def _centroid_geometry_sql() -> str:
+    from big_data_audio_classification_spark.operators.similarity import (
+        IVF_CELLS,
+    )
+
+    return f"""
+        WITH c AS (SELECT vec_id AS cell_id, embedding FROM embeddings
+                   WHERE vec_id < {IVF_CELLS}),
+        pairs AS (
+            SELECT a.cell_id AS ca, b.cell_id AS cb,
+                   list_sum(list_transform(list_zip(a.embedding, b.embedding),
+                            p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
+                               * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))
+                       AS d2
+            FROM c a JOIN c b ON a.cell_id <> b.cell_id
+        ),
+        per AS (
+            SELECT ca AS cell_id,
+                   MIN(d2) AS min_d2, MAX(d2) AS max_d2
+            FROM pairs GROUP BY ca
+        ),
+        diam AS (SELECT MAX(d2) AS diam_d2 FROM pairs)
+        SELECT cell_id,
+               ROUND(SQRT(min_d2), 6) AS nn_dist,
+               ROUND(SQRT(max_d2), 6) AS far_dist,
+               ROUND(SQRT(diam.diam_d2), 6) AS diameter
+        FROM per, diam
+    """
+
+
+@query(
+    "sim_ivf_centroid_geometry",
+    oracle=_centroid_geometry_sql(),
+    tags=("similarity", "ivf", "report", "embeddings"),
+)
+def sim_ivf_centroid_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """COARSE-CENTROID GEOMETRY report: per-centroid nearest-neighbor
+    and farthest-neighbor L2 distance plus the codebook diameter —
+    the codebook-quality view that predicts IVF probe waste (two
+    centroids closer than a typical cell radius split one true
+    cluster across cells, so nprobe=1 recall craters; siblings:
+    ``sim_ivf_cell_balance`` for population, ``sim_ivf_cell_radius_
+    profile`` for residuals). Each pairwise distance folds the 64
+    dims IN INDEX ORDER on both engines (zip_with/aggregate vs
+    list_zip/list_sum — deterministic same-order sums of identical
+    doubles); MIN/MAX over the 7 neighbor distances are order-free,
+    and sqrt commutes with both (monotone), so it runs once on the
+    selected d2. 100 TB: the centroid set is O(cells) rows —
+    the whole report is a broadcast-sized crunch independent of
+    corpus size."""
+    from big_data_audio_classification_spark.functions.vector import (
+        l2_dist_sq,
+        to_double,
+    )
+    from big_data_audio_classification_spark.operators.similarity import (
+        IVF_CELLS,
+    )
+
+    em = load_table(spark, sf_dir, "embeddings")
+    c = em.filter(F.col("vec_id") < IVF_CELLS).select(
+        F.col("vec_id").alias("cell_id"),
+        to_double(F.col("embedding")).alias("emb"),
+    )
+    a = c.select(F.col("cell_id").alias("ca"), F.col("emb").alias("ea"))
+    b = c.select(F.col("cell_id").alias("cb"), F.col("emb").alias("eb"))
+    d2 = l2_dist_sq(F.col("ea"), F.col("eb"))
+    pairs = (
+        a.join(b, F.col("ca") != F.col("cb"))
+        .select("ca", "cb", d2.alias("d2"))
+    )
+    per = pairs.groupBy(F.col("ca").alias("cell_id")).agg(
+        F.min("d2").alias("min_d2"), F.max("d2").alias("max_d2")
+    )
+    diam = pairs.agg(F.max("d2").alias("diam_d2"))
+    return per.crossJoin(F.broadcast(diam)).select(
+        "cell_id",
+        F.round(F.sqrt("min_d2"), 6).alias("nn_dist"),
+        F.round(F.sqrt("max_d2"), 6).alias("far_dist"),
+        F.round(F.sqrt("diam_d2"), 6).alias("diameter"),
+    )

@@ -1873,95 +1873,686 @@ def text_tfidf_field_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AD_DISCOUNT_NUM = 3  # absolute discount D = 3/4 (exact rational)
-AD_DISCOUNT_DEN = 4
-AD_PROBE_TOP = 12    # report the most frequent bigrams
+# ---------------------------------------------------------------------------
+# text / tfidf / topk: BM25 ranking with a fixed conjunctive query
+# ---------------------------------------------------------------------------
+
+BM25_TERMS = ("table", "query", "spark")
+BM25_K1 = 1.2
+BM25_B = 0.75
+BM25_TOPK = 10
+
+
+def _bm25_sql() -> str:
+    t1, t2, t3 = BM25_TERMS
+    tf_cols = ", ".join(
+        f"CAST(SUM(CASE WHEN tok = '{t}' THEN 1 ELSE 0 END) AS BIGINT) AS tf{i}"
+        for i, t in enumerate(BM25_TERMS, 1)
+    )
+    df_cols = ", ".join(
+        f"CAST(SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df{i}"
+        for i in range(1, 4)
+    )
+    # per-term score written as ONE shared expression template so both
+    # engines evaluate the identical float DAG
+    score = " + ".join(
+        f"""(LN(1.0 + (n_docs - df{i} + 0.5) / (df{i} + 0.5))
+             * (tf{i} * ({BM25_K1} + 1.0))
+             / (tf{i} + {BM25_K1} * (1.0 - {BM25_B} + {BM25_B} * dl / avgdl)))"""
+        for i in range(1, 4)
+    )
+    return f"""
+        WITH toks AS (
+            SELECT doc_id,
+                   UNNEST(list_filter(string_split(text, ' '),
+                                      t -> t <> '')) AS tok
+            FROM documents
+        ),
+        per_doc AS (
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl, {tf_cols}
+            FROM toks GROUP BY doc_id
+        ),
+        corpus AS (
+            SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
+                   CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl, {df_cols}
+            FROM per_doc
+        ),
+        scored AS (
+            SELECT doc_id, dl, tf1, tf2, tf3,
+                   ROUND({score}, 6) AS bm25
+            FROM per_doc, corpus
+            WHERE tf1 + tf2 + tf3 > 0
+        )
+        SELECT doc_id, dl, tf1, tf2, tf3, bm25,
+               CAST(rn AS BIGINT) AS rank
+        FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS rn
+              FROM scored)
+        WHERE rn <= {BM25_TOPK}
+    """
 
 
 @query(
-    "text_lm_absolute_discount",
+    "text_bm25_rank",
+    oracle=_bm25_sql(),
+    tags=("text", "tfidf", "topk", "documents"),
+)
+def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 ranking (k1=1.2, b=0.75) for a fixed 3-term query — the
+    retrieval scoring function that superseded raw tf-idf (Robertson/
+    Okapi; the Lucene default). Everything upstream of the score is
+    EXACT integers (tf per term via conditional aggregation — no
+    pivot shuffle; dl; df; N), and the score itself is ONE shared
+    float expression template with the three per-term contributions
+    summed in FIXED textual order on both engines — the bit-stability
+    discipline for float scoring. Corpus stats are a 1-row broadcast;
+    top-k is a rank over scored docs only (zero-match docs pruned
+    before the sort). tf-idf siblings: ``text_tfidf_query_rank``
+    (r06), ``text_tfidf_field_boost`` (stock)."""
+    from big_data_audio_classification_spark.operators.dedup import tokens_col
+
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select("doc_id", F.explode(tokens_col(F.col("text"))).alias("tok"))
+    tf_aggs = [
+        F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
+        .cast("bigint")
+        .alias(f"tf{i}")
+        for i, t in enumerate(BM25_TERMS, 1)
+    ]
+    per_doc = toks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("dl"), *tf_aggs
+    )
+    corpus = per_doc.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+        *[
+            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0))
+            .cast("double")
+            .alias(f"df{i}")
+            for i in range(1, 4)
+        ],
+    )
+    def term_score(i: int):
+        tf = F.col(f"tf{i}")
+        df = F.col(f"df{i}")
+        idf = F.log(1.0 + (F.col("n_docs") - df + 0.5) / (df + 0.5))
+        return (
+            idf
+            * (tf * (BM25_K1 + 1.0))
+            / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")))
+        )
+
+    scored = (
+        per_doc.crossJoin(F.broadcast(corpus))
+        .filter(F.col("tf1") + F.col("tf2") + F.col("tf3") > 0)
+        .select(
+            "doc_id", "dl", "tf1", "tf2", "tf3",
+            F.round(term_score(1) + term_score(2) + term_score(3), 6).alias(
+                "bm25"
+            ),
+        )
+    )
+    w = Window.orderBy(F.col("bm25").desc(), "doc_id")
+    return (
+        scored.select("*", F.row_number().over(w).cast("bigint").alias("rank"))
+        .filter(F.col("rank") <= BM25_TOPK)
+    )
+
+
+# ---------------------------------------------------------------------------
+# tfidf: corpus rarity profile (idf histogram)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "text_tfidf_rarity_profile",
+    oracle="""
+        WITH toks AS (
+            SELECT DISTINCT doc_id,
+                   UNNEST(list_filter(string_split(text, ' '),
+                                      t -> t <> '')) AS tok
+            FROM documents
+        ),
+        df AS (
+            SELECT tok, CAST(COUNT(*) AS BIGINT) AS df
+            FROM toks GROUP BY tok
+        ),
+        n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs
+              FROM toks)
+        SELECT CAST(FLOOR(LN(n.n_docs / df.df)) AS BIGINT) AS idf_bucket,
+               CAST(COUNT(*) AS BIGINT)                    AS n_terms,
+               CAST(MIN(df.df) AS BIGINT)                  AS min_df,
+               CAST(MAX(df.df) AS BIGINT)                  AS max_df
+        FROM df, n
+        GROUP BY FLOOR(LN(n.n_docs / df.df))
+    """,
+    tags=("text", "tfidf", "documents"),
+)
+def text_tfidf_rarity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CORPUS RARITY PROFILE: vocabulary histogrammed by ⌊idf⌋ — how
+    much of the vocabulary is common glue (idf≈0) vs discriminative
+    tail — the first diagnostic before committing tf-idf/BM25 weights
+    or a stop-list (scorers: ``text_bm25_rank``,
+    ``text_tfidf_query_rank`` r06). df counts are exact integers from
+    one DISTINCT(doc,term) pass; idf is one LN per TERM (deterministic
+    row-local float) floored into integer buckets, so the output is
+    integer-exact. Map-side-combined; output = O(distinct buckets)."""
+    from big_data_audio_classification_spark.operators.dedup import tokens_col
+
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
+    ).distinct()
+    df = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+    n = toks.agg(F.countDistinct("doc_id").cast("double").alias("n_docs"))
+    return (
+        df.crossJoin(F.broadcast(n))
+        .groupBy(
+            F.floor(F.log(F.col("n_docs") / F.col("df")))
+            .cast("bigint")
+            .alias("idf_bucket")
+        )
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_terms"),
+            F.min("df").cast("bigint").alias("min_df"),
+            F.max("df").cast("bigint").alias("max_df"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# text/tfidf: pivoted length normalization (Singhal) query scoring
+# ---------------------------------------------------------------------------
+
+PIV_S = 0.2  # pivot slope (the Singhal et al. default)
+PIV_TERMS = ("table", "query", "stream")
+PIV_TOPK = 10
+
+
+def _pivoted_sql() -> str:
+    tf_cols = ", ".join(
+        f"CAST(SUM(CASE WHEN tok = '{t}' THEN 1 ELSE 0 END) AS BIGINT) AS tf{i}"
+        for i, t in enumerate(PIV_TERMS, 1)
+    )
+    df_cols = ", ".join(
+        f"CAST(SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df{i}"
+        for i in range(1, 4)
+    )
+    score = " + ".join(
+        f"""(tf{i} / ((1.0 - {PIV_S}) + {PIV_S} * dl / avgdl))
+               * LN((n_docs + 1.0) / df{i})"""
+        for i in range(1, 4)
+    )
+    return f"""
+        WITH toks AS (
+            SELECT doc_id,
+                   UNNEST(list_filter(string_split(text, ' '),
+                                      t -> t <> '')) AS tok
+            FROM documents
+        ),
+        per_doc AS (
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl, {tf_cols}
+            FROM toks GROUP BY doc_id
+        ),
+        corpus AS (
+            SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
+                   CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl,
+                   {df_cols}
+            FROM per_doc
+        ),
+        scored AS (
+            SELECT doc_id, dl, tf1, tf2, tf3,
+                   ROUND({score}, 6) AS piv_score
+            FROM per_doc, corpus
+            WHERE tf1 + tf2 + tf3 > 0
+        )
+        SELECT doc_id, dl, tf1, tf2, tf3, piv_score,
+               CAST(ROW_NUMBER() OVER (ORDER BY piv_score DESC, doc_id)
+                    AS BIGINT) AS rank
+        FROM scored QUALIFY rank <= {PIV_TOPK}
+    """
+
+
+@query(
+    "text_tfidf_pivoted_norm",
+    oracle=_pivoted_sql(),
+    tags=("text", "tfidf", "topk", "documents"),
+)
+def text_tfidf_pivoted_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PIVOTED LENGTH NORMALIZATION (Singhal/Buckley/Mitra, s=0.2):
+    tf/((1−s) + s·dl/avgdl) · ln((N+1)/df) summed over a fixed 3-term
+    query — the pre-BM25 fix for cosine normalization's short-document
+    bias, and the third member of this repo's retrieval-scoring family
+    (``text_bm25_rank``, ``text_tfidf_query_rank``). Everything
+    upstream of the score is EXACT integers (tf, dl, df, N); the score
+    is ONE float expression template with the three per-term
+    contributions summed in fixed textual order in both dialects.
+    Corpus stats are a 1-row broadcast; top-10 ranks scored docs only
+    (zero-match docs pruned before the sort). One token pass, one
+    aggregate, one k-bounded sort."""
+    from big_data_audio_classification_spark.operators.dedup import tokens_col
+
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select("doc_id", F.explode(tokens_col(F.col("text"))).alias("tok"))
+    per_doc = toks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("dl"),
+        *[
+            F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
+            .cast("bigint")
+            .alias(f"tf{i}")
+            for i, t in enumerate(PIV_TERMS, 1)
+        ],
+    )
+    corpus = per_doc.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+        *[
+            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0))
+            .cast("double")
+            .alias(f"df{i}")
+            for i in range(1, 4)
+        ],
+    )
+    score = None
+    for i in range(1, 4):
+        term = (
+            F.col(f"tf{i}")
+            / ((1.0 - PIV_S) + PIV_S * F.col("dl") / F.col("avgdl"))
+        ) * F.log((F.col("n_docs") + 1.0) / F.col(f"df{i}"))
+        score = term if score is None else score + term
+    scored = (
+        per_doc.crossJoin(F.broadcast(corpus))
+        .filter(F.col("tf1") + F.col("tf2") + F.col("tf3") > 0)
+        .select(
+            "doc_id", "dl", "tf1", "tf2", "tf3",
+            F.round(score, 6).alias("piv_score"),
+        )
+    )
+    w = Window.orderBy(F.col("piv_score").desc(), "doc_id")
+    return scored.select(
+        "*", F.row_number().over(w).cast("bigint").alias("rank")
+    ).filter(F.col("rank") <= PIV_TOPK)
+
+
+# ---------------------------------------------------------------------------
+# ml/text: CountVectorizer vocabulary contract (MLlib internals vs SQL)
+# ---------------------------------------------------------------------------
+
+VOCAB_STOPWORDS = (
+    "the", "a", "an", "and", "or", "of", "to", "in", "on", "for",
+    "is", "are", "was", "be", "with", "as", "at", "by", "it", "this",
+)
+
+
+def _vocab_contract_sql() -> str:
+    stop_list = ", ".join(f"'{w}'" for w in VOCAB_STOPWORDS)
+    return f"""
+        WITH toks AS (
+            SELECT doc_id,
+                   UNNEST(list_filter(string_split_regex(lower(text), '\\s+'),
+                                      t -> t <> '')) AS tok,
+                   CAST(generate_subscripts(
+                       list_filter(string_split_regex(lower(text), '\\s+'),
+                                   t -> t <> ''), 1) AS BIGINT) AS pos
+            FROM documents
+        ),
+        kept AS (
+            SELECT doc_id, tok,
+                   ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos)
+                       AS kpos
+            FROM toks WHERE tok NOT IN ({stop_list})
+        ),
+        bigrams AS (
+            SELECT DISTINCT a.tok || ' ' || b.tok AS bigram
+            FROM kept a JOIN kept b
+              ON a.doc_id = b.doc_id AND b.kpos = a.kpos + 1
+        )
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_vocab,
+               md5(string_agg(bigram, '|' ORDER BY bigram)) AS vocab_md5
+        FROM bigrams
+    """
+
+
+@query(
+    "text_pipeline_vocab_contract",
+    oracle=_vocab_contract_sql(),
+    tags=("text", "ml", "mllib", "documents"),
+)
+def text_pipeline_vocab_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MLlib FEATURE-PIPELINE VOCABULARY CONTRACT — the SQL-oracled
+    face of ``text_mllib_pipeline`` (rows-only because vocabulary
+    INDEX order is an MLlib internal; the vocabulary SET is not):
+    fit RegexTokenizer(\\s+, lowercase) → StopWordsRemover(explicit
+    20-word list, shared with the oracle as a literal) → NGram(2) →
+    CountVectorizer with vocabSize ABOVE the corpus's bigram-type
+    count, so the fitted vocabulary must equal EXACTLY the distinct
+    kept-bigram set — which the oracle derives relationally (tokenize,
+    stop-filter with re-ranked positions, pos+1 self-join, DISTINCT).
+    The comparison ships as (count, md5 of the sorted '|'-joined set):
+    any MLlib tokenization/stopword/ngram/fit divergence flips the
+    hash → driver red row. The fit is one distributed term-count agg;
+    the driver-side vocabulary is bounded by the bigram-type count
+    (vocab lists are the one legitimately driver-sized object in an
+    MLlib fit — same stance as ``ml_pipeline_metadata_contract``)."""
+    import hashlib
+
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import (
+        CountVectorizer,
+        NGram,
+        RegexTokenizer,
+        StopWordsRemover,
+    )
+
+    d = load_table(spark, sf_dir, "documents")
+    pipe = Pipeline(
+        stages=[
+            RegexTokenizer(inputCol="text", outputCol="toks", pattern="\\s+"),
+            StopWordsRemover(
+                inputCol="toks",
+                outputCol="kept",
+                stopWords=list(VOCAB_STOPWORDS),
+            ),
+            NGram(n=2, inputCol="kept", outputCol="bigrams"),
+            CountVectorizer(
+                inputCol="bigrams", outputCol="features", vocabSize=1 << 20
+            ),
+        ]
+    )
+    model = pipe.fit(d)
+    vocab = model.stages[-1].vocabulary
+    digest = hashlib.md5("|".join(sorted(vocab)).encode()).hexdigest()
+    return spark.createDataFrame(
+        [(len(vocab), digest)], "n_vocab long, vocab_md5 string"
+    )
+
+
+# ---------------------------------------------------------------------------
+# topk + tfidf: per-document salient terms under an integer-only ranking
+# ---------------------------------------------------------------------------
+
+SALIENT_K = 3
+
+
+@query(
+    "text_topk_salient_terms",
     oracle=f"""
         WITH toks AS (
             SELECT doc_id,
                    UNNEST(list_filter(string_split(text, ' '),
-                          t -> t <> '')) AS tok,
-                   CAST(generate_subscripts(
-                       list_filter(string_split(text, ' '), t -> t <> ''), 1)
-                       AS BIGINT) AS pos
+                                      t -> t <> '')) AS term
             FROM documents
         ),
-        bi AS (
-            SELECT a.tok AS w1, b.tok AS w2, COUNT(*) AS c12
-            FROM toks a JOIN toks b
-              ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-            GROUP BY a.tok, b.tok
+        tf AS (
+            SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
+            FROM toks GROUP BY doc_id, term
         ),
-        uni AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
-        ctx AS (
-            SELECT w1, SUM(c12) AS c1, COUNT(*) AS n1plus
-            FROM bi GROUP BY w1
+        df AS (
+            SELECT term, CAST(COUNT(*) AS BIGINT) AS df
+            FROM tf GROUP BY term
         ),
-        tot AS (SELECT CAST(SUM(c) AS DOUBLE) AS n FROM uni)
-        SELECT bi.w1, bi.w2,
-               CAST(bi.c12 AS BIGINT) AS c12,
-               ROUND(
-                   GREATEST(bi.c12 - {AD_DISCOUNT_NUM}/{AD_DISCOUNT_DEN}.0,
-                            0.0) / ctx.c1
-                   + ({AD_DISCOUNT_NUM}/{AD_DISCOUNT_DEN}.0) * ctx.n1plus
-                     / ctx.c1 * uni.c / tot.n, 6) AS p_ad
-        FROM bi
-        JOIN ctx ON ctx.w1 = bi.w1
-        JOIN uni ON uni.tok = bi.w2
-        CROSS JOIN tot
-        ORDER BY bi.c12 DESC, bi.w1, bi.w2
-        LIMIT {AD_PROBE_TOP}
-    """,
-    tags=("text", "lm", "documents"),
-)
-def text_lm_absolute_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABSOLUTE-DISCOUNTING bigram LM (the Kneser-Ney precursor):
-    p(w2|w1) = max(c12−D, 0)/c1 + D·N1+(w1)/c1 · p_uni(w2) with the
-    exact rational D = 3/4 — mass subtracted from every seen bigram is
-    redistributed through the unigram backoff, reported for the top
-    bigrams (add-k sibling: ``text_bigram_logprob``, certified r03).
-    Three map-side-combined count tables (bigram, context, unigram);
-    the Spark bigram derivation is array-side (token array zipped with
-    its own tail — no positional self-join), while the oracle derives
-    the SAME pairs BY positional self-join: two independent
-    formulations cross-check."""
-    d = load_table(spark, sf_dir, "documents")
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
-    pairs = d.select(
-        F.explode(
-            F.zip_with(
-                toks_arr,
-                F.slice(toks_arr, 2, F.greatest(F.size(toks_arr) - 1, F.lit(0))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2").filter(F.col("w2").isNotNull())
-    bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    uni = d.select(F.explode(toks_arr).alias("tok")).groupBy("tok").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    ctx = bi.groupBy("w1").agg(
-        F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1plus")
-    )
-    tot = uni.agg(F.sum("c").cast("double").alias("n"))
-    disc = AD_DISCOUNT_NUM / AD_DISCOUNT_DEN
-    p_ad = (
-        F.greatest(F.col("c12") - disc, F.lit(0.0)) / F.col("c1")
-        + disc * F.col("n1plus") / F.col("c1") * F.col("c") / F.col("n")
-    )
-    return (
-        bi.join(F.broadcast(ctx), "w1")
-        .join(F.broadcast(uni.withColumnRenamed("tok", "w2")), "w2")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "w1", "w2",
-            F.col("c12").cast("bigint").alias("c12"),
-            F.round(p_ad, 6).alias("p_ad"),
+        nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
+               FROM tf),
+        ranked AS (
+            SELECT doc_id, term, tf.tf, df.df, n_docs,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY doc_id
+                       ORDER BY tf.tf DESC, df.df ASC, term ASC) AS rank
+            FROM tf JOIN df USING (term) CROSS JOIN nd
         )
-        .orderBy(F.col("c12").desc(), "w1", "w2")
-        .limit(AD_PROBE_TOP)
+        SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tf, df,
+               ROUND(tf * LN(CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
+        FROM ranked WHERE rank <= {SALIENT_K}
+    """,
+    tags=("text", "tfidf", "topk", "documents"),
+)
+def text_topk_salient_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TOP-K SALIENT TERMS per document under an INTEGER-ONLY ranking
+    (tf DESC, df ASC, term ASC) — highest in-document frequency,
+    rarest-in-corpus tiebreak: the keyword-extraction pass that labels
+    documents for routing/packing. Ranking by the float tf·idf score
+    itself is the classic cross-engine ULP trap (two engines can order
+    two near-equal doubles differently); ranking by the integer triple
+    is bit-stable BY CONSTRUCTION, and the float score is emitted as a
+    VALUE (one fixed-order expression) without ever deciding order.
+    Two map-side-combined counting aggregations (term keyed, then
+    doc keyed), a broadcastable df probe join, one per-doc top-k
+    window — at 100 TB df becomes a shuffle join co-partitioned with
+    the tf aggregation and the window is bounded per doc."""
+    d = load_table(spark, sf_dir, "documents")
+    from big_data_audio_classification_spark.operators.dedup import tokens_col
+
+    toks = d.select(
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
+    )
+    tf = toks.groupBy("doc_id", "term").agg(
+        F.count(F.lit(1)).cast("bigint").alias("tf")
+    )
+    df_ = tf.groupBy("term").agg(
+        F.count(F.lit(1)).cast("bigint").alias("df")
+    )
+    nd = tf.agg(F.countDistinct("doc_id").cast("bigint").alias("n_docs"))
+    w = Window.partitionBy("doc_id").orderBy(
+        F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()
+    )
+    ranked = (
+        tf.join(F.broadcast(df_), "term")
+        .crossJoin(F.broadcast(nd))
+        .select(
+            "doc_id", "term", "tf", "df", "n_docs",
+            F.row_number().over(w).alias("rank"),
+        )
+        .filter(F.col("rank") <= SALIENT_K)
+    )
+    return ranked.select(
+        "doc_id",
+        F.col("rank").cast("bigint").alias("rank"),
+        "term",
+        "tf",
+        "df",
+        F.round(
+            F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df")),
+            6,
+        ).alias("tfidf"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# tfidf + topk: IDF formulation comparison for the heaviest terms
+# ---------------------------------------------------------------------------
+
+IDF_TOPK = 20
+
+
+@query(
+    "text_tfidf_idf_variants",
+    oracle=f"""
+        WITH toks AS (
+            SELECT doc_id,
+                   UNNEST(list_distinct(list_filter(string_split(text, ' '),
+                                                    t -> t <> ''))) AS term
+            FROM documents
+        ),
+        df AS (
+            SELECT term, CAST(COUNT(*) AS BIGINT) AS df
+            FROM toks GROUP BY term
+        ),
+        n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
+        top AS (
+            SELECT term, df, n_docs,
+                   CAST(ROW_NUMBER() OVER (ORDER BY df DESC, term)
+                        AS BIGINT) AS rk
+            FROM df, n QUALIFY rk <= {IDF_TOPK}
+        )
+        SELECT rk, term, df, n_docs,
+               ROUND(LN(CAST(n_docs AS DOUBLE) / df), 6) + 0 AS idf_raw,
+               ROUND(LN((n_docs + 1.0) / (df + 1)) + 1.0, 6) AS idf_smooth,
+               ROUND(LN((n_docs - df + 0.5) / (df + 0.5)), 6) + 0
+                   AS idf_bm25
+        FROM top
+    """,
+    tags=("text", "tfidf", "topk", "documents"),
+)
+def text_tfidf_idf_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IDF FORMULATION comparison for the top-20 document-frequency
+    terms — the three weights every retrieval stack chooses between:
+    raw ln(N/df), sklearn's smoothed ln((N+1)/(df+1))+1, and BM25's
+    probabilistic ln((N−df+0.5)/(df+0.5)) which goes NEGATIVE for
+    terms in more than half the corpus — exactly the head terms this
+    top-k selects, so the sign flip is exercised, and why idf_raw
+    and idf_bm25 carry ``+ 0`` guards (df = N rounds raw to exactly
+    -0.0 on DuckDB). df is doc-distinct (array-side list_distinct
+    before the explode — a term repeated in one document counts
+    once); rank carries the term tiebreak. 100 TB: one term-keyed
+    count + a 20-row global top-k; the three floats are per-row
+    expressions over two exact integers."""
+    d = load_table(spark, sf_dir, "documents")
+    from big_data_audio_classification_spark.operators.dedup import tokens_col
+
+    toks = d.select(
+        "doc_id",
+        F.explode(F.array_distinct(tokens_col(F.col("text")))).alias("term"),
+    )
+    df = toks.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+    n = d.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+    rk = F.row_number().over(Window.orderBy(F.col("df").desc(), "term"))
+    top = (
+        df.crossJoin(F.broadcast(n))
+        .select(rk.cast("bigint").alias("rk"), "term", "df", "n_docs")
+        .filter(F.col("rk") <= IDF_TOPK)
+    )
+    nd = F.col("n_docs").cast("double")
+    return top.select(
+        "rk",
+        "term",
+        "df",
+        "n_docs",
+        F.round(F.log(nd / F.col("df")), 6).alias("idf_raw"),
+        F.round(F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1)) + 1.0, 6)
+        .alias("idf_smooth"),
+        F.round(
+            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
+            6,
+        ).alias("idf_bm25"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# tfidf: BM25 probe-term scoring
+# ---------------------------------------------------------------------------
+
+BM25_PROBE_TERMS = ("column", "window", "scan")
+
+
+def _bm25_probe_sql() -> str:
+    probes = ", ".join(f"'{t}'" for t in BM25_PROBE_TERMS)
+    # one fixed-order term expression per probe, summed in literal
+    # probe order (t0 + t1 + t2) — never a data-ordered aggregate
+    term_exprs = []
+    for i, t in enumerate(BM25_PROBE_TERMS):
+        term_exprs.append(
+            f"""(LN((stats.n_docs - df{i} + 0.5) / (df{i} + 0.5) + 1.0)
+                 * (tf{i} * {BM25_K1 + 1.0})
+                 / (tf{i} + {BM25_K1} * (1.0 - {BM25_B}
+                    + {BM25_B} * dl / (CAST(stats.total_len AS DOUBLE)
+                                       / stats.n_docs))))"""
+        )
+    score = " + ".join(term_exprs)
+    tf_cols = ", ".join(
+        f"""CAST(SUM(CASE WHEN tok = '{t}' THEN 1 ELSE 0 END) AS BIGINT)
+            AS tf{i}"""
+        for i, t in enumerate(BM25_PROBE_TERMS)
+    )
+    df_cols = ", ".join(
+        f"""CAST(SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS BIGINT)
+            AS df{i}"""
+        for i in range(len(BM25_PROBE_TERMS))
+    )
+    return f"""
+        WITH toks AS (
+            SELECT doc_id,
+                   UNNEST(list_filter(string_split(text, ' '),
+                                      t -> t <> '')) AS tok
+            FROM documents
+        ),
+        dt AS (
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl, {tf_cols}
+            FROM toks GROUP BY doc_id
+        ),
+        stats AS (
+            SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+                   CAST(SUM(dl) AS BIGINT) AS total_len,
+                   {df_cols}
+            FROM dt
+        )
+        SELECT doc_id, dl, tf0, tf1, tf2,
+               ROUND({score}, 6) + 0 AS bm25
+        FROM dt, stats
+        WHERE tf0 + tf1 + tf2 > 0
+    """
+
+
+@query(
+    "text_tfidf_bm25_probe_ranking",
+    oracle=_bm25_probe_sql(),
+    tags=("text", "tfidf", "documents"),
+)
+def text_tfidf_bm25_probe_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 (Robertson/Spärck Jones) probe-term scoring — the ranking
+    function the tf-idf family graduates into (k1=1.2 saturates term
+    frequency, b=0.75 length-normalizes against the corpus mean; the
+    plain tf-idf variants live in ``text_tfidf_idf_variants``):
+    score(d) = Σ_t IDF(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
+    with the +0.5-smoothed IDF (arg ≥ 1, so LN is self-guarded even
+    for a vanished vocabulary — no CASE needed, per the r09 advice
+    class). Every count (tf, df, dl, N, Σdl) is an exact integer from
+    one token aggregate; the score is a FIXED-ORDER sum of three
+    per-probe expressions written in literal probe order on both
+    engines — never a data-ordered float reduction. Zero-hit docs are
+    excluded by an exact integer predicate. 100 TB: one token-keyed
+    aggregate + a broadcast 1-row stats frame; scores are map-only."""
+    d = load_table(spark, sf_dir, "documents")
+    from big_data_audio_classification_spark.operators.dedup import tokens_col
+
+    toks = d.select(
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
+    )
+    aggs = [F.count(F.lit(1)).cast("bigint").alias("dl")] + [
+        F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
+        .cast("bigint")
+        .alias(f"tf{i}")
+        for i, t in enumerate(BM25_PROBE_TERMS)
+    ]
+    dt = toks.groupBy("doc_id").agg(*aggs)
+    stats = dt.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("dl").cast("bigint").alias("total_len"),
+        *[
+            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0))
+            .cast("bigint")
+            .alias(f"df{i}")
+            for i in range(len(BM25_PROBE_TERMS))
+        ],
+    )
+    avgdl = F.col("total_len").cast("double") / F.col("n_docs")
+    score = None
+    for i in range(len(BM25_PROBE_TERMS)):
+        tf = F.col(f"tf{i}")
+        idf = F.log(
+            (F.col("n_docs") - F.col(f"df{i}") + 0.5)
+            / (F.col(f"df{i}") + 0.5)
+            + 1.0
+        )
+        t = (
+            idf
+            * (tf * (BM25_K1 + 1.0))
+            / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / avgdl))
+        )
+        score = t if score is None else score + t
+    return (
+        dt.crossJoin(F.broadcast(stats))
+        .filter((F.col("tf0") + F.col("tf1") + F.col("tf2")) > 0)
+        .select(
+            "doc_id", "dl", "tf0", "tf1", "tf2",
+            F.round(score, 6).alias("bm25"),
+        )
     )

@@ -2132,3 +2132,586 @@ def analytics_multiplicative_decomp(spark: SparkSession, sf_dir: str) -> DataFra
         F.round(F.avg("ratio"), 6).alias("seasonal_ratio"),
         F.round(F.stddev_pop("ratio"), 6).alias("ratio_sd"),
     )
+
+
+# ---------------------------------------------------------------------------
+# decomposition: day-of-week additive profile with exact remainders
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "analytics_dow_additive_profile",
+    oracle="""
+        WITH daily AS (
+            SELECT CAST(o_orderdate AS DATE) AS d,
+                   dayofweek(CAST(o_orderdate AS DATE)) + 1 AS dow,
+                   CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+                        AS BIGINT) AS cents
+            FROM orders GROUP BY 1, 2
+        ),
+        g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
+                     CAST(SUM(cents) AS BIGINT) AS total FROM daily),
+        agg AS (
+            SELECT dow, CAST(COUNT(*) AS BIGINT) AS nd,
+                   CAST(SUM(cents) AS BIGINT) AS dow_cents
+            FROM daily GROUP BY dow
+        ),
+        dev AS (
+            SELECT d.dow,
+                   CAST(SUM(ABS(d.cents * a.nd - a.dow_cents)) AS BIGINT)
+                       AS sum_abs_dev_nd
+            FROM daily d JOIN agg a ON d.dow = a.dow
+            GROUP BY d.dow
+        )
+        SELECT CAST(a.dow AS BIGINT) AS dow,
+               a.nd AS n_days,
+               ROUND(CAST(a.dow_cents AS DOUBLE) / a.nd / 100.0, 4)
+                   AS dow_mean,
+               ROUND(CAST(a.dow_cents AS DOUBLE) / a.nd / 100.0
+                     - CAST(g.total AS DOUBLE) / g.n_days / 100.0, 4)
+                   AS dow_effect,
+               ROUND(CAST(dev.sum_abs_dev_nd AS DOUBLE)
+                     / a.nd / a.nd / 100.0, 4)
+                   AS remainder_mad
+        FROM agg a JOIN dev ON a.dow = dev.dow, g
+    """,
+    tags=("analytics", "decomposition", "timeseries", "orders"),
+)
+def analytics_dow_additive_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ADDITIVE day-of-week decomposition profile: per weekday, the
+    mean daily revenue, its EFFECT (deviation from the grand daily
+    mean — the seasonal component of level + season + remainder), and
+    the remainder's mean absolute deviation — with the MAD numerator
+    kept in EXACT integers by scaling before subtracting
+    (|cents·n_d − Σcents| is integer math; dividing by n_d² once at
+    the end is the only float op), the same trick the house uses
+    everywhere a difference-of-floats would wobble (sibling
+    decompositions: ``analytics_seasonal_strength`` r06,
+    ``analytics_multiplicative_decomp`` stock, remainder ACF in the
+    r07 window). Two aggregates over the daily frame (which is
+    O(days) — tiny at any SF) after one group-by over orders."""
+    o = load_table(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        F.to_date("o_orderdate").alias("d"),
+        F.dayofweek(F.to_date("o_orderdate")).alias("dow"),
+    ).agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("cents")
+    )
+    g = daily.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        F.sum("cents").cast("bigint").alias("total"),
+    )
+    agg = daily.groupBy("dow").agg(
+        F.count(F.lit(1)).cast("bigint").alias("nd"),
+        F.sum("cents").cast("bigint").alias("dow_cents"),
+    )
+    dev = (
+        daily.join(agg, "dow")
+        .groupBy("dow")
+        .agg(
+            F.sum(
+                F.abs(F.col("cents") * F.col("nd") - F.col("dow_cents"))
+            )
+            .cast("bigint")
+            .alias("sum_abs_dev_nd")
+        )
+    )
+    return (
+        agg.join(dev, "dow")
+        .crossJoin(F.broadcast(g))
+        .select(
+            F.col("dow").cast("bigint").alias("dow"),
+            F.col("nd").alias("n_days"),
+            F.round(
+                F.col("dow_cents").cast("double") / F.col("nd") / 100.0, 4
+            ).alias("dow_mean"),
+            F.round(
+                F.col("dow_cents").cast("double") / F.col("nd") / 100.0
+                - F.col("total").cast("double") / F.col("n_days") / 100.0,
+                4,
+            ).alias("dow_effect"),
+            F.round(
+                F.col("sum_abs_dev_nd").cast("double")
+                / F.col("nd")
+                / F.col("nd")
+                / 100.0,
+                4,
+            ).alias("remainder_mad"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# decomposition: weekday/weekend two-level additive split
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "analytics_weekpart_decomp",
+    oracle="""
+        WITH daily AS (
+            SELECT CAST(o_orderdate AS DATE) AS d,
+                   CASE WHEN dayofweek(CAST(o_orderdate AS DATE)) IN (0, 6)
+                        THEN 'weekend' ELSE 'weekday' END AS part,
+                   CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+                        AS BIGINT) AS cents
+            FROM orders GROUP BY 1, 2
+        ),
+        g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
+                     CAST(SUM(cents) AS BIGINT) AS total FROM daily),
+        p AS (
+            SELECT part, CAST(COUNT(*) AS BIGINT) AS nd,
+                   CAST(SUM(cents) AS BIGINT) AS part_cents
+            FROM daily GROUP BY part
+        ),
+        dev AS (
+            SELECT d.part,
+                   CAST(SUM(ABS(d.cents * p.nd - p.part_cents)) AS BIGINT)
+                       AS sum_abs_dev_nd
+            FROM daily d JOIN p ON d.part = p.part
+            GROUP BY d.part
+        )
+        SELECT p.part,
+               p.nd AS n_days,
+               ROUND(CAST(p.part_cents AS DOUBLE) / p.nd / 100.0, 4)
+                   AS part_mean,
+               ROUND(CAST(p.part_cents AS DOUBLE) / p.nd / 100.0
+                     - CAST(g.total AS DOUBLE) / g.n_days / 100.0, 4)
+                   AS part_effect,
+               ROUND(CAST(dev.sum_abs_dev_nd AS DOUBLE)
+                     / p.nd / p.nd / 100.0, 4)
+                   AS remainder_mad
+        FROM p JOIN dev ON p.part = dev.part, g
+    """,
+    tags=("analytics", "decomposition", "timeseries", "orders"),
+)
+def analytics_weekpart_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WEEKDAY/WEEKEND additive split — the coarsest seasonal
+    decomposition (level + binary calendar effect + remainder), with
+    the same exact-integer MAD discipline as the 7-level dow profile
+    (``analytics_dow_additive_profile``): |cents·n − Σcents| stays
+    integer, one division per output cell. Two tiny aggregates over
+    the O(days) daily frame; the binary partition is where weekly
+    seasonality analysis starts before spending 7 dof on full dow
+    effects. (Spark dayofweek is 1=Sunday..7=Saturday; the oracle
+    matches with DuckDB's 0/6.)"""
+    o = load_table(spark, sf_dir, "orders")
+    dow = F.dayofweek(F.to_date("o_orderdate"))
+    daily = o.groupBy(
+        F.to_date("o_orderdate").alias("d"),
+        F.when(dow.isin(1, 7), "weekend").otherwise("weekday").alias("part"),
+    ).agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("cents")
+    )
+    g = daily.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        F.sum("cents").cast("bigint").alias("total"),
+    )
+    p = daily.groupBy("part").agg(
+        F.count(F.lit(1)).cast("bigint").alias("nd"),
+        F.sum("cents").cast("bigint").alias("part_cents"),
+    )
+    dev = (
+        daily.join(p, "part")
+        .groupBy("part")
+        .agg(
+            F.sum(F.abs(F.col("cents") * F.col("nd") - F.col("part_cents")))
+            .cast("bigint")
+            .alias("sum_abs_dev_nd")
+        )
+    )
+    return (
+        p.join(dev, "part")
+        .crossJoin(F.broadcast(g))
+        .select(
+            "part",
+            F.col("nd").alias("n_days"),
+            F.round(
+                F.col("part_cents").cast("double") / F.col("nd") / 100.0, 4
+            ).alias("part_mean"),
+            F.round(
+                F.col("part_cents").cast("double") / F.col("nd") / 100.0
+                - F.col("total").cast("double") / F.col("n_days") / 100.0,
+                4,
+            ).alias("part_effect"),
+            F.round(
+                F.col("sum_abs_dev_nd").cast("double")
+                / F.col("nd")
+                / F.col("nd")
+                / 100.0,
+                4,
+            ).alias("remainder_mad"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# decomposition: per-user linear detrend with variance-explained share
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "analytics_detrend_linear_resid",
+    oracle="""
+        WITH x AS (
+            SELECT user_id,
+                   CAST(ROW_NUMBER() OVER (PARTITION BY user_id
+                                           ORDER BY ts, event_id) AS BIGINT)
+                       AS t,
+                   CAST(ROUND(value * 100) AS BIGINT) AS y
+            FROM events
+        ),
+        s AS (
+            SELECT user_id,
+                   CAST(COUNT(*) AS BIGINT)                      AS n,
+                   CAST(SUM(t) AS DOUBLE)                        AS st,
+                   CAST(SUM(y) AS DOUBLE)                        AS sy,
+                   CAST(SUM(CAST(t AS HUGEINT) * t) AS DOUBLE)   AS stt,
+                   CAST(SUM(CAST(t AS HUGEINT) * y) AS DOUBLE)   AS sty,
+                   CAST(SUM(CAST(y AS HUGEINT) * y) AS DOUBLE)   AS syy
+            FROM x GROUP BY user_id
+        )
+        SELECT user_id, n,
+               -- + 0 normalizes DuckDB ROUND's -0.0 (slopes are
+               -- centered on 0 by construction; r08 review)
+               ROUND((n * sty - st * sy) / (n * stt - st * st) / 100.0, 6)
+                   + 0 AS trend_slope,
+               ROUND(((n * sty - st * sy) * (n * sty - st * sy))
+                     / ((n * stt - st * st) * (n * syy - sy * sy)), 6) + 0
+                   AS var_explained
+        FROM s WHERE n >= 3 AND n * syy - sy * sy > 0
+    """,
+    tags=("decomposition", "regression", "events"),
+)
+def analytics_detrend_linear_resid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LINEAR DETREND per user with the variance share the trend
+    explains — R² = (nSty − StSy)² / ((nStt − St²)(nSyy − Sy²)) — the
+    decomposition step that answers "is this channel drifting or
+    seasonal?" before any seasonal profile is fit (seasonal siblings:
+    ``analytics_dow_additive_profile``, ``analytics_weekpart_decomp``).
+    Time is the within-user rank (exact integer, tiebroken by
+    event_id); every sufficient statistic is an EXACT integer sum
+    (t·y and y² through HUGEINT/DECIMAL(38) headroom); slope and R²
+    are fixed-order float expressions over the 1-row-per-user exact
+    frame. One window + one aggregate, both keyed by user; degenerate
+    users (n<3 or zero variance) are excluded exactly."""
+    e = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    x = e.select(
+        "user_id",
+        F.row_number().over(w).cast("bigint").alias("t"),
+        F.round(F.col("value") * 100).cast("bigint").alias("y"),
+    )
+    td = F.col("t").cast("decimal(38,0)")
+    yd = F.col("y").cast("decimal(38,0)")
+    s = x.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("t").cast("double").alias("st"),
+        F.sum("y").cast("double").alias("sy"),
+        F.sum(td * F.col("t")).cast("double").alias("stt"),
+        F.sum(td * F.col("y")).cast("double").alias("sty"),
+        F.sum(yd * F.col("y")).cast("double").alias("syy"),
+    )
+    n, st, sy = F.col("n"), F.col("st"), F.col("sy")
+    stt, sty, syy = F.col("stt"), F.col("sty"), F.col("syy")
+    num = n * sty - st * sy
+    return s.filter((n >= 3) & (n * syy - sy * sy > 0)).select(
+        "user_id",
+        "n",
+        F.round(num / (n * stt - st * st) / 100.0, 6).alias("trend_slope"),
+        F.round(
+            (num * num) / ((n * stt - st * st) * (n * syy - sy * sy)), 6
+        ).alias("var_explained"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# decomposition: hour-of-day additive effect profile
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "analytics_hod_effect_profile",
+    oracle="""
+        WITH x AS (
+            SELECT hour(ts) AS hr,
+                   CAST(ROUND(value * 100) AS BIGINT) AS c
+            FROM events
+        ),
+        per_h AS (
+            SELECT hr, CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(c) AS BIGINT)       AS s,
+                   CAST(SUM(c * c) AS BIGINT)   AS s2
+            FROM x GROUP BY hr
+        ),
+        tot AS (
+            SELECT CAST(SUM(n) AS BIGINT) AS nt, CAST(SUM(s) AS BIGINT) AS st,
+                   CAST(SUM(s2) AS BIGINT) AS s2t,
+                   list_sum(list(CAST(s AS DOUBLE) * s / n ORDER BY hr))
+                       AS ss_group
+            FROM per_h
+        )
+        SELECT hr, n,
+               ROUND(CAST(s AS DOUBLE) / n / 100, 6)        AS hour_mean,
+               ROUND(CAST(s AS DOUBLE) / n / 100
+                     - CAST(st AS DOUBLE) / nt / 100, 6) + 0 AS effect,
+               ROUND((ss_group - CAST(st AS DOUBLE) * st / nt)
+                     / (CAST(s2t AS DOUBLE)
+                        - CAST(st AS DOUBLE) * st / nt), 6) + 0 AS eta_sq
+        FROM per_h, tot
+    """,
+    tags=("analytics", "decomposition", "events"),
+)
+def analytics_hod_effect_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HOUR-OF-DAY ADDITIVE DECOMPOSITION: value = grand mean +
+    hour effect, with the variance share the hour factor explains
+    (η² = SS_between / SS_total) stamped on every row — the seasonal
+    profile a monitoring pipeline derives before anomaly thresholds
+    (day-of-week sibling: ``analytics_dow_additive_profile``). All
+    moments are exact integer cents (Σc² ≈ 1e14 at sf0.1 — inside
+    int64 with 10⁴× headroom); the η² numerator Σ s_h²/n_h is 24
+    per-hour float terms reduced via the SEQUENTIAL hr-ordered fold
+    (the house deterministic-summation idiom), and every output is
+    one fixed-order float expression — `effect` is signed, so it
+    carries the ``+ 0`` oracle guard (the r06 -0.0-under-ROUND
+    class). One shuffle to 24 groups, one 1-row broadcast."""
+    e = load_table(spark, sf_dir, "events")
+    x = e.select(
+        F.hour("ts").alias("hr"),
+        F.round(F.col("value") * 100).cast("bigint").alias("c"),
+    )
+    per_h = x.groupBy("hr").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("c").cast("bigint").alias("s"),
+        F.sum(F.expr("c * c")).cast("bigint").alias("s2"),
+    )
+    ordered = F.transform(
+        F.array_sort(F.collect_list(F.struct("hr", "term"))),
+        lambda t: t["term"],
+    )
+    tot = (
+        per_h.select(
+            "n",
+            "s",
+            "s2",
+            "hr",
+            (F.col("s").cast("double") * F.col("s") / F.col("n")).alias(
+                "term"
+            ),
+        )
+        .agg(
+            F.sum("n").cast("bigint").alias("nt"),
+            F.sum("s").cast("bigint").alias("st"),
+            F.sum("s2").cast("bigint").alias("s2t"),
+            F.aggregate(ordered, F.lit(0.0), lambda a, v: a + v).alias(
+                "ss_group"
+            ),
+        )
+    )
+    mean_h = F.col("s").cast("double") / F.col("n") / 100
+    mean_t = F.col("st").cast("double") / F.col("nt") / 100
+    ss_tot = F.col("s2t").cast("double") - F.col("st").cast("double") * F.col(
+        "st"
+    ) / F.col("nt")
+    ss_btw = F.col("ss_group") - F.col("st").cast("double") * F.col(
+        "st"
+    ) / F.col("nt")
+    return per_h.crossJoin(F.broadcast(tot)).select(
+        "hr",
+        "n",
+        F.round(mean_h, 6).alias("hour_mean"),
+        F.round(mean_h - mean_t, 6).alias("effect"),
+        F.round(ss_btw / ss_tot, 6).alias("eta_sq"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# decomposition + rolling: rolling-detrended day-of-week residual profile
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "analytics_rolling_seasonal_resid",
+    oracle="""
+        WITH daily AS (
+            SELECT CAST(ts AS DATE) AS day,
+                   dayofweek(ts) AS dow,
+                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
+                       AS cents
+            FROM events GROUP BY day, dow
+        ),
+        roll AS (
+            SELECT day, dow, cents,
+                   CAST(SUM(cents) OVER w AS BIGINT)  AS rsum,
+                   CAST(COUNT(*) OVER w AS BIGINT)    AS rcnt
+            FROM daily
+            WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING
+                                              AND 3 FOLLOWING)
+        ),
+        resid AS (
+            SELECT day, dow,
+                   cents - CAST(rsum AS DOUBLE) / rcnt AS r
+            FROM roll
+        )
+        SELECT CAST(dow AS BIGINT) AS dow,
+               CAST(COUNT(*) AS BIGINT) AS n_days,
+               ROUND(list_sum(list(r ORDER BY day)) / COUNT(*), 6) + 0
+                   AS mean_resid
+        FROM resid GROUP BY dow
+    """,
+    tags=("analytics", "decomposition", "window", "rolling", "events"),
+)
+def analytics_rolling_seasonal_resid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROLLING-DETRENDED day-of-week profile — classical decomposition
+    with a MOVING-AVERAGE trend instead of the global/linear trends
+    the existing family pins (``analytics_dow_additive_profile``:
+    grand-mean; ``analytics_detrend_linear_resid``: OLS line): daily
+    exact-cent totals minus their centered 7-day rolling mean leave a
+    residual whose per-DOW means ARE the weekly seasonal component,
+    edge days shrinking the window to what exists (count window, not
+    a 7 literal — the off-by-one every hand-rolled centered window
+    hits). Rolling sum and count stay EXACT integers; each residual
+    is one float subtraction; the per-DOW mean folds day-ordered.
+    DOW in the DuckDB 0=Sunday convention (Spark dayofweek − 1 — the
+    r05 cross-engine class), ``+ 0``-guarded. 100 TB: one day-keyed
+    aggregate (map-side combinable), one ordered window over |days|
+    rows, one 7-row rollup."""
+    e = load_table(spark, sf_dir, "events")
+    cents = F.round(F.col("value") * 100).cast("bigint")
+    daily = e.groupBy(
+        F.to_date("ts").alias("day"),
+        (F.dayofweek("ts") - 1).alias("dow"),
+    ).agg(F.sum(cents).cast("bigint").alias("cents"))
+    w = Window.orderBy("day").rowsBetween(-3, 3)
+    roll = daily.select(
+        "day",
+        "dow",
+        "cents",
+        F.sum("cents").over(w).cast("bigint").alias("rsum"),
+        F.count(F.lit(1)).over(w).cast("bigint").alias("rcnt"),
+    )
+    resid = roll.select(
+        "day",
+        "dow",
+        (F.col("cents") - F.col("rsum").cast("double") / F.col("rcnt")).alias(
+            "r"
+        ),
+    )
+    ordered = F.transform(
+        F.array_sort(F.collect_list(F.struct("day", "r"))), lambda s: s["r"]
+    )
+    return resid.groupBy("dow").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+        F.round(
+            F.aggregate(ordered, F.lit(0.0), lambda a, x: a + x)
+            / F.count(F.lit(1)),
+            6,
+        ).alias("mean_resid"),
+    ).select(F.col("dow").cast("bigint").alias("dow"), "n_days", "mean_resid")
+
+
+# ---------------------------------------------------------------------------
+# decomposition: level + day-of-week + residual over daily totals
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "analytics_level_dow_rolling_decomp",
+    oracle="""
+        WITH daily AS (
+            SELECT CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
+                        AS BIGINT) AS day_num,
+                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
+                       AS c
+            FROM events GROUP BY 1
+        ),
+        w7 AS (
+            SELECT day_num, c,
+                   CAST(SUM(c) OVER (ORDER BY day_num
+                        ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT)
+                       AS roll,
+                   CAST(COUNT(*) OVER (ORDER BY day_num
+                        ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT)
+                       AS cnt7
+            FROM daily
+        ),
+        full7 AS (
+            SELECT day_num, c, roll, (day_num + 4) % 7 AS dow,
+                   7 * c - roll AS dev7
+            FROM w7 WHERE cnt7 = 7
+        ),
+        dowfx AS (
+            SELECT dow, CAST(SUM(dev7) AS BIGINT) AS sum_dev,
+                   CAST(COUNT(*) AS BIGINT) AS n_dow
+            FROM full7 GROUP BY dow
+        )
+        SELECT f.day_num, f.dow,
+               ROUND(f.c / 100.0, 2) AS day_total,
+               ROUND(f.roll / 700.0, 6) + 0 AS level,
+               ROUND(CAST(d.sum_dev AS DOUBLE) / d.n_dow / 700.0, 6) + 0
+                   AS dow_effect,
+               ROUND(f.dev7 / 700.0
+                     - CAST(d.sum_dev AS DOUBLE) / d.n_dow / 700.0, 6) + 0
+                   AS resid
+        FROM full7 f JOIN dowfx d ON f.dow = d.dow
+    """,
+    tags=("analytics", "decomposition", "rolling", "window", "events"),
+)
+def analytics_level_dow_rolling_decomp(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ADDITIVE LEVEL + DAY-OF-WEEK + RESIDUAL decomposition of the
+    daily revenue series: level = centered 7-day rolling mean (only
+    full windows emit), weekday effect = mean deviation per dow,
+    residual = what neither explains — the classic seasonal-naive
+    decomposition (STL's integer-exact little sibling; house kin:
+    ``analytics_dow_additive_profile``, ``analytics_rolling_seasonal_
+    resid``). The trick that keeps it bit-exact: deviations are
+    SCALED BY 7 so ``dev7 = 7·c − roll`` stays an exact integer
+    (never a float rolling mean subtracted row-wise), and dow is
+    computed ARITHMETICALLY as (epoch_day+4)%7 — never an engine
+    dayofweek (Spark and DuckDB disagree by +1, the r0x quirk
+    class). Every float is one fixed-order expression off exact
+    integers, ``+ 0``-guarded (deviations round to −0.0 freely).
+    100 TB: daily totals map-side combine; the window runs over
+    |days| rows — driver-scale, not data-scale."""
+    e = load_table(spark, sf_dir, "events")
+    day_num = F.expr(
+        "CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT)"
+    )
+    cents = F.round(F.col("value") * 100).cast("bigint")
+    daily = e.select(day_num.alias("day_num"), cents.alias("cents")).groupBy(
+        "day_num"
+    ).agg(F.sum("cents").cast("bigint").alias("c"))
+    w7 = Window.orderBy("day_num").rowsBetween(-3, 3)
+    wd = daily.select(
+        "day_num",
+        "c",
+        F.sum("c").over(w7).cast("bigint").alias("roll"),
+        F.count(F.lit(1)).over(w7).cast("bigint").alias("cnt7"),
+    )
+    full7 = wd.filter(F.col("cnt7") == 7).select(
+        "day_num",
+        "c",
+        "roll",
+        ((F.col("day_num") + 4) % 7).alias("dow"),
+        (7 * F.col("c") - F.col("roll")).alias("dev7"),
+    )
+    dowfx = full7.groupBy("dow").agg(
+        F.sum("dev7").cast("bigint").alias("sum_dev"),
+        F.count(F.lit(1)).cast("bigint").alias("n_dow"),
+    )
+    j = full7.join(F.broadcast(dowfx), "dow")
+    dow_eff = F.col("sum_dev").cast("double") / F.col("n_dow") / 700.0
+    return j.select(
+        "day_num",
+        "dow",
+        F.round(F.col("c") / 100.0, 2).alias("day_total"),
+        F.round(F.col("roll") / 700.0, 6).alias("level"),
+        F.round(dow_eff, 6).alias("dow_effect"),
+        F.round(F.col("dev7") / 700.0 - dow_eff, 6).alias("resid"),
+    )

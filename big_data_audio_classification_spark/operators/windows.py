@@ -484,3 +484,511 @@ def window_rolling_time_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dev_from_2h"
         ),
     )
+
+
+# ---------------------------------------------------------------------------
+# rolling: windowed skewness / kurtosis from exact power sums
+# ---------------------------------------------------------------------------
+
+RSK_WINDOW = 24  # rows preceding (25-row frame with the current row)
+RSK_MIN_N = 5    # emit NULL moments below this frame population
+
+
+@query(
+    "window_rolling_skew_kurt",
+    oracle=f"""
+        WITH x AS (
+            SELECT event_id, user_id, ts,
+                   CAST(ROUND(value * 100) AS BIGINT) AS c
+            FROM events
+        ),
+        s AS (
+            SELECT event_id, user_id,
+                   CAST(COUNT(*) OVER w AS DOUBLE)          AS n,
+                   CAST(SUM(c) OVER w AS DOUBLE)            AS s1,
+                   CAST(SUM(c * c) OVER w AS DOUBLE)        AS s2,
+                   CAST(SUM(CAST(c * c AS DECIMAL(38, 0)) * c)
+                        OVER w AS DOUBLE)                   AS s3,
+                   CAST(SUM(CAST(c * c AS DECIMAL(38, 0))
+                            * CAST(c * c AS DECIMAL(38, 0))) OVER w AS DOUBLE)
+                                                            AS s4
+            FROM x
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                         ROWS BETWEEN {RSK_WINDOW} PRECEDING AND CURRENT ROW)
+        ),
+        m AS (
+            SELECT event_id, user_id, n,
+                   s2 / n - (s1 / n) * (s1 / n) AS m2,
+                   s3 / n - 3.0 * (s1 / n) * (s2 / n)
+                          + 2.0 * (s1 / n) * (s1 / n) * (s1 / n) AS m3,
+                   s4 / n - 4.0 * (s1 / n) * (s3 / n)
+                          + 6.0 * (s1 / n) * (s1 / n) * (s2 / n)
+                          - 3.0 * (s1 / n) * (s1 / n) * (s1 / n) * (s1 / n)
+                              AS m4
+            FROM s
+        )
+        SELECT event_id, user_id, CAST(n AS BIGINT) AS n,
+               CASE WHEN n >= {RSK_MIN_N} AND m2 > 0
+                    THEN ROUND(m3 / (SQRT(m2) * SQRT(m2) * SQRT(m2)), 6)
+               END AS roll_skew,
+               CASE WHEN n >= {RSK_MIN_N} AND m2 > 0
+                    THEN ROUND(m4 / (m2 * m2) - 3.0, 6)
+               END AS roll_kurt
+        FROM m
+    """,
+    tags=("window", "rolling", "events"),
+)
+def window_rolling_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROLLING SKEWNESS and EXCESS KURTOSIS over a 25-row frame — the
+    shape moments that flag regime changes a rolling mean/stddev
+    can't see. The house bit-stability idiom end-to-end: the four
+    power sums S₁..S₄ accumulate EXACT integer cents inside the
+    window frame (S₄ in DECIMAL(38) — cents⁴ × 25 rows overflows
+    int64), every engine-visible float is derived from those exact
+    integers through ONE shared expression template (the m₂/m₃/m₄
+    central-moment expansions, written in identical operation order
+    in both dialects), and frames too small for a third moment emit
+    honest NULLs. One shuffle keyed by channel; the frame is
+    row-bounded so state is O(window) — the same plan shape as every
+    certified rolling carrier (trimmed mean r07-retry, weighted mean
+    stock)."""
+    e = load_table(spark, sf_dir, "events")
+    c = F.round(F.col("value") * 100).cast("bigint")
+    x = e.select("event_id", "user_id", "ts", c.alias("c"))
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-RSK_WINDOW, Window.currentRow)
+    )
+    cc = F.col("c") * F.col("c")
+    s = x.select(
+        "event_id",
+        "user_id",
+        F.count(F.lit(1)).over(w).cast("double").alias("n"),
+        F.sum("c").over(w).cast("double").alias("s1"),
+        F.sum(cc).over(w).cast("double").alias("s2"),
+        # cc*c in DECIMAL(38,0) like s4: Spark bigint SUM wraps silently
+        # (non-ANSI) past int64 while DuckDB promotes to HUGEINT — the
+        # decimal accumulator keeps both engines exact at any magnitude
+        # (r07 advice)
+        F.sum(cc.cast("decimal(38,0)") * F.col("c"))
+        .over(w)
+        .cast("double")
+        .alias("s3"),
+        F.sum(cc.cast("decimal(38,0)") * cc.cast("decimal(38,0)"))
+        .over(w)
+        .cast("double")
+        .alias("s4"),
+    )
+    n, s1, s2, s3, s4 = (F.col(k) for k in ("n", "s1", "s2", "s3", "s4"))
+    mu = s1 / n
+    m2 = s2 / n - mu * mu
+    m3 = s3 / n - 3.0 * mu * (s2 / n) + 2.0 * mu * mu * mu
+    m4 = (
+        s4 / n
+        - 4.0 * mu * (s3 / n)
+        + 6.0 * mu * mu * (s2 / n)
+        - 3.0 * mu * mu * mu * mu
+    )
+    ok = (n >= RSK_MIN_N) & (m2 > 0)
+    return s.select(
+        "event_id",
+        "user_id",
+        n.cast("bigint").alias("n"),
+        F.when(ok, F.round(m3 / (F.sqrt(m2) * F.sqrt(m2) * F.sqrt(m2)), 6))
+        .alias("roll_skew"),
+        F.when(ok, F.round(m4 / (m2 * m2) - 3.0, 6)).alias("roll_kurt"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# rolling: short/long rolling-sum ratio bands (exact integer core)
+# ---------------------------------------------------------------------------
+
+RATIO_SHORT = 6   # rows preceding for the short window (7-row frame)
+RATIO_LONG = 27   # rows preceding for the long window (28-row frame)
+
+
+@query(
+    "window_rolling_sum_ratio",
+    oracle=f"""
+        WITH x AS (
+            SELECT event_id, user_id, ts,
+                   CAST(ROUND(value * 100) AS BIGINT) AS c
+            FROM events
+        ),
+        s AS (
+            SELECT event_id, user_id,
+                   CAST(SUM(c) OVER ws AS BIGINT) AS s_short,
+                   CAST(SUM(c) OVER wl AS BIGINT) AS s_long,
+                   CAST(COUNT(*) OVER wl AS BIGINT) AS n_long
+            FROM x
+            WINDOW ws AS (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS BETWEEN {RATIO_SHORT} PRECEDING AND CURRENT ROW),
+                   wl AS (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS BETWEEN {RATIO_LONG} PRECEDING AND CURRENT ROW)
+        )
+        SELECT event_id, user_id, s_short, s_long,
+               CASE WHEN n_long > {RATIO_LONG}
+                    THEN ROUND(4.0 * s_short / s_long, 6) END AS momentum,
+               CASE WHEN n_long <= {RATIO_LONG} THEN 'warmup'
+                    WHEN 4 * s_short * 10 > s_long * 12 THEN 'hot'
+                    WHEN 4 * s_short * 10 < s_long * 8  THEN 'cold'
+                    ELSE 'neutral' END AS band
+        FROM s
+    """,
+    tags=("window", "rolling", "events"),
+)
+def window_rolling_sum_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SHORT/LONG rolling-sum MOMENTUM ratio (the 7-vs-28 moving-sum
+    crossover, normalized by the 4× window-length factor) with banding
+    — and the BAND DECISION made in EXACT INTEGER arithmetic
+    (4·s_short·10 vs s_long·12 instead of ratio > 1.2), so the
+    classification can never flip on a float ULP; only the reported
+    ratio itself is a float (one division, after exact sums). Warmup
+    rows (long window not yet full) are labeled honestly instead of
+    emitting a biased ratio. Two frames over ONE shuffle (same
+    partition/order); state O(window)."""
+    e = load_table(spark, sf_dir, "events")
+    c = F.round(F.col("value") * 100).cast("bigint")
+    x = e.select("event_id", "user_id", "ts", c.alias("c"))
+    ws = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-RATIO_SHORT, Window.currentRow)
+    )
+    wl = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-RATIO_LONG, Window.currentRow)
+    )
+    s = x.select(
+        "event_id",
+        "user_id",
+        F.sum("c").over(ws).cast("bigint").alias("s_short"),
+        F.sum("c").over(wl).cast("bigint").alias("s_long"),
+        F.count(F.lit(1)).over(wl).cast("bigint").alias("n_long"),
+    )
+    full = F.col("n_long") > RATIO_LONG
+    return s.select(
+        "event_id",
+        "user_id",
+        "s_short",
+        "s_long",
+        F.when(full, F.round(4.0 * F.col("s_short") / F.col("s_long"), 6))
+        .alias("momentum"),
+        F.when(~full, "warmup")
+        .when(4 * F.col("s_short") * 10 > F.col("s_long") * 12, "hot")
+        .when(4 * F.col("s_short") * 10 < F.col("s_long") * 8, "cold")
+        .otherwise("neutral")
+        .alias("band"),
+    )
+
+# ---------------------------------------------------------------------------
+# rolling: running-peak drawdown over the per-user cumulative value
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "window_rolling_drawdown",
+    oracle="""
+        WITH x AS (
+            SELECT event_id, user_id, ts,
+                   CAST(ROUND(value * 100) AS BIGINT) AS c
+            FROM events
+        ),
+        cum AS (
+            SELECT event_id, user_id,
+                   CAST(SUM(c) OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id
+                                     ROWS UNBOUNDED PRECEDING) AS BIGINT)
+                       AS cum_cents
+            FROM x
+        ),
+        pk AS (
+            SELECT c.event_id, c.user_id, c.cum_cents,
+                   CAST(MAX(c.cum_cents) OVER (PARTITION BY c.user_id
+                                               ORDER BY x.ts, c.event_id
+                                               ROWS UNBOUNDED PRECEDING)
+                        AS BIGINT) AS peak_cents
+            FROM cum c JOIN x USING (event_id, user_id)
+        )
+        SELECT event_id, user_id, cum_cents, peak_cents,
+               peak_cents - cum_cents AS drawdown_cents,
+               CASE WHEN peak_cents > 0
+                    THEN ROUND(CAST(peak_cents - cum_cents AS DOUBLE)
+                               / CAST(peak_cents AS DOUBLE), 6) + 0
+               END AS drawdown_frac
+        FROM pk
+    """,
+    tags=("window", "rolling", "events"),
+)
+def window_rolling_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RUNNING-PEAK DRAWDOWN per user: cumulative value (exact integer
+    cents), its running maximum (the high-water mark), and the
+    drawdown below that peak — absolute and fractional. The risk /
+    burn-down statistic every monitoring pipeline derives from a
+    cumulative series, and the canonical two-layer window compose
+    (running SUM feeding a running MAX — order must carry the unique
+    event_id tiebreak on BOTH layers, the house window discipline).
+    Everything through drawdown_cents is exact int64 (DuckDB's HUGEINT
+    window sums cast back to BIGINT); drawdown_frac is ONE float
+    division of those exact integers, rounded with the oracle-side
+    ``+ 0`` normalizing DuckDB's -0.0 (cum can exceed peak only at
+    equality, so the ratio is >= 0, but ROUND of a 0-valued double is
+    exactly the -0.0 class). One shuffle keyed by user; window state
+    is O(1) per row — the plan shape survives any SF."""
+    e = load_table(spark, sf_dir, "events")
+    c = F.round(F.col("value") * 100).cast("bigint")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    x = e.select("event_id", "user_id", "ts", c.alias("c"))
+    cum = x.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.sum("c").over(w).cast("bigint").alias("cum_cents"),
+    )
+    peak = cum.select(
+        "event_id",
+        "user_id",
+        "cum_cents",
+        F.max("cum_cents").over(w).cast("bigint").alias("peak_cents"),
+    )
+    dd = F.col("peak_cents") - F.col("cum_cents")
+    return peak.select(
+        "event_id",
+        "user_id",
+        "cum_cents",
+        "peak_cents",
+        dd.alias("drawdown_cents"),
+        F.when(
+            F.col("peak_cents") > 0,
+            F.round(
+                dd.cast("double") / F.col("peak_cents").cast("double"), 6
+            ),
+        ).alias("drawdown_frac"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# topk: tie-aware top-k via dense_rank
+# ---------------------------------------------------------------------------
+
+TOPK_TIED_K = 3
+
+
+@query(
+    "topk_tied_dense_rank",
+    oracle=f"""
+        WITH x AS (
+            SELECT o_orderpriority AS priority,
+                   strftime(o_orderdate, '%Y-%m-%d') AS odate,
+                   CAST(COUNT(*) AS BIGINT) AS n_orders
+            FROM orders GROUP BY o_orderpriority, o_orderdate
+        ),
+        r AS (
+            SELECT priority, odate, n_orders,
+                   CAST(DENSE_RANK() OVER (PARTITION BY priority
+                                           ORDER BY n_orders DESC)
+                        AS BIGINT) AS rnk
+            FROM x
+        )
+        SELECT priority, odate, n_orders, rnk
+        FROM r WHERE rnk <= {TOPK_TIED_K}
+    """,
+    tags=("window", "topk", "orders"),
+)
+def topk_tied_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TIE-AWARE top-k: the k busiest order DATES per priority by
+    DENSE_RANK — every date tied at a kept rank survives, so the
+    output is a complete answer set rather than an arbitrary
+    tie-broken sample (the row_number sibling keeps exactly k rows:
+    ``topk_orders_per_customer``, r01). Ranking on an exact integer
+    count makes ties REAL and the result deterministic without a
+    tiebreak column — which is the point of the dense_rank contract.
+    One count shuffle + one partitioned window; at 100 TB the window
+    input is already one-row-per-(priority,date), dimension-bounded."""
+    o = load_table(spark, sf_dir, "orders")
+    x = o.groupBy(
+        F.col("o_orderpriority").alias("priority"),
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("odate"),
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
+    w = Window.partitionBy("priority").orderBy(F.col("n_orders").desc())
+    return x.select(
+        "*", F.dense_rank().over(w).cast("bigint").alias("rnk")
+    ).filter(F.col("rnk") <= TOPK_TIED_K)
+
+
+# ---------------------------------------------------------------------------
+# rolling: exact rolling lower-median and MAD inside a 25-row frame
+# ---------------------------------------------------------------------------
+
+RMED_WINDOW = 24  # rows preceding (25-row frame with the current row)
+
+
+@query(
+    "window_rolling_median_mad",
+    oracle=f"""
+        WITH x AS (
+            SELECT event_id, user_id, ts,
+                   CAST(ROUND(value * 100) AS BIGINT) AS c
+            FROM events
+        ),
+        fr AS (
+            SELECT event_id, user_id,
+                   list_sort(list(c) OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN {RMED_WINDOW} PRECEDING AND CURRENT ROW))
+                       AS xs
+            FROM x
+        ),
+        med AS (
+            SELECT event_id, user_id,
+                   CAST(len(xs) AS BIGINT) AS n,
+                   CAST(xs[(len(xs) + 1) // 2] AS BIGINT) AS roll_median_c
+            FROM fr
+        ),
+        mad AS (
+            SELECT f.event_id, f.user_id, m.n, m.roll_median_c,
+                   CAST(list_sort(list_transform(f.xs,
+                            v -> abs(v - m.roll_median_c)))
+                        [(len(f.xs) + 1) // 2] AS BIGINT) AS roll_mad_c
+            FROM fr f JOIN med m
+              ON f.event_id = m.event_id AND f.user_id = m.user_id
+        )
+        SELECT event_id, user_id, n, roll_median_c, roll_mad_c
+        FROM mad
+    """,
+    tags=("window", "rolling", "robust", "events"),
+)
+def window_rolling_median_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROLLING LOWER-MEDIAN and MAD over a 25-row frame — the robust
+    rolling location/scale pair that a mean/stddev window gets wrong
+    on every spike. Both statistics are EXACT INTEGERS by
+    construction: frame values are integer cents, the LOWER median is
+    the element at rank ⌈n/2⌉ of the sorted frame (declared lower, so
+    even frames need no averaging — nothing to ULP), and MAD is the
+    lower median of |x − median|. The frame materializes as an in-row
+    array (``collect_list`` over the window, O(25) per row — bounded
+    state), sorted and indexed with higher-order functions; the oracle
+    states the same algebra through DuckDB's windowed list(). One
+    shuffle keyed by user (moment-based sibling:
+    ``window_rolling_skew_kurt`` r08)."""
+    e = load_table(spark, sf_dir, "events")
+    c = F.round(F.col("value") * 100).cast("bigint")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-RMED_WINDOW, Window.currentRow)
+    )
+    fr = e.select(
+        "event_id",
+        "user_id",
+        F.array_sort(F.collect_list(c).over(w)).alias("xs"),
+    )
+    n = F.size("xs")
+    med = F.element_at("xs", ((n + 1) / 2).cast("int"))
+    withmed = fr.select(
+        "event_id",
+        "user_id",
+        n.cast("bigint").alias("n"),
+        med.cast("bigint").alias("roll_median_c"),
+        F.array_sort(
+            F.transform("xs", lambda v: F.abs(v - med))
+        ).alias("devs"),
+    )
+    mad = F.element_at(
+        "devs", ((F.size("devs") + 1) / 2).cast("int")
+    )
+    return withmed.select(
+        "event_id",
+        "user_id",
+        "n",
+        "roll_median_c",
+        mad.cast("bigint").alias("roll_mad_c"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# rolling: 7-row min/max channel position
+# ---------------------------------------------------------------------------
+
+MMPOS_WINDOW = 7
+
+
+@query(
+    "window_rolling_minmax_position",
+    oracle=f"""
+        WITH x AS (
+            SELECT event_id, user_id, ts,
+                   CAST(ROUND(value * 100) AS BIGINT) AS c
+            FROM events
+        ),
+        w AS (
+            SELECT event_id, user_id, c,
+                   CAST(MIN(c) OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id
+                                     ROWS {MMPOS_WINDOW - 1} PRECEDING)
+                        AS BIGINT) AS roll_min,
+                   CAST(MAX(c) OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id
+                                     ROWS {MMPOS_WINDOW - 1} PRECEDING)
+                        AS BIGINT) AS roll_max
+            FROM x
+        )
+        SELECT event_id, user_id, c AS cents, roll_min, roll_max,
+               CASE WHEN roll_max > roll_min
+                    THEN ROUND(CAST(c - roll_min AS DOUBLE)
+                               / (roll_max - roll_min), 6)
+               END AS channel_pos
+        FROM w
+    """,
+    tags=("window", "rolling", "events"),
+)
+def window_rolling_minmax_position(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ROLLING MIN/MAX CHANNEL POSITION per user: the 7-row trailing
+    envelope and where the current value sits inside it ((x−min)/
+    (max−min), the %R / stochastic-oscillator statistic every
+    monitoring dashboard derives from a bounded window; NULL while
+    the envelope is degenerate). Exact integer cents through both
+    envelope extremes — MIN/MAX windows are order-insensitive, so no
+    fold discipline is needed — and ONE float division at the end
+    (non-negative by construction: no -0.0 surface). O(1) window
+    state, single shuffle keyed by user, the (ts, event_id) tiebreak
+    on both engines."""
+    e = load_table(spark, sf_dir, "events")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-(MMPOS_WINDOW - 1), Window.currentRow)
+    )
+    c = F.round(F.col("value") * 100).cast("bigint")
+    x = e.select("event_id", "user_id", "ts", c.alias("c"))
+    roll = x.select(
+        "event_id",
+        "user_id",
+        F.col("c").alias("cents"),
+        F.min("c").over(w).cast("bigint").alias("roll_min"),
+        F.max("c").over(w).cast("bigint").alias("roll_max"),
+    )
+    spread = F.col("roll_max") - F.col("roll_min")
+    return roll.select(
+        "event_id",
+        "user_id",
+        "cents",
+        "roll_min",
+        "roll_max",
+        F.when(
+            spread > 0,
+            F.round(
+                (F.col("cents") - F.col("roll_min")).cast("double") / spread,
+                6,
+            ),
+        ).alias("channel_pos"),
+    )

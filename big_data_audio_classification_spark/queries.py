@@ -38,13 +38,3 @@ import big_data_audio_classification_spark.operators.ml_closed_form  # noqa: F40
 import big_data_audio_classification_spark.operators.sketch_cms  # noqa: F401
 import big_data_audio_classification_spark.operators.experiments  # noqa: F401
 import big_data_audio_classification_spark.streaming.events  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r7  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r7_tranche2  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r8  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r8_tranche2  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r9  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r9_tranche2  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r9_tranche3  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r10  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r10_tranche2  # noqa: F401
-import big_data_audio_classification_spark.operators.stock_r10_tranche3  # noqa: F401

@@ -49,7 +49,7 @@ def get_spark(app_name: str = "big-data-audio-classification-spark",
     cores = _local_cores()
     if shuffle_partitions is None:
         shuffle_partitions = cores
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -65,29 +65,8 @@ def get_spark(app_name: str = "big-data-audio-classification-spark",
         # has no nanos type — read as long and convert in the catalog.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(map=WORKER_CONF)
+        .getOrCreate()
     )
-    # Scale-dependent I/O + shuffle knobs, parameterized (r10, guide
-    # §6/§9): local defaults stay Spark's (the driver's bench remains
-    # comparable round-over-round); on a cluster export e.g.
-    #   SPARK_GRAFT_MAX_PARTITION_BYTES=1g      (big sequential scans:
-    #       fewer, larger scan tasks -> fewer shuffle blocks, §2.2/§6)
-    #   SPARK_GRAFT_ADVISORY_PARTITION_BYTES=256m (AQE coalesce target:
-    #       100 MB-1 GB reduce partitions instead of core-count-sized)
-    #   SPARK_GRAFT_PARQUET_CODEC=zstd          (smaller files than
-    #       snappy at similar read speed for any parquet the jobs write)
-    # Locally these stay unset: a 10 MB single-row-group input cannot
-    # exercise them, and pinning cluster values here would tune for
-    # local[32] instead (the config-only-win trap).
-    for env, key in (
-        ("SPARK_GRAFT_MAX_PARTITION_BYTES", "spark.sql.files.maxPartitionBytes"),
-        ("SPARK_GRAFT_ADVISORY_PARTITION_BYTES",
-         "spark.sql.adaptive.advisoryPartitionSizeInBytes"),
-        ("SPARK_GRAFT_PARQUET_CODEC", "spark.sql.parquet.compression.codec"),
-    ):
-        v = os.environ.get(env)
-        if v:
-            builder = builder.config(key, v)
-    return builder.getOrCreate()
 
 
 def stop_spark() -> None:

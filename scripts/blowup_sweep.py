@@ -20,10 +20,12 @@ Usage: python scripts/blowup_sweep.py [K ...]   (default 1 3 10)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import pyspark.sql.functions as F
 

@@ -15,7 +15,9 @@ to a SHARED Spark-side helper (e.g. dedup._lsh_band_table) are not
 captured and still need a manual RECERTIFY entry from the round-close
 diff review. Oracle-side helpers ARE captured (the registered oracle
 is the fully-materialized SQL string). Docstring-only edits count as
-drift — conservatively re-certify.
+drift — conservatively re-certify. The fingerprint does not depend on
+the module a query fn lives in, so moving a fn verbatim to another
+module needs no RECERTIFY entry.
 
 Usage:
     python scripts/check_dirty.py            # gate (exit 1 on violation)

@@ -1,14 +1,16 @@
 """Regenerate PLANS.md: the physical plans of the flagship queries with
 commentary on why each is the plan we want at 100 TB.
 
-Usage: python scripts/dump_plans.py [sf_dir]  (writes /root/repo/PLANS.md)
+Usage: python scripts/dump_plans.py [sf_dir]  (writes PLANS.md at the repo root)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from big_data_audio_classification_spark.plans.introspect import formatted_plan
 from big_data_audio_classification_spark.registry import all_queries
@@ -230,7 +232,7 @@ def main() -> None:
         # keep the physical-plan tree + the scan details, drop the long
         # per-node field dumps beyond what the commentary references
         out += [f"## {name}", "", why, "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
     spark.stop()

@@ -12,7 +12,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from big_data_audio_classification_spark.registry import all_queries
 from big_data_audio_classification_spark.session import get_spark

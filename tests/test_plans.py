@@ -732,7 +732,7 @@ def test_amplification_curve_pairs_form_only_via_token_equijoin(spark, sf_dir):
     """The S-curve's pair formation must be the linear-output token
     intersection equi-join — a cartesian/nested-loop over sampled docs
     would defeat the whole design."""
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_lsh_amplification_curve,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -746,7 +746,7 @@ def test_amplification_curve_pairs_form_only_via_token_equijoin(spark, sf_dir):
 def test_bloom_filter_probe_broadcasts_bits(spark, sf_dir):
     """The bit table is bounded by m=16384 rows — the probe join must
     broadcast it, never shuffle the probe side against it."""
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.sketch_cms import (
         sketch_bloom_filter_portable,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -763,7 +763,7 @@ def test_hll_register_aggregate_is_bounded(spark, sf_dir):
     estimate must come from one aggregate over it (no per-key state
     survives past the register groupBy) and the spine join must
     broadcast."""
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.sketch_cms import (
         sketch_hll_portable,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -775,7 +775,7 @@ def test_hll_register_aggregate_is_bounded(spark, sf_dir):
 
 
 def test_label_propagation_rounds_are_equijoins(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.graph import (
         graph_label_propagation_sync,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -793,7 +793,7 @@ def test_exists_census_decorrelates_to_hash_joins(spark, sf_dir):
     """Each correlated EXISTS must rewrite to a semi/anti hash join
     keyed on custkey — a per-row subquery re-execution would be the
     100 TB disaster the operator exists to rule out."""
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         subquery_exists_census,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -808,7 +808,7 @@ def test_exists_census_decorrelates_to_hash_joins(spark, sf_dir):
 def test_simhash_multiprobe_joins_on_probe_key(spark, sf_dir):
     """The Hamming-1 census must equi-join XOR probes against the
     fingerprint table — never an all-pairs Hamming scan."""
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_simhash_multiprobe16,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -822,7 +822,7 @@ def test_simhash_multiprobe_joins_on_probe_key(spark, sf_dir):
 def test_asof_nearest_is_single_user_shuffle_no_range_join(spark, sf_dir):
     """The nearest as-of must be the unioned-stream double-carry (one
     shuffle keyed by user), never a time-range join."""
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         join_asof_nearest_abs,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -839,7 +839,7 @@ def test_asof_nearest_is_single_user_shuffle_no_range_join(spark, sf_dir):
 def test_pca_contract_moment_pass_is_dim_keyed(spark, sf_dir):
     """The PCA contract's value side is one aggregate keyed by dim —
     no cartesian, no per-dimension replan."""
-    from big_data_audio_classification_spark.operators.stock_r9 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_pca_variance_contract,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -854,7 +854,7 @@ def test_scalar_subquery_census_decorrelates(spark, sf_dir):
     """The correlated MAX must rewrite to an aggregate + join and the
     uncorrelated global average to a broadcast scalar — never a
     per-customer re-execution."""
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.relational import (
         subquery_scalar_correlated_census,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -870,7 +870,7 @@ def test_dual_band_join_is_broadcast_nlj(spark, sf_dir):
     """With a 7-row literal dimension, the compound range predicate
     should compile to a broadcast nested-loop — the right plan at this
     dimension size (and never a shuffled cartesian)."""
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.relational import (
         join_range_dual_band,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -885,7 +885,7 @@ def test_dual_band_join_is_broadcast_nlj(spark, sf_dir):
 def test_countmin_probe_joins_stay_bounded(spark, sf_dir):
     """The CM heavy-hitter probe must equi-join (j, bucket) against
     the 256-cell grid — no cartesian anywhere in the sketch path."""
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.sketch_cms import (
         sketch_countmin_heavy_hitters,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -900,7 +900,7 @@ def test_cc_bounded_rounds_are_equijoins(spark, sf_dir):
     """Every bounded-CC round is a pair of keyed aggregates over
     equi-joins on (doc) and (band_id, band_hash) — the label never
     moves through anything wider."""
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_cc_bounded_histogram,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -918,7 +918,7 @@ def test_cc_bounded_rounds_are_equijoins(spark, sf_dir):
 def test_bm25_stats_frame_broadcasts(spark, sf_dir):
     """The 1-row corpus-stats frame must reach every doc row via a
     broadcast — never a shuffled or cartesian join against dt."""
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.text import (
         text_tfidf_bm25_probe_ranking,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -934,7 +934,7 @@ def test_nesting_depth_join_carries_equikey(spark, sf_dir):
     """The containment self-join must ride the o_custkey equi-key
     (hash/sort-merge), with the interval predicates as post-filters —
     never a cartesian or nested-loop over the whole table."""
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.relational import (
         join_range_nesting_depth,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -952,7 +952,7 @@ def test_nesting_depth_join_carries_equikey(spark, sf_dir):
 def test_asof_signup_carry_is_joinless(spark, sf_dir):
     """The backward carry is ONE union + ONE running window — the
     as-of must never compile to a range join or cartesian."""
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.relational import (
         join_asof_prior_signup_lag,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -968,7 +968,7 @@ def test_asof_signup_carry_is_joinless(spark, sf_dir):
 def test_value_digits_scan_prunes_and_samples_first(spark, sf_dir):
     """The orders scan must read only the two needed columns, and the
     systematic sample must filter BEFORE the Python UDTF fan-out."""
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         udtf_value_digits,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -986,7 +986,7 @@ def test_value_digits_scan_prunes_and_samples_first(spark, sf_dir):
 def test_centroid_geometry_pushes_the_cell_filter(spark, sf_dir):
     """vec_id < 8 must reach the parquet scan — the O(cells) report
     never reads the full embedding corpus."""
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.similarity import (
         sim_ivf_centroid_geometry,
     )
     from big_data_audio_classification_spark.plans.introspect import (
@@ -999,7 +999,7 @@ def test_centroid_geometry_pushes_the_cell_filter(spark, sf_dir):
 def test_frequency_encoding_code_table_broadcasts(spark, sf_dir):
     """The |categories|-row code table must broadcast back onto the
     fact stream — the applied-encoding join never shuffles events."""
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_frequency_rank_encoding,
     )
     from big_data_audio_classification_spark.plans.introspect import (

@@ -49,7 +49,7 @@ def test_quantile_binning_equals_ntile_window(spark, sf_dir):
 def test_session_deciles_equal_rank_window(spark, sf_dir):
     """The duration-value ledger read must equal the global ROW_NUMBER
     pick (value at rank ⌈n·d/10⌉) on the same session frame."""
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.analytics import (
         events_session_duration_deciles,
     )
 
@@ -59,7 +59,7 @@ def test_session_deciles_equal_rank_window(spark, sf_dir):
     }
     # independent replay: collect the session durations and rank in
     # python (tiny at sf0.001)
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.analytics import (
         SESSION_GAP_S,
     )
     from big_data_audio_classification_spark.sources.catalog import load_table
@@ -89,7 +89,7 @@ def test_gini_ledger_algebra_equals_ranked_form(spark, sf_dir):
     """Σ(2i−n−1)·f over ranked keys == Σ f·c·(2p+c+1) − (n+1)·Σf over
     the frequency ledger — the tie-group rank-sum invariance the r11
     rewrite rests on."""
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.scale_patterns import (
         skew_key_gini_imbalance,
     )
     from big_data_audio_classification_spark.sources.catalog import load_table
@@ -222,9 +222,10 @@ def test_bench_line_fits_driver_capture():
     (ADVICE r10: one fallback was ~2 flagships away from re-triggering
     the r09 parsed:null failure)."""
     import json as _json
+    import os as _os
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo")
+    _sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
     import bench
 
     cold = {n: 12.345 for n in bench.HEADLINE}

@@ -8,9 +8,10 @@ only, so the window must (a) be exactly the curated DRIVER_WINDOW list,
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from big_data_audio_classification_spark.registry import DRIVER_WINDOW, all_queries
 
@@ -158,3 +159,41 @@ def test_no_array_or_map_outputs_in_sql_oracled_queries(spark, sf_dir):
         r for r in (check(item) for _, item in results if item is not None) if r
     )
     assert not offenders, f"array/map output columns in SQL-oracled queries: {offenders}"
+
+
+# Round-named test files whose tests still await a move into the family
+# test file of their subject. The set may only shrink.
+ROUND_NAMED_TEST_FILES = {
+    "test_r10_optimizations.py",
+    "test_r11_optimizations.py",
+    "test_round5.py",
+    "test_round6.py",
+    "test_round6_spares.py",
+    "test_round6_tranche2.py",
+    "test_round7_stock.py",
+    "test_round7_tranche2.py",
+    "test_round8_stock.py",
+    "test_round8_tranche2.py",
+    "test_round10_stock.py",
+    "test_round10_tranche2.py",
+    "test_round10_tranche3.py",
+    "test_stock_r9.py",
+    "test_stock_r9_tranche2.py",
+    "test_stock_r9_tranche3.py",
+}
+
+
+def test_modules_are_named_by_family_not_by_round():
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    round_named = re.compile(r"stock_|round|tranche|_r\d+")
+    found = {
+        os.path.relpath(os.path.join(d, f), root)
+        for top in ("big_data_audio_classification_spark", "tests")
+        for d, _, files in os.walk(os.path.join(root, top))
+        for f in files
+        if f.endswith(".py") and round_named.search(f)
+    }
+    allowed = {os.path.join("tests", f) for f in ROUND_NAMED_TEST_FILES}
+    assert found <= allowed, f"round-named modules: {sorted(found - allowed)}"

@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-10 stock tranche
-(operators/stock_r10.py). Oracle-independent properties only — the
+(now in the family operator modules). Oracle-independent properties only — the
 tri-SF bit-exact gate owns value parity. Every carrier in the tranche
 has at least one test here (the gating-battery replay leg)."""
 
@@ -28,7 +28,7 @@ def _events(spark, sf_dir):
 
 
 def test_laplace_addk_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         ADDK_K,
         ADDK_TERMS,
         text_lm_laplace_addk,
@@ -51,7 +51,7 @@ def test_laplace_addk_replay(spark, sf_dir):
 
 
 def test_source_llr_zero_tf_scores_zero(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         text_lm_source_loglik_ratio,
     )
 
@@ -63,7 +63,7 @@ def test_source_llr_zero_tf_scores_zero(spark, sf_dir):
 
 
 def test_bigram_oov_bounds_and_short_docs(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         text_lm_bigram_oov_rate,
     )
 
@@ -84,7 +84,7 @@ def test_bigram_oov_bounds_and_short_docs(spark, sf_dir):
 
 
 def test_payload_entropy_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         mm_payload_shannon_entropy,
     )
 
@@ -114,7 +114,7 @@ def test_payload_entropy_replay(spark, sf_dir):
 def test_payload_xor_parity_replay(spark, sf_dir):
     from functools import reduce
 
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         mm_payload_xor_parity,
     )
 
@@ -132,7 +132,7 @@ def test_payload_xor_parity_replay(spark, sf_dir):
 
 
 def test_payload_diff_profile_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         mm_payload_diff_profile,
     )
 
@@ -153,7 +153,7 @@ def test_payload_diff_profile_replay(spark, sf_dir):
 
 
 def test_udaf_entropy_bounds_and_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_pandas_udaf_entropy,
     )
 
@@ -181,7 +181,7 @@ def test_udaf_entropy_bounds_and_replay(spark, sf_dir):
 
 
 def test_asof_prior_error_latency_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.relational import (
         ASOF_ERR_TOL_S,
         join_asof_prior_error_latency,
     )
@@ -215,7 +215,7 @@ def test_asof_prior_error_latency_replay(spark, sf_dir):
 
 
 def test_setop_weekday_weekend_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.relational import (
         set_except_weekday_weekend,
     )
 
@@ -238,7 +238,7 @@ def test_setop_weekday_weekend_replay(spark, sf_dir):
 
 
 def test_cube_share_of_parent_hierarchy(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_cube_share_of_parent,
     )
 
@@ -262,7 +262,7 @@ def test_cube_share_of_parent_hierarchy(spark, sf_dir):
 
 
 def test_countmin_never_undercounts(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.sketch_cms import (
         CMHH_TOPK,
         sketch_countmin_heavy_hitters,
     )
@@ -283,7 +283,7 @@ def test_countmin_never_undercounts(spark, sf_dir):
 
 
 def test_suffix_census_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         SUFFIX_MIN_LEN,
         scalar_string_suffix_census,
     )
@@ -302,7 +302,7 @@ def test_suffix_census_replay(spark, sf_dir):
 
 
 def test_log_exp_battery_matches_libm(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_math_log_exp_battery,
     )
 
@@ -320,7 +320,7 @@ def test_log_exp_battery_matches_libm(spark, sf_dir):
 
 
 def test_json_variant_paths_agree(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_json_variant_crosswalk,
     )
 
@@ -336,7 +336,7 @@ def test_json_variant_paths_agree(spark, sf_dir):
 
 
 def test_map_pivot_fold_consistency(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_map_array_pivot_fold,
     )
 
@@ -354,7 +354,7 @@ def test_lsh_gini_replay(spark, sf_dir):
     from big_data_audio_classification_spark.operators.dedup import (
         _lsh_band_table,
     )
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_lsh_bucket_gini,
     )
 
@@ -380,7 +380,7 @@ def test_lsh_gini_replay(spark, sf_dir):
 
 
 def test_simhash_parity_planes_partition(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_simhash_parity_planes,
     )
 
@@ -396,7 +396,7 @@ def test_simhash_parity_planes_partition(spark, sf_dir):
 
 
 def test_idf_variants_formulas(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.text import (
         text_tfidf_idf_variants,
     )
 
@@ -416,7 +416,7 @@ def test_idf_variants_formulas(spark, sf_dir):
 
 
 def test_helmert_effects_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_helmert_contrast_effects,
     )
 
@@ -437,7 +437,7 @@ def test_helmert_effects_replay(spark, sf_dir):
 
 
 def test_scalar_subquery_census_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.relational import (
         subquery_scalar_correlated_census,
     )
 
@@ -453,7 +453,7 @@ def test_ivf_radius_profile_consistency(spark, sf_dir):
     from big_data_audio_classification_spark.operators.similarity import (
         IVF_CELLS,
     )
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.similarity import (
         sim_ivf_cell_radius_profile,
     )
 
@@ -466,7 +466,7 @@ def test_ivf_radius_profile_consistency(spark, sf_dir):
 
 
 def test_gain_ratio_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.ml import (
         GAIN_DIMS,
         ml_gain_ratio_selection,
     )
@@ -484,7 +484,7 @@ def test_gain_ratio_bounds(spark, sf_dir):
 
 
 def test_slice_rms_truncation_accounting(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.reference_pipeline import (
         SLICE_SAMPLES,
         ref_slice_rms_energy,
     )
@@ -505,7 +505,7 @@ def test_slice_rms_truncation_accounting(spark, sf_dir):
 
 
 def test_dual_band_partitions_orders(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.relational import (
         DUAL_BANDS,
         join_range_dual_band,
     )
@@ -521,7 +521,7 @@ def test_dual_band_partitions_orders(spark, sf_dir):
 
 
 def test_session_paths_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         PATHS_GAP_S,
         udtf_session_paths,
     )
@@ -557,7 +557,7 @@ def test_session_paths_replay(spark, sf_dir):
 
 
 def test_csv_null_empty_roundtrip_census(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         sink_csv_null_empty_roundtrip,
     )
 
@@ -579,7 +579,7 @@ def test_csv_null_empty_roundtrip_census(spark, sf_dir):
 
 
 def test_rolling_seasonal_resid_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.timeseries import (
         analytics_rolling_seasonal_resid,
     )
 
@@ -605,7 +605,7 @@ def test_rolling_seasonal_resid_replay(spark, sf_dir):
 
 
 def test_dr_ate_replay_and_degenerate_guard(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.experiments import (
         DR_TREAT_CUTOFF,
         stats_dr_ate,
     )
@@ -652,7 +652,7 @@ def test_cc_bounded_matches_fixpoint_when_converged(spark, sf_dir):
     from big_data_audio_classification_spark.operators.dedup import (
         dedup_connected_components,
     )
-    from big_data_audio_classification_spark.operators.stock_r10 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_cc_bounded_histogram,
     )
 

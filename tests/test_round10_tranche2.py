@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-10 stock tranche 2
-(operators/stock_r10_tranche2.py). Oracle-independent properties only —
+(now in the family operator modules). Oracle-independent properties only —
 the tri-SF bit-exact gate owns value parity. Every carrier in the
 tranche has at least one test here (the gating-battery replay leg)."""
 
@@ -29,7 +29,7 @@ def _doc_tokens(rows):
 
 
 def test_kl_source_divergence_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         text_lm_kl_source_divergence,
     )
 
@@ -59,7 +59,7 @@ def test_kl_source_divergence_replay(spark, sf_dir):
 
 
 def test_surprisal_profile_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         text_lm_token_surprisal_profile,
     )
 
@@ -86,7 +86,7 @@ def test_surprisal_profile_replay(spark, sf_dir):
 
 
 def test_chunk_sum_tree_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         CHUNK_BYTES,
         mm_payload_chunk_sum_tree,
     )
@@ -126,7 +126,7 @@ def _luhn(digits: list[int]) -> int:
 
 
 def test_luhn_mod10_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         mm_payload_luhn_mod10,
     )
 
@@ -152,7 +152,7 @@ def test_luhn_mod10_replay(spark, sf_dir):
 
 
 def test_intersect_three_way_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         set_intersect_three_way,
     )
 
@@ -175,7 +175,7 @@ def test_intersect_three_way_replay(spark, sf_dir):
 
 
 def test_groupingsets_weighted_avg_structure(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_groupingsets_weighted_avg,
     )
 
@@ -207,7 +207,7 @@ def test_groupingsets_weighted_avg_structure(spark, sf_dir):
 
 
 def test_linear_counting_estimator_quality(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.sketch_cms import (
         LC_BUCKETS,
         sketch_linear_counting,
     )
@@ -232,7 +232,7 @@ def test_linear_counting_estimator_quality(spark, sf_dir):
 
 
 def test_string_transform_battery_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         STR_TOPK,
         scalar_string_transform_battery,
     )
@@ -258,7 +258,7 @@ def test_string_transform_battery_replay(spark, sf_dir):
 
 
 def test_gray_code_rollup_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_math_gray_code_rollup,
     )
 
@@ -289,7 +289,7 @@ def test_gray_code_rollup_replay(spark, sf_dir):
 
 
 def test_json_keys_census_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_json_keys_census,
     )
 
@@ -319,7 +319,7 @@ def test_json_keys_census_replay(spark, sf_dir):
 
 
 def test_array_map_index_battery_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_array_map_index_battery,
     )
 
@@ -347,7 +347,7 @@ def test_array_map_index_battery_replay(spark, sf_dir):
 
 def test_signature_stability_profile(spark, sf_dir):
     from big_data_audio_classification_spark.operators.dedup import MINHASH_K
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_lsh_signature_stability,
     )
 
@@ -366,7 +366,7 @@ def test_signature_stability_profile(spark, sf_dir):
 
 
 def test_simhash_halfword_correlation_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_simhash_halfword_correlation,
     )
 

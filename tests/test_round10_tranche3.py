@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-10 stock tranche 3
-(operators/stock_r10_tranche3.py). Oracle-independent properties only —
+(now in the family operator modules). Oracle-independent properties only —
 the tri-SF bit-exact gate owns value parity. Every carrier in the
 tranche has at least one test here (the gating-battery replay leg)."""
 
@@ -28,7 +28,7 @@ def _cents(v: float) -> int:
 
 
 def test_asof_prior_signup_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.relational import (
         ASOF_SIGNUP_TOL_US,
         join_asof_prior_signup_lag,
     )
@@ -68,7 +68,7 @@ def test_asof_prior_signup_replay(spark, sf_dir):
 
 
 def test_variant_null_vs_missing_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_variant_null_vs_missing_census,
     )
 
@@ -94,10 +94,10 @@ def test_variant_null_vs_missing_replay(spark, sf_dir):
 
 
 def test_bm25_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.text import (
         BM25_B,
         BM25_K1,
-        BM25_TERMS,
+        BM25_PROBE_TERMS as BM25_TERMS,
         text_tfidf_bm25_probe_ranking,
     )
 
@@ -133,7 +133,7 @@ def test_bm25_replay(spark, sf_dir):
 
 
 def test_piecewise_ols_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.ml import (
         PIECEWISE_KNOT_DAY,
         ml_piecewise_linear_knot,
     )
@@ -167,7 +167,7 @@ def test_piecewise_ols_replay(spark, sf_dir):
 
 
 def test_any_all_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.relational import (
         subquery_any_all_quantified,
     )
 
@@ -203,7 +203,7 @@ def test_centroid_geometry_replay(spark, sf_dir):
     from big_data_audio_classification_spark.operators.similarity import (
         IVF_CELLS,
     )
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.similarity import (
         sim_ivf_centroid_geometry,
     )
 
@@ -232,7 +232,7 @@ def test_centroid_geometry_replay(spark, sf_dir):
 
 
 def test_odds_ratio_cells_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.ml import (
         OR_DIMS,
         ml_odds_ratio_selection,
     )
@@ -264,7 +264,7 @@ def test_odds_ratio_cells_replay(spark, sf_dir):
 
 
 def test_frequency_rank_encoding_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_frequency_rank_encoding,
     )
 
@@ -290,7 +290,7 @@ def test_frequency_rank_encoding_replay(spark, sf_dir):
 
 
 def test_clip_amplitude_census_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.reference_pipeline import (
         ref_clip_amplitude_census,
     )
 
@@ -314,7 +314,7 @@ def test_clip_amplitude_census_replay(spark, sf_dir):
 
 
 def test_nesting_depth_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.relational import (
         join_range_nesting_depth,
     )
 
@@ -345,7 +345,7 @@ def test_nesting_depth_replay(spark, sf_dir):
 
 
 def test_session_gap_cv_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.analytics import (
         SESSION_GAP_US,
         events_session_gap_cv,
     )
@@ -394,12 +394,12 @@ def test_session_gap_cv_replay(spark, sf_dir):
 
 
 def test_value_digits_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         DIGIT_MAX_POS,
         udtf_value_digits,
     )
 
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         DIGIT_SAMPLE_MOD,
     )
 
@@ -427,7 +427,7 @@ def test_value_digits_replay(spark, sf_dir):
 
 
 def test_mode_share_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_pandas_udaf_mode_share,
     )
 
@@ -449,7 +449,7 @@ def test_mode_share_replay(spark, sf_dir):
 
 
 def test_pipe_quotechar_roundtrip_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         sink_csv_pipe_quotechar_roundtrip,
     )
 
@@ -468,7 +468,7 @@ def test_pipe_quotechar_roundtrip_replay(spark, sf_dir):
 
 
 def test_values_inline_table_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.relational import (
         PRIORITY_WEIGHTS,
         sql_values_inline_table,
     )
@@ -497,7 +497,7 @@ def test_values_inline_table_replay(spark, sf_dir):
 
 
 def test_level_dow_decomp_identities(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.timeseries import (
         analytics_level_dow_rolling_decomp,
     )
 
@@ -530,7 +530,7 @@ def test_level_dow_decomp_identities(spark, sf_dir):
 
 
 def test_mantel_haenszel_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.experiments import (
         MH_STRATA,
         stats_mantel_haenszel_or,
     )
@@ -570,7 +570,7 @@ def test_mantel_haenszel_replay(spark, sf_dir):
 
 
 def test_topk_key_share_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r10_tranche3 import (
+    from big_data_audio_classification_spark.operators.scale_patterns import (
         SKEW_TOPK,
         skew_topk_key_share,
     )

@@ -136,7 +136,7 @@ def test_field_boost_reranks_vs_plain(spark, sf_dir):
 
 
 def test_absolute_discount_is_proper_over_seen(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.text import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         text_lm_absolute_discount,
     )
 

@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-7-built stock carriers
-(operators/stock_r7.py) and the r07 additions. Oracle-independent
+(now in the family operator modules) and the r07 additions. Oracle-independent
 properties only — the tri-SF bit-exact gate owns value parity."""
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from big_data_audio_classification_spark.sources.catalog import load_table
 def test_asof_forward_matches_pandas_replay(spark, sf_dir):
     import pandas as pd
 
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.relational import (
         ASOF_FWD_TOLERANCE_S,
         join_asof_forward_tolerance,
     )
@@ -45,7 +45,7 @@ def test_asof_forward_matches_pandas_replay(spark, sf_dir):
 
 
 def test_multiset_setops_algebra(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.relational import (
         set_multiset_intersect_except,
     )
 
@@ -59,7 +59,7 @@ def test_multiset_setops_algebra(spark, sf_dir):
 
 
 def test_correlated_above_avg_python_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.relational import (
         subquery_correlated_above_avg,
     )
 
@@ -79,7 +79,7 @@ def test_correlated_above_avg_python_replay(spark, sf_dir):
 def test_point_in_interval_matches_python(spark, sf_dir):
     import pandas as pd
 
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.relational import (
         PII_WINDOW_H,
         join_range_point_in_interval,
     )
@@ -105,8 +105,8 @@ def test_point_in_interval_matches_python(spark, sf_dir):
 
 
 def test_kmv_sketch_exact_fallback_and_error(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
-        KMV_K,
+    from big_data_audio_classification_spark.operators.aggregates import (
+        KMV_DISTINCT_K as KMV_K,
         agg_kmv_distinct_sketch,
     )
 
@@ -120,7 +120,7 @@ def test_kmv_sketch_exact_fallback_and_error(spark, sf_dir):
 
 
 def test_grouping_id_subtotal_levels(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_grouping_id_subtotals,
     )
 
@@ -132,7 +132,7 @@ def test_grouping_id_subtotal_levels(spark, sf_dir):
 
 
 def test_decile_ratio_udaf_matches_numpy(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_pandas_udaf_decile_ratio,
     )
 
@@ -148,7 +148,7 @@ def test_decile_ratio_udaf_matches_numpy(spark, sf_dir):
 
 
 def test_inverse_trig_identities(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_math_inverse_trig,
     )
 
@@ -161,7 +161,7 @@ def test_inverse_trig_identities(spark, sf_dir):
 
 
 def test_json_object_shape_constants(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_json_object_shape,
     )
 
@@ -173,7 +173,7 @@ def test_json_object_shape_constants(spark, sf_dir):
 
 
 def test_variant_mixed_scalar_nulls(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_variant_mixed_scalars,
     )
 
@@ -185,7 +185,7 @@ def test_variant_mixed_scalar_nulls(spark, sf_dir):
 
 
 def test_array_set_algebra_python_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         array_sequence_set_algebra,
     )
 
@@ -200,7 +200,7 @@ def test_array_set_algebra_python_replay(spark, sf_dir):
 
 
 def test_map_histogram_accounts_every_event(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_map_user_type_histogram,
     )
 
@@ -222,7 +222,7 @@ def test_map_histogram_accounts_every_event(spark, sf_dir):
 
 
 def test_lsh_bucket_profile_consistency(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_lsh_bucket_profile,
     )
 
@@ -236,7 +236,7 @@ def test_lsh_bucket_profile_consistency(spark, sf_dir):
 
 
 def test_simhash_prefix_schedule_monotone(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_simhash_prefix_schedule,
     )
 
@@ -251,7 +251,7 @@ def test_simhash_prefix_schedule_monotone(spark, sf_dir):
 
 
 def test_bm25_descending_and_matching(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.text import (
         text_bm25_rank,
     )
 
@@ -262,7 +262,7 @@ def test_bm25_descending_and_matching(spark, sf_dir):
 
 
 def test_jm_loglik_python_replay_spotcheck(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         JM_LAMBDA,
         JM_TERMS,
         text_lm_jelinek_mercer,
@@ -289,7 +289,7 @@ def test_jm_loglik_python_replay_spotcheck(spark, sf_dir):
 
 
 def test_ivf_margin_invariants(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.similarity import (
         sim_ivf_second_choice_margin,
     )
 
@@ -304,7 +304,7 @@ def test_ivf_margin_invariants(spark, sf_dir):
 
 
 def test_mrmr_rank_orders_scores(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_mrmr_feature_rank,
     )
 
@@ -318,7 +318,7 @@ def test_mrmr_rank_orders_scores(spark, sf_dir):
 
 
 def test_count_encoding_shrinks_toward_prior(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_count_encoding_smoothed,
     )
 
@@ -341,7 +341,7 @@ def test_count_encoding_shrinks_toward_prior(spark, sf_dir):
 
 
 def test_ref_parity_shares_partition_unity(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.reference_pipeline import (
         ref_parity_duration_shares,
     )
 
@@ -352,7 +352,7 @@ def test_ref_parity_shares_partition_unity(spark, sf_dir):
 
 
 def test_crest_factor_at_least_one(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.audio import (
         audio_crest_factor,
     )
 
@@ -363,7 +363,7 @@ def test_crest_factor_at_least_one(spark, sf_dir):
 
 
 def test_salt_plan_invariants(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.scale_patterns import (
         skew_salt_factor_plan,
     )
 
@@ -375,7 +375,7 @@ def test_salt_plan_invariants(spark, sf_dir):
 
 
 def test_session_deciles_monotone(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.analytics import (
         events_session_duration_deciles,
     )
 
@@ -389,7 +389,7 @@ def test_session_deciles_monotone(spark, sf_dir):
 
 
 def test_word_bigrams_python_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         BIGRAM_DOC_CAP,
         BIGRAM_PREFIX,
         udtf_word_bigrams,
@@ -413,7 +413,7 @@ def test_word_bigrams_python_replay(spark, sf_dir):
 
 
 def test_tsv_roundtrip_preserves_population(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         sink_csv_tsv_dialect_roundtrip,
     )
 
@@ -426,7 +426,7 @@ def test_tsv_roundtrip_preserves_population(spark, sf_dir):
 
 
 def test_rolling_skew_kurt_numpy_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.windows import (
         RSK_WINDOW,
         window_rolling_skew_kurt,
     )
@@ -471,7 +471,7 @@ def test_rolling_skew_kurt_numpy_replay(spark, sf_dir):
 
 
 def test_dow_profile_effects_average_out(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.timeseries import (
         analytics_dow_additive_profile,
     )
 
@@ -484,7 +484,7 @@ def test_dow_profile_effects_average_out(spark, sf_dir):
 
 
 def test_stratified_ate_python_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7 import (
+    from big_data_audio_classification_spark.operators.experiments import (
         stats_stratified_ate,
     )
 
@@ -523,8 +523,9 @@ def test_pipeline_metadata_contract_shape(spark, sf_dir):
 def test_stock_r7_plans_no_cartesian(spark, sf_dir):
     """No accidental cartesian products: every crossJoin in the new
     carriers is against a broadcast 1-row (or tiny constant) frame."""
-    from big_data_audio_classification_spark.operators import stock_r7 as m
+    from big_data_audio_classification_spark.registry import spark_queries
 
+    fns = spark_queries()
     for name in (
         "join_range_point_in_interval",
         "dedup_lsh_bucket_profile",
@@ -533,7 +534,7 @@ def test_stock_r7_plans_no_cartesian(spark, sf_dir):
         "stats_stratified_ate",
     ):
         plan = (
-            getattr(m, name)(spark, sf_dir)
+            fns[name](spark, sf_dir)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()

@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-7 tranche-2 stock carriers
-(operators/stock_r7_tranche2.py). Oracle-independent properties only —
+(now in the family operator modules). Oracle-independent properties only —
 the tri-SF bit-exact gate owns value parity."""
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from big_data_audio_classification_spark.sources.catalog import load_table
 
 
 def test_asof_cross_table_pandas_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         join_asof_cross_table,
     )
 
@@ -39,7 +39,7 @@ def test_asof_cross_table_pandas_replay(spark, sf_dir):
 
 
 def test_semi_anti_partition_identity(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         set_semi_anti_census,
     )
 
@@ -48,7 +48,7 @@ def test_semi_anti_partition_identity(spark, sf_dir):
 
 
 def test_theta_sketch_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         THETA_K,
         agg_theta_sketch_setops,
     )
@@ -63,7 +63,7 @@ def test_theta_sketch_bounds(spark, sf_dir):
 
 
 def test_cube_grouping_sets_lattice(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_cube_as_grouping_sets,
     )
 
@@ -79,7 +79,7 @@ def test_cube_grouping_sets_lattice(spark, sf_dir):
 
 
 def test_integer_bits_python_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_math_integer_bits,
     )
 
@@ -92,7 +92,7 @@ def test_integer_bits_python_replay(spark, sf_dir):
 
 
 def test_edit_distance_python_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_string_edit_distance,
     )
 
@@ -111,7 +111,7 @@ def test_edit_distance_python_replay(spark, sf_dir):
 
 
 def test_variant_tree_branch_presence(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_variant_object_tree,
     )
 
@@ -122,7 +122,7 @@ def test_variant_tree_branch_presence(spark, sf_dir):
 
 
 def test_array_histogram_partitions_vector(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         AHIST_BINS,
         array_value_histogram,
     )
@@ -133,7 +133,7 @@ def test_array_histogram_partitions_vector(spark, sf_dir):
 
 
 def test_map_transform_arith_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_map_transform_arith,
     )
 
@@ -146,7 +146,7 @@ def test_map_transform_arith_replay(spark, sf_dir):
 
 
 def test_minhash_containment_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_minhash_containment_est,
     )
 
@@ -160,7 +160,7 @@ def test_minhash_containment_bounds(spark, sf_dir):
 
 
 def test_lsh_band_multiplicity_domain(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_lsh_band_multiplicity,
     )
 
@@ -170,7 +170,7 @@ def test_lsh_band_multiplicity_domain(spark, sf_dir):
 
 
 def test_simhash_sensitivity_small_flips(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_simhash_sensitivity,
     )
 
@@ -185,7 +185,7 @@ def test_simhash_sensitivity_small_flips(spark, sf_dir):
 
 
 def test_rarity_profile_covers_vocab(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.text import (
         text_tfidf_rarity_profile,
     )
 
@@ -204,7 +204,7 @@ def test_rarity_profile_covers_vocab(spark, sf_dir):
 
 
 def test_good_turing_identities(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         text_lm_good_turing,
     )
 
@@ -218,7 +218,7 @@ def test_good_turing_identities(spark, sf_dir):
 
 
 def test_nprobe_cost_monotone(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.similarity import (
         sim_ivf_nprobe_cost_model,
     )
 
@@ -233,7 +233,7 @@ def test_nprobe_cost_monotone(spark, sf_dir):
 
 
 def test_fisher_score_positive_and_ranked(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_fisher_score_selection,
     )
 
@@ -247,7 +247,7 @@ def test_fisher_score_positive_and_ranked(spark, sf_dir):
 
 
 def test_hashing_trick_accounts_all_rows(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_hashing_trick_encoding,
     )
 
@@ -261,7 +261,7 @@ def test_hashing_trick_accounts_all_rows(spark, sf_dir):
 
 
 def test_keep_policy_differs_iff_multi(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.reference_pipeline import (
         ref_dedup_keep_policy,
     )
 
@@ -273,7 +273,7 @@ def test_keep_policy_differs_iff_multi(spark, sf_dir):
 
 
 def test_week_containment_excludes_spanners(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         join_range_week_containment,
     )
 
@@ -286,7 +286,7 @@ def test_week_containment_excludes_spanners(spark, sf_dir):
 
 
 def test_gini_in_unit_interval(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.scale_patterns import (
         skew_key_gini_imbalance,
     )
 
@@ -296,7 +296,7 @@ def test_gini_in_unit_interval(spark, sf_dir):
 
 
 def test_bounce_rate_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.analytics import (
         events_session_bounce_rate,
     )
 
@@ -308,7 +308,7 @@ def test_bounce_rate_bounds(spark, sf_dir):
 
 
 def test_prefix_stats_python_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         PREFIX_STATS_N,
         udtf_prefix_running_stats,
     )
@@ -330,7 +330,7 @@ def test_prefix_stats_python_replay(spark, sf_dir):
 
 
 def test_midhinge_matches_numpy(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_pandas_udaf_midhinge,
     )
 
@@ -347,7 +347,7 @@ def test_midhinge_matches_numpy(spark, sf_dir):
 
 
 def test_quoted_csv_preserves_masses(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         sink_csv_quoted_fields_roundtrip,
     )
 
@@ -358,7 +358,7 @@ def test_quoted_csv_preserves_masses(spark, sf_dir):
 
 
 def test_rolling_ratio_band_consistency(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.windows import (
         window_rolling_sum_ratio,
     )
 
@@ -375,7 +375,7 @@ def test_rolling_ratio_band_consistency(spark, sf_dir):
 
 
 def test_weekpart_effects_average_out(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.timeseries import (
         analytics_weekpart_decomp,
     )
 
@@ -386,7 +386,7 @@ def test_weekpart_effects_average_out(spark, sf_dir):
 
 
 def test_iv_wald_identity(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.experiments import (
         stats_iv_wald_estimator,
     )
 
@@ -396,7 +396,7 @@ def test_iv_wald_identity(spark, sf_dir):
 
 
 def test_phase_energy_accounts_total(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.audio import (
         audio_phase_energy_ratio,
     )
 
@@ -414,7 +414,7 @@ def test_phase_energy_accounts_total(spark, sf_dir):
 
 
 def test_payload_byte_histogram_accounts_chars(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         mm_payload_byte_histogram,
     )
 
@@ -428,7 +428,7 @@ def test_payload_byte_histogram_accounts_chars(spark, sf_dir):
 
 
 def test_sql_pivot_matches_dataframe_pivot(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r7_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         sql_pivot_status_matrix,
     )
 

@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-8-built stock carriers
-(operators/stock_r8.py). Oracle-independent properties only — the
+(now in the family operator modules). Oracle-independent properties only — the
 tri-SF bit-exact gate owns value parity."""
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from big_data_audio_classification_spark.sources.catalog import load_table
 
 
 def test_rolling_drawdown_matches_pandas_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8 import (
+    from big_data_audio_classification_spark.operators.windows import (
         window_rolling_drawdown,
     )
 
@@ -33,7 +33,7 @@ def test_rolling_drawdown_matches_pandas_replay(spark, sf_dir):
 
 
 def test_drawdown_frac_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8 import (
+    from big_data_audio_classification_spark.operators.windows import (
         window_rolling_drawdown,
     )
 
@@ -47,7 +47,7 @@ def test_drawdown_frac_bounds(spark, sf_dir):
 
 
 def test_adler_checksum_matches_zlib(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         mm_payload_adler_checksum,
     )
 
@@ -65,7 +65,7 @@ def test_adler_positional_definition():
     """The oracle's positional restatement (s1 = 1+Σb, s2 = n+Σ(n−i+1)·b,
     both mod 65521) IS Adler-32 — verified against zlib on adversarial
     payloads (empty-adjacent, all-same, mod-wrap lengths)."""
-    from big_data_audio_classification_spark.operators.stock_r8 import ADLER_MOD
+    from big_data_audio_classification_spark.operators.multimodal import ADLER_MOD
 
     for payload in (b"a", b"zz", b"x" * 5000, bytes(range(32, 127)) * 80):
         n = len(payload)
@@ -77,7 +77,7 @@ def test_adler_positional_definition():
 def test_dirichlet_prior_replay_and_length_adaptivity(spark, sf_dir):
     import math
 
-    from big_data_audio_classification_spark.operators.stock_r8 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         DIR_MU,
         DIR_TERMS,
         text_lm_dirichlet_prior,

@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-8 tranche-2 pre-stock carriers
-(operators/stock_r8_tranche2.py). Oracle-independent properties only —
+(now in the family operator modules). Oracle-independent properties only —
 the tri-SF bit-exact gate owns value parity."""
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from big_data_audio_classification_spark.sources.catalog import load_table
 
 
 def test_pad_overlay_matches_python(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_string_pad_overlay,
     )
 
@@ -27,7 +27,7 @@ def test_pad_overlay_matches_python(spark, sf_dir):
 
 
 def test_rounding_battery_identities(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_math_rounding_battery,
     )
 
@@ -47,7 +47,7 @@ def test_rounding_battery_identities(spark, sf_dir):
 def test_json_flatten_kv_covers_every_field(spark, sf_dir):
     import json
 
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_json_flatten_kv,
     )
 
@@ -65,7 +65,7 @@ def test_json_flatten_kv_covers_every_field(spark, sf_dir):
 
 
 def test_running_extrema_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         AREX_Q,
         array_running_extrema,
     )
@@ -83,7 +83,7 @@ def test_running_extrema_replay(spark, sf_dir):
 
 
 def test_map_filter_concat_dense_and_threshold(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         MAPF_MIN_COUNT,
         scalar_map_filter_concat,
     )
@@ -101,7 +101,7 @@ def test_map_filter_concat_dense_and_threshold(spark, sf_dir):
 
 
 def test_oneperm_census_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         OPH_BUCKETS,
         dedup_minhash_oneperm_census,
     )
@@ -115,7 +115,7 @@ def test_oneperm_census_bounds(spark, sf_dir):
 
 
 def test_amplification_curve_is_monotone_and_bounded(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_lsh_amplification_curve,
     )
 
@@ -134,7 +134,7 @@ def test_amplification_curve_is_monotone_and_bounded(spark, sf_dir):
 
 
 def test_rotation_profile_conserves_mass(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_simhash_rotation_profile,
     )
 
@@ -149,7 +149,7 @@ def test_rotation_profile_conserves_mass(spark, sf_dir):
 
 
 def test_pivoted_norm_topk_contract(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.text import (
         PIV_TOPK,
         text_tfidf_pivoted_norm,
     )
@@ -163,7 +163,7 @@ def test_pivoted_norm_topk_contract(spark, sf_dir):
 
 
 def test_kneser_ney_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         KN_TERMS,
         text_lm_kneser_ney_unigram,
     )
@@ -194,7 +194,7 @@ def test_kneser_ney_replay(spark, sf_dir):
 def test_bloom_filter_replay(spark, sf_dir):
     import hashlib
 
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.sketch_cms import (
         BLOOM_K,
         BLOOM_M,
         sketch_bloom_filter_portable,
@@ -219,7 +219,7 @@ def test_bloom_filter_replay(spark, sf_dir):
 
 
 def test_dense_rank_topk_keeps_all_ties(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.windows import (
         TOPK_TIED_K,
         topk_tied_dense_rank,
     )
@@ -238,7 +238,7 @@ def test_dense_rank_topk_keeps_all_ties(spark, sf_dir):
 
 
 def test_second_prior_asof_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         join_asof_second_prior,
     )
 
@@ -261,7 +261,7 @@ def test_second_prior_asof_replay(spark, sf_dir):
 
 
 def test_overlap_coefficient_algebra(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         set_overlap_coefficient,
     )
 
@@ -271,7 +271,7 @@ def test_overlap_coefficient_algebra(spark, sf_dir):
 
 
 def test_relational_division_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         subquery_relational_division,
     )
 
@@ -289,7 +289,7 @@ def test_relational_division_replay(spark, sf_dir):
 def test_coverage_gaps_replay(spark, sf_dir):
     import datetime
 
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         COVER_DAYS,
         join_range_coverage_gaps,
     )
@@ -312,7 +312,7 @@ def test_coverage_gaps_replay(spark, sf_dir):
 
 
 def test_tumbling_window_partitions_all_events(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.analytics import (
         events_tumbling_window_fn,
     )
 
@@ -322,7 +322,7 @@ def test_tumbling_window_partitions_all_events(spark, sf_dir):
 
 
 def test_rolling_median_mad_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.windows import (
         RMED_WINDOW,
         window_rolling_median_mad,
     )
@@ -346,7 +346,7 @@ def test_rolling_median_mad_replay(spark, sf_dir):
 
 
 def test_gini_split_best_is_valid(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_gini_impurity_split,
     )
 
@@ -357,7 +357,7 @@ def test_gini_split_best_is_valid(spark, sf_dir):
 
 
 def test_loo_encoding_excludes_self(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_leave_one_out_encoding,
     )
 
@@ -379,7 +379,7 @@ def test_loo_encoding_excludes_self(spark, sf_dir):
 def test_wls_matches_numpy(spark, sf_dir):
     import numpy as np
 
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_wls_closed_form,
     )
 
@@ -395,7 +395,7 @@ def test_wls_matches_numpy(spark, sf_dir):
 
 
 def test_threshold_sweep_monotone(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.scale_patterns import (
         skew_topk_threshold_sweep,
     )
 
@@ -411,7 +411,7 @@ def test_threshold_sweep_monotone(spark, sf_dir):
 
 
 def test_running_concat_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.reference_pipeline import (
         ref_running_concat,
     )
 
@@ -425,7 +425,7 @@ def test_running_concat_replay(spark, sf_dir):
 
 
 def test_spectral_centroid_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.audio import (
         SC_FRAME,
         audio_spectral_centroid,
     )
@@ -440,7 +440,7 @@ def test_spectral_centroid_bounds(spark, sf_dir):
 
 
 def test_detrend_r2_bounds(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.timeseries import (
         analytics_detrend_linear_resid,
     )
 
@@ -453,7 +453,7 @@ def test_detrend_r2_bounds(spark, sf_dir):
 def test_placebo_did_close_to_zero(spark, sf_dir):
     """The placebo effect on untreated synthetic data should be small
     relative to the value scale (no real intervention exists)."""
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.experiments import (
         stats_placebo_did,
     )
 
@@ -463,7 +463,7 @@ def test_placebo_did_close_to_zero(spark, sf_dir):
 
 
 def test_rle_reconstructs_sequence(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         RLE_USER_CAP,
         udtf_run_length_encode,
     )
@@ -485,7 +485,7 @@ def test_rle_reconstructs_sequence(spark, sf_dir):
 
 
 def test_winsorized_mean_between_min_and_max(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_pandas_udaf_winsorized_mean,
     )
 
@@ -496,7 +496,7 @@ def test_winsorized_mean_between_min_and_max(spark, sf_dir):
 
 
 def test_csv_escape_roundtrip_vs_parquet_truth(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         sink_csv_escape_roundtrip,
     )
 
@@ -509,7 +509,7 @@ def test_csv_escape_roundtrip_vs_parquet_truth(spark, sf_dir):
 
 
 def test_named_window_clause_running_sum(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         sql_named_window_clause,
     )
 
@@ -530,7 +530,7 @@ def test_named_window_clause_running_sum(spark, sf_dir):
 def test_hll_portable_replay(spark, sf_dir):
     import hashlib
 
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.sketch_cms import (
         HLL_M,
         HLL_P,
         HLL_WBITS,
@@ -554,7 +554,7 @@ def test_hll_portable_replay(spark, sf_dir):
 
 
 def test_label_propagation_conserves_nodes_and_minima(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.graph import (
         LP_NODE_CAP,
         graph_label_propagation_sync,
     )
@@ -575,7 +575,7 @@ def test_label_propagation_conserves_nodes_and_minima(spark, sf_dir):
 def test_vocab_contract_matches_python_replay(spark, sf_dir):
     import hashlib
 
-    from big_data_audio_classification_spark.operators.stock_r8_tranche2 import (
+    from big_data_audio_classification_spark.operators.text import (
         VOCAB_STOPWORDS,
         text_pipeline_vocab_contract,
     )

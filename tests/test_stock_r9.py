@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-9-built stock carriers and the
-PCA contract conversion (operators/stock_r9.py). Oracle-independent
+PCA contract conversion (now in the family operator modules). Oracle-independent
 properties only — the tri-SF bit-exact gate owns value parity."""
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ def _doc_tokens(spark, sf_dir):
 
 
 def test_witten_bell_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         WB_TERMS,
         text_lm_witten_bell,
     )
@@ -48,7 +48,7 @@ def test_witten_bell_replay(spark, sf_dir):
 
 
 def test_stupid_backoff_replay_and_branch_mix(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         SB_ALPHA,
         SB_BIGRAMS,
         text_lm_stupid_backoff,
@@ -87,7 +87,7 @@ def test_stupid_backoff_replay_and_branch_mix(spark, sf_dir):
 
 
 def test_rle_runs_matches_groupby(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         mm_payload_rle_runs,
     )
 
@@ -109,7 +109,7 @@ def test_rle_runs_matches_groupby(spark, sf_dir):
 
 
 def test_bit_density_matches_bitcount(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         mm_payload_bit_density,
     )
 
@@ -132,7 +132,7 @@ def test_bit_density_matches_bitcount(spark, sf_dir):
 
 
 def test_pca_variance_contract_matches_numpy_and_gates(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_pca_variance_contract,
     )
 

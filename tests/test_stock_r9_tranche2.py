@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-9 pre-stock tranche 2
-(operators/stock_r9_tranche2.py). Oracle-independent properties only —
+(now in the family operator modules). Oracle-independent properties only —
 the tri-SF bit-exact gate owns value parity."""
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from big_data_audio_classification_spark.sources.catalog import load_table
 
 
 def test_asof_nearest_matches_bruteforce(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         ASOF_NEAREST_TOL_US,
         join_asof_nearest_abs,
     )
@@ -54,7 +54,7 @@ def test_asof_nearest_matches_bruteforce(spark, sf_dir):
 
 
 def test_setops_census_identity(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         set_symmetric_diff_census,
     )
 
@@ -67,7 +67,7 @@ def test_setops_census_identity(spark, sf_dir):
 
 
 def test_grouping_sets_marginals_sum_to_total(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_grouping_sets_dow_hour,
     )
 
@@ -86,7 +86,7 @@ def test_grouping_sets_marginals_sum_to_total(spark, sf_dir):
 
 
 def test_salient_terms_ranking_is_integer_lexicographic(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.text import (
         SALIENT_K,
         text_topk_salient_terms,
     )
@@ -117,7 +117,7 @@ def test_salient_terms_ranking_is_integer_lexicographic(spark, sf_dir):
 
 
 def test_bitwise_battery_python_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_math_bitwise_battery,
     )
 
@@ -133,7 +133,7 @@ def test_bitwise_battery_python_replay(spark, sf_dir):
 
 
 def test_json_and_variant_paths_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_json_nested_paths,
         scalar_variant_array_elements,
     )
@@ -161,7 +161,7 @@ def test_json_and_variant_paths_replay(spark, sf_dir):
 
 
 def test_map_collision_census_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         scalar_map_collision_census,
     )
 
@@ -185,7 +185,7 @@ def test_map_collision_census_replay(spark, sf_dir):
 
 
 def test_array_probe_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.scalars import (
         array_rotate_reverse_probe,
     )
 
@@ -206,7 +206,7 @@ def test_lsh_bucket_entropy_bounds_and_pair_mass(spark, sf_dir):
         LSH_BANDS,
         _lsh_band_table,
     )
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_lsh_bucket_entropy,
     )
 
@@ -234,7 +234,7 @@ def test_lsh_bucket_entropy_bounds_and_pair_mass(spark, sf_dir):
 
 def test_simhash_multiprobe_matches_bruteforce(spark, sf_dir):
     from big_data_audio_classification_spark.operators.dedup import dedup_simhash
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.dedup import (
         dedup_simhash_multiprobe16,
     )
 
@@ -259,7 +259,7 @@ def test_simhash_multiprobe_matches_bruteforce(spark, sf_dir):
 def test_quadratic_fit_matches_numpy(spark, sf_dir):
     import numpy as np
 
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_quadratic_normal_equations,
     )
 
@@ -284,7 +284,7 @@ def test_quadratic_fit_matches_numpy(spark, sf_dir):
 
 
 def test_exists_census_counts(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.relational import (
         subquery_exists_census,
     )
 
@@ -309,7 +309,7 @@ def test_exists_census_counts(spark, sf_dir):
 
 def test_ivf_split_merge_plan_consistency(spark, sf_dir):
     from big_data_audio_classification_spark.operators.similarity import IVF_CELLS
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.similarity import (
         MERGE_RATIO,
         SPLIT_RATIO,
         sim_ivf_split_merge_plan,
@@ -334,7 +334,7 @@ def test_ivf_split_merge_plan_consistency(spark, sf_dir):
 def test_point_biserial_matches_numpy(spark, sf_dir):
     import numpy as np
 
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.ml import (
         PB_POS_LABEL,
         ml_point_biserial_selection,
     )
@@ -356,7 +356,7 @@ def test_point_biserial_matches_numpy(spark, sf_dir):
 
 
 def test_binary_encoding_roundtrip(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche2 import (
+    from big_data_audio_classification_spark.operators.ml import (
         ml_binary_encoding,
     )
 

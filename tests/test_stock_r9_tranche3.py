@@ -1,5 +1,5 @@
 """Replay/invariant tests for the round-9 pre-stock tranche 3
-(operators/stock_r9_tranche3.py). Oracle-independent properties only —
+(now in the family operator modules). Oracle-independent properties only —
 the tri-SF bit-exact gate owns value parity."""
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from big_data_audio_classification_spark.sources.catalog import load_table
 
 
 def test_ref_duration_histogram_shares(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.reference_pipeline import (
         ref_duration_histogram,
     )
 
@@ -29,7 +29,7 @@ def test_ref_duration_histogram_shares(spark, sf_dir):
 
 
 def test_overlap_days_partition_each_order_window(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.relational import (
         ORDER_WINDOW_DAYS,
         join_range_overlap_days,
     )
@@ -49,7 +49,7 @@ def test_overlap_days_partition_each_order_window(spark, sf_dir):
 
 
 def test_char_trigrams_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         TRIGRAM_DOC_MOD,
         TRIGRAM_PREFIX,
         udtf_char_trigrams,
@@ -72,7 +72,7 @@ def test_char_trigrams_replay(spark, sf_dir):
 
 
 def test_first_touch_conservation(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.analytics import (
         events_session_first_touch,
     )
 
@@ -90,7 +90,7 @@ def test_first_touch_conservation(spark, sf_dir):
 
 
 def test_hod_effects_sum_to_zero_weighted(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.timeseries import (
         analytics_hod_effect_profile,
     )
 
@@ -105,7 +105,7 @@ def test_hod_effects_sum_to_zero_weighted(spark, sf_dir):
 
 
 def test_salt_effectiveness_conserves_hot_key(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.scale_patterns import (
         SALT_N,
         skew_salt_effectiveness,
     )
@@ -128,7 +128,7 @@ def test_salt_effectiveness_conserves_hot_key(spark, sf_dir):
 def test_quartile_skew_matches_numpy(spark, sf_dir):
     import numpy as np
 
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.aggregates import (
         agg_pandas_udaf_quartile_skew,
     )
 
@@ -152,7 +152,7 @@ def test_quartile_skew_matches_numpy(spark, sf_dir):
 
 
 def test_multiline_csv_preserves_newlines(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.advanced import (
         sink_csv_multiline_quoted_roundtrip,
     )
 
@@ -167,7 +167,7 @@ def test_multiline_csv_preserves_newlines(spark, sf_dir):
 
 
 def test_minmax_position_bounds_and_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.windows import (
         window_rolling_minmax_position,
     )
 
@@ -181,7 +181,7 @@ def test_minmax_position_bounds_and_replay(spark, sf_dir):
 
 
 def test_cochran_armitage_matches_python(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.experiments import (
         stats_cochran_armitage_trend,
     )
 
@@ -210,7 +210,7 @@ def test_cochran_armitage_matches_python(spark, sf_dir):
 
 
 def test_autocorr_replay_one_user(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.audio import (
         AC_FRAME,
         audio_autocorr_lag1,
     )
@@ -237,7 +237,7 @@ def test_autocorr_replay_one_user(spark, sf_dir):
 
 
 def test_heldout_perplexity_replay(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.lm_quality import (
         HELDOUT_FOLDS,
         text_lm_heldout_perplexity,
     )
@@ -278,7 +278,7 @@ def test_heldout_perplexity_replay(spark, sf_dir):
 
 
 def test_fletcher16_matches_reference_impl(spark, sf_dir):
-    from big_data_audio_classification_spark.operators.stock_r9_tranche3 import (
+    from big_data_audio_classification_spark.operators.multimodal import (
         FLETCHER_MOD,
         mm_payload_fletcher16,
     )
