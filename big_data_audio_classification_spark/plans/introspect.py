@@ -3,7 +3,8 @@
 The 100 TB mandate is enforced here: tests assert that filters reach the
 parquet scan (PushedFilters), small dims broadcast, hot paths stay in
 whole-stage codegen, and no row-at-a-time Python UDF sneaks into a
-relational plan. ``explain("formatted")`` output is the ground truth.
+relational plan. ``explain("formatted")`` output is the ground truth for
+those; ``unpartitioned_windows`` walks the JVM plan tree instead.
 """
 
 from __future__ import annotations
@@ -80,3 +81,27 @@ def codegen_stage_count(df: DataFrame) -> int:
                 if tok.isdigit():
                     return int(tok)
     return text.count("*(")
+
+
+def unpartitioned_windows(df: DataFrame) -> list[str]:
+    """The window operators of ``df``'s physical plan (subqueries and
+    adaptive stages included) that have no PARTITION BY, one line each.
+    Such a window gathers its whole input into one task, which is
+    data-sized unless the input is bounded. Walks the JVM plan tree: the
+    formatted text puts ``SinglePartition`` on an ``Arguments:`` line
+    away from the exchange it belongs to."""
+    jvm = df.sparkSession._jvm
+    window_base = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.window.WindowExecBase")
+    found: list[str] = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            stack.append(node.inputPlan())
+            continue
+        if window_base.isInstance(node) and node.partitionSpec().isEmpty():
+            found.append(node.simpleString(200))
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return found

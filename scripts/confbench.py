@@ -16,7 +16,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
-from big_data_audio_classification_spark.session import WORKER_CONF, _local_cores
+from big_data_audio_classification_spark.session import (
+    WORKER_CONF,
+    _local_cores,
+    jvm_archive_conf,
+)
 
 
 def main() -> None:
@@ -37,6 +41,7 @@ def main() -> None:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(map=WORKER_CONF)
+        .config(map=jvm_archive_conf())
     )
     if overrides:
         for kv in overrides.split(","):

@@ -261,6 +261,26 @@ def test_sessionization_shares_one_user_partitioning(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
 
 
+def test_unpartitioned_windows_flags_global_order_only(spark):
+    """The plan walk finds a window without PARTITION BY, in the main
+    plan and in a scalar subquery, and passes a partitioned one."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    r = spark.range(1000)
+    global_rn = r.withColumn("rn", F.row_number().over(Window.orderBy("id")))
+    keyed_rn = r.withColumn(
+        "rn", F.row_number().over(Window.partitionBy(F.col("id") % 10).orderBy("id")))
+    found = introspect.unpartitioned_windows(global_rn)
+    assert len(found) == 1 and found[0].startswith("Window [row_number()"), found
+    assert introspect.unpartitioned_windows(keyed_rn) == []
+    global_rn.createOrReplaceTempView("global_rn")
+    in_subquery = spark.sql(
+        "SELECT id FROM range(10) WHERE id < (SELECT max(rn) FROM global_rn)")
+    assert len(introspect.unpartitioned_windows(in_subquery)) == 1
+    spark.catalog.dropTempView("global_rn")
+
+
 def test_ks_exact_has_no_unpartitioned_window(spark, sf_dir):
     """Distributed exact KS: every WindowExec in the plan must be
     PARTITIONED (the per-bucket local ECDF) — the single-partition
@@ -269,18 +289,8 @@ def test_ks_exact_has_no_unpartitioned_window(spark, sf_dir):
     from big_data_audio_classification_spark.operators import stats
 
     df = stats.stats_ks_two_sample(spark, sf_dir)
-    plan = introspect.formatted_plan(df)
-    # an unpartitioned window plans Exchange SinglePartition feeding a
-    # Sort+Window — forbid that shape anywhere in the tree (the final
-    # scalar aggregate's SinglePartition exchange feeds HashAggregate,
-    # not Window, so it does not match)
-    import re
-
-    assert not re.search(
-        r"Exchange SinglePartition[^\n]*\n(?:[^\n]*\n){0,3}[^\n]*Window",
-        plan,
-    ), plan
-    assert "Window" in plan  # the per-bucket local ECDF is still there
+    assert introspect.unpartitioned_windows(df) == []
+    assert "Window" in introspect.formatted_plan(df)  # the per-bucket local ECDF is still there
 
 
 def test_headline_percentile_path_has_no_buffering_agg(spark, sf_dir):
@@ -299,19 +309,13 @@ def test_headline_percentile_path_has_no_buffering_agg(spark, sf_dir):
 def test_mwu_and_weighted_median_have_no_unpartitioned_window(spark, sf_dir):
     """The two new rank-statistic consumers of the bucketed two-phase
     idiom must keep every WindowExec partitioned, like the exact KS."""
-    import re
-
     from big_data_audio_classification_spark.operators import curation, stats
 
     for df in (
         stats.stats_mann_whitney_u(spark, sf_dir),
         curation.curation_token_weighted_median(spark, sf_dir),
     ):
-        plan = introspect.formatted_plan(df)
-        assert not re.search(
-            r"Exchange SinglePartition[^\n]*\n(?:[^\n]*\n){0,3}[^\n]*Window",
-            plan,
-        ), plan
+        assert introspect.unpartitioned_windows(df) == []
 
 
 def test_attribution_and_ewma_share_one_user_exchange(spark, sf_dir):
@@ -461,16 +465,11 @@ def test_spearman_ranks_have_no_unpartitioned_fact_window(spark, sf_dir):
     """Both rank computations must be the bucketed two-phase idiom:
     every WindowExec partitioned (by bucket) — no single-partition
     global sort of either value column."""
-    import re
-
     from big_data_audio_classification_spark.operators import stats
 
-    plan = introspect.formatted_plan(stats.stats_spearman_corr(spark, sf_dir))
-    assert not re.search(
-        r"Exchange SinglePartition[^\n]*\n(?:[^\n]*\n){0,3}[^\n]*Window",
-        plan,
-    ), plan
-    assert "Window" in plan  # the bucket-partitioned local cumulative
+    df = stats.stats_spearman_corr(spark, sf_dir)
+    assert introspect.unpartitioned_windows(df) == []
+    assert "Window" in introspect.formatted_plan(df)  # the bucket-partitioned local cumulative
 
 
 def test_mann_kendall_and_theil_sen_share_spine_shape(spark, sf_dir):

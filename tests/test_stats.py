@@ -232,14 +232,10 @@ def test_welch_and_mwu_match_reference_formulas(spark, sf_dir):
 
 
 def test_mwu_has_no_unpartitioned_window(spark, sf_dir):
-    import re
-
     from big_data_audio_classification_spark.operators import stats
 
-    plan = introspect.formatted_plan(stats.stats_mann_whitney_u(spark, sf_dir))
-    assert not re.search(
-        r"Exchange SinglePartition[^\n]*\n(?:[^\n]*\n){0,3}[^\n]*Window", plan
-    ), plan
+    df = stats.stats_mann_whitney_u(spark, sf_dir)
+    assert introspect.unpartitioned_windows(df) == []
 
 
 def test_gini_matches_direct_formula_and_bounds(spark, sf_dir):
