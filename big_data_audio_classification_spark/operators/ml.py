@@ -2,8 +2,9 @@
 
 Reference mapping (SURVEY §2.A):
 * R21 PCA(k=4): sklearn PCA at ``/root/reference/src/voice_classifier.py:54,121-123``
-  → ``StandardScaler(withMean=True)`` + ``pyspark.ml.feature.PCA`` (MLlib
-  PCA does not mean-center; the scaler restores sklearn parity).
+  → one centred-moment pass and ``numpy.linalg.eigh`` of the 64×64
+  covariance on the driver (``functions/moments.py``); sklearn centres
+  too.
 * R26 mutual-information feature scoring: ``mutual_info_classif`` at
   ``voice_classifier.py:150-153`` → discretize + plug-in MI estimate as
   pure DataFrame aggregates (fully oracle-checkable here).
@@ -28,9 +29,9 @@ Reference mapping (SURVEY §2.A):
 Model persistence / inference lifecycle (R38–R42, R48/R49) lives in
 operators/ml_inference.py.
 
-Scale notes: MLlib PCA computes the Gramian with a tree-aggregate (one
-pass, no N×N materialization); StringIndexer's label inventory is a
-distinct-agg; MI is two groupBys over binned data. The only local-memory
+Scale notes: PCA's moments are one pass with a two-level merge (no N×N
+materialization, a bounded number of d×d rows to the driver);
+StringIndexer's label inventory is a distinct-agg; MI is two groupBys over binned data. The only local-memory
 object is the k×k covariance / label dictionary — all fine at 100 TB.
 """
 
@@ -39,14 +40,19 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from big_data_audio_classification_spark.functions.moments import (
+    column_moments,
+    principal_axes,
+)
 from big_data_audio_classification_spark.functions.ranks import (
     prefix_sums,
     values_at_ranks,
 )
-from big_data_audio_classification_spark.functions.vector import to_double
+from big_data_audio_classification_spark.functions.vector import dot, to_double
 from big_data_audio_classification_spark.registry import query
 from big_data_audio_classification_spark.sources.catalog import load_table
 
+PCA_K = 4
 MI_BINS = 8
 MI_DIMS = 4  # score the first 4 embedding dimensions (R26 scores 4 PCs)
 
@@ -300,35 +306,31 @@ def ml_argmax_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("ml_pca_embeddings", oracle=None, tags=("ml", "pca", "mllib"))
+@query("ml_pca_embeddings", oracle=None, tags=("ml", "pca", "closed-form"))
 def ml_pca_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R21: mean-centered PCA(k=4) over embeddings.
-    StandardScaler(withMean=True, withStd=False) + PCA reproduces
-    sklearn's centering semantics (MLlib PCA alone does not center —
-    SURVEY §2.A R21 caveat). Rows-only: component signs are
-    basis-indeterminate. Numeric parity vs a numpy SVD oracle is
-    asserted sign-invariantly in tests/test_ml.py."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import PCA, StandardScaler
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
+    """R21: sklearn's PCA(k=4) over embeddings — centred, then projected
+    on the top four axes of the sample covariance. One moment pass
+    (``functions/moments.column_moments``: at most two jobs and one
+    collect of a bounded number of d×d rows) and ``numpy.linalg.eigh``
+    on the driver fit it; the projection ``round(dot(x − μ, vᵢ), 6)``
+    runs on the JVM with the mean and the axes as literal arrays. Each
+    axis's largest-|loading| entry is positive, so the rows do not
+    depend on partitioning. sklearn fixes signs by another rule, so the
+    query is rows-only; tests/test_ml.py checks it against a numpy SVD
+    up to sign."""
     em = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", array_to_vector(to_double(F.col("embedding"))).alias("raw")
+        "vec_id", "label", to_double(F.col("embedding")).alias("x")
     )
-    pipe = Pipeline(
-        stages=[
-            StandardScaler(
-                inputCol="raw", outputCol="centered", withMean=True, withStd=False
-            ),
-            PCA(k=4, inputCol="centered", outputCol="pc"),
-        ]
-    )
-    out = pipe.fit(em).transform(em)
-    pc = vector_to_array("pc")
-    return out.select(
+    n, mean, m2 = column_moments(em, F.col("x"))
+    axes = principal_axes(n, m2, PCA_K)
+    centred = F.zip_with(F.col("x"), F.lit(mean.tolist()), lambda a, m: a - m)
+    return em.select(
         "vec_id",
         "label",
-        *[F.round(F.element_at(pc, i + 1), 6).alias(f"pc{i}") for i in range(4)],
+        *[
+            F.round(dot(centred, F.lit(axes[:, i].tolist())), 6).alias(f"pc{i}")
+            for i in range(PCA_K)
+        ],
     )
 
 

@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from big_data_audio_classification_spark.registry import query
+from big_data_audio_classification_spark.scratch import SCRATCH_DIR
 from big_data_audio_classification_spark.sources.catalog import load_table
 
 SALTS = 8
@@ -167,7 +168,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DPP_DIR = f"/tmp/spark_graft_dpp_{os.getpid()}"
+_DPP_DIR = os.path.join(SCRATCH_DIR, "dpp")  # removed at exit
 # priority tiers: the dim filter is on `keep`, NOT the join key, so only
 # RUNTIME pruning (DPP) can narrow the fact scan to the matching partitions
 _PRIORITY_TIERS = (

@@ -28,6 +28,9 @@ scales on a real cluster:
   ``SPARK_CONF_DIR`` holds a real file, ``spark.driver.defaultJavaOptions``
   is set by the caller, the JVM is already up, or the build is busy or
   fails.
+* The warehouse directory is the process's scratch directory
+  (``scratch.SCRATCH_DIR``), so tables a query saves are removed with it
+  at exit (``warehouse_conf``).
 """
 
 from __future__ import annotations
@@ -54,6 +57,7 @@ WORKER_CONF = {
 }
 
 _JAVA_OPTIONS_CONF = "spark.driver.defaultJavaOptions"
+_WAREHOUSE_CONF = "spark.sql.warehouse.dir"
 # A build is a JVM start, a short job and the dump at JVM exit: ~1 min.
 ARCHIVE_BUILD_TIMEOUT_S = 600
 # The JVM's unified logging writes warnings, the CDS ones included, to
@@ -98,9 +102,22 @@ def get_spark(app_name: str = "big-data-audio-classification-spark",
         # has no nanos type — read as long and convert in the catalog.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(map=WORKER_CONF)
+        .config(map=warehouse_conf())
         .config(map=jvm_archive_conf())
         .getOrCreate()
     )
+
+
+def warehouse_conf() -> dict[str, str]:
+    """Put the session's warehouse (the bucketed tables ``saveAsTable``
+    writes) in the process's scratch directory, which is removed at exit,
+    not in ``./spark-warehouse``; ``{}`` when ``PYSPARK_SUBMIT_ARGS`` sets
+    it."""
+    if _WAREHOUSE_CONF in os.environ.get("PYSPARK_SUBMIT_ARGS", ""):
+        return {}
+    from big_data_audio_classification_spark import scratch
+
+    return {_WAREHOUSE_CONF: os.path.join(scratch.SCRATCH_DIR, "warehouse")}
 
 
 def stop_spark() -> None:

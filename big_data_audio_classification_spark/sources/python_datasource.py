@@ -261,10 +261,11 @@ def sink_python_datasource_roundtrip(
     schema."""
     import tempfile
 
+    from big_data_audio_classification_spark.scratch import SCRATCH_DIR
     from big_data_audio_classification_spark.sources.catalog import load_table
 
     spark.dataSource.register(make_jsonl_sink_datasource())
-    out_dir = tempfile.mkdtemp(prefix="jsonl_sink_")
+    out_dir = tempfile.mkdtemp(prefix="jsonl_sink_", dir=SCRATCH_DIR)
     proj = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",

@@ -35,7 +35,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
-from big_data_audio_classification_spark.session import WORKER_CONF, jvm_archive_conf
+from big_data_audio_classification_spark.session import (
+    WORKER_CONF,
+    jvm_archive_conf,
+    warehouse_conf,
+)
 
 SF = os.environ.get("ROBUST_SF", "/root/testdata/sf0.01")
 
@@ -72,6 +76,7 @@ def run_all(names: list[str], shuffle_parts: int, parallelism: int) -> dict:
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
         .config(map=WORKER_CONF)
+        .config(map=warehouse_conf())
         .config(map=jvm_archive_conf())
         .appName(f"robust-{shuffle_parts}")
         .getOrCreate()

@@ -20,6 +20,7 @@ from big_data_audio_classification_spark.session import (
     WORKER_CONF,
     _local_cores,
     jvm_archive_conf,
+    warehouse_conf,
 )
 
 
@@ -41,6 +42,7 @@ def main() -> None:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(map=WORKER_CONF)
+        .config(map=warehouse_conf())
         .config(map=jvm_archive_conf())
     )
     if overrides:

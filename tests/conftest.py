@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -40,6 +41,29 @@ def _clear_cache_between_modules():
     s = SparkSession.getActiveSession()
     if s is not None:
         s.catalog.clearCache()
+
+
+@pytest.fixture
+def job_group(spark):
+    """``with job_group(name) as jobs:`` runs the block's Spark jobs
+    under job group ``name``; ``jobs()`` is how many it has started so
+    far. The status store hears of a job through the listener bus, so
+    ``jobs()`` drains it first."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def group(name):
+        def jobs():
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(name))
+
+        sc.setJobGroup(name, name)
+        try:
+            yield jobs
+        finally:
+            sc._jsc.clearJobGroup()
+
+    return group
 
 
 @pytest.fixture(scope="session")

@@ -4,15 +4,21 @@ pure numpy (same math sklearn uses: centered SVD for PCA)."""
 
 from __future__ import annotations
 
+import os
+import sys
+
 import numpy as np
+import pandas as pd
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
+from big_data_audio_classification_spark.functions import moments
 from big_data_audio_classification_spark.operators import ml
 from big_data_audio_classification_spark.sources.catalog import load_table
 
 
 def test_pca_matches_numpy_svd_sign_invariant(spark, sf_dir):
-    """R21 parity: Spark StandardScaler+PCA == numpy centered SVD up to
+    """R21 parity: the moment-pass PCA == numpy centered SVD up to
     per-component sign (SURVEY §7: sign-indeterminate comparison)."""
     out = ml.ml_pca_embeddings(spark, sf_dir).orderBy("vec_id").collect()
     em = load_table(spark, sf_dir, "embeddings").orderBy("vec_id").collect()
@@ -26,6 +32,68 @@ def test_pca_matches_numpy_svd_sign_invariant(spark, sf_dir):
         same = np.allclose(got[:, comp], expected[:, comp], atol=1e-4)
         flipped = np.allclose(got[:, comp], -expected[:, comp], atol=1e-4)
         assert same or flipped, f"component {comp} mismatch beyond sign"
+
+
+def test_moment_kernels_match_np_cov_over_uneven_partitions():
+    """Chan's merge over partitions of 0, 1, 7, 292 and 700 rows (the
+    last in uneven Arrow batches, one empty) and a second merge level,
+    on data offset by 1e6: centred moments keep np.cov's precision."""
+    rng = np.random.default_rng(0)
+    X = rng.normal(size=(1000, 6)) * [1, 2, 3, 0.5, 1e-3, 10] + 1e6
+    bounds = [0, 0, 1, 8, 300, 1000]
+    parts = [X[a:b] for a, b in zip(bounds, bounds[1:])]
+
+    def batches(rows, cuts):
+        return [pd.DataFrame({"x": list(rows[a:b])}) for a, b in zip(cuts, cuts[1:])]
+
+    partials = []
+    for rows in parts:
+        cuts = [0, 5, 5, 333, len(rows)] if len(rows) == 700 else [0, len(rows)]
+        partials += list(moments.partial_moments(iter(batches(rows, cuts))))
+    assert len(partials) == 4  # none for the empty partition
+    merged = [
+        *moments.merge_moments(iter(partials[:1])),
+        *moments.merge_moments(iter([pd.concat(partials[1:])])),
+    ]
+    n, mean, m2 = moments.merge_rows(pd.concat(merged).itertuples(index=False))
+    want = np.cov(X, rowvar=False)
+    assert n == 1000
+    assert np.abs(mean - X.mean(axis=0)).max() <= 1e-9 * 1e6
+    assert np.abs(m2 / (n - 1) - want).max() <= 1e-9 * np.abs(want).max()
+
+
+def test_pca_rows_do_not_depend_on_input_partitions(spark, sf_dir, tmp_path):
+    """Same rows, signs included, from 1 input partition and from 8. With
+    8 > spark.sql.shuffle.partitions = 2 the moment rows are merged a
+    second time, so the driver collects 2 rows, not 8."""
+    em = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(em, path, row_group_size=-(-em.num_rows // 8))
+    results = {}
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        for split_bytes in (os.path.getsize(path) // 8, 128 << 20):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(split_bytes))
+            scan = load_table(spark, str(tmp_path), "embeddings")
+            n_parts = scan.select(F.spark_partition_id()).distinct().count()
+            assert moments.moment_rows(scan, F.col("embedding")).count() == min(n_parts, 2)
+            rows = ml.ml_pca_embeddings(spark, str(tmp_path)).orderBy("vec_id").collect()
+            results[n_parts] = rows
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert sorted(results) == [1, 8]
+    assert results[1] == results[8]
+
+
+def test_pca_build_is_two_jobs_without_mllib(spark, sf_dir, job_group, monkeypatch):
+    """The fit is one moment pass (at most two stages, so two jobs under
+    AQE), with no ``pyspark.ml`` import."""
+    monkeypatch.setitem(sys.modules, "pyspark.ml", None)
+    with job_group("pca-build") as jobs:
+        ml.ml_pca_embeddings(spark, sf_dir)
+        assert jobs() <= 2
 
 
 def test_label_encode_alphabetical(spark, sf_dir):

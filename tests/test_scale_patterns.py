@@ -137,3 +137,41 @@ def test_aqe_splits_skewed_join_partitions(spark, sf_dir):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+LEAK_CHILD = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from big_data_audio_classification_spark import scratch
+from big_data_audio_classification_spark.operators import scale_patterns
+from big_data_audio_classification_spark.session import get_spark
+
+spark = get_spark("leak-check")
+for fn in (scale_patterns.bucketed_colocated_join, scale_patterns.scale_dpp_partitioned_join):
+    assert fn(spark, sys.argv[2]).collect()
+print(scratch.SCRATCH_DIR, flush=True)
+spark.stop()
+"""
+
+
+def test_saved_tables_leave_nothing_behind(sf_dir, tmp_path):
+    """The bucketed tables and the DPP fact table are written under the
+    process's scratch directory, and go with it at exit: nothing is left
+    in the working directory or in /tmp/spark_graft_dpp_*."""
+    import glob
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    old_dpp = set(glob.glob("/tmp/spark_graft_dpp_*"))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    out = subprocess.run(
+        [sys.executable, "-c", LEAK_CHILD, repo, sf_dir],
+        cwd=tmp_path, env=env, check=True, capture_output=True, text=True, timeout=600,
+    ).stdout
+    scratch_dir = out.strip().splitlines()[-1]
+    assert os.listdir(tmp_path) == []
+    assert set(glob.glob("/tmp/spark_graft_dpp_*")) == old_dpp
+    assert not os.path.exists(scratch_dir)
